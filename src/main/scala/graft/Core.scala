@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -30,6 +34,89 @@ trait QueryModule {
   def oracles: Map[String, String]
 }
 
+/** Size gate for the local solves (connected components, graph_bfs, MMR
+  * rerank, BPE fit). Each site has an exact single-task or driver-side
+  * solve and a distributed twin with identical results, and picks one
+  * from the size of a frame it has ALREADY materialized, so the count is
+  * one cheap job, not a re-evaluation: at `rows × weight ≤ budget` the
+  * local solve runs, above it the distributed path — the one that scales
+  * to any input — runs unchanged. Budgets are per-site constants sized to
+  * what one task or the driver holds comfortably; no conf changes them.
+  * Every decision is logged once at INFO under `graft.Gate`. */
+private[graft] object Gate {
+  final case class Decision(rows: Long, local: Boolean)
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.Gate")
+  private val forced = new scala.util.DynamicVariable(false)
+  /** gates that [[distributed]] turned from local to distributed */
+  private[graft] val overrides = new java.util.concurrent.atomic.AtomicLong
+
+  def apply(site: String, frame: DataFrame, budget: Long,
+      weight: Long = 1L): Decision = {
+    val rows = frame.count()
+    // rows·w ≤ budget without the overflow of the product
+    val fits = rows <= budget / math.max(weight, 1L)
+    val local = fits && !forced.value
+    if (fits && !local) overrides.incrementAndGet()
+    log.info(s"$site: ${if (local) "local" else "distributed"} ($rows rows" +
+      s" × $weight vs budget $budget${if (fits && !local) ", forced" else ""})")
+    Decision(rows, local)
+  }
+
+  /** Test hook: every gate evaluated inside `body` (on this thread) takes
+    * its distributed branch. */
+  private[graft] def distributed[A](body: => A): A =
+    forced.withValue(true)(body)
+}
+
+/** The one memo for values computed once per session and reused by later
+  * query builds: resolved relations, model fits, generated oracle SQL,
+  * sibling sessions. Keys are (session, kind, key), `kind` naming the
+  * call site. Values are plans, driver-side fits, SQL text or sessions —
+  * never cached rows.
+  *
+  * Lifetime: entries live until their session's SparkContext ends; one
+  * [[SparkListener]] per context drops them all on `onApplicationEnd`.
+  *
+  * Path keying: a key naming a data directory names it by PATH, not by
+  * content. Rewriting files under an already-memoized directory while
+  * the context runs serves the old value (a stale listing or fit), so
+  * data is regenerated only between contexts and tests use fresh temp
+  * dirs.
+  *
+  * Computes may be re-entrant (a model fit resolves its input through
+  * the relation memo): the map only installs a lazy cell, which computes
+  * outside the map's locks, so lookups stay O(1) and nested lookups never
+  * hit `computeIfAbsent`'s recursive-update check. A compute that throws
+  * leaves its cell empty and the next lookup retries. */
+object SessionMemo {
+  private final class Cell(compute: => Any) { lazy val value: Any = compute }
+
+  private final class Scope(sc: SparkContext) extends SparkListener {
+    val cells = new ConcurrentHashMap[(SparkSession, String, Any), Cell]()
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+      scopes.remove(sc, this)
+  }
+  private val scopes = new ConcurrentHashMap[SparkContext, Scope]()
+
+  def apply[V](spark: SparkSession, kind: String, key: Any)(compute: => V): V = {
+    val scope = scopes.computeIfAbsent(spark.sparkContext, { sc =>
+      val s = new Scope(sc)
+      sc.addSparkListener(s)
+      s
+    })
+    scope.cells.computeIfAbsent((spark, kind, key), _ => new Cell(compute))
+      .value.asInstanceOf[V]
+  }
+
+  /** the context's registered end hook, if it holds a scope */
+  private[graft] def hook(sc: SparkContext): Option[SparkListener] =
+    Option(scopes.get(sc))
+  /** entries held for a context */
+  private[graft] def size(sc: SparkContext): Int =
+    Option(scopes.get(sc)).fold(0)(_.cells.size)
+}
+
 /** Typed loaders for the driver-generated parquet tables (TESTDATA.md).
   * Schemas documented in FIXTURES.md; the parquet footer is the source of
   * truth, so plain spark.read.parquet is correct and keeps predicate
@@ -44,27 +131,20 @@ object Tables {
     * range frames) and Verify's written schemas stay identical across
     * generations. Value-preserving: every session pins
     * spark.sql.session.timeZone=UTC. */
-  /** Resolved-relation memo, keyed by (session, dir, table): every
+  /** Resolved relations are memoized per session: every
     * `spark.read.parquet` re-lists the path and re-reads footers (a
     * small driver job per call), and a 355-query drive resolves the
     * same ten files hundreds of times. Reusing the ANALYZED plan is
     * metadata reuse only (guide §6 file-listing caching) — no rows are
-    * cached and every action still computes from the parquet bytes.
-    * Boundary: same per-JVM path-keyed contract as the model-fit
-    * caches (ivfCache) — the harness regenerates testdata only between
-    * JVMs; tests use fresh temp dirs. Sessions are few and long-lived
-    * (driver + the extension sibling), so the strong key cannot leak
-    * meaningfully. */
-  private val relCache = scala.collection.concurrent.TrieMap[
-    (SparkSession, String, String), DataFrame]()
+    * cached and every action still computes from the parquet bytes. */
   private[graft] def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    relCache.getOrElseUpdate((spark, sfDir, name), {
+    SessionMemo(spark, "relation", (sfDir, name)) {
       val df = spark.read.parquet(s"$sfDir/$name.parquet")
       df.schema.fields.collect {
         case f if f.dataType == TimestampNTZType => f.name
       }.foldLeft(df)((acc, c) =>
         acc.withColumn(c, col(c).cast(TimestampType)))
-    })
+    }
   def region(s: SparkSession, d: String): DataFrame = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = t(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = t(s, d, "customer")

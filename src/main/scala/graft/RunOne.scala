@@ -1,13 +1,21 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Dev utility: time one named query and optionally dump its plan.
-  * Usage: runMain graft.RunOne <queryId> [sfDir] [explain]
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+
+/** Dev utility over comma-separated query ids sharing one JVM/session:
+  * time each id (isolating its warm cost without paying sbt+Spark startup
+  * per id), or dump each id's `explain("formatted")` plan to
+  * `<outDir>/<id>_<tag>.txt` — the optimization-round evidence trail
+  * (plans/r16/).
+  * Usage: runMain graft.RunOne <id1,id2,...> <sfDir> [x3]
+  *        runMain graft.RunOne <id1,id2,...> <sfDir> explain <outDir> <tag>
   */
 object RunOne {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
+    val ids = args(0).split(",").toSeq
+    val sfDir = args(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -16,17 +24,28 @@ object RunOne {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val reps = if (args.contains("x3")) 3 else 1
-    // comma-separated ids share one JVM/session — isolating each
-    // query's warm cost without paying sbt+Spark startup per id
-    name.split(",").foreach { id =>
-      val df = SparkEntry.queries(id)(spark, sfDir)
-      if (args.contains("explain")) df.explain("formatted")
-      for (_ <- 1 to reps) {
-        val t0 = System.nanoTime()
-        val n = SparkEntry.queries(id)(spark, sfDir).count()
-        println(f"[runone] $id ${(System.nanoTime() - t0) / 1e9}%.2fs rows=$n")
-      }
+    args.drop(2) match {
+      case Array("explain", outDir, tag) =>
+        new java.io.File(outDir).mkdirs()
+        ids.foreach { id =>
+          try {
+            val txt = SparkEntry.queries(id)(spark, sfDir).queryExecution
+              .explainString(ExplainMode.fromString("formatted"))
+            Files.writeString(Paths.get(s"$outDir/${id}_$tag.txt"), txt)
+            System.err.println(s"[runone] wrote $id")
+          } catch { case e: Throwable =>
+            System.err.println(s"[runone] $id failed: ${e.getMessage}")
+          }
+        }
+      case rest =>
+        val reps = if (rest.contains("x3")) 3 else 1
+        ids.foreach { id =>
+          for (_ <- 1 to reps) {
+            val t0 = System.nanoTime()
+            val n = SparkEntry.queries(id)(spark, sfDir).count()
+            println(f"[runone] $id ${(System.nanoTime() - t0) / 1e9}%.2fs rows=$n")
+          }
+        }
     }
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Det, Q, QueryModule, Tables}
+import graft.{Det, Gate, Q, QueryModule, SessionMemo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,6 +44,10 @@ import org.apache.spark.sql.types._
   *    for a fixed-step power iteration).
   */
 object AnalyticsOps extends QueryModule {
+
+  /** graph_bfs's [[Gate]] budget: co-purchase edges the single-task BFS
+    * holds as an adjacency map. */
+  private val BfsLocalSolveMaxEdges = 4000000L
 
   /** The ONE support-≥2 co-purchase edge list (a < b over partkeys),
     * materialized once per lineitem snapshot through the fingerprinted
@@ -303,15 +307,13 @@ object AnalyticsOps extends QueryModule {
     * driver's hash-compare signal (the vec_kmeans generated-oracle
     * precedent). Memoized per sf dir: the fit collects an O(d²)
     * covariance — bounded, but not free per oracleSql evaluation. */
-  private val pcaOracleCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def pcaDuck(): String = {
-    val dir = graft.OracleCtx.sfDir
-    pcaOracleCache.computeIfAbsent(dir, (d: String) => {
-      val s = org.apache.spark.sql.SparkSession.getActiveSession
-        .getOrElse(org.apache.spark.sql.SparkSession.builder()
-          .master("local[4]").config("spark.ui.enabled", "false")
-          .getOrCreate())
+    val d = graft.OracleCtx.sfDir
+    val s = SparkSession.getActiveSession
+      .getOrElse(SparkSession.builder()
+        .master("local[4]").config("spark.ui.enabled", "false")
+        .getOrCreate())
+    SessionMemo(s, "pcaOracle", d) {
       pcaFit(Tables.embeddings(s, d)) match {
         case None =>
           (1 to PcaK).map(i => s"0.0 AS p$i")
@@ -350,7 +352,7 @@ object AnalyticsOps extends QueryModule {
              |FROM embeddings e LEFT JOIN s ON s.vec_id = e.vec_id
              |ORDER BY e.vec_id""".stripMargin
       }
-    })
+    }
   }
 
   /** The same k-means rounds as DuckDB CTEs, generated from the same
@@ -621,15 +623,12 @@ object AnalyticsOps extends QueryModule {
       // size-gated exact local solve (the GraphOps/CC pattern): the
       // support-filtered co-purchase graph is a tiny residual at test
       // SF — 6 relax rounds of join+union+agg+checkpoint are pure job
-      // latency there. At or under the gate, one EXECUTOR-SIDE task
+      // latency there. Within the gate, one EXECUTOR-SIDE task
       // (coalesce(1).mapPartitions — no driver collect, guide §5) runs
       // the identical BFS (source = max-degree hub, ties min id; dist
       // = min over ≤6 hops); above it the distributed frontier loop is
       // the parts-scale path.
-      val bfsGate = s.conf
-        .getOption("spark.graft.bfs.localSolveMaxEdges").map(_.toLong)
-        .getOrElse(4000000L)
-      if (e.count() <= bfsGate) {
+      if (Gate("graph_bfs", e, BfsLocalSolveMaxEdges).local) {
         import s.implicits._
         val out = e.select(col("a"), col("b")).as[(Long, Long)]
           .coalesce(1)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Gate, Q, QueryModule, SessionMemo, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -94,14 +94,13 @@ object BpeOps extends QueryModule {
     (rebuilt, best)
   }
 
-  /** trained state memoized per sf dir (the sim_ivf k-means pattern:
-    * "train once, apply many" — both queries and any repeated drive
-    * share one chain of checkpointed frames; the first caller prices
-    * the 8 rounds live). */
-  private val chainCache =
-    scala.collection.concurrent.TrieMap[String, (DataFrame, DataFrame)]()
-  private def trainChainFor(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    chainCache.getOrElseUpdate(d, trainChain(Tables.documents(s, d)))
+  /** trained state memoized per session and sf dir (the sim_ivf k-means
+    * pattern: "train once, apply many" — both queries and any repeated
+    * drive share one chain of checkpointed frames; the first caller
+    * prices the 8 rounds live). */
+  private[graft] def trainChainFor(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) =
+    SessionMemo(s, "bpeChain", d)(trainChain(Tables.documents(s, d)))
 
   /** Spark's UTF8String order (unsigned UTF-8 byte compare) — the
     * tiebreak the relational `orderBy(pc desc, p1, p2)` applies; the
@@ -186,17 +185,16 @@ object BpeOps extends QueryModule {
     (table, finalPieces)
   }
 
+  /** [[Gate]] budget for the local fit, in distinct words. */
+  private val LocalFitMaxWords = 1000000L
+
   /** run the training chain: (merge table frame, final pieces).
-    * Size-gated: vocabularies at or under
-    * `spark.graft.bpe.localFitMaxWords` fit the exact local fit above;
-    * larger ones run the unrolled relational rounds. */
+    * Size-gated: vocabularies within [[LocalFitMaxWords]] fit the exact
+    * local fit above; larger ones run the unrolled relational rounds. */
   private[graft] def trainChain(docs: DataFrame): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
     val words = wordCounts(docs).localCheckpoint()
-    val localMax = spark.conf
-      .getOption("spark.graft.bpe.localFitMaxWords").map(_.toLong)
-      .getOrElse(1000000L)
-    if (words.count() <= localMax) {
+    if (Gate("bpeTrain", words, LocalFitMaxWords).local) {
       val rows = words.collect()
         .map(r => (r.getString(0), r.getLong(1)))
       return localFit(spark, rows)

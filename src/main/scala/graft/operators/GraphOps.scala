@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Gate
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -119,13 +120,8 @@ object GraphOps {
     * relax/compress fixpoint: ~2 jobs instead of ~11 rounds × ~5 stages
     * of pure job-scheduling latency (the measured r14 floor: 12-15 s per
     * CC-fed query at sf0.1 for a graph of a few thousand edges). This is
-    * executor-side work, not a driver collect, and it is the same
-    * derive-from-materialized-size policy as `loopParts` below; above
-    * the ceiling the distributed fixpoint runs unchanged — the 100 TB
-    * path. Tunable per session (`spark.graft.cc.localSolveMaxEdges`);
-    * 0 disables the local path (used by the equivalence test to force
-    * the loop). */
-  private val LocalSolveMaxEdgesDefault = 8000000L
+    * executor-side work, not a driver collect ([[graft.Gate]] policy). */
+  private val LocalSolveMaxEdges = 8000000L
 
   /** Single-task exact CC over a materialized doubled-edge frame that
     * passed the size gate: sorted-id index + union-find with full path
@@ -204,14 +200,10 @@ object GraphOps {
       .union(pairs.select(col("id2").as("a"), col("id1").as("b")))
       .localCheckpoint(true)
     val spark = outerEdges.sparkSession
-    val edgeCount = outerEdges.count()
-    val localMax = spark.conf.getOption("spark.graft.cc.localSolveMaxEdges")
-      .map(_.toLong).getOrElse(LocalSolveMaxEdgesDefault)
-    if (edgeCount <= localMax && edgeCount > 0) {
+    val gate = Gate("connectedComponents", outerEdges, LocalSolveMaxEdges)
+    if (gate.local) {
       val labels = localSolve(outerEdges).localCheckpoint(true)
       outerEdges.unpersist()
-      System.err.println(s"[graft] connectedComponents: solved exactly " +
-        s"in one task ($edgeCount directed edges <= $localMax)")
       return nodes.select(col("doc_id"))
         .join(labels.withColumnRenamed("doc_id", "pid"),
           col("doc_id") === col("pid"), "left")
@@ -220,7 +212,7 @@ object GraphOps {
     }
     val outerParts = spark.conf.get("spark.sql.shuffle.partitions")
     val loopParts = math.max(1L, math.min(outerParts.toLong,
-      edgeCount / 50000L + 1L))
+      gate.rows / 50000L + 1L))
     val loop = spark.newSession()
     loop.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
     // AQE's per-stage re-planning buys nothing on the loop's right-sized
@@ -275,9 +267,6 @@ object GraphOps {
       labels = stamped.select("doc_id", "rep")
     }
     edges.unpersist()
-    System.err.println(s"[graft] connectedComponents: " +
-      (if (converged) s"converged in $round rounds"
-       else s"NOT converged after $round rounds"))
     // an unconverged result must never silently materialize (it would be
     // persisted into write-once fixtures and reused downstream with no
     // signal — round-2 advisory); diameters beyond ~2^rounds fail fast

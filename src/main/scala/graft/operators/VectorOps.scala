@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Gate, Q, QueryModule, SessionMemo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -102,23 +102,12 @@ object VectorOps extends QueryModule {
       // read, so when the pool fits the gate the k-step argmax loop runs
       // driver-side over those exact doubles — λ·qs − λC·max(cs) with
       // identical IEEE arithmetic, ties on vec_id — instead of paying
-      // k × (2 joins + window + checkpoint) of job latency. Above the
-      // gate (a million-query batch rerank) the unrolled relational
-      // chain below runs unchanged.
-      val localMaxPool = e.sparkSession.conf
-        .getOption("spark.graft.mmr.localSolveMaxPool").map(_.toLong)
-        .getOrElse(50000L)
-      // gate on the COLLECTED volume, not pool rows alone: the pairs
-      // frame is O(pool_rows × poolSize), so a parametric caller passing
-      // a large poolSize could pass a rows-only gate while pairs holds
-      // hundreds of millions of entries (r15 ADVICE). The budget is
-      // expressed in default-shape units — localSolveMaxPool rows at the
-      // default pool of MmrPool — so default callers see the identical
-      // gate while wide-pool callers are bounded by what is actually
-      // pulled to the driver.
-      val poolRows = pool.count()
-      if (poolRows * math.max(poolSize.toLong, 1L)
-          <= localMaxPool * MmrPool) {
+      // k × (2 joins + window + checkpoint) of job latency; a
+      // million-query batch rerank takes the unrolled relational chain.
+      // The gate weighs the COLLECTED volume, pool rows × poolSize (the
+      // pairs frame), not pool rows alone: a wide poolSize must not pull
+      // hundreds of millions of pairs to the driver (r15 ADVICE).
+      if (Gate("mmrRerank", pool, MmrLocalSolveMaxVolume, poolSize).local) {
         val ps = pool.select(col("q_id"), col("vec_id"), col("qs"))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         val sims = pairs.select(col("q_id"), col("c1"), col("c2"), col("cs"))
@@ -203,6 +192,9 @@ object VectorOps extends QueryModule {
   /** vec_mmr_rerank shape: candidate pool size and picks per query. */
   private val MmrPool = 20
   private val MmrK = 10
+  /** mmrRerank's [[Gate]] budget in collected (query, candidate) pairs:
+    * 50 000 pool rows at the default pool. */
+  private val MmrLocalSolveMaxVolume = 50000L * MmrPool
 
   /** The load-bearing bit-exactness kernel in SQL form: DuckDB's
     * in-order list sum of double products ≡ the codegen dotF — the
@@ -275,6 +267,10 @@ object VectorOps extends QueryModule {
     cs
   }
 
+  /** id offset for sim_ivf_append's synthetic appended batch — far
+    * above any test-corpus vec_id so provenance stays recoverable. */
+  private[graft] val IvfAppendOffset = 1000000L
+
   /** Memoized coarse-quantizer centroids per sf dir (round 6): ONE
     * k-means fit (k=8, seed 42, deterministic hash-ordered sample)
     * shared by sim_ivf_topk, sim_ivfpq_topk AND their generated
@@ -284,28 +280,18 @@ object VectorOps extends QueryModule {
     * keepList amortization); at 100 TB a coarse quantizer is fit once
     * and reused by every retrieval query anyway. None when the corpus
     * is too small (< k sample points) — the ids degrade to empty
-    * frames. Boundary: the cache (like pqOracleCache / pcaOracleCache)
-    * is per-JVM and keyed by PATH — regenerating the data under an
-    * already-fitted dir inside one JVM would serve a stale fit. The
-    * harness regenerates testdata only between JVMs, and tests use
-    * fresh temp dirs; a production deployment would key by snapshot
-    * version. */
-  /** id offset for sim_ivf_append's synthetic appended batch — far
-    * above any test-corpus vec_id so provenance stays recoverable. */
-  private[graft] val IvfAppendOffset = 1000000L
-
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[Array[Array[Double]]]]()
+    * frames. */
   private[graft] def ivfCentroids(s: SparkSession, d: String)
       : Option[Array[Array[Double]]] =
-    ivfCache.computeIfAbsent(d, (_: String) =>
+    SessionMemo(s, "ivf", d) {
       try {
         val rows = quantizerSample(Tables.embeddings(s, d)
             .select(col("vec_id"), col("embedding")), 1024)
           .collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
         if (rows.length < 8) None
         else Some(kmeansFit(rows, k = 8, iters = 5, seed = 42))
-      } catch { case _: Exception => None })
+      } catch { case _: Exception => None }
+    }
 
   /** base ∪ deterministically dim-rotated appended batch — the ONE
     * post-append corpus shared by sim_ivf_append, sim_ivf_refit and
@@ -332,18 +318,17 @@ object VectorOps extends QueryModule {
     * index the refit decision op compares against the frozen one. Same
     * k/iters/seed, so any recall difference is attributable to the
     * sample distribution, not fit hyperparameters. */
-  private val ivfRefitCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[Array[Array[Double]]]]()
   private[graft] def ivfRefitCentroids(s: SparkSession, d: String)
       : Option[Array[Array[Double]]] =
-    ivfRefitCache.computeIfAbsent(d, (_: String) =>
+    SessionMemo(s, "ivfRefit", d) {
       try {
         val rows = quantizerSample(ivfAppendUnion(s, d)
             .select(col("vec_id"), col("embedding")), 1024)
           .collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
         if (rows.length < 8) None
         else Some(kmeansFit(rows, k = 8, iters = 5, seed = 42))
-      } catch { case _: Exception => None })
+      } catch { case _: Exception => None }
+    }
 
   /** Codegen argmin assignment to the nearest centroid — euclidean
     * order via score(c) = |c|² − 2·x·c (|x|² is row-constant) over a
@@ -560,14 +545,12 @@ object VectorOps extends QueryModule {
     * the corpus (deterministic hash-ordered sample, fixed Lloyd's
     * iterations), and vec_pq, sim_pq_topk, sim_ivfpq_topk and the
     * generated oracles each re-paid the sample collect + driver fit
-    * (~0.3-0.5 s per caller) for bit-identical codebooks. Same
-    * path-keyed-cache boundary as ivfCache. */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Option[Array[Array[Array[Double]]]]]()
+    * (~0.3-0.5 s per caller) for bit-identical codebooks. */
   private[graft] def pqFit(s: SparkSession, d: String)
       : Option[Array[Array[Array[Double]]]] =
-    pqCache.computeIfAbsent(d, (_: String) =>
-      pqFit(Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))))
+    SessionMemo(s, "pq", d) {
+      pqFit(Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
+    }
 
   /** Frame-generic PQ codebook fit over any (vec_id, embedding) frame
     * (GraftApi.pqFit) — same bounded deterministic sample + Lloyd's
@@ -2511,15 +2494,13 @@ object VectorOps extends QueryModule {
     * dir (the fits collect bounded samples — not free per evaluation);
     * sharing pqFit/ivfCentroids with the queries guarantees the plan
     * and the SQL embed bit-identical model values. */
-  private val pqOracleCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Map[String, String]]()
   private def pqIvfOracles(): Map[String, String] = {
-    val dir = graft.OracleCtx.sfDir
-    pqOracleCache.computeIfAbsent(dir, (d: String) => {
-      val s = SparkSession.getActiveSession
-        .getOrElse(SparkSession.builder()
-          .master("local[4]").config("spark.ui.enabled", "false")
-          .getOrCreate())
+    val d = graft.OracleCtx.sfDir
+    val s = SparkSession.getActiveSession
+      .getOrElse(SparkSession.builder()
+        .master("local[4]").config("spark.ui.enabled", "false")
+        .getOrCreate())
+    SessionMemo(s, "pqIvfOracles", d) {
       def dlit(x: Double): String = dE(x)
       def dlist(v: Array[Double]): String =
         v.map(dlit).mkString("CAST([", ", ", "] AS DOUBLE[])")
@@ -2894,6 +2875,6 @@ object VectorOps extends QueryModule {
         "sim_ivf_append" -> simIvfAppendSql,
         "sim_ivf_delete" -> simIvfDeleteSql,
         "sim_ivf_refit" -> simIvfRefitSql)
-    })
+    }
   }
 }

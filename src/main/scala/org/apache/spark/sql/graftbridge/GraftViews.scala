@@ -1,7 +1,5 @@
 package org.apache.spark.sql.graftbridge
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchViewException, UnresolvedIdentifier, UnresolvedNamespace, UnresolvedRelation, UnresolvedView, ViewAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.Attribute
@@ -59,11 +57,10 @@ object GraftViews {
     * `spark.sql.extensions=graft.GraftExtensions` (the production
     * config needs none of this). Runtime confs are carried over at
     * creation; the catalog conf rides along with them. */
-  private val siblings = new TrieMap[SparkSession, SparkSession]()
   def sessionWithExtensions(spark: SparkSession,
       f: org.apache.spark.sql.SparkSessionExtensions => Unit)
       : SparkSession =
-    siblings.getOrElseUpdate(spark, {
+    _root_.graft.SessionMemo(spark, "extensionSibling", ()) {
       val cs =
         spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       val ext = new org.apache.spark.sql.SparkSessionExtensions
@@ -79,7 +76,7 @@ object GraftViews {
       ctor.newInstance(cs.sparkContext, Some(cs.sharedState), None,
         ext, cs.conf.getAll, Map.empty)
         .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    })
+    }
 }
 
 /** Parser wrapper: delegates everything; rewrites view DDL aimed at a

@@ -21,14 +21,10 @@ class AnalyticsSpec extends AnyFunSuite {
   test("graph_bfs size-gated local solve and frontier loop agree") {
     // round-15 gate: small graphs BFS driver-side; pin the two regimes
     // node-for-node and dist-for-dist on the real corpus graph
-    def run(): Map[Long, Long] =
+    val local = regimesAgree("graph_bfs gated") {
       SparkEntry.queries("graph_bfs")(spark, sf).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val local = run()
-    spark.conf.set("spark.graft.bfs.localSolveMaxEdges", "0")
-    val dist = try run()
-      finally spark.conf.unset("spark.graft.bfs.localSolveMaxEdges")
-    assert(local == dist, s"gated regimes disagree: $local vs $dist")
+    }
     assert(local.values.min == 0L && local.values.max <= 6L)
   }
 

@@ -288,16 +288,11 @@ class ApiSpec extends AnyFunSuite {
     ).toDF("vec_id", "embedding")
     val queries = Seq((1L, v(0.8, 0.6, 0, 0)), (2L, v(0, 0.2, 0.98, 0)))
       .toDF("q_id", "q_emb")
-    def run(): Map[(Long, Long), Long] =
+    val local = regimesAgree("mmrRerank gated") {
       GraftApi.mmrRerank(corpus, queries).collect()
         .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank")) ->
           r.getAs[Long]("vec_id")).toMap
-    val local = run()
-    spark.conf.set("spark.graft.mmr.localSolveMaxPool", "0")
-    val relational = try run()
-      finally spark.conf.unset("spark.graft.mmr.localSolveMaxPool")
-    assert(local == relational,
-      s"gated regimes disagree: $local vs $relational")
+    }
     assert(local.keySet.map(_._1) == Set(1L, 2L))
   }
 
@@ -312,16 +307,11 @@ class ApiSpec extends AnyFunSuite {
       (12L, v(0, 1.0, 0, 0)), (13L, v(0.4, 0.4, 0.2, 0))
     ).toDF("vec_id", "embedding")
     val queries = Seq((1L, v(0.7, 0.7, 0, 0))).toDF("q_id", "q_emb")
-    def run(): Vector[(Long, Long, Long)] =
+    val local = regimesAgree("NaN") {
       GraftApi.mmrRerank(corpus, queries).collect()
         .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank"),
           r.getAs[Long]("vec_id"))).sorted.toVector
-    val local = run()
-    spark.conf.set("spark.graft.mmr.localSolveMaxPool", "0")
-    val relational = try run()
-      finally spark.conf.unset("spark.graft.mmr.localSolveMaxPool")
-    assert(local == relational,
-      s"NaN regimes disagree: $local vs $relational")
+    }
     assert(!local.exists(_._3 == -1L), s"sentinel id leaked: $local")
   }
 

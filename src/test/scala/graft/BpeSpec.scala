@@ -122,14 +122,10 @@ class BpeSpec extends AnyFunSuite {
       f.collect().map(r => (r.getString(0), r.getLong(1),
         r.getInt(2), r.getString(3))).sorted.toVector,
       t.dtypes.toVector, f.dtypes.toVector)
-    val (t1, f1) = operators.BpeOps.trainChain(docs)
-    val local = collectBoth(t1, f1)
-    spark.conf.set("spark.graft.bpe.localFitMaxWords", "0")
-    val relational = try {
-      val (t2, f2) = operators.BpeOps.trainChain(docs)
-      collectBoth(t2, f2)
-    } finally spark.conf.unset("spark.graft.bpe.localFitMaxWords")
-    assert(local == relational, s"gated regimes disagree:\n$local\nvs\n$relational")
+    regimesAgree("trainChain gated") {
+      val (t, f) = operators.BpeOps.trainChain(docs)
+      collectBoth(t, f)
+    }
   }
 
   test("gated local fit segments non-BMP text by codepoint like the chain") {
@@ -146,17 +142,12 @@ class BpeSpec extends AnyFunSuite {
         r.getString(2), r.getLong(3))).sortBy(_._1).toVector,
       f.collect().map(r => (r.getString(0), r.getLong(1),
         r.getInt(2), r.getString(3))).sorted.toVector)
-    val (t1, f1) = operators.BpeOps.trainChain(docs)
-    val local = collectBoth(t1, f1)
-    spark.conf.set("spark.graft.bpe.localFitMaxWords", "0")
-    val relational = try {
-      val (t2, f2) = operators.BpeOps.trainChain(docs)
-      collectBoth(t2, f2)
-    } finally spark.conf.unset("spark.graft.bpe.localFitMaxWords")
-    assert(local == relational,
-      s"non-BMP regimes disagree:\n$local\nvs\n$relational")
+    val local = regimesAgree("non-BMP") {
+      val (t, f) = operators.BpeOps.trainChain(docs)
+      collectBoth(t, f)
+    }
     // and no piece may be a lone surrogate
-    val pieces = f1.select("piece").collect().map(_.getString(0))
+    val pieces = local._2.map(_._4)
     assert(!pieces.exists(p => p.length == 1 && p.charAt(0).isSurrogate),
       s"lone surrogate piece leaked: ${pieces.mkString(",")}")
   }

@@ -289,16 +289,17 @@ class OperatorSpec extends AnyFunSuite {
     // fixpoint for the refusal pin.
     val nodes = (0L to 12L).toDF("doc_id")
     val pairs = (0L until 12L).map(i => (i, i + 1)).toDF("id1", "id2")
-    spark.conf.set("spark.graft.cc.localSolveMaxEdges", "0")
-    try {
+    val before = Gate.overrides.get
+    Gate.distributed {
       assertThrows[IllegalArgumentException] {
         operators.GraphOps.connectedComponents(nodes, pairs, rounds = 1)
       }
-      // and with the default budget the same graph converges exactly
-      val labels = operators.GraphOps.connectedComponents(nodes, pairs)
-        .collect()
-      assert(labels.forall(_.getLong(1) == 0L), "path did not collapse to 0")
-    } finally spark.conf.unset("spark.graft.cc.localSolveMaxEdges")
+    }
+    assert(Gate.overrides.get > before, "the gate did not flip to the fixpoint")
+    // and with the default budget the same graph converges exactly
+    val labels = operators.GraphOps.connectedComponents(nodes, pairs)
+      .collect()
+    assert(labels.forall(_.getLong(1) == 0L), "path did not collapse to 0")
   }
 
   test("connectedComponents single-task solve and distributed fixpoint " +
@@ -311,14 +312,10 @@ class OperatorSpec extends AnyFunSuite {
     val chain = (5L until 30L).map(i => (i, i + 1))
     val extra = Seq((0L, 3L), (3L, 36L), (38L, 39L), (2L, 2L + 0L))
     val pairs = (chain ++ extra).toDF("id1", "id2")
-    val local = operators.GraphOps.connectedComponents(nodes, pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    spark.conf.set("spark.graft.cc.localSolveMaxEdges", "0")
-    val dist =
-      try operators.GraphOps.connectedComponents(nodes, pairs)
+    val local = regimesAgree("size-gated") {
+      operators.GraphOps.connectedComponents(nodes, pairs)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      finally spark.conf.unset("spark.graft.cc.localSolveMaxEdges")
-    assert(local == dist, "size-gated regimes disagree")
+    }
     assert(local(29L) == 5L && local(36L) == 0L && local(4L) == 4L)
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.Assertions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites — local[4] mirrors the driver harness. */
@@ -16,6 +17,22 @@ object TestSpark {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Regime-equivalence template for the [[Gate]]d local solves: runs
+    * `body` as gated, then again with every gate forced distributed, and
+    * asserts equal results. The forced run must also have overridden a
+    * gate that would otherwise have gone local — else both runs took the
+    * distributed path and the comparison proved nothing. Returns the
+    * gated result. */
+  def regimesAgree[A](what: String)(body: => A): A = {
+    val gated = body
+    val before = Gate.overrides.get
+    val forced = Gate.distributed(body)
+    assert(Gate.overrides.get > before,
+      s"$what: no gate went local, so the regimes were never compared")
+    assert(gated == forced, s"$what regimes disagree:\n$gated\nvs\n$forced")
+    gated
+  }
 }
 
 /** Every declared query must construct, execute and not throw at sf0.001.
