@@ -69,6 +69,34 @@ private[graft] object Gate {
     forced.withValue(true)(body)
 }
 
+/** The local session the dev mains (Bench, Verify, RunOne) run in:
+  * `local[$SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+  * partitions, UTC session time, no UI and WARN logging. */
+private[graft] object LocalSession {
+  def apply(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+}
+
+/** What a capped candidate path dropped — the shingle maxDf cap
+  * (`TextOps.prunePostings`) and the LSH bucket budget
+  * (`VectorOps.cappedBucketPairs`) — logged at WARN under `graft.Drops`,
+  * so no cap drops recall silently. */
+private[graft] object Drops {
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.Drops")
+
+  def apply(tag: String, what: String): Unit =
+    log.warn(s"[graft] $tag: $what")
+}
+
 /** The one memo for values computed once per session and reused by later
   * query builds: resolved relations, model fits, generated oracle SQL,
   * sibling sessions. Keys are (session, kind, key), `kind` naming the

@@ -1,7 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev utility over comma-separated query ids sharing one JVM/session:
@@ -16,14 +15,7 @@ object RunOne {
   def main(args: Array[String]): Unit = {
     val ids = args(0).split(",").toSeq
     val sfDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     args.drop(2) match {
       case Array("explain", outDir, tag) =>
         new java.io.File(outDir).mkdirs()

@@ -198,106 +198,99 @@ object GraftApi {
 
   // ---- incremental materialized views --------------------------------
 
-  /** registered MV definitions: target table → (source, group columns,
-    * summed column, output aliases, last commit folded in). In-JVM —
-    * the structure a lake format persists in the MV's own metadata. */
-  private final case class MvDef(source: String, groupCols: Seq[String],
-      sumCol: String, countAlias: String, sumAlias: String,
-      lastVersion: Int)
-  private val mvDefs =
-    new scala.collection.concurrent.TrieMap[String, MvDef]()
+  /** An MV's definition: its kind ("sum" folds COUNT(*) + SUM from the
+    * change feed, "gw" recomputes COUNT(*) + MIN + MAX per touched
+    * group), source table, group columns, aggregated column and output
+    * aliases in aggregate order. This module owns its format: it rides
+    * the MV table's own commits as an opaque JSON string beside the
+    * refresh watermark ([[graft.sources.GraftTableStore.MvRecord]]), so
+    * DROP, restart and rebase treat it like any other per-table state. */
+  private final case class MvDef(kind: String, source: String,
+      groupCols: Seq[String], aggCol: String, aliases: Seq[String]) {
+    def json: String = {
+      import org.json4s.JsonDSL._
+      import org.json4s.jackson.JsonMethods.{compact, render}
+      compact(render(("kind" -> kind) ~ ("source" -> source) ~
+        ("groupCols" -> groupCols.toList) ~ ("aggCol" -> aggCol) ~
+        ("aliases" -> aliases.toList)))
+    }
+  }
+  private object MvDef {
+    def parse(s: String): MvDef = {
+      import org.json4s._
+      val j = org.json4s.jackson.JsonMethods.parse(s)
+      def str(n: String) = (j \ n).asInstanceOf[JString].s
+      def strs(n: String) = (j \ n).asInstanceOf[JArray].arr
+        .map(_.asInstanceOf[JString].s)
+      MvDef(str("kind"), str("source"), strs("groupCols"), str("aggCol"),
+        strs("aliases"))
+    }
+  }
 
-  // ---- MV DEFINITION DURABILITY (round 12) ---------------------------
-  //
-  // The definition + refresh watermark persist as warehouse sidecars
-  // (the metadata a real format stores in the MV's own table
-  // properties), written atomically on create and after every fold —
-  // so a fresh process can keep maintaining an MV it never created:
-  // the target table replays from its transaction log, the definition
-  // loads here, and the watermark says exactly which commits are
-  // already folded (no double-apply, no gap). In-memory caches clear
-  // with the restart simulation via a registered hook.
-  private lazy val mvRestartHook: Unit = {
-    graft.sources.GraftLog.registerRestartHook { () =>
-      mvDefs.clear(); gwDefs.clear()
-    }
-    // DROP TABLE on an MV retires its definition sidecar and caches —
-    // otherwise sumDefOf/gwDefOf resurrect the stale definition after
-    // a restart and sidecars accumulate forever
-    graft.sources.GraftMergeCatalog.registerDropHook { name =>
-      mvDefs.remove(name); gwDefs.remove(name)
-      // the lock OBJECTS stay resident (as tableLocks deliberately
-      // does): removing one while a concurrent refresh holds it would
-      // hand a re-created same-named MV a FRESH object, letting two
-      // folds interleave inside foldMvChanges. Bounded by distinct MV
-      // names seen in-process.
-      val f = mvSidecar(name)
-      if (f.isFile) { f.delete(); () }
-    }
+  /** the registered `kind` MV `mv` and the source version its rows
+    * reflect. Resolving the MV table first is what replays its log in a
+    * process that never touched it — nothing else would. */
+  private def mvOf(spark: org.apache.spark.sql.SparkSession, mv: String,
+      kind: String): (MvDef, Int) = {
+    val record =
+      if (!spark.catalog.tableExists(mv)) None
+      else graft.sources.GraftTableStore.mvRecordOf(mv)
+    record.map(r => (MvDef.parse(r.definition), r.watermark.toInt))
+      .filter(_._1.kind == kind)
+      .getOrElse(throw new IllegalArgumentException(
+        if (kind == "sum") s"$mv is not a registered materialized view " +
+          "— createMaterializedView first"
+        else s"$mv is not a registered group-wise view — " +
+          "createGroupwiseView first"))
   }
-  private def mvSidecar(mv: String): java.io.File =
-    graft.sources.GraftWarehouse.mvSidecar(mv)
-  private def persistMv(mv: String, kind: String, source: String,
-      groupCols: Seq[String], aggCol: String, aliases: Seq[String],
-      lastVersion: Int): Unit = {
-    import org.json4s.JsonDSL._
-    val body = org.json4s.jackson.JsonMethods.compact(
-      org.json4s.jackson.JsonMethods.render(
-        ("kind" -> kind) ~ ("source" -> source) ~
-          ("groupCols" -> groupCols.toList) ~ ("aggCol" -> aggCol) ~
-          ("aliases" -> aliases.toList) ~
-          ("lastVersion" -> lastVersion)))
-    val f = mvSidecar(mv)
-    val tmp = new java.io.File(f.getAbsolutePath + ".tmp")
-    val out = new java.io.FileOutputStream(tmp)
-    try out.write(body.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!tmp.renameTo(f)) throw new IllegalStateException(
-      s"could not persist MV definition $f")
-  }
-  private def loadMv(mv: String): Option[(String, String, Seq[String],
-      String, Seq[String], Int)] = {
-    val f = mvSidecar(mv)
-    if (!f.isFile) return None
-    import org.json4s._
-    val j = org.json4s.jackson.JsonMethods.parse(new String(
-      java.nio.file.Files.readAllBytes(f.toPath),
-      java.nio.charset.StandardCharsets.UTF_8))
-    def str(n: String) = (j \ n).asInstanceOf[JString].s
-    def strs(n: String) = (j \ n).asInstanceOf[JArray].arr
-      .map(_.asInstanceOf[JString].s)
-    val last = j \ "lastVersion" match {
-      case JInt(n) => n.toInt
-      case JLong(n) => n.toInt
-      case other => throw new IllegalStateException(s"bad mv def: $other")
-    }
-    Some((str("kind"), str("source"), strs("groupCols"), str("aggCol"),
-      strs("aliases"), last))
-  }
-  private def sumDefOf(mv: String): Option[MvDef] =
-    mvDefs.get(mv).orElse(loadMv(mv).collect {
-      case ("sum", source, gcols, aggCol, Seq(n, sa), last) =>
-        val d = MvDef(source, gcols, aggCol, n, sa, last)
-        mvDefs.putIfAbsent(mv, d)
-        mvDefs(mv)
-    })
-  private def gwDefOf(mv: String): Option[GwDef] =
-    gwDefs.get(mv).orElse(loadMv(mv).collect {
-      case ("gw", source, gcols, aggCol, Seq(n, lo, hi), last) =>
-        val d = GwDef(source, gcols, aggCol, n, lo, hi, last)
-        gwDefs.putIfAbsent(mv, d)
-        gwDefs(mv)
-    })
-  /** per-MV fold serialization: the lastVersion check and the
-    * MERGE + version bump must be one atomic step, or a batch refresh
+
+  /** per-MV refresh serialization: the watermark check and the MERGE
+    * that advances it must be one atomic step, or a batch refresh
     * racing a maintenance micro-batch could both pass the
-    * `_commit_version > lastVersion` filter and double-apply the same
-    * commits' deltas. One lock object per MV, created with the def. */
+    * `_commit_version > watermark` filter and double-apply the same
+    * commits. The lock objects stay resident after a DROP: removing one
+    * while a refresh holds it would hand a re-created same-named MV a
+    * fresh object. Bounded by distinct MV names seen in-process. */
   private val mvLocks =
     new scala.collection.concurrent.TrieMap[String, Object]()
   private def mvLock(mv: String): Object =
     mvLocks.getOrElseUpdate(mv, new Object)
+
+  /** CREATE for both MV kinds: (re)create `mv` as a parquet-backed
+    * table — its rows and record survive a restart — holding `d`'s
+    * aggregates (`aggs`: expression and SQL type, in alias order) over
+    * the source at its published head. The baseline append carries the
+    * MV's record, so the definition and the first watermark become
+    * durable in the same commit. */
+  private def createMv(spark: org.apache.spark.sql.SparkSession,
+      mv: String, d: MvDef, aggs: Seq[(Column, String)]): Unit = {
+    import graft.sources.GraftTableStore
+    // fail at CREATE, not first refresh, if the source cannot serve a
+    // change feed (planning the feed scan fires the MoR requirement)
+    spark.read.option("startingVersion", Int.MaxValue)
+      .table(s"${d.source}.changes").queryExecution.executedPlan
+    val srcSchema = spark.table(d.source).schema
+    // the recorded watermark must be the PUBLISHED head — what both
+    // the baseline read below and the change feed serve. Recording
+    // the chain head would skip staged WAP commits forever (their
+    // versions <= watermark once published); and the baseline read
+    // is PINNED to that exact version so a commit landing between the
+    // head read and the snapshot read cannot diverge the MV.
+    val head = GraftTableStore.publishedCount(d.source) - 1
+    val ddlCols = d.groupCols.map(c => s"$c ${srcSchema(c).dataType.sql}") ++
+      d.aliases.zip(aggs).map { case (a, (_, t)) => s"$a $t" }
+    spark.sql(s"DROP TABLE IF EXISTS $mv")
+    spark.sql(s"CREATE TABLE $mv (${ddlCols.mkString(", ")}) " +
+      "TBLPROPERTIES ('graft.store'='parquet')")
+    val baseline = // a source with no commits yet has no version to pin
+      if (head < 0) spark.table(d.source)
+      else spark.sql(s"SELECT * FROM ${d.source} VERSION AS OF $head")
+    val cols = aggs.zip(d.aliases).map { case ((a, _), n) => a.as(n) }
+    GraftTableStore.armMvRecord(mv, d.json, head)
+    try baseline.groupBy(d.groupCols.map(col): _*)
+      .agg(cols.head, cols.tail: _*).writeTo(mv).append()
+    finally GraftTableStore.disarmMvRecord()
+  }
 
   /** CREATE MATERIALIZED VIEW (the incrementally-maintainable shape:
     * COUNT(*) + SUM over group keys — the self-maintainable aggregate
@@ -314,44 +307,14 @@ object GraftApi {
   def createMaterializedView(spark: org.apache.spark.sql.SparkSession,
       mv: String, source: String, groupCols: Seq[String],
       countAlias: String, sumCol: String, sumAlias: String): Unit = {
-    val srcSchema = spark.table(source).schema
-    require(srcSchema(sumCol).dataType ==
-      org.apache.spark.sql.types.LongType,
+    val sumType = spark.table(source).schema(sumCol).dataType
+    require(sumType == LongType,
       s"materialized view $mv: SUM column '$sumCol' must be BIGINT " +
         "(exact incremental arithmetic — quantize to cents first); " +
-        s"got ${srcSchema(sumCol).dataType.sql}")
-    // fail at CREATE, not first refresh, if the source cannot serve a
-    // change feed (planning the feed scan fires the MoR requirement)
-    spark.read.option("startingVersion", Int.MaxValue)
-      .table(s"$source.changes").queryExecution.executedPlan
-    // the recorded watermark must be the PUBLISHED head — what both
-    // the baseline read below and the change feed serve. Recording
-    // the chain head would skip staged WAP commits forever (their
-    // versions <= lastVersion once published); and the baseline read
-    // is PINNED to that exact version so a commit landing between the
-    // head read and the snapshot read cannot diverge the MV.
-    val head = graft.sources.GraftTableStore.publishedCount(source) - 1
-    val ddlCols = groupCols.map(c =>
-      s"$c ${srcSchema(c).dataType.sql}").mkString(", ")
-    mvRestartHook // evict-on-restart registration (once)
-    spark.sql(s"DROP TABLE IF EXISTS $mv")
-    // the MV TABLE is file-backed so the materialized state itself
-    // survives a restart alongside the definition sidecar
-    spark.sql(s"CREATE TABLE $mv ($ddlCols, " +
-      s"$countAlias BIGINT, $sumAlias BIGINT) " +
-      "TBLPROPERTIES ('graft.store'='parquet')")
-    val baseline = // a source with no commits yet has no version to pin
-      if (head < 0) spark.table(source)
-      else spark.sql(s"SELECT * FROM $source VERSION AS OF $head")
-    baseline
-      .groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as(countAlias), sum(sumCol).as(sumAlias))
-      .writeTo(mv).append()
-    mvDefs.put(mv, MvDef(source, groupCols, sumCol, countAlias,
-      sumAlias, head))
-    persistMv(mv, "sum", source, groupCols, sumCol,
-      Seq(countAlias, sumAlias), head)
-    ()
+        s"got ${sumType.sql}")
+    createMv(spark, mv,
+      MvDef("sum", source, groupCols, sumCol, Seq(countAlias, sumAlias)),
+      Seq(count(lit(1)) -> "BIGINT", sum(sumCol) -> "BIGINT"))
   }
 
   /** REFRESH MATERIALIZED VIEW, incrementally: fold the source's
@@ -365,9 +328,7 @@ object GraftApi {
     * version now reflected); a no-change refresh is a no-op. */
   def refreshMaterializedView(spark: org.apache.spark.sql.SparkSession,
       mv: String): (Long, Int) = {
-    val d = sumDefOf(mv).getOrElse(throw new IllegalArgumentException(
-      s"$mv is not a registered materialized view — " +
-        "createMaterializedView first"))
+    val (d, last) = mvOf(spark, mv, "sum")
     // resolve the source THROUGH the catalog first: a fresh process
     // must lazily replay its transaction log before the published
     // head is read, or the refresh would silently no-op on head = -1
@@ -375,55 +336,41 @@ object GraftApi {
     // the feed serves PUBLISHED commits only — staged WAP commits
     // fold after their publish, not before
     val head = graft.sources.GraftTableStore.publishedCount(d.source) - 1
-    if (head <= d.lastVersion) return (0L, head)
+    if (head <= last) return (0L, head)
     val feed = spark.read
-      .option("startingVersion", (d.lastVersion + 1).toString)
+      .option("startingVersion", (last + 1).toString)
       .table(s"${d.source}.changes")
     (foldMvChanges(spark, mv, feed), head)
   }
 
   /** fold a frame of change-feed rows into the MV — the shared core
     * of batch refresh and streaming maintenance. Commit-granular
-    * idempotence: rows at or below the MV's recorded version are
-    * dropped first, so a replayed micro-batch (or a refresh racing
-    * the stream) applies each commit EXACTLY once. Returns the number
-    * of change rows folded. */
+    * idempotence: rows at or below the MV's watermark are dropped
+    * first, so a replayed micro-batch (or a refresh racing the stream)
+    * applies each commit EXACTLY once. Returns the number of change
+    * rows folded. */
   private def foldMvChanges(spark: org.apache.spark.sql.SparkSession,
       mv: String, changes: DataFrame): Long = mvLock(mv).synchronized {
-    val d0 = sumDefOf(mv).getOrElse(throw new IllegalArgumentException(
-      s"$mv is not a registered materialized view"))
-    // force the MV TABLE's lazy log attach before the watermark read —
-    // a fresh process restores the commit-carried watermark during
-    // replay, and reading the map first would see a hole
-    spark.table(mv)
-    // the AUTHORITATIVE watermark is the one that rode the MV's own
-    // MERGE commit (durable atomically with the fold — no crash
-    // window); the sidecar value backstops a pre-first-fold MV. Take
-    // the max: a crash between the MERGE commit and the sidecar write
-    // leaves the sidecar one window behind, and re-folding that
-    // window would double-apply the sum deltas.
-    val effectiveLast = graft.sources.GraftTableStore.mvWatermarkOf(mv)
-      .map(_.toInt).map(math.max(_, d0.lastVersion))
-      .getOrElse(d0.lastVersion)
-    val d = d0.copy(lastVersion = effectiveLast)
+    val (d, last) = mvOf(spark, mv, "sum")
+    val Seq(countAlias, sumAlias) = d.aliases
     // cache: the feed materializes snapshot DIFFS driver-side (the
     // documented CDC cost) — the count, max-version readout and the
     // MERGE below must not pay for it three times
     val fresh = changes
-      .where(col("_commit_version") > d.lastVersion.toLong).cache()
+      .where(col("_commit_version") > last.toLong).cache()
     try {
       val nChanges = fresh.count()
       if (nChanges == 0L) return 0L
       val newLast = fresh
-        .agg(max(col("_commit_version"))).collect()(0).getLong(0).toInt
+        .agg(max(col("_commit_version"))).collect()(0).getLong(0)
       val sign = when(col("_change_type")
         .isin("insert", "update_postimage"), 1L).otherwise(-1L)
       val viewName = s"__mv_delta_${mv.replace('.', '_')}"
       fresh.select(d.groupCols.map(col) :+ sign.as("__sign") :+
-          col(d.sumCol): _*)
+          col(d.aggCol): _*)
         .groupBy(d.groupCols.map(col): _*)
         .agg(sum(col("__sign")).as("__dn"),
-          sum(col("__sign") * col(d.sumCol)).as("__ds"))
+          sum(col("__sign") * col(d.aggCol)).as("__ds"))
         .where(col("__dn") =!= 0L || col("__ds") =!= 0L)
         .createOrReplaceTempView(viewName)
       val on = d.groupCols.map(c => s"t.$c <=> s.$c").mkString(" AND ")
@@ -432,24 +379,22 @@ object GraftApi {
       // the new watermark rides INSIDE the MERGE's commit (consumed by
       // the commit path on this thread) — durable atomically with the
       // fold itself, the no-double-apply guarantee
-      graft.sources.GraftTableStore.beginMvFold(mv, newLast.toLong)
+      graft.sources.GraftTableStore.armMvRecord(mv, d.json, newLast)
       spark.sql(
         s"""MERGE INTO $mv t USING $viewName s ON $on
-           |WHEN MATCHED AND t.${d.countAlias} + s.__dn = 0 THEN DELETE
+           |WHEN MATCHED AND t.$countAlias + s.__dn = 0 THEN DELETE
            |WHEN MATCHED THEN UPDATE SET
-           |  ${d.countAlias} = t.${d.countAlias} + s.__dn,
-           |  ${d.sumAlias} = t.${d.sumAlias} + s.__ds
+           |  $countAlias = t.$countAlias + s.__dn,
+           |  $sumAlias = t.$sumAlias + s.__ds
            |WHEN NOT MATCHED AND s.__dn > 0 THEN
-           |  INSERT ($gList, ${d.countAlias}, ${d.sumAlias})
+           |  INSERT ($gList, $countAlias, $sumAlias)
            |  VALUES ($sList, s.__dn, s.__ds)""".stripMargin)
-      mvDefs.put(mv, d.copy(lastVersion = newLast))
-      persistMv(mv, "sum", d.source, d.groupCols, d.sumCol,
-        Seq(d.countAlias, d.sumAlias), newLast)
       nChanges
     } finally {
       // a MERGE whose delta view net-cancelled commits nothing — the
       // armed watermark must not leak onto this thread's next commit
-      graft.sources.GraftTableStore.abortMvFold()
+      // (the window re-reads next time and nets to zero again)
+      graft.sources.GraftTableStore.disarmMvRecord()
       fresh.unpersist()
       ()
     }
@@ -464,19 +409,9 @@ object GraftApi {
     * groups recompute from the base — the base scan is semi-joined to
     * the touched keys (broadcast — changed groups are small by
     * definition), so refresh cost is O(changes + rows of touched
-    * groups), never a full rescan. Definitions: target → (source,
-    * group cols, agg column, aliases, last version folded). */
-  private final case class GwDef(source: String, groupCols: Seq[String],
-      aggCol: String, nAlias: String, minAlias: String,
-      maxAlias: String, lastVersion: Int)
-  private val gwDefs =
-    new scala.collection.concurrent.TrieMap[String, GwDef]()
-  private val gwLocks =
-    new scala.collection.concurrent.TrieMap[String, Object]()
-  private def gwLock(mv: String): Object =
-    gwLocks.getOrElseUpdate(mv, new Object)
-
-  /** CREATE a group-wise MV: `SELECT groupCols, COUNT(*) nAlias,
+    * groups), never a full rescan.
+    *
+    * CREATE a group-wise MV: `SELECT groupCols, COUNT(*) nAlias,
     * MIN(aggCol) minAlias, MAX(aggCol) maxAlias FROM source GROUP BY
     * groupCols`, materialized as a governed table pinned to the
     * source's published head. `source` must serve a change feed
@@ -485,31 +420,11 @@ object GraftApi {
       mv: String, source: String, groupCols: Seq[String],
       aggCol: String, nAlias: String, minAlias: String,
       maxAlias: String): Unit = {
-    val srcSchema = spark.table(source).schema
-    // fail at CREATE if the source cannot serve a change feed
-    spark.read.option("startingVersion", Int.MaxValue)
-      .table(s"$source.changes").queryExecution.executedPlan
-    val head = graft.sources.GraftTableStore.publishedCount(source) - 1
-    val aggT = srcSchema(aggCol).dataType.sql
-    val ddlCols = groupCols.map(c =>
-      s"$c ${srcSchema(c).dataType.sql}").mkString(", ")
-    mvRestartHook
-    spark.sql(s"DROP TABLE IF EXISTS $mv")
-    spark.sql(s"CREATE TABLE $mv ($ddlCols, $nAlias BIGINT, " +
-      s"$minAlias $aggT, $maxAlias $aggT) " +
-      "TBLPROPERTIES ('graft.store'='parquet')")
-    val baseline =
-      if (head < 0) spark.table(source)
-      else spark.sql(s"SELECT * FROM $source VERSION AS OF $head")
-    baseline.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as(nAlias), min(aggCol).as(minAlias),
-        max(aggCol).as(maxAlias))
-      .writeTo(mv).append()
-    gwDefs.put(mv, GwDef(source, groupCols, aggCol, nAlias, minAlias,
-      maxAlias, head))
-    persistMv(mv, "gw", source, groupCols, aggCol,
-      Seq(nAlias, minAlias, maxAlias), head)
-    ()
+    val aggT = spark.table(source).schema(aggCol).dataType.sql
+    createMv(spark, mv,
+      MvDef("gw", source, groupCols, aggCol, Seq(nAlias, minAlias, maxAlias)),
+      Seq(count(lit(1)) -> "BIGINT", min(aggCol) -> aggT,
+        max(aggCol) -> aggT))
   }
 
   /** REFRESH a group-wise MV: the feed since the last refresh names
@@ -517,30 +432,26 @@ object GraftApi {
     * pinned to the head version the feed window ends at, so a commit
     * racing the refresh cannot smear two states together — and MERGE
     * into the MV (vanished groups DELETE, new groups INSERT, changed
-    * groups UPDATE). Returns (touched groups, version reflected). */
+    * groups UPDATE). The new watermark rides the MERGE's commit; a
+    * window that touched no group leaves it where it is. Returns
+    * (touched groups, version reflected). */
   def refreshGroupwiseView(spark: org.apache.spark.sql.SparkSession,
-      mv: String): (Long, Int) = gwLock(mv).synchronized {
-    val d = gwDefOf(mv).getOrElse(throw new IllegalArgumentException(
-      s"$mv is not a registered group-wise view — " +
-        "createGroupwiseView first"))
+      mv: String): (Long, Int) = mvLock(mv).synchronized {
+    val (d, last) = mvOf(spark, mv, "gw")
+    val Seq(nAlias, minAlias, maxAlias) = d.aliases
     // lazy catalog attach before the head read (see the sum MV twin)
     spark.table(d.source)
     val head = graft.sources.GraftTableStore.publishedCount(d.source) - 1
-    if (head <= d.lastVersion) return (0L, head)
+    if (head <= last) return (0L, head)
     val fresh = spark.read
-      .option("startingVersion", (d.lastVersion + 1).toString)
+      .option("startingVersion", (last + 1).toString)
       .option("endingVersion", head.toString)
       .table(s"${d.source}.changes")
     val touched = fresh.select(d.groupCols.map(col): _*).distinct()
       .cache()
     try {
       val nTouched = touched.count()
-      if (nTouched == 0L) {
-        gwDefs.put(mv, d.copy(lastVersion = head))
-        persistMv(mv, "gw", d.source, d.groupCols, d.aggCol,
-          Seq(d.nAlias, d.minAlias, d.maxAlias), head)
-        return (0L, head)
-      }
+      if (nTouched == 0L) return (0L, head)
       // recompute ONLY the touched groups, against the pinned head.
       // Joins must be NULL-SAFE like the MERGE ON below: a NULL group
       // key is a real group (groupBy treats it as one) — a null-unsafe
@@ -553,8 +464,8 @@ object GraftApi {
       val recomputed = base
         .join(broadcast(tAlias), semiCond, "left_semi")
         .groupBy(d.groupCols.map(col): _*)
-        .agg(count(lit(1)).as(d.nAlias),
-          min(d.aggCol).as(d.minAlias), max(d.aggCol).as(d.maxAlias))
+        .agg(count(lit(1)).as(nAlias),
+          min(d.aggCol).as(minAlias), max(d.aggCol).as(maxAlias))
         .alias("r")
       val viewName = s"__gw_delta_${mv.replace('.', '_')}"
       // a touched group absent from the recompute has NO live rows —
@@ -563,27 +474,29 @@ object GraftApi {
         col(s"t.$c") <=> col(s"r.$c")).reduce(_ && _)
       touched.alias("t").join(recomputed, outCond, "left")
         .select(d.groupCols.map(c => col(s"t.$c")) ++
-          Seq(col(d.nAlias), col(d.minAlias), col(d.maxAlias)): _*)
+          Seq(col(nAlias), col(minAlias), col(maxAlias)): _*)
         .createOrReplaceTempView(viewName)
       val on = d.groupCols.map(c => s"t.$c <=> s.$c").mkString(" AND ")
       val gList = d.groupCols.mkString(", ")
       val sList = d.groupCols.map(c => s"s.$c").mkString(", ")
+      graft.sources.GraftTableStore.armMvRecord(mv, d.json, head)
       spark.sql(
         s"""MERGE INTO $mv t USING $viewName s ON $on
-           |WHEN MATCHED AND s.${d.nAlias} IS NULL THEN DELETE
+           |WHEN MATCHED AND s.$nAlias IS NULL THEN DELETE
            |WHEN MATCHED THEN UPDATE SET
-           |  ${d.nAlias} = s.${d.nAlias},
-           |  ${d.minAlias} = s.${d.minAlias},
-           |  ${d.maxAlias} = s.${d.maxAlias}
-           |WHEN NOT MATCHED AND s.${d.nAlias} IS NOT NULL THEN
-           |  INSERT ($gList, ${d.nAlias}, ${d.minAlias}, ${d.maxAlias})
-           |  VALUES ($sList, s.${d.nAlias}, s.${d.minAlias},
-           |    s.${d.maxAlias})""".stripMargin)
-      gwDefs.put(mv, d.copy(lastVersion = head))
-      persistMv(mv, "gw", d.source, d.groupCols, d.aggCol,
-        Seq(d.nAlias, d.minAlias, d.maxAlias), head)
+           |  $nAlias = s.$nAlias,
+           |  $minAlias = s.$minAlias,
+           |  $maxAlias = s.$maxAlias
+           |WHEN NOT MATCHED AND s.$nAlias IS NOT NULL THEN
+           |  INSERT ($gList, $nAlias, $minAlias, $maxAlias)
+           |  VALUES ($sList, s.$nAlias, s.$minAlias, s.$maxAlias)"""
+          .stripMargin)
       (nTouched, head)
-    } finally { touched.unpersist(); () }
+    } finally {
+      graft.sources.GraftTableStore.disarmMvRecord()
+      touched.unpersist()
+      ()
+    }
   }
 
   /** CROSS-TABLE TRANSACTION (BEGIN…COMMIT over governed tables): an
@@ -731,9 +644,7 @@ object GraftApi {
       spark: org.apache.spark.sql.SparkSession, mv: String,
       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val d = sumDefOf(mv).getOrElse(throw new IllegalArgumentException(
-      s"$mv is not a registered materialized view — " +
-        "createMaterializedView first"))
+    val (d, _) = mvOf(spark, mv, "sum")
     spark.readStream.table(s"${d.source}.changes")
       .writeStream
       .option("checkpointLocation", checkpointDir)

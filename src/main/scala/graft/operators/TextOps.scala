@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Q, QueryModule, Tables}
+import graft.{Drops, Q, QueryModule, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -186,6 +186,8 @@ object TextOps extends QueryModule {
       explode(slice(col("hs"), lit(1),
         (floor(lit(1.0 - ShingleTau) * size(col("hs"))) + 1)
           .cast(IntegerType))).as("tok"))
+    // the postings are PREFIX postings, so maxDf caps prefix-df here:
+    // the number of docs whose prefix slice holds the shingle
     val pruned = prunePostings(prefix, "tok", "ngramCandidates")
     pruned.select(col("tok"), col("doc_id").as("id1"))
       .join(pruned.select(col("tok"), col("doc_id").as("id2")), Seq("tok"))
@@ -217,7 +219,13 @@ object TextOps extends QueryModule {
     * the boilerplate df knee, O(100) on web corpora. Cost: one
     * O(postings) count aggregation over the already-checkpointed
     * shingle frame + an O(distinct shingles) semi-join that shares the
-    * candidate join's `tok` partitioning. */
+    * candidate join's `tok` partitioning.
+    *
+    * df counts the docs holding `tokCol` in `post`, so its meaning is
+    * the caller's: [[ngramCandidates]] passes prefix postings and caps
+    * PREFIX-df (docs whose prefix slice holds the shingle),
+    * [[containmentPairs]] passes the full index and caps FULL df (docs
+    * holding it anywhere). One knob, two meanings. */
   private[graft] def prunePostings(post: DataFrame, tokCol: String,
       tag: String): DataFrame = {
     val cap = post.sparkSession.conf
@@ -238,7 +246,7 @@ object TextOps extends QueryModule {
       .agg(countDistinct(col(tokCol)).as("nt"), count(lit(1)).as("np"))
       .collect()(0)
     if (over.getLong(0) > 0)
-      System.err.println(s"[graft] $tag: maxDf=$cap dropped " +
+      Drops(tag, s"maxDf=$cap dropped " +
         s"${over.getLong(0)} shingle posting list(s) " +
         s"(${over.getLong(1)} postings) from candidate generation — " +
         "pairs sharing ONLY ubiquitous shingles are not proposed " +
@@ -344,7 +352,10 @@ object TextOps extends QueryModule {
     // maxDf cap on the CONTAINER-side posting lists (the full index —
     // the side whose df drives the join's quadratic term); a dropped
     // tok matches nothing, so pruning one side prunes the pair space.
-    // prunePostings contract (no-op at tested scales, eager drop log).
+    // These are full postings, so maxDf caps FULL df here: the number
+    // of docs holding the shingle anywhere (ngramCandidates caps
+    // prefix-df). prunePostings contract (no-op at tested scales,
+    // eager drop log).
     val allB = prunePostings(docs.select(col("doc_id").as("id_b"),
       explode(col("hs")).as("tok")), "tok", "containmentPairs")
     val cands = prefixA.join(allB, Seq("tok"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Gate, Q, QueryModule, SessionMemo, Tables}
+import graft.{Drops, Gate, Q, QueryModule, SessionMemo, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -227,11 +227,6 @@ object VectorOps extends QueryModule {
   private[graft] def kmeansFit(xs: Array[Array[Double]], k: Int,
       iters: Int, seed: Long): Array[Array[Double]] = {
     val rnd = new scala.util.Random(seed)
-    def dist2(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
-      s
-    }
     val init = scala.collection.mutable.ArrayBuffer(
       xs(rnd.nextInt(xs.length)).clone)
     while (init.length < k) {
@@ -246,7 +241,18 @@ object VectorOps extends QueryModule {
         init += xs(i).clone
       }
     }
-    var cs: Array[Array[Double]] = init.toArray
+    lloyd(xs, init.toArray, iters)
+  }
+
+  /** Lloyd's iterations from `init`, shared by [[kmeansFit]] and
+    * [[pqFit]]: each point joins its nearest centroid (squared euclidean,
+    * the lowest index wins a tie), each centroid moves to its members'
+    * mean, and an empty one stays put. In-order double arithmetic over
+    * a fixed point order, so the fit is bit-reproducible. */
+  private def lloyd(xs: Array[Array[Double]], init: Array[Array[Double]],
+      iters: Int): Array[Array[Double]] = {
+    val k = init.length
+    var cs = init
     for (_ <- 1 to iters) {
       val sums = Array.fill(k)(new Array[Double](xs.head.length))
       val cnt = new Array[Int](k)
@@ -267,6 +273,12 @@ object VectorOps extends QueryModule {
     cs
   }
 
+  private def dist2(a: Array[Double], b: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
+    s
+  }
+
   /** id offset for sim_ivf_append's synthetic appended batch — far
     * above any test-corpus vec_id so provenance stays recoverable. */
   private[graft] val IvfAppendOffset = 1000000L
@@ -283,10 +295,18 @@ object VectorOps extends QueryModule {
     * frames. */
   private[graft] def ivfCentroids(s: SparkSession, d: String)
       : Option[Array[Array[Double]]] =
-    SessionMemo(s, "ivf", d) {
+    ivfFit(s, "ivf", d, Tables.embeddings(s, d))
+
+  /** The one coarse-quantizer fit behind [[ivfCentroids]] and
+    * [[ivfRefitCentroids]]: k-means (k=8, 5 iterations, seed 42) over
+    * `corpus`'s deterministic 1024-point sample, memoized per session
+    * under `kind` and the sf dir. */
+  private def ivfFit(s: SparkSession, kind: String, d: String,
+      corpus: => DataFrame): Option[Array[Array[Double]]] =
+    SessionMemo(s, kind, d) {
       try {
-        val rows = quantizerSample(Tables.embeddings(s, d)
-            .select(col("vec_id"), col("embedding")), 1024)
+        val rows = quantizerSample(
+            corpus.select(col("vec_id"), col("embedding")), 1024)
           .collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
         if (rows.length < 8) None
         else Some(kmeansFit(rows, k = 8, iters = 5, seed = 42))
@@ -320,15 +340,7 @@ object VectorOps extends QueryModule {
     * sample distribution, not fit hyperparameters. */
   private[graft] def ivfRefitCentroids(s: SparkSession, d: String)
       : Option[Array[Array[Double]]] =
-    SessionMemo(s, "ivfRefit", d) {
-      try {
-        val rows = quantizerSample(ivfAppendUnion(s, d)
-            .select(col("vec_id"), col("embedding")), 1024)
-          .collect().map(_.getSeq[Float](1).map(_.toDouble).toArray)
-        if (rows.length < 8) None
-        else Some(kmeansFit(rows, k = 8, iters = 5, seed = 42))
-      } catch { case _: Exception => None }
-    }
+    ivfFit(s, "ivfRefit", d, ivfAppendUnion(s, d))
 
   /** Codegen argmin assignment to the nearest centroid — euclidean
     * order via score(c) = |c|² − 2·x·c (|x|² is row-constant) over a
@@ -505,7 +517,7 @@ object VectorOps extends QueryModule {
         count(lit(1)).as("dropped"))
       .collect()(0)
     if (over.getLong(0) > 0)
-      System.err.println(s"[graft] $tag: ${over.getLong(0)} bucket(s) " +
+      Drops(tag, s"${over.getLong(0)} bucket(s) " +
         s"past the $cap-member candidate budget — ${over.getLong(1)} " +
         "member slot(s) degraded to hash-deterministic sampling " +
         "(recall within those buckets is sampled, never silently so)")
@@ -562,34 +574,10 @@ object VectorOps extends QueryModule {
     if (rows.length < PqK || rows.head.length % PqM != 0) None
     else Some {
       val sub = rows.head.length / PqM
-      def dist2(a: Array[Double], b: Array[Double]): Double = {
-        var s = 0.0; var i = 0
-        while (i < a.length) { val t = a(i) - b(i); s += t * t; i += 1 }
-        s
-      }
       Array.tabulate(PqM) { m =>
         val xs = rows.map(r =>
           java.util.Arrays.copyOfRange(r, m * sub, (m + 1) * sub))
-        var cents = xs.take(PqK).map(_.clone)
-        for (_ <- 1 to 10) {
-          val sums = Array.fill(PqK)(new Array[Double](sub))
-          val cnt = new Array[Int](PqK)
-          xs.foreach { x =>
-            var best = 0; var bd = Double.MaxValue
-            var c = 0
-            while (c < PqK) {
-              val dd = dist2(x, cents(c))
-              if (dd < bd) { bd = dd; best = c }
-              c += 1
-            }
-            cnt(best) += 1
-            var i = 0
-            while (i < sub) { sums(best)(i) += x(i); i += 1 }
-          }
-          cents = Array.tabulate(PqK)(c =>
-            if (cnt(c) == 0) cents(c) else sums(c).map(_ / cnt(c)))
-        }
-        cents
+        lloyd(xs, xs.take(PqK).map(_.clone), iters = 10)
       }
     }
   }

@@ -65,17 +65,6 @@ object GraftWarehouse {
     new File(viewsDir,
       enc((catalogName +: (ident.namespace() :+ ident.name()))
         .mkString(".")) + ".json")
-
-  /** materialized-view definition sidecar of a governed table. The
-    * path convention lives HERE (not in the MV layer) so DROP TABLE
-    * can retire the sidecar even in a process that never touched the
-    * MV machinery — otherwise a stale definition would resurrect on
-    * the next refresh and sidecars would accumulate forever. */
-  def mvSidecar(storeName: String): File = {
-    val d = new File(root, "mvs")
-    d.mkdirs()
-    new File(d, enc(storeName) + ".json")
-  }
 }
 
 /** The DURABLE TRANSACTION LOG of the file-backed store (the
@@ -86,8 +75,9 @@ object GraftWarehouse {
   * rebuild its ENTIRE governed state — commit history with file
   * manifests (stats, blooms, deletion vectors, spec ids), MoR op
   * logs, branches/tags, schema + partition-spec evolution,
-  * constraints, the COPY INTO ingest ledger and the identity-column
-  * high-water mark — by replaying the log on first catalog touch.
+  * constraints, the COPY INTO ingest ledger, the identity-column
+  * high-water mark and a materialized view's record — by replaying
+  * the log on first catalog touch.
   *
   * Entry kinds:
   *   - `checkpoint` — the complete table state. Written at CREATE
@@ -103,7 +93,12 @@ object GraftWarehouse {
   *     rows)). Carries the post-commit branch/tag map, the commit's
   *     newly-ingested source paths (COPY INTO's ledger rides INSIDE
   *     the commit — exactly-once across a crash, there is no
-  *     commit-then-ledger window) and the identity high-water mark.
+  *     commit-then-ledger window), the identity high-water mark and,
+  *     on a materialized view's table, the MV record: its definition
+  *     (`mvdef`, a string only the MV layer parses) and the source
+  *     version its rows reflect (`mvwm`). The record rides the commit
+  *     that moved the MV's rows, so replay never sees rows without
+  *     their watermark. `checkpoint` carries the same keys.
   *   - `ref` — a branch/tag change that committed no version
   *     (CREATE BRANCH/TAG, fast-forward publish).
   *   - `meta` — a metadata-only evolution: schema (ADD/RENAME/DROP
@@ -685,7 +680,7 @@ object GraftLog {
         .map { case (k, v) => k -> JInt(v): JField })) ~
       ("ingested" -> GraftTableStore.ingestedFor(storeName).toList.sorted) ~
       ("hwm" -> GraftTableStore.identityHwmValue(storeName)) ~
-      ("mvwm" -> GraftTableStore.mvWatermarkOf(storeName))
+      jMvRecord(storeName)
   }
 
   /** write a full-state checkpoint and GC the entries it subsumes.
@@ -804,7 +799,7 @@ object GraftLog {
         .map { case (k, x) => k -> JInt(x): JField })) ~
       ("ingest" -> ingest.toList) ~
       ("hwm" -> GraftTableStore.identityHwmValue(storeName)) ~
-      ("mvwm" -> GraftTableStore.mvWatermarkOf(storeName))
+      jMvRecord(storeName)
     val seq = ctr.getAndIncrement()
     val d = logDir(m.dir)
     d.mkdirs()
@@ -997,7 +992,8 @@ object GraftLog {
     * the interleaved commits before destroying any in-memory state),
     * then installs only if the rebase is viable. */
   private[sources] final case class Replayed(m: Meta, h: History,
-      ingested: Set[String], hwm: Option[Long], mvWm: Option[Long],
+      ingested: Set[String], hwm: Option[Long],
+      mv: Option[GraftTableStore.MvRecord],
       morRowId: Option[String], constraints: Array[Constraint],
       maxSeq: Long)
 
@@ -1016,8 +1012,7 @@ object GraftLog {
     GraftMergeCatalog.evictDef(storeName)
     forget(storeName)
     GraftParquetStore.restoreMeta(storeName, r.m)
-    GraftTableStore.restoreState(storeName, r.h, r.ingested, r.hwm,
-      r.mvWm)
+    GraftTableStore.restoreState(storeName, r.h, r.ingested, r.hwm, r.mv)
     // seed the sequence counter from the REPLAY'S OWN snapshot, never
     // a fresh directory listing: a foreign entry landing between the
     // replay's listing and this install would otherwise advance the
@@ -1124,11 +1119,7 @@ object GraftLog {
       case JLong(n) => Some(n)
       case _ => None
     }
-    var mvWm: Option[Long] = cp \ "mvwm" match {
-      case JInt(n) => Some(n.toLong)
-      case JLong(n) => Some(n)
-      case _ => None
-    }
+    var mv = unjMvRecord(cp)
     // fold post-checkpoint entries
     entries.filter(e => !e._2 && e._1 > lastCp._1).foreach { case (_, _, f) =>
       val e = parse(f)
@@ -1185,11 +1176,7 @@ object GraftLog {
             case JLong(n) => hwm = Some(n)
             case _ =>
           }
-          e \ "mvwm" match {
-            case JInt(n) => mvWm = Some(n.toLong)
-            case JLong(n) => mvWm = Some(n)
-            case _ =>
-          }
+          unjMvRecord(e).foreach(r => mv = Some(r))
         case "ref" =>
           h = h.copy(branches = unjRefMap(e \ "branches"),
             tags = unjRefMap(e \ "tags"))
@@ -1269,9 +1256,24 @@ object GraftLog {
         case other => other
       })
     }
-    Some(Replayed(m, hN, ingested, hwm, mvWm, morRowId, constraints,
+    Some(Replayed(m, hN, ingested, hwm, mv, morRowId, constraints,
       entries.last._1))
   }
+
+  /** an MV table's record as log fields — the definition stays an
+    * opaque string (the MV layer owns its format) */
+  private def jMvRecord(storeName: String): JObject = {
+    val r = GraftTableStore.mvRecordOf(storeName)
+    ("mvdef" -> r.map(_.definition)) ~ ("mvwm" -> r.map(_.watermark))
+  }
+
+  private def unjMvRecord(j: JValue): Option[GraftTableStore.MvRecord] =
+    (j \ "mvdef", j \ "mvwm") match {
+      case (JString(d), JInt(wm)) =>
+        Some(GraftTableStore.MvRecord(d, wm.toLong))
+      case (JString(d), JLong(wm)) => Some(GraftTableStore.MvRecord(d, wm))
+      case _ => None
+    }
 
   private def unjRefMap(j: JValue): Map[String, Int] = j match {
     case JObject(fields) => fields.map {
@@ -1442,16 +1444,6 @@ object GraftLog {
     * untouched. The next catalog touch must rebuild them from the
     * transaction log alone; that is the durability contract this
     * hook exists to pin. Views evict with `alsoViews`. */
-  /** extra in-memory state the restart simulation must evict —
-    * registered by higher layers (the MV definition cache in
-    * GraftApi) so "restart" means ALL of it, not just the store. */
-  private val restartHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[() => Unit]()
-  private[graft] def registerRestartHook(f: () => Unit): Unit = {
-    restartHooks.add(f)
-    ()
-  }
-
   private[graft] def simulateProcessRestart(storeNames: Seq[String],
       alsoViews: Boolean = false): Unit = {
     storeNames.foreach { n =>
@@ -1461,6 +1453,5 @@ object GraftLog {
       forget(n)
     }
     if (alsoViews) GraftMergeCatalog.evictViewsFromMemory()
-    restartHooks.forEach(f => f())
   }
 }

@@ -240,7 +240,7 @@ object GraftTableStore {
     epochLock.synchronized { lastEpochs.keySet().removeIf(_._1 == name); () }
     ingestedFiles.remove(name)
     identityHwm.remove(name)
-    mvWatermarks.remove(name)
+    mvRecords.remove(name)
     GraftChangeFeed.evictStaged(name)
     GraftLog.forget(name)
     ()
@@ -265,12 +265,12 @@ object GraftTableStore {
     * never saw this table ([[GraftLog.attach]]). */
   private[sources] def restoreState(name: String, h: History,
       ingested: Set[String], hwm: Option[Long],
-      mvWm: Option[Long] = None): Unit = withTableLock(name) {
+      mv: Option[MvRecord]): Unit = withTableLock(name) {
     versions.put(name, h)
     if (ingested.nonEmpty) ingestedFiles.put(name, ingested)
     hwm.foreach(v => identityHwm.put(name,
       new java.util.concurrent.atomic.AtomicLong(v)))
-    mvWm.foreach(v => mvWatermarks.put(name, v))
+    mv.foreach(r => mvRecords.put(name, r))
     ()
   }
 
@@ -293,7 +293,7 @@ object GraftTableStore {
       .foreach(resolvedCache.remove)
     ingestedFiles.remove(name)
     identityHwm.remove(name)
-    mvWatermarks.remove(name)
+    mvRecords.remove(name)
     if (!keepEpochs)
       epochLock.synchronized {
         lastEpochs.keySet().removeIf(_._1 == name); ()
@@ -320,26 +320,33 @@ object GraftTableStore {
   private[graft] def abortIngest(name: String): Unit =
     pendingIngest.remove()
 
-  /** MATERIALIZED-VIEW REFRESH WATERMARKS riding commits (round 13):
-    * the source version an MV's state reflects must become durable IN
-    * the refresh MERGE's own commit — a sidecar written after the
-    * MERGE leaves a crash window where the deltas applied but the
-    * watermark says they did not, and the next refresh double-applies
-    * the same commit range. Same thread-local discipline as the COPY
-    * INTO ledger: the fold arms the pending value on its own driver
-    * thread, the MERGE's commit to that table consumes it under the
-    * lock, the log entry carries it (`mvwm`), and replay restores it —
-    * exactly-once across a crash. */
-  private val mvWatermarks = new TrieMap[String, Long]()
-  private val pendingMvWatermark =
-    new ThreadLocal[Option[(String, Long)]] {
-      override def initialValue(): Option[(String, Long)] = None
+  /** A materialized view's record: its definition, opaque here (the MV
+    * layer owns its format), and the source version its rows reflect. */
+  private[graft] final case class MvRecord(definition: String,
+      watermark: Long)
+
+  /** MATERIALIZED-VIEW RECORDS riding commits: an MV table's record
+    * becomes durable IN the commit that changes the MV's rows — the
+    * baseline append at CREATE, then every refresh MERGE — so there is
+    * no window where the rows moved but the watermark did not (the next
+    * refresh would double-apply the same commit range). Same
+    * thread-local discipline as the COPY INTO ledger: the MV layer arms
+    * the record on its own driver thread, the commit to that table
+    * consumes it under the lock, the log entry carries it (`mvdef`,
+    * `mvwm`), and replay restores it — exactly-once across a crash. It
+    * lives and dies with the table's other state: DROP, restart and
+    * rebase need nothing extra. */
+  private val mvRecords = new TrieMap[String, MvRecord]()
+  private val pendingMv =
+    new ThreadLocal[Option[(String, MvRecord)]] {
+      override def initialValue(): Option[(String, MvRecord)] = None
     }
-  private[graft] def beginMvFold(name: String, version: Long): Unit =
-    pendingMvWatermark.set(Some((name, version)))
-  private[graft] def abortMvFold(): Unit = pendingMvWatermark.remove()
-  private[graft] def mvWatermarkOf(name: String): Option[Long] =
-    mvWatermarks.get(name)
+  private[graft] def armMvRecord(name: String, definition: String,
+      watermark: Long): Unit =
+    pendingMv.set(Some((name, MvRecord(definition, watermark))))
+  private[graft] def disarmMvRecord(): Unit = pendingMv.remove()
+  private[graft] def mvRecordOf(name: String): Option[MvRecord] =
+    mvRecords.get(name)
 
   /** IDENTITY COLUMN high-water marks (GENERATED ... AS IDENTITY):
     * one atomic counter per table, seeded from the declared START at
@@ -635,12 +642,12 @@ object GraftTableStore {
     }
     if (ingest.nonEmpty)
       ingestedFiles.put(name, ingestedFor(name) ++ ingest)
-    // an MV refresh's watermark rides ITS commit the same way — the
-    // fold armed it on this thread, the MERGE's commit consumes it
-    pendingMvWatermark.get() match {
-      case Some((n, v)) if n == name =>
-        pendingMvWatermark.remove()
-        mvWatermarks.put(name, v)
+    // an MV's record rides ITS commit the same way — the MV layer
+    // armed it on this thread, the baseline/MERGE commit consumes it
+    pendingMv.get() match {
+      case Some((n, r)) if n == name =>
+        pendingMv.remove()
+        mvRecords.put(name, r)
         ()
       case _ => ()
     }
@@ -1060,10 +1067,10 @@ object GraftTableStore {
     val retryable = branch.isEmpty &&
       (op == "append" || op == "stream-append")
     // thread-local riders appendLocked consumes on its FIRST attempt
-    // (COPY INTO ledger, MV watermark) must re-arm on retry, or the
+    // (COPY INTO ledger, MV record) must re-arm on retry, or the
     // rebased commit would drop them
     val ingestArmed = pendingIngest.get()
-    val mvArmed = pendingMvWatermark.get()
+    val mvArmed = pendingMv.get()
     var cur = staged
     var attempts = 0
     var done = false
@@ -1141,7 +1148,7 @@ object GraftTableStore {
             // survives — install preserves it by contract)
             GraftLog.install(name, peek)
             ingestArmed.foreach(v => pendingIngest.set(Some(v)))
-            mvArmed.foreach(v => pendingMvWatermark.set(Some(v)))
+            mvArmed.foreach(v => pendingMv.set(Some(v)))
             false // loop: re-adopt `cur` onto the rebased head
         }
       }
@@ -2451,19 +2458,6 @@ object GraftMergeCatalog {
   private val registry =
     new TrieMap[(String, Identifier), GraftMergeTable]()
 
-  /** DROP TABLE hooks — higher layers (the MV machinery in GraftApi)
-    * register cleanup keyed by store name, so dropping a materialized
-    * view's table also retires its definition sidecar and caches
-    * instead of letting a stale definition resurrect after restart. */
-  private val dropHooks =
-    new java.util.concurrent.CopyOnWriteArrayList[String => Unit]()
-  private[graft] def registerDropHook(f: String => Unit): Unit = {
-    dropHooks.add(f)
-    ()
-  }
-  private[sources] def runDropHooks(storeName: String): Unit =
-    dropHooks.forEach(f => f(storeName))
-
   /** SQL VIEW registry (ViewCatalog): the stored definition is the raw
     * SQL text plus the session context it was written in (current
     * catalog/namespace) and the CREATE-time schema — exactly what
@@ -3230,14 +3224,6 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
     registry.remove(key(ident)) match {
       case Some(t) =>
         GraftTableStore.reset(t.name())
-        // the MV definition sidecar retires with its table even when
-        // this process never loaded the MV layer (the drop hooks below
-        // only exist once GraftApi's machinery has been touched)
-        GraftWarehouse.mvSidecar(t.name()) match {
-          case f if f.isFile => f.delete(); ()
-          case _ => ()
-        }
-        GraftMergeCatalog.runDropHooks(t.name())
         true
       case None => false
     }

@@ -646,9 +646,9 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("MV definitions are DURABLE: a simulated restart evicts the " +
-      "def cache, the MV table replays from its log, the sidecar " +
-      "restores the definition AND the refresh watermark — " +
-      "maintenance continues with no double-apply and no gap") {
+      "MV's in-memory state, and replaying the MV table's log restores " +
+      "its rows, definition AND refresh watermark — maintenance " +
+      "continues with no double-apply and no gap") {
     mvCatalog()
     spark.sql("DROP TABLE IF EXISTS graft.mvdur_src")
     spark.sql("CREATE TABLE graft.mvdur_src (k BIGINT, g STRING, " +
@@ -664,7 +664,7 @@ class ApiSpec extends AnyFunSuite {
     val afterFold = spark.table("graft.mvdur_mv").orderBy("g")
       .collect().map(_.toString).toSeq
 
-    // ---- restart: source, MV table AND def caches all evicted
+    // ---- restart: source and MV table state all evicted
     graft.sources.GraftLog.simulateProcessRestart(
       Seq("graft.mvdur_src", "graft.mvdur_mv"))
 
@@ -684,7 +684,7 @@ class ApiSpec extends AnyFunSuite {
       .orderBy("g").collect().map(_.toString).toSeq
     assert(spark.table("graft.mvdur_mv").orderBy("g")
       .collect().map(_.toString).toSeq == expect)
-    // group-wise MVs restore through the same sidecar path
+    // group-wise MVs restore through the same log path
     GraftApi.createGroupwiseView(spark, "graft.mvdur_gw",
       "graft.mvdur_src", Seq("g"), "cents", "n", "lo", "hi")
     spark.sql("DELETE FROM graft.mvdur_src WHERE k = 38") // a max
@@ -703,9 +703,9 @@ class ApiSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.mvdur_gw")
   }
 
-  test("MV watermark rides the fold's OWN commit: a crash between the " +
-      "MERGE and the sidecar write (stale sidecar) cannot double-apply " +
-      "sum deltas, and DROP TABLE retires the definition sidecar") {
+  test("MV watermark rides the fold's OWN commit: after a restart the " +
+      "already-folded window folds nothing (no double-apply), and DROP " +
+      "TABLE retires the definition") {
     mvCatalog()
     spark.sql("DROP TABLE IF EXISTS graft.mvwm_src")
     spark.sql("CREATE TABLE graft.mvwm_src (k BIGINT, g STRING, " +
@@ -716,32 +716,21 @@ class ApiSpec extends AnyFunSuite {
       "FROM range(40)")
     GraftApi.createMaterializedView(spark, "graft.mvwm_mv",
       "graft.mvwm_src", Seq("g"), "n", "cents", "s")
-    val sidecar = new java.io.File(
-      new java.io.File(graft.sources.GraftWarehouse.root, "mvs"),
-      java.net.URLEncoder.encode("graft.mvwm_mv",
-        java.nio.charset.StandardCharsets.UTF_8) + ".json")
-    assert(sidecar.isFile, s"expected MV sidecar at $sidecar")
-    val preFoldSidecar = java.nio.file.Files.readAllBytes(sidecar.toPath)
     spark.sql("UPDATE graft.mvwm_src SET cents = cents + 7 " +
       "WHERE k % 3 = 0")
     GraftApi.refreshMaterializedView(spark, "graft.mvwm_mv") // folds v1
     val folded = spark.table("graft.mvwm_mv").orderBy("g")
       .collect().map(_.toString).toSeq
-    // CRASH WINDOW SIMULATION: the MERGE committed (durable in the MV
-    // table's log, watermark riding inside it) but the process died
-    // before the sidecar write — the sidecar reverts to its pre-fold
-    // content, then the process restarts
-    java.nio.file.Files.write(sidecar.toPath, preFoldSidecar)
     graft.sources.GraftLog.simulateProcessRestart(
       Seq("graft.mvwm_src", "graft.mvwm_mv"))
-    // the commit-carried watermark is authoritative: the already-
-    // folded window re-folds ZERO rows (a lost watermark would
-    // double-apply 7-cent deltas here) and the state is unchanged
+    // the commit-carried watermark: the already-folded window re-folds
+    // ZERO rows (a lost watermark would double-apply 7-cent deltas
+    // here) and the state is unchanged
     assert(GraftApi.refreshMaterializedView(spark, "graft.mvwm_mv")
-      ._1 == 0L, "stale sidecar must not re-fold the committed window")
+      ._1 == 0L, "the committed window must not re-fold")
     assert(spark.table("graft.mvwm_mv").orderBy("g")
       .collect().map(_.toString).toSeq == folded,
-      "double-applied deltas after the crash window")
+      "double-applied deltas after the restart")
     // maintenance continues: new DML folds and equals full recompute
     spark.sql("DELETE FROM graft.mvwm_src WHERE k % 4 = 2")
     GraftApi.refreshMaterializedView(spark, "graft.mvwm_mv")
@@ -750,15 +739,123 @@ class ApiSpec extends AnyFunSuite {
       .orderBy("g").collect().map(_.toString).toSeq
     assert(spark.table("graft.mvwm_mv").orderBy("g")
       .collect().map(_.toString).toSeq == expect)
-    // DROP TABLE on the MV retires the sidecar and the cached def —
-    // no resurrection after a restart, no sidecar accumulation
+    // DROP TABLE on the MV retires the definition with the table
     spark.sql("DROP TABLE graft.mvwm_mv")
-    assert(!sidecar.exists(),
-      "DROP TABLE must delete the MV definition sidecar")
     val ex = intercept[IllegalArgumentException] {
       GraftApi.refreshMaterializedView(spark, "graft.mvwm_mv")
     }
     assert(ex.getMessage.contains("not a registered materialized view"))
     spark.sql("DROP TABLE graft.mvwm_src")
+  }
+
+  // ---- MV state in the MV table's own log ----------------------------
+
+  private def createMvSource(src: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $src")
+    spark.sql(s"CREATE TABLE $src (k BIGINT, g STRING, cents BIGINT) " +
+      "TBLPROPERTIES ('graft.store'='parquet', " +
+      "'graft.row-level'='merge-on-read', 'graft.row-id'='k')")
+  }
+
+  private def byGroup(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.orderBy("g").collect().map(_.toString).toSeq
+
+  /** (sum MV, group-wise MV) recomputed from scratch over `src` */
+  private def recompute(src: String): (Seq[String], Seq[String]) = (
+    byGroup(spark.table(src).groupBy("g")
+      .agg(count(lit(1)).as("n"), sum("cents").as("s"))),
+    byGroup(spark.table(src).groupBy("g")
+      .agg(count(lit(1)).as("n"), min("cents").as("lo"),
+        max("cents").as("hi"))))
+
+  private def createBothMvs(src: String, sumMv: String,
+      gwMv: String): Unit = {
+    GraftApi.createMaterializedView(spark, sumMv, src, Seq("g"), "n",
+      "cents", "s")
+    GraftApi.createGroupwiseView(spark, gwMv, src, Seq("g"), "cents", "n",
+      "lo", "hi")
+  }
+
+  private def refreshBoth(sumMv: String, gwMv: String): (Long, Long) =
+    (GraftApi.refreshMaterializedView(spark, sumMv)._1,
+      GraftApi.refreshGroupwiseView(spark, gwMv)._1)
+
+  test("MV state lives in the MV table's own log: for both kinds a " +
+      "fold survives a restart with no sidecar files, the next refresh " +
+      "folds nothing new, and later DML folds to a full recompute") {
+    mvCatalog()
+    val (src, sumMv, gwMv) =
+      ("graft.mvlog_src", "graft.mvlog_sum", "graft.mvlog_gw")
+    createMvSource(src)
+    spark.sql(s"INSERT INTO $src SELECT id, " +
+      "CASE WHEN id % 3 = 0 THEN 'a' WHEN id % 3 = 1 THEN 'b' " +
+      "ELSE 'c' END, id * 10 FROM range(45)")
+    createBothMvs(src, sumMv, gwMv)
+    spark.sql(s"DELETE FROM $src WHERE k % 4 = 1")
+    val (nSum, nGw) = refreshBoth(sumMv, gwMv)
+    assert(nSum > 0L && nGw > 0L, s"the delete must fold: $nSum, $nGw")
+    graft.sources.GraftLog.simulateProcessRestart(Seq(src, sumMv, gwMv))
+    val mvsDir = new java.io.File(graft.sources.GraftWarehouse.root, "mvs")
+    assert(!mvsDir.exists(), s"MV state must not live in $mvsDir")
+    assert(refreshBoth(sumMv, gwMv) == ((0L, 0L)),
+      "the replayed watermarks must make the refreshes no-ops")
+    assert((byGroup(spark.table(sumMv)), byGroup(spark.table(gwMv))) ==
+      recompute(src), "after the restart")
+    // later DML: a max-killing delete, a group-moving update, a new group
+    spark.sql(s"DELETE FROM $src WHERE k = 42")
+    spark.sql(s"UPDATE $src SET g = 'b' WHERE g = 'a' AND k % 2 = 0")
+    spark.sql(s"INSERT INTO $src SELECT id + 1000, 'z', id FROM range(3)")
+    refreshBoth(sumMv, gwMv)
+    assert((byGroup(spark.table(sumMv)), byGroup(spark.table(gwMv))) ==
+      recompute(src), "after DML past the restart")
+    Seq(src, sumMv, gwMv).foreach(t => spark.sql(s"DROP TABLE $t"))
+  }
+
+  test("MVs created over a source with no commits record their " +
+      "definition in the baseline commit: INSERT, refresh and restart " +
+      "leave them equal to a full recompute") {
+    mvCatalog()
+    val (src, sumMv, gwMv) =
+      ("graft.mvempty_src", "graft.mvempty_sum", "graft.mvempty_gw")
+    createMvSource(src)
+    createBothMvs(src, sumMv, gwMv)
+    assert(spark.table(sumMv).count() == 0L &&
+      spark.table(gwMv).count() == 0L)
+    spark.sql(s"INSERT INTO $src SELECT id, " +
+      "CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END, id FROM range(20)")
+    refreshBoth(sumMv, gwMv)
+    graft.sources.GraftLog.simulateProcessRestart(Seq(src, sumMv, gwMv))
+    assert((byGroup(spark.table(sumMv)), byGroup(spark.table(gwMv))) ==
+      recompute(src), "after the restart")
+    assert(refreshBoth(sumMv, gwMv) == ((0L, 0L)))
+    spark.sql(s"DELETE FROM $src WHERE k % 3 = 0")
+    refreshBoth(sumMv, gwMv)
+    assert((byGroup(spark.table(sumMv)), byGroup(spark.table(gwMv))) ==
+      recompute(src), "after DML past the restart")
+    Seq(src, sumMv, gwMv).foreach(t => spark.sql(s"DROP TABLE $t"))
+  }
+
+  test("a dropped MV stays dropped across a restart: refresh fails as " +
+      "not a registered view") {
+    mvCatalog()
+    val (src, sumMv, gwMv) =
+      ("graft.mvdrop_src", "graft.mvdrop_sum", "graft.mvdrop_gw")
+    createMvSource(src)
+    spark.sql(s"INSERT INTO $src SELECT id, 'a', id FROM range(5)")
+    createBothMvs(src, sumMv, gwMv)
+    spark.sql(s"DROP TABLE $sumMv")
+    spark.sql(s"DROP TABLE $gwMv")
+    graft.sources.GraftLog.simulateProcessRestart(Seq(src, sumMv, gwMv))
+    val exSum = intercept[IllegalArgumentException] {
+      GraftApi.refreshMaterializedView(spark, sumMv)
+    }
+    assert(exSum.getMessage.contains("not a registered materialized view"),
+      exSum.getMessage)
+    val exGw = intercept[IllegalArgumentException] {
+      GraftApi.refreshGroupwiseView(spark, gwMv)
+    }
+    assert(exGw.getMessage.contains("not a registered group-wise view"),
+      exGw.getMessage)
+    spark.sql(s"DROP TABLE $src")
   }
 }

@@ -766,6 +766,33 @@ class TextVectorSpec extends AnyFunSuite {
     }
   }
 
+  test("IVF and PQ fits are pinned: per-fit digests of ivfCentroids, " +
+    "ivfRefitCentroids and pqFit on the test corpus") {
+    // the generated oracles embed the same fits, so graft.Verify cannot
+    // see a drift in the shared Lloyd loop; these digests can
+    import operators.VectorOps
+    def digest(cs: Iterator[Array[Double]]): String = {
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      val buf = java.nio.ByteBuffer.allocate(8)
+      cs.foreach(_.foreach { x =>
+        buf.clear(); buf.putDouble(x); md.update(buf.array())
+      })
+      md.digest().map("%02x".format(_)).mkString
+    }
+    val got = Map(
+      "ivf" -> digest(VectorOps.ivfCentroids(spark, sf).get.iterator),
+      "ivfRefit" ->
+        digest(VectorOps.ivfRefitCentroids(spark, sf).get.iterator),
+      "pq" -> digest(VectorOps.pqFit(spark, sf).get.iterator.flatten))
+    assert(got == Map(
+      "ivf" ->
+        "6d22785668ab36fa76a8e97379135c36044d2645cc19b8046a307f4c72e62fc8",
+      "ivfRefit" ->
+        "303ac4563516a079e06a8bac6843ad9dd6f960f6548fbd1acfe57aa00a2f26d5",
+      "pq" ->
+        "af1ed0ab7c674482df23db7dcd0b3a71305bda60ecf29980db9d0da7947ca60d"))
+  }
+
   test("sim_ivf_refit: refit recovers the appended batch's quantization " +
     "fit; panel recall stays comparable") {
     import operators.VectorOps
