@@ -74,6 +74,19 @@ object Bench {
   private val BaselineWarmSec = 340.0
   private val ContentionRatio = 1.5
 
+  /** the drive started on a busy host: 1-minute load average above 1.0
+    * at start — a speedup claim cites only drives where this is false. */
+  private val LoadFlagAbove = 1.0
+
+  /** the load fields of the summary lines: both samples, and
+    * `load_flag` beside the start sample that sets it. */
+  private[graft] def loadJson(start: Double, end: Double): String =
+    s""""load_avg_start":${r2(start)},""" +
+      s""""load_flag":${start > LoadFlagAbove},""" +
+      s""""load_avg_end":${r2(end)},"""
+
+  private def r2(x: Double): Double = math.round(x * 100) / 100.0
+
   /** BASELINE.md's per-query warm prices for the known cost centers
     * (round-4 final + round-4c rows). Queries not listed here are
     * sub-second in every recorded run and get [[DefaultExpectedSec]].
@@ -350,10 +363,8 @@ object Bench {
     val totalAdj = total - adjustment
     val vsBaselineAdj = totalAdj / BaselineWarmSec
     val contendedAdj = vsBaselineAdj > ContentionRatio
-    def r2(x: Double): Double = math.round(x * 100) / 100.0
     val summary = s""""sf":"$sfDir","n_queries":${timings.size},""" +
-      s""""load_avg_start":${r2(loadStart)},""" +
-      s""""load_avg_end":${r2(loadAvg())},""" +
+      loadJson(loadStart, loadAvg()) +
       s""""median_sec":$median,"baseline_warm_sec":$BaselineWarmSec,""" +
       s""""vs_baseline":${r2(vsBaseline)},"contention_flag":$contended,""" +
       s""""value_adjusted":${r2(totalAdj)},""" +

@@ -19,18 +19,21 @@ import org.apache.spark.sql.functions._
   * keyed by node id) then COMPRESSES (pointer jumping, rep := rep(rep) —
   * one shuffle keyed by rep). Relax moves the minimum one hop; compress
   * halves remaining path lengths, so convergence takes O(log diameter)
-  * rounds; the loop detects the fixpoint (a batch that changes nothing)
+  * rounds; the loop detects the fixpoint (a round that changes nothing)
   * and exits — near-dup clusters are shallow in practice (dup groups, not
   * long chains), so 2 rounds typically suffice, with `rounds` as the
   * large-star/small-star-style upper bound for pathological diameters.
   *
-  * [[BatchRounds]] relax+compress rounds run between checkpoints —
-  * measured at 1 for this VM (see the constant's scaladoc: batching
-  * trades a halved job count for ~8× recompute of the un-checkpointed
-  * intermediate, and recompute wins here). Convergence is detected at
-  * batch granularity.
+  * One relax and one single-jump compress run per checkpoint. Both
+  * alternatives were A/B'd and lost, for the same reason — they branch
+  * the un-checkpointed lineage further, and the recompute outweighs the
+  * jobs saved: two rounds per checkpoint halve the scheduled jobs but
+  * re-evaluate the intermediate ~8× (sf0.1 11-round cosine fixpoint,
+  * RunOne dedup_embedding ×3, local[32]: 16.3 s vs 12.6 s), and two
+  * pointer jumps per compress (~6 rounds instead of 11) ran the
+  * fixpoint past 10× slower.
   *
-  * Each batch's labels are eagerly localCheckpoint'ed: the lineage would
+  * Each round's labels are eagerly localCheckpoint'ed: the lineage would
   * otherwise branch exponentially (recompute per reference). This is the
   * same sanctioned driver-side step as a model fit (Core.scala contract);
   * superseded checkpoints are unpersisted immediately, and the final one
@@ -51,23 +54,6 @@ import org.apache.spark.sql.functions._
   * the sequential-execution contract).
   */
 object GraphOps {
-
-  /** Relax+compress rounds per localCheckpoint. Measured on the sf0.1
-    * 11-round cosine fixpoint (RunOne dedup_embedding ×3, local[32]):
-    * batch=2 halves scheduled jobs but re-evaluates the un-checkpointed
-    * intermediate ~8× through the batch's branching lineage — 16.3 s vs
-    * 12.6 s at batch=1. Job-scheduling latency is NOT the dominant term
-    * on this VM; leave at 1 (the knob stays for cluster profiles where
-    * per-job overhead dominates recompute). */
-  private val BatchRounds = 1
-
-  /** Pointer jumps per compress step. A/B'd at 2 (×4 path compression
-    * per round, ~6 rounds instead of 11): the second jump branches the
-    * un-checkpointed lineage once more and the compounded recompute blew
-    * the fixpoint past 10× slower — same verdict as BatchRounds=2, only
-    * stronger. Fewer-but-heavier rounds lose to more-but-checkpointed
-    * rounds everywhere on this VM; keep 1. */
-  private val CompressJumps = 1
 
   /** Rebind a materialized (localCheckpoint'ed) frame into another session
     * of the same SparkContext. Row decode/encode is a narrow map over the
@@ -189,7 +175,7 @@ object GraphOps {
     *               similarity graphs degenerate into long chains: the
     *               sf0.1 cosine graph has a >256-hop component that 8
     *               rounds provably cannot close). The loop still exits at
-    *               the first no-change batch, so shallow dup-cluster
+    *               the first no-change round, so shallow dup-cluster
     *               graphs pay 4-6 rounds regardless of the bound.
     * @return (doc_id, rep) with rep = min doc_id of the component
     */
@@ -229,34 +215,23 @@ object GraphOps {
     var converged = false
     var round = 0
     while (!converged && round < rounds) {
-      var cur = labels
-      var inBatch = 0
-      while (inBatch < BatchRounds && round < rounds) {
-        round += 1; inBatch += 1
-        // relax: rep(x) = min(rep(x), min over neighbors' rep)
-        val nbr = edges
-          .join(cur.select(col("doc_id").as("b"), col("rep").as("brep")), "b")
-          .groupBy(col("a").as("doc_id")).agg(min("brep").as("nrep"))
-        val relaxed = cur.join(nbr, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep"))
-        // compress: rep(x) = rep(rep(x)) — rep is always a live node id
-        cur = relaxed.join(
-            relaxed.select(col("doc_id").as("rid"), col("rep").as("rrep")),
-            col("rep") === col("rid"))
-          .select(col("doc_id"), col("rrep").as("rep"))
-        var jump = 1
-        while (jump < CompressJumps) {
-          jump += 1
-          cur = cur.join(
-              cur.select(col("doc_id").as("rid"), col("rep").as("rrep")),
-              col("rep") === col("rid"))
-            .select(col("doc_id"), col("rrep").as("rep"))
-        }
-      }
-      // the batch's ENTRY label rides along into the checkpoint so the
+      round += 1
+      // relax: rep(x) = min(rep(x), min over neighbors' rep)
+      val nbr = edges
+        .join(labels.select(col("doc_id").as("b"), col("rep").as("brep")),
+          "b")
+        .groupBy(col("a").as("doc_id")).agg(min("brep").as("nrep"))
+      val relaxed = labels.join(nbr, Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          least(col("rep"), coalesce(col("nrep"), col("rep"))).as("rep"))
+      // compress: rep(x) = rep(rep(x)) — rep is always a live node id
+      val cur = relaxed.join(
+          relaxed.select(col("doc_id").as("rid"), col("rep").as("rrep")),
+          col("rep") === col("rid"))
+        .select(col("doc_id"), col("rrep").as("rep"))
+      // the round's ENTRY label rides along into the checkpoint so the
       // fixpoint test below is a filter on already-materialized rows —
-      // not an extra shuffle-join of two checkpointed frames per batch
+      // not an extra shuffle-join of two checkpointed frames per round
       val stamped = cur
         .join(labels.withColumnRenamed("rep", "prev"), "doc_id")
         .select(col("doc_id"), col("rep"), col("prev"))

@@ -54,6 +54,11 @@ object GraftWarehouse {
   def tableDir(storeName: String): File =
     new File(new File(root, "tables"), enc(storeName))
 
+  /** the store name a table directory belongs to — [[tableDir]]'s
+    * inverse. */
+  private[sources] def storeNameOf(tableDir: File): String =
+    java.net.URLDecoder.decode(tableDir.getName, StandardCharsets.UTF_8)
+
   /** catalog-level sidecar directory for SQL view definitions. */
   def viewsDir: File = {
     val d = new File(root, "views")
@@ -119,11 +124,6 @@ object GraftLog {
 
   private def logDir(dir: String): File = new File(dir, "_graft_log")
 
-  /** next entry sequence number per table — seeded from the directory
-    * listing on attach/create, monotonic afterwards. Guarded by the
-    * callers' store lock. */
-  private val nextSeq = new TrieMap[String, java.util.concurrent.atomic.AtomicLong]()
-
   // ---- value codec ----------------------------------------------------
   //
   // Type-directed: the schema (or key/stat slot type) says how a value
@@ -181,6 +181,11 @@ object GraftLog {
     case other => throw new IllegalStateException(s"not an int: $other")
   }
   private def asInt(j: JValue): Int = asLong(j).toInt
+  /** an optional integer field: absent or null reads None. */
+  private def optLong(j: JValue): Option[Long] = j match {
+    case JInt(_) | JLong(_) => Some(asLong(j))
+    case _ => None
+  }
 
   private def longsToB64(words: Array[Long]): String = {
     val bb = java.nio.ByteBuffer.allocate(words.length * 8)
@@ -327,11 +332,7 @@ object GraftLog {
     GraftFileInfo((j \ "path").asInstanceOf[JString].s,
       keyRow,
       asInt(j \ "rows"),
-      (j \ "bytes") match {
-        case JInt(n) => n.toLong
-        case JLong(n) => n
-        case _ => 0L
-      },
+      optLong(j \ "bytes").getOrElse(0L),
       asInt(j \ "numCols"),
       stats, blooms, specId, dv)
   }
@@ -372,7 +373,7 @@ object GraftLog {
     }.toArray
   }
 
-  private def jCommitData(m: Meta, c: GraftCommitData): JValue = c match {
+  private def jCommitData(m: Meta, c: GraftCommitData): JObject = c match {
     case p: GraftParquetData =>
       ("kind" -> "parquet") ~ ("count" -> p.count) ~
         ("files" -> JArray(p.files.toList.map(jFile(m, _))))
@@ -583,10 +584,11 @@ object GraftLog {
     * it would fork the table. O(log-dir entries), bounded by
     * checkpoint GC; the atomic claim in [[claimAndWrite]] remains the
     * race-proof backstop for the window after this check. */
-  /** log-dir mtime observed at our last durable write / clean verify,
-    * keyed by log-dir path and held at NANOSECOND precision
-    * (Files.getLastModifiedTime — File.lastModified()'s millisecond
-    * rounding makes same-ms foreign writes a PERSISTENT tie): any
+  /** the log-dir mtime observed at our last durable write / clean
+    * verify (the table record's `tailMtime`), held at NANOSECOND
+    * precision (Files.getLastModifiedTime — File.lastModified()'s
+    * millisecond rounding makes same-ms foreign writes a PERSISTENT
+    * tie): any
     * foreign entry create/delete/rename bumps the directory mtime, so
     * an UNCHANGED mtime proves nothing landed since — verifyTail
     * skips the O(retained entries) listing on that fast path, keeping
@@ -595,27 +597,29 @@ object GraftLog {
     * claim for single-table commits; paths whose conflict handling
     * must fire BEFORE any durable step (the cross-table transaction's
     * pre-marker verify) use `strict = true`, which always lists. */
-  private val tailMtime = new TrieMap[String, Long]()
-
   private def dirMtimeNanos(d: File): Long =
     try java.nio.file.Files.getLastModifiedTime(d.toPath)
       .to(java.util.concurrent.TimeUnit.NANOSECONDS)
     catch { case _: java.io.IOException => 0L }
 
-  private def recordTail(parent: File): Unit = {
-    tailMtime.put(parent.getAbsolutePath, dirMtimeNanos(parent))
-    ()
-  }
+  /** remember `dir`'s mtime after our own write to it — when `dir` is a
+    * table's log (the txn-marker directory is not one). */
+  private def recordTail(dir: File): Unit =
+    if (dir.getName == "_graft_log") {
+      val mtime = dirMtimeNanos(dir)
+      GraftTableStore.updateIfPresent(
+        GraftWarehouse.storeNameOf(dir.getParentFile))(
+        _.copy(tailMtime = Some(mtime)))
+    }
 
   private[sources] def verifyTail(storeName: String,
       strict: Boolean = false): Unit = {
-    val m = GraftParquetStore.meta(storeName).getOrElse(return)
-    val ctr = nextSeq.get(storeName).getOrElse(return)
+    val st = GraftTableStore.stateOf(storeName).getOrElse(return)
+    val m = st.meta.getOrElse(return)
+    val ctr = st.nextSeq.getOrElse(return)
     val ld = logDir(m.dir)
     val mtimeBefore = dirMtimeNanos(ld)
-    if (!strict &&
-        tailMtime.get(ld.getAbsolutePath).contains(mtimeBefore) &&
-        mtimeBefore != 0L)
+    if (!strict && st.tailMtime.contains(mtimeBefore) && mtimeBefore != 0L)
       return // nothing touched the log since our last write
     val diskMax = Option(ld.listFiles())
       .getOrElse(Array.empty[File])
@@ -627,21 +631,27 @@ object GraftLog {
           s"${ctr.get() - 1}; re-read the table and retry the commit")
     // clean: cache the mtime read BEFORE the listing (an entry landing
     // mid-listing keeps the next verify on the slow path)
-    tailMtime.put(ld.getAbsolutePath, mtimeBefore)
-    ()
+    GraftTableStore.updateIfPresent(storeName)(
+      _.copy(tailMtime = Some(mtimeBefore)))
   }
 
+  /** the table's next entry sequence number — seeded from the
+    * directory listing on first use, monotonic afterwards. Guarded by
+    * the callers' store lock. */
   private def seqCounter(storeName: String, dir: String)
       : java.util.concurrent.atomic.AtomicLong =
-    nextSeq.getOrElseUpdate(storeName, {
+    GraftTableStore.stateOf(storeName).flatMap(_.nextSeq).getOrElse {
       // seed past anything already on disk (an attach, or a re-created
       // table whose directory survived)
       val existing = Option(logDir(dir).listFiles())
         .getOrElse(Array.empty[File])
         .flatMap(f => parseSeq(f.getName)).sorted
-      new java.util.concurrent.atomic.AtomicLong(
+      val fresh = new java.util.concurrent.atomic.AtomicLong(
         existing.lastOption.map(_ + 1).getOrElse(0L))
-    })
+      GraftTableStore.update(storeName)(s =>
+        if (s.nextSeq.isDefined) s else s.copy(nextSeq = Some(fresh)))
+        .nextSeq.get
+    }
 
   private def parseSeq(name: String): Option[Long] =
     if (name.endsWith(".cp.json"))
@@ -649,52 +659,80 @@ object GraftLog {
     else if (name.endsWith(".json")) name.stripSuffix(".json").toLongOption
     else None
 
-  /** the COMPLETE state of one table as one JSON object — the
-    * checkpoint body (and the CREATE entry). Captures the catalog
-    * definition (identifier, row-level mode, constraints), the store
-    * registration (schema, partition specs, bloom index, DV mode) and
-    * the full retained History. */
-  private def stateJson(storeName: String, m: Meta, h: History,
-      ident: Option[(String, Identifier)], morRowId: Option[String],
-      constraints: Array[Constraint]): JValue = {
-    ("a" -> "checkpoint") ~
-      ("table" -> storeName) ~
-      ("catalog" -> ident.map(_._1)) ~
-      ("ident" -> ident.map(i => jIdent(i._2)).getOrElse(JNull)) ~
-      ("morRowId" -> morRowId) ~
+  /** the table DEFINITION fields — row-level mode, constraints and the
+    * store registration (schema, partition specs, bloom index, sort
+    * order) — as checkpoints and `meta` entries both carry them. */
+  private def jDefinition(m: Meta, morRowId: Option[String],
+      constraints: Array[Constraint]): JObject =
+    ("morRowId" -> morRowId) ~
       ("constraints" -> JArray(constraints.toList.map(jConstraint))) ~
       ("schema" -> m.schema.json) ~
       ("partFields" -> JArray(m.partFields.toList.map(jPart))) ~
       ("specHistory" -> JArray(m.specs.toList.map(s =>
         JArray(s.toList.map(jPart))))) ~
       ("bloomOrds" -> m.bloomOrds.toList) ~
-      ("sortOrds" -> m.sortOrds.toList) ~
+      ("sortOrds" -> m.sortOrds.toList)
+
+  /** [[jDefinition]]'s inverse, over `base` (which keeps its directory
+    * and DV mode). */
+  private def unjDefinition(j: JValue, base: Meta)
+      : (Meta, Option[String], Array[Constraint]) = {
+    val m = base.copy(
+      schema = DataType.fromJson((j \ "schema").asInstanceOf[JString].s)
+        .asInstanceOf[StructType],
+      partFields = (j \ "partFields").asInstanceOf[JArray].arr
+        .map(unjPart).toArray,
+      specHistory = (j \ "specHistory").asInstanceOf[JArray].arr
+        .map(s => s.asInstanceOf[JArray].arr.map(unjPart).toArray).toVector,
+      bloomOrds = (j \ "bloomOrds").asInstanceOf[JArray].arr
+        .map(asInt).toArray,
+      // absent in pre-round-14 entries — default to no sort order
+      sortOrds = j \ "sortOrds" match {
+        case JArray(xs) => xs.map(asInt).toArray
+        case _ => Array.empty[Int]
+      })
+    val morRowId = j \ "morRowId" match {
+      case JString(s) => Some(s)
+      case _ => None
+    }
+    (m, morRowId, (j \ "constraints").asInstanceOf[JArray].arr
+      .map(unjConstraint).toArray)
+  }
+
+  /** the COMPLETE state of one table as one JSON object — the
+    * checkpoint body (and the CREATE entry): the catalog definition
+    * (catalog, identifier and [[jDefinition]]), the DV mode, the full
+    * retained History and the ledgers riding it. */
+  private def stateJson(storeName: String, st: GraftTableStore.TableState,
+      m: Meta): JValue = {
+    val d = st.definition
+    val h = st.history
+    ("a" -> "checkpoint") ~
+      ("table" -> storeName) ~
+      ("catalog" -> d.map(_.catalog)) ~
+      ("ident" -> d.map(x => jIdent(x.ident)).getOrElse(JNull)) ~
+      jDefinition(m, d.flatMap(_.table.morRowId),
+        d.map(_.table.tableConstraints).getOrElse(Array.empty)) ~
       ("dvMode" -> m.dvMode) ~
       ("firstRetained" -> h.firstRetained) ~
       ("commits" -> JArray(h.commits.toList.map(jCommitData(m, _)))) ~
       ("times" -> h.times.toList) ~
       ("ops" -> h.ops.toList) ~
-      ("branches" -> JObject(h.branches.toList.sortBy(_._1)
-        .map { case (k, v) => k -> JInt(v): JField })) ~
-      ("tags" -> JObject(h.tags.toList.sortBy(_._1)
-        .map { case (k, v) => k -> JInt(v): JField })) ~
-      ("ingested" -> GraftTableStore.ingestedFor(storeName).toList.sorted) ~
-      ("hwm" -> GraftTableStore.identityHwmValue(storeName)) ~
-      jMvRecord(storeName)
+      ("branches" -> jRefMap(h.branches)) ~
+      ("tags" -> jRefMap(h.tags)) ~
+      ("ingested" -> st.ingested.toList.sorted) ~
+      ("hwm" -> st.identityHwm.map(_.get())) ~
+      jMvRecord(st)
   }
 
   /** write a full-state checkpoint and GC the entries it subsumes.
     * Called at CREATE (seq 0) and after every retention trim — replay
     * cost stays bounded no matter how long the commit stream runs. */
   private[sources] def checkpoint(storeName: String): Unit = {
-    val m = GraftParquetStore.meta(storeName).getOrElse(return)
-    val h = GraftTableStore.historyOf(storeName).getOrElse(return)
-    val ident = GraftMergeCatalog.defSnapshot(storeName)
+    val st = GraftTableStore.stateOf(storeName).getOrElse(return)
+    val m = st.meta.getOrElse(return)
     val seq = seqCounter(storeName, m.dir).getAndIncrement()
-    writeEntry(m.dir, seq, isCheckpoint = true,
-      stateJson(storeName, m, h,
-        ident.map(d => (d._1, d._2)), ident.flatMap(_._3.morRowId),
-        ident.map(_._3.tableConstraints).getOrElse(Array.empty)))
+    writeEntry(m.dir, seq, isCheckpoint = true, stateJson(storeName, st, m))
     // the checkpoint subsumes everything before it. Orphan claim
     // SIDECARS (a crashed writer's `NNN.json.claim-<uuid>` — inert,
     // never parsed) sweep here too once old enough that their writer
@@ -748,7 +786,8 @@ object GraftLog {
       tags: Map[String, Int], ingest: Seq[String] = Seq.empty,
       strictVerify: Boolean = false)
       : Option[(File, String)] = {
-    val m = GraftParquetStore.meta(storeName).getOrElse(return None)
+    val st = GraftTableStore.stateOf(storeName).getOrElse(return None)
+    val m = st.meta.getOrElse(return None)
     // the transactional path renders BEFORE applying — this is its
     // pre-apply cross-process OCC gate (single-table commits run it
     // in appendLocked instead, also pre-apply). STRICT when the
@@ -781,25 +820,14 @@ object GraftLog {
         ("kind" -> "parquet") ~ ("count" -> p.count) ~
           ("add" -> JArray(add.toList.map(jFile(m, _)))) ~
           ("remove" -> remove.toList) ~ ("order" -> order)
-      case d: GraftDeltaData =>
-        ("kind" -> "delta") ~ ("count" -> d.count) ~
-          ("idOrd" -> d.idOrd) ~ ("ops" -> jDeltaOps(m.schema, d))
-      case e: GraftEqDeleteData =>
-        // count deliberately absent — see [[jCommitData]]
-        ("kind" -> "eqdelete") ~ ("keyOrd" -> e.keyOrd) ~
-          ("keys" -> JArray(e.keys.toList.map(jval(e.keyType, _))))
-      case _: GraftFullData => throw new IllegalStateException(
-        "unreachable: full commits persist as parquet before logging")
+      case other => jCommitData(m, other)
     }
     val body = body0 ~ ("a" -> "commit") ~ ("v" -> v) ~ ("op" -> op) ~
       ("time" -> time) ~
-      ("branches" -> JObject(branches.toList.sortBy(_._1)
-        .map { case (k, x) => k -> JInt(x): JField })) ~
-      ("tags" -> JObject(tags.toList.sortBy(_._1)
-        .map { case (k, x) => k -> JInt(x): JField })) ~
+      ("branches" -> jRefMap(branches)) ~ ("tags" -> jRefMap(tags)) ~
       ("ingest" -> ingest.toList) ~
-      ("hwm" -> GraftTableStore.identityHwmValue(storeName)) ~
-      jMvRecord(storeName)
+      ("hwm" -> st.identityHwm.map(_.get())) ~
+      jMvRecord(st)
     val seq = ctr.getAndIncrement()
     val d = logDir(m.dir)
     d.mkdirs()
@@ -936,11 +964,8 @@ object GraftLog {
     val ctr = seqCounter(storeName, m.dir)
     if (ctr.get() == 0L) { checkpoint(storeName); return }
     writeEntry(m.dir, ctr.getAndIncrement(), isCheckpoint = false,
-      ("a" -> "ref") ~
-        ("branches" -> JObject(branches.toList.sortBy(_._1)
-          .map { case (k, x) => k -> JInt(x): JField })) ~
-        ("tags" -> JObject(tags.toList.sortBy(_._1)
-          .map { case (k, x) => k -> JInt(x): JField })))
+      ("a" -> "ref") ~ ("branches" -> jRefMap(branches)) ~
+        ("tags" -> jRefMap(tags)))
   }
 
   /** log a metadata-only evolution (ALTER schema / spec / constraints):
@@ -950,24 +975,10 @@ object GraftLog {
     val m = GraftParquetStore.meta(storeName).getOrElse(return)
     val ctr = seqCounter(storeName, m.dir)
     if (ctr.get() == 0L) { checkpoint(storeName); return }
-    val d = GraftMergeCatalog.defSnapshot(storeName)
+    val t = GraftTableStore.definitionOf(storeName).map(_.table)
     writeEntry(m.dir, ctr.getAndIncrement(), isCheckpoint = false,
-      ("a" -> "meta") ~ ("schema" -> m.schema.json) ~
-        ("partFields" -> JArray(m.partFields.toList.map(jPart))) ~
-        ("specHistory" -> JArray(m.specs.toList.map(s =>
-          JArray(s.toList.map(jPart))))) ~
-        ("bloomOrds" -> m.bloomOrds.toList) ~
-        ("sortOrds" -> m.sortOrds.toList) ~
-        ("morRowId" -> d.flatMap(_._3.morRowId)) ~
-        ("constraints" -> JArray(d.map(_._3.tableConstraints)
-          .getOrElse(Array.empty[Constraint]).toList.map(jConstraint))))
-  }
-
-  /** forget a table's log counter (DROP / reset — the directory is
-    * going away with it). */
-  private[sources] def forget(storeName: String): Unit = {
-    nextSeq.remove(storeName)
-    ()
+      ("a" -> "meta") ~ jDefinition(m, t.flatMap(_.morRowId),
+        t.map(_.tableConstraints).getOrElse(Array.empty)))
   }
 
   // ---- replay ----------------------------------------------------------
@@ -983,53 +994,53 @@ object GraftLog {
     // a mid-transaction crash rolls FORWARD before anything replays —
     // the marker carries every participant's rendered entry
     recoverPendingTxns()
-    attachByName(
-      (catalogName +: (ident.namespace() :+ ident.name())).mkString("."))
+    val storeName = GraftMergeCatalog.storeName(catalogName, ident)
+    replayByName(storeName).map(r =>
+      install(storeName, r.copy(key = Some((catalogName, ident)))))
   }
 
   /** one table's complete log-replayed state, NOT yet installed — the
     * conflict-aware retry PEEKS the disk truth with this (classifying
     * the interleaved commits before destroying any in-memory state),
-    * then installs only if the rebase is viable. */
+    * then installs only if the rebase is viable. `key` is the (catalog,
+    * identifier) the newest checkpoint names. */
   private[sources] final case class Replayed(m: Meta, h: History,
       ingested: Set[String], hwm: Option[Long],
       mv: Option[GraftTableStore.MvRecord],
       morRowId: Option[String], constraints: Array[Constraint],
-      maxSeq: Long)
+      maxSeq: Long, key: Option[(String, Identifier)])
 
-  /** install a replayed state: evict every stale in-memory trace (a
-    * stale seq counter or resolution cache would poison the rebase),
-    * register, and re-seed the sequence counter past the replayed
-    * entries. */
+  /** install a replayed state as the table's fresh state record — one
+    * put ([[GraftTableStore.install]]), so no stale seq counter or
+    * resolution cache survives into the rebase and no reader sees the
+    * table in between. The record includes the catalog definition,
+    * rebuilt from the replay: a rebase keeps the table registered, so
+    * the next catalog touch does not replay the log again. The
+    * streaming epoch ledger is not part of the record and survives. */
   private[sources] def install(storeName: String, r: Replayed)
       : GraftMergeTable = {
-    // keepEpochs: install re-reads the DISK truth; the streaming
-    // epoch ledger is memory-only anti-double-commit state and must
-    // survive the rebase (a concurrent query's just-marked epoch
-    // would otherwise re-commit on WAL replay)
-    GraftTableStore.evictInMemory(storeName, keepEpochs = true)
-    GraftParquetStore.evictMeta(storeName)
-    GraftMergeCatalog.evictDef(storeName)
-    forget(storeName)
-    GraftParquetStore.restoreMeta(storeName, r.m)
-    GraftTableStore.restoreState(storeName, r.h, r.ingested, r.hwm, r.mv)
-    // seed the sequence counter from the REPLAY'S OWN snapshot, never
-    // a fresh directory listing: a foreign entry landing between the
-    // replay's listing and this install would otherwise advance the
-    // counter past an entry the replay never folded — the next commit
-    // would then claim a fresh slot with STALE content and fork the
-    // version chain (two entries both claiming the same version).
-    // Seeding at maxSeq+1 makes that foreign entry a verifyTail /
-    // claim conflict instead, which re-replays and converges.
-    nextSeq.put(storeName,
-      new java.util.concurrent.atomic.AtomicLong(r.maxSeq + 1))
-    new GraftMergeTable(storeName, r.m.schema, None, r.morRowId,
+    val t = new GraftMergeTable(storeName, r.m.schema, None, r.morRowId,
       r.m.partFields, r.constraints)
+    GraftTableStore.install(storeName, GraftTableStore.TableState(
+      history = r.h, meta = Some(r.m),
+      definition = r.key.map { case (c, i) =>
+        GraftTableStore.TableDef(c, i, t)
+      },
+      ingested = r.ingested, mv = r.mv,
+      identityHwm =
+        r.hwm.map(new java.util.concurrent.atomic.AtomicLong(_)),
+      // seed the sequence counter from the REPLAY'S OWN snapshot, never
+      // a fresh directory listing: a foreign entry landing between the
+      // replay's listing and this install would otherwise advance the
+      // counter past an entry the replay never folded — the next commit
+      // would then claim a fresh slot with STALE content and fork the
+      // version chain (two entries both claiming the same version).
+      // Seeding at maxSeq+1 makes that foreign entry a verifyTail /
+      // claim conflict instead, which re-replays and converges.
+      nextSeq = Some(new java.util.concurrent.atomic.AtomicLong(
+        r.maxSeq + 1))))
+    t
   }
-
-  private[sources] def attachByName(storeName: String)
-      : Option[GraftMergeTable] =
-    replayByName(storeName).map(install(storeName, _))
 
   /** parse a table's on-disk log into a [[Replayed]] state WITHOUT
     * installing anything — pure read (it may only collect a crashed
@@ -1076,50 +1087,26 @@ object GraftLog {
           "the log is corrupt (the first entry is always a checkpoint)"))
     val cp = parse(lastCp._3)
     // registration first — manifest/key/stat decoding needs the schema
-    val schema = DataType.fromJson(
-      (cp \ "schema").asInstanceOf[JString].s).asInstanceOf[StructType]
-    val partFields = (cp \ "partFields").asInstanceOf[JArray].arr
-      .map(unjPart).toArray
-    val specHistory = (cp \ "specHistory").asInstanceOf[JArray].arr
-      .map(s => s.asInstanceOf[JArray].arr.map(unjPart).toArray).toVector
-    val bloomOrds = (cp \ "bloomOrds").asInstanceOf[JArray].arr
-      .map(asInt).toArray
-    val dvMode = (cp \ "dvMode").asInstanceOf[JBool].value
-    // absent in pre-round-14 checkpoints — default to no sort order
-    val sortOrds = cp \ "sortOrds" match {
-      case JArray(xs) => xs.map(asInt).toArray
-      case _ => Array.empty[Int]
-    }
-    var m = Meta(dir.getAbsolutePath, schema, partFields, bloomOrds,
-      specHistory, dvMode, sortOrds)
-    var morRowId = cp \ "morRowId" match {
-      case JString(s) => Some(s)
-      case _ => None
-    }
-    var constraints = (cp \ "constraints").asInstanceOf[JArray].arr
-      .map(unjConstraint).toArray
-    var h = History(
-      asInt(cp \ "firstRetained"),
+    var (m, morRowId, constraints) = unjDefinition(cp,
+      Meta(dir.getAbsolutePath, new StructType(), Array.empty,
+        dvMode = (cp \ "dvMode").asInstanceOf[JBool].value))
+    val first = asInt(cp \ "firstRetained")
+    var h = History(first,
       (cp \ "commits").asInstanceOf[JArray].arr.zipWithIndex
-        .map { case (c, i) =>
-          unjCommitData(m, c, storeName, asInt(cp \ "firstRetained") + i)
-        }.toVector,
-      (cp \ "times").asInstanceOf[JArray].arr.map {
-        case JInt(n) => n.toLong
-        case JLong(n) => n
-        case other => throw new IllegalStateException(s"bad time: $other")
-      }.toVector,
+        .map { case (c, i) => unjCommitData(m, c, storeName, first + i) }
+        .toVector,
+      (cp \ "times").asInstanceOf[JArray].arr.map(asLong).toVector,
       (cp \ "ops").asInstanceOf[JArray].arr
         .map(_.asInstanceOf[JString].s).toVector,
       unjRefMap(cp \ "branches"), unjRefMap(cp \ "tags"))
     var ingested = (cp \ "ingested").asInstanceOf[JArray].arr
       .map(_.asInstanceOf[JString].s).toSet
-    var hwm: Option[Long] = cp \ "hwm" match {
-      case JInt(n) => Some(n.toLong)
-      case JLong(n) => Some(n)
+    var hwm = optLong(cp \ "hwm")
+    var mv = unjMvRecord(cp)
+    val key = cp \ "catalog" match {
+      case JString(c) => Some((c, unjIdent(cp \ "ident")))
       case _ => None
     }
-    var mv = unjMvRecord(cp)
     // fold post-checkpoint entries
     entries.filter(e => !e._2 && e._1 > lastCp._1).foreach { case (_, _, f) =>
       val e = parse(f)
@@ -1128,6 +1115,7 @@ object GraftLog {
           val data: GraftCommitData =
             (e \ "kind").asInstanceOf[JString].s match {
               case "parquet" =>
+                // a manifest DIFF against the previous version
                 val prevFiles = h.commits.lastOption match {
                   case Some(p: GraftParquetData) => p.files
                   case _ => Vector.empty[GraftFileInfo]
@@ -1144,64 +1132,25 @@ object GraftLog {
                       byPath(p.asInstanceOf[JString].s)).toVector
                   case _ => folded
                 }
-                GraftParquetData(files,
-                  asInt(e \ "count"))
-              case "delta" =>
-                val idOrd = asInt(e \ "idOrd")
-                GraftDeltaData(
-                  unjDeltaOps(m.schema, m.schema(idOrd).dataType,
-                    e \ "ops"),
-                  idOrd, m.schema(idOrd).dataType,
-                  asInt(e \ "count"))
-              case "eqdelete" =>
-                val keyOrd = asInt(e \ "keyOrd")
-                val keyType = m.schema(keyOrd).dataType
-                GraftEqDeleteData(keyOrd, keyType,
-                  (e \ "keys").asInstanceOf[JArray].arr
-                    .map(unjval(keyType, _)).toArray,
-                  storeName, h.commitCount)
+                GraftParquetData(files, asInt(e \ "count"))
+              case _ => unjCommitData(m, e, storeName, h.commitCount)
             }
           h = History(h.firstRetained, h.commits :+ data,
-            h.times :+ ((e \ "time") match {
-              case JInt(n) => n.toLong
-              case JLong(n) => n
-              case _ => 0L
-            }),
+            h.times :+ optLong(e \ "time").getOrElse(0L),
             h.ops :+ (e \ "op").asInstanceOf[JString].s,
             unjRefMap(e \ "branches"), unjRefMap(e \ "tags"))
           ingested ++= (e \ "ingest").asInstanceOf[JArray].arr
             .map(_.asInstanceOf[JString].s)
-          e \ "hwm" match {
-            case JInt(n) => hwm = Some(n.toLong)
-            case JLong(n) => hwm = Some(n)
-            case _ =>
-          }
-          unjMvRecord(e).foreach(r => mv = Some(r))
+          hwm = optLong(e \ "hwm").orElse(hwm)
+          mv = unjMvRecord(e).orElse(mv)
         case "ref" =>
           h = h.copy(branches = unjRefMap(e \ "branches"),
             tags = unjRefMap(e \ "tags"))
         case "meta" =>
-          val sch = DataType.fromJson(
-            (e \ "schema").asInstanceOf[JString].s)
-            .asInstanceOf[StructType]
-          m = m.copy(schema = sch,
-            partFields = (e \ "partFields").asInstanceOf[JArray].arr
-              .map(unjPart).toArray,
-            specHistory = (e \ "specHistory").asInstanceOf[JArray].arr
-              .map(s => s.asInstanceOf[JArray].arr.map(unjPart).toArray)
-              .toVector,
-            bloomOrds = (e \ "bloomOrds").asInstanceOf[JArray].arr
-              .map(asInt).toArray,
-            sortOrds = e \ "sortOrds" match {
-              case JArray(xs) => xs.map(asInt).toArray
-              case _ => Array.empty[Int]
-            })
-          morRowId = e \ "morRowId" match {
-            case JString(s) => Some(s)
-            case _ => None
-          }
-          constraints = (e \ "constraints").asInstanceOf[JArray].arr
-            .map(unjConstraint).toArray
+          val (m2, rowId2, constraints2) = unjDefinition(e, m)
+          m = m2
+          morRowId = rowId2
+          constraints = constraints2
         case other => throw new IllegalStateException(
           s"graft log of $storeName: unknown entry kind '$other'")
       }
@@ -1257,30 +1206,28 @@ object GraftLog {
       })
     }
     Some(Replayed(m, hN, ingested, hwm, mv, morRowId, constraints,
-      entries.last._1))
+      entries.last._1, key))
   }
 
   /** an MV table's record as log fields — the definition stays an
     * opaque string (the MV layer owns its format) */
-  private def jMvRecord(storeName: String): JObject = {
-    val r = GraftTableStore.mvRecordOf(storeName)
-    ("mvdef" -> r.map(_.definition)) ~ ("mvwm" -> r.map(_.watermark))
-  }
+  private def jMvRecord(st: GraftTableStore.TableState): JObject =
+    ("mvdef" -> st.mv.map(_.definition)) ~
+      ("mvwm" -> st.mv.map(_.watermark))
 
   private def unjMvRecord(j: JValue): Option[GraftTableStore.MvRecord] =
-    (j \ "mvdef", j \ "mvwm") match {
-      case (JString(d), JInt(wm)) =>
-        Some(GraftTableStore.MvRecord(d, wm.toLong))
-      case (JString(d), JLong(wm)) => Some(GraftTableStore.MvRecord(d, wm))
+    (j \ "mvdef", optLong(j \ "mvwm")) match {
+      case (JString(d), Some(wm)) => Some(GraftTableStore.MvRecord(d, wm))
       case _ => None
     }
 
+  private def jRefMap(refs: Map[String, Int]): JObject =
+    JObject(refs.toList.sortBy(_._1).map { case (k, v) => k -> JInt(v) })
+
   private def unjRefMap(j: JValue): Map[String, Int] = j match {
-    case JObject(fields) => fields.map {
-      case (k, JInt(v)) => k -> v.toInt
-      case (k, JLong(v)) => k -> v.toInt
-      case (k, other) => throw new IllegalStateException(
-        s"bad ref version for '$k': $other")
+    case JObject(fields) => fields.map { case (k, v) =>
+      k -> optLong(v).getOrElse(throw new IllegalStateException(
+        s"bad ref version for '$k': $v")).toInt
     }.toMap
     case _ => Map.empty
   }
@@ -1322,8 +1269,7 @@ object GraftLog {
     Option(tablesDir.listFiles()).getOrElse(Array.empty[File])
       .filter(_.isDirectory)
       .flatMap { d =>
-        val storeName = java.net.URLDecoder.decode(d.getName,
-          StandardCharsets.UTF_8)
+        val storeName = GraftWarehouse.storeNameOf(d)
         if (loaded(storeName)) {
           unloadedRefCache.remove(d.getAbsolutePath)
           Iterator.empty
@@ -1437,21 +1383,17 @@ object GraftLog {
 
   // ---- restart simulation (test hook) ----------------------------------
 
-  /** Simulate a PROCESS RESTART for the named tables: evict every
-    * piece of their in-memory state — store history, resolution
-    * caches, parquet registration, catalog definition, ledgers,
-    * counters — while the warehouse directory (the "disk") stays
-    * untouched. The next catalog touch must rebuild them from the
-    * transaction log alone; that is the durability contract this
-    * hook exists to pin. Views evict with `alsoViews`. */
+  /** Simulate a PROCESS RESTART for the named tables: evict each one's
+    * whole state record — history, resolution caches, parquet
+    * registration, catalog definition, ledgers, log counters — and its
+    * streaming epoch entries ([[GraftTableStore.evict]]), while the
+    * warehouse directory (the "disk") stays untouched. The next catalog
+    * touch must rebuild them from the transaction log alone; that is
+    * the durability contract this hook exists to pin. Views evict with
+    * `alsoViews`. */
   private[graft] def simulateProcessRestart(storeNames: Seq[String],
       alsoViews: Boolean = false): Unit = {
-    storeNames.foreach { n =>
-      GraftTableStore.evictInMemory(n)
-      GraftParquetStore.evictMeta(n)
-      GraftMergeCatalog.evictDef(n)
-      forget(n)
-    }
+    storeNames.foreach(GraftTableStore.evict(_, keepEpochs = false))
     if (alsoViews) GraftMergeCatalog.evictViewsFromMemory()
   }
 }

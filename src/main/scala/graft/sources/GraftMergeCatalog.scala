@@ -34,16 +34,24 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * stable row id), the deletion-vector/MoR shape whose write cost is
   * O(changed rows) — the right one for small mutations at 100 TB.
   *
-  * Storage is an in-JVM row store (UnsafeRow copies behind a TrieMap):
-  * the catalog demonstrates and TESTS the planner path, it is not a
-  * lake format — at 100 TB the same `MERGE INTO` text runs unchanged
-  * against a real table provider, and everything this module exercises
-  * (analysis, the cardinality check, the ReplaceData rewrite, clause
-  * projections) is the engine-side half of that stack. Commit is a
-  * last-commit-wins atomic swap; rows travel through the standard
-  * DataWriter / WriterCommitMessage protocol (UnsafeRow is
-  * serializable), so the flow is executor-shaped even though the test
-  * harness runs local-mode.
+  * Two stores, chosen per table at CREATE: the default in-JVM row
+  * store, where a commit holds UnsafeRow copies (or, merge-on-read, an
+  * op log merged at read), and the parquet store
+  * (TBLPROPERTIES ('graft.store'='parquet'), [[GraftParquetStore]]),
+  * where a commit is a file manifest and [[GraftLog]] makes every
+  * state change durable under the warehouse root. Rows travel through
+  * the standard DataWriter / WriterCommitMessage protocol either way.
+  *
+  * Each table's in-memory state is ONE immutable [[TableState]] record
+  * per store name, in one map: history, parquet registration, catalog
+  * definition, ledgers, log counters and read caches. A commit or
+  * metadata change replaces the record under the table's lock (plus
+  * the warehouse read lock; cross-table work takes the write lock);
+  * readers take no lock and always see one whole record. Replaying a
+  * log ([[install]]: attach, conflict rebase) is one map put, and
+  * dropping a table's memory ([[evict]]: restart, failed commit, DROP)
+  * one map remove — no reader sees a table half-replaced, and an
+  * eviction cannot leave a piece behind.
   */
 object GraftTableStore {
   /** Retention cap on the snapshot history: only the most recent
@@ -128,27 +136,142 @@ object GraftTableStore {
     def mainHead: Int = branches.getOrElse("main", commitCount - 1)
   }
 
-  /** table name -> retained history. All mutation goes through
-    * [[put]]/[[mutate]] under the table's lock, so `current snapshot`
-    * and `version history` can never disagree (two concurrent commits —
-    * two streaming queries merging into one table — serialize; each
-    * commit is last-write-wins over the PREVIOUS committed state,
-    * atomically). */
-  private[sources] val versions = new TrieMap[String, History]()
+  private[sources] val EmptyHistory: History = History(0, Vector.empty)
 
-  /** PER-TABLE commit locks (round 13 — the store-global mutex is
-    * gone): a commit or metadata mutation takes ITS table's monitor
-    * plus the warehouse READ lock, so commits to different tables
-    * never contend — a long commit on table A cannot stall table B.
-    * CROSS-TABLE operations (reset/DROP with its reference-aware file
-    * sweep, shallow clones that make one table reference another's
-    * files, multi-table transactions) take the warehouse WRITE lock,
-    * excluding all table-local work while references move between
-    * tables. Reads of another table's History under the read lock are
-    * safe without its monitor: History values are immutable and
-    * cross-table reference edges only change under the write lock.
-    * Readers of table STATE (get/resolveRel) stay lock-free as before
-    * — they see some committed immutable History. */
+  /** A governed table's catalog definition and the catalog name and
+    * identifier it is registered under. */
+  private[sources] final case class TableDef(catalog: String,
+      ident: Identifier, table: GraftMergeTable)
+
+  /** A materialized view's record: its definition, opaque here (the MV
+    * layer owns its format), and the source version its rows reflect. */
+  private[graft] final case class MvRecord(definition: String,
+      watermark: Long)
+
+  /** EVERYTHING this process holds in memory about one table, as one
+    * immutable record:
+    *   - `history`: the retained commits;
+    *   - `meta`: the parquet registration (None on the row store);
+    *   - `definition`: the catalog definition. Spark builds one catalog
+    *     object per session (foreachBatch clones included), so it lives
+    *     here, JVM-shared, and not in the catalog instance;
+    *   - `ingested`: the COPY INTO ledger, source paths already loaded —
+    *     what makes re-running an ingest idempotent;
+    *   - `mv`: a materialized view table's record;
+    *   - `identityHwm`: the IDENTITY column's high-water mark, seeded
+    *     from the declared START at first use and reserved lock-free;
+    *   - `nextSeq`, `tailMtime`: the log's next entry number and the log
+    *     directory's mtime at our last write ([[GraftLog.verifyTail]]);
+    *   - `resolved`: driver-side rows of delta, equality-delete and
+    *     parquet commits by absolute version. A committed version never
+    *     changes, so an entry stays valid until retention drops it.
+    *     Unchanged rows keep their base row OBJECTS through a merge, so
+    *     reference-identity checks (streaming prefix check, change-feed
+    *     update detection) see through delta commits;
+    *   - `changeData`, `changeDataLocks`: a CoW rewrite commit's staged
+    *     change-data files by version and their per-version latches
+    *     ([[GraftChangeFeed]]).
+    * The five mutable members (two counters, three caches) belong to the
+    * record and die with it. Everything else changes by replacing the
+    * whole record ([[update]]). */
+  private[sources] final case class TableState(
+      history: History = EmptyHistory,
+      meta: Option[GraftParquetStore.Meta] = None,
+      definition: Option[TableDef] = None,
+      ingested: Set[String] = Set.empty,
+      mv: Option[MvRecord] = None,
+      identityHwm: Option[java.util.concurrent.atomic.AtomicLong] = None,
+      nextSeq: Option[java.util.concurrent.atomic.AtomicLong] = None,
+      tailMtime: Option[Long] = None,
+      resolved: TrieMap[Int, Array[InternalRow]] = new TrieMap(),
+      changeData: TrieMap[Int, Vector[GraftFileInfo]] = new TrieMap(),
+      changeDataLocks: TrieMap[Int, Object] = new TrieMap())
+
+  /** store name -> the table's one state record. */
+  private val states =
+    new java.util.concurrent.ConcurrentHashMap[String, TableState]()
+
+  private[sources] def stateOf(name: String): Option[TableState] =
+    Option(states.get(name))
+  /** `name`'s record, or an empty one for a table with no state. */
+  private def current(name: String): TableState =
+    stateOf(name).getOrElse(TableState())
+
+  /** atomically replace `name`'s record by `f` of it (of an empty
+    * record when there is none). `f` runs inside the map's per-key
+    * lock, so it must be a pure copy — no I/O, no other map access. */
+  private[sources] def update(name: String)(
+      f: TableState => TableState): TableState =
+    states.compute(name, (_, s) => f(if (s == null) TableState() else s))
+
+  /** [[update]] that leaves an absent table absent — for state that
+    * only means something while the table is loaded. */
+  private[sources] def updateIfPresent(name: String)(
+      f: TableState => TableState): Unit = {
+    states.computeIfPresent(name, (_, s) => f(s))
+    ()
+  }
+
+  /** install a complete record — a log replay ([[GraftLog.install]]):
+    * one put, so a lock-free reader sees the old record or the new one,
+    * never a table half-replaced. */
+  private[sources] def install(name: String, s: TableState): Unit =
+    withTableLock(name) { states.put(name, s); () }
+
+  /** evict a table's ENTIRE in-memory state without touching disk —
+    * one remove; the next catalog touch replays the on-disk log.
+    * Callers: the restart simulation, a commit or transaction whose
+    * log write failed (the in-memory state is then ahead of the disk
+    * truth) and DROP. `keepEpochs`: the streaming epoch ledger is
+    * memory-only state that refuses WAL double-commits — it is NOT
+    * derived from the log, so an eviction that merely forces a
+    * re-replay (a failed log write) must keep it, or a concurrent
+    * query's just-marked epoch would re-commit on WAL replay. Only
+    * end-of-life evictions (DROP/reset, the restart simulation) wipe
+    * it. Returns the evicted record. */
+  private[graft] def evict(name: String,
+      keepEpochs: Boolean): Option[TableState] = withTableLock(name) {
+    val dropped = Option(states.remove(name))
+    // epochLock guards the access-ordered map (even get() structurally
+    // mutates it); it is a leaf lock, so no ordering hazard
+    if (!keepEpochs)
+      epochLock.synchronized {
+        lastEpochs.keySet().removeIf(_._1 == name); ()
+      }
+    dropped
+  }
+
+  /** retained history of a table — empty for a created-but-never-
+    * committed (or unknown) table. */
+  private[sources] def historyOf(name: String): History =
+    stateOf(name).fold(EmptyHistory)(_.history)
+  private def setHistory(name: String, h: History): Unit = {
+    update(name)(_.copy(history = h))
+    ()
+  }
+
+  private[sources] def definitionOf(name: String): Option[TableDef] =
+    stateOf(name).flatMap(_.definition)
+
+  private[sources] def define(name: String, d: TableDef): Unit = {
+    update(name)(_.copy(definition = Some(d)))
+    ()
+  }
+
+  private[sources] def definitions: Iterator[TableDef] =
+    states.values().iterator().asScala.flatMap(_.definition)
+
+  /** PER-TABLE commit locks: a commit or metadata mutation takes ITS
+    * table's monitor plus the warehouse READ lock, so commits to
+    * different tables never contend. CROSS-TABLE operations (reset/
+    * DROP with its reference-aware file sweep, shallow clones that
+    * make one table reference another's files, multi-table
+    * transactions) take the warehouse WRITE lock. Readers of another
+    * table's record under the read lock need no monitor: records are
+    * immutable and cross-table reference edges only change under the
+    * write lock. Readers of table state take no lock at all. The lock
+    * map lives outside the state records because a lock must outlive
+    * them: an install or evict happens while holding it. */
   private val globalRw =
     new java.util.concurrent.locks.ReentrantReadWriteLock()
   private val tableLocks = new TrieMap[String, Object]()
@@ -174,17 +297,6 @@ object GraftTableStore {
   private[graft] def holdingTableLock[T](name: String)(f: => T): T =
     withTableLock(name)(f)
 
-  /** Memoized read-time resolutions of DELTA commits, keyed by
-    * (table, absolute version): a committed version's content never
-    * changes (the chain is append-only), so a cached merge stays valid
-    * forever; entries die with their versions (retention trim) or their
-    * table (reset), bounding the cache at O(retained ≤ 64) per table.
-    * Unchanged rows keep their base row OBJECTS through the merge, so
-    * reference-identity invariants (streaming prefix check, change-feed
-    * update detection) see through delta commits unchanged. */
-  private val resolvedCache =
-    new TrieMap[(String, Int), Array[InternalRow]]()
-
   /** file paths referenced by the retained manifests of every table
     * EXCEPT `except` — the set a file-delete sweep must never touch.
     * Normally empty for another table's directory (each table writes
@@ -194,8 +306,8 @@ object GraftTableStore {
     * MUST run under [[lock]]. O(tables × retained × files) manifest
     * entries — metadata, no file touched. */
   private def fileRefsExcept(except: String): Set[String] =
-    versions.iterator.filter(_._1 != except)
-      .flatMap(_._2.commits.iterator).flatMap {
+    states.asScala.iterator.filter(_._1 != except)
+      .flatMap(_._2.history.commits.iterator).flatMap {
         case p: GraftParquetData => p.files.iterator.map(_.path)
         case _ => Iterator.empty
       }.toSet ++
@@ -203,17 +315,17 @@ object GraftTableStore {
       // from their on-disk transaction log (a never-touched shallow
       // clone is the case) — a sweep that ignored them would corrupt
       // the clone the first time it IS touched
-      GraftLog.unloadedFileRefs(n => versions.contains(n) || n == except)
+      GraftLog.unloadedFileRefs(n => states.containsKey(n) || n == except)
 
   def reset(name: String): Unit = withGlobalLock {
-    val dropped = versions.remove(name)
+    val dropped = evict(name, keepEpochs = false)
     val live = fileRefsExcept(name)
     // delete every file the dropped table referenced that no OTHER
     // table still does — wherever it lives: a shallow clone's
     // manifest references files under its SOURCE's directory, so
     // dropping the last referencing table must reach across dirs or
     // those files leak (their owning dir may already be unregistered)
-    dropped.foreach(_.commits.foreach {
+    dropped.foreach(_.history.commits.foreach {
       case p: GraftParquetData => p.files.foreach { f =>
         if (!live.contains(f.path)) {
           val file = new java.io.File(f.path)
@@ -227,80 +339,15 @@ object GraftTableStore {
     })
     // file-backed tables drop their dir — except files a shallow
     // clone's retained manifest still references (computed AFTER this
-    // table left `versions`, so only live references count)
-    GraftParquetStore.drop(name, live)
-    resolvedCache.keysIterator.filter(_._1 == name)
-      .foreach(resolvedCache.remove)
-    // a dropped/reset table's epoch ledger entries can never be
-    // consulted again (its store is gone) — evict them, so create/drop
-    // churn cannot grow the ledger without bound. epochLock guards the
-    // access-ordered map (even get() structurally mutates it): markEpoch
-    // runs under epochLock alone, so removal from another lock scope
-    // would race. epochLock is a leaf lock — no ordering hazard.
-    epochLock.synchronized { lastEpochs.keySet().removeIf(_._1 == name); () }
-    ingestedFiles.remove(name)
-    identityHwm.remove(name)
-    mvRecords.remove(name)
-    GraftChangeFeed.evictStaged(name)
-    GraftLog.forget(name)
-    ()
+    // table's record left the store, so only live references count)
+    dropped.flatMap(_.meta).foreach(GraftParquetStore.drop(_, live))
   }
 
   /** did anything materialize version `v` of `name` on the DRIVER?
     * (test probe: the task-side rewrite paths must never call
     * [[resolveRel]] on a file-backed base). */
   private[graft] def isResolvedCached(name: String, v: Int): Boolean =
-    resolvedCache.contains((name, v))
-
-  /** the retained History of a table, for the transaction-log
-    * writer — empty history for a created-but-never-committed table. */
-  private[sources] def historyOf(name: String): Option[History] =
-    Some(versions.getOrElse(name, History(0, Vector.empty)))
-
-  /** the identity high-water mark as last reserved, for the log. */
-  private[sources] def identityHwmValue(name: String): Option[Long] =
-    identityHwm.get(name).map(_.get())
-
-  /** install a log-replayed state — the attach path of a process that
-    * never saw this table ([[GraftLog.attach]]). */
-  private[sources] def restoreState(name: String, h: History,
-      ingested: Set[String], hwm: Option[Long],
-      mv: Option[MvRecord]): Unit = withTableLock(name) {
-    versions.put(name, h)
-    if (ingested.nonEmpty) ingestedFiles.put(name, ingested)
-    hwm.foreach(v => identityHwm.put(name,
-      new java.util.concurrent.atomic.AtomicLong(v)))
-    mv.foreach(r => mvRecords.put(name, r))
-    ()
-  }
-
-  /** evict a table's ENTIRE in-memory state without touching disk —
-    * the process-restart simulation ([[GraftLog
-    * .simulateProcessRestart]]); the next catalog touch replays the
-    * on-disk log. */
-  /** `keepEpochs`: the streaming epoch LEDGER is memory-only state
-    * that exists to refuse WAL double-commits — it is NOT derived
-    * from the log, so evictions that merely force a disk re-replay
-    * (the conflict-retry rebase, a failed logCommit) must PRESERVE
-    * it: wiping it would let a concurrent query's just-marked epoch
-    * re-commit on WAL replay (duplicate rows). Only genuine
-    * end-of-life evictions (DROP/reset, the restart simulation) wipe
-    * it. */
-  private[graft] def evictInMemory(name: String,
-      keepEpochs: Boolean = false): Unit = withTableLock(name) {
-    versions.remove(name)
-    resolvedCache.keysIterator.filter(_._1 == name)
-      .foreach(resolvedCache.remove)
-    ingestedFiles.remove(name)
-    identityHwm.remove(name)
-    mvRecords.remove(name)
-    if (!keepEpochs)
-      epochLock.synchronized {
-        lastEpochs.keySet().removeIf(_._1 == name); ()
-      }
-    GraftChangeFeed.evictStaged(name)
-    ()
-  }
+    stateOf(name).exists(_.resolved.contains(v))
 
   /** COPY INTO source paths whose ledger update must ride INSIDE the
     * ingest's OWN commit (exactly-once: there is no window between
@@ -310,7 +357,9 @@ object GraftTableStore {
     * paths, so only the COPY's own commit can consume them — a
     * concurrent commit to the same table from another thread (a
     * streaming epoch, an OPTIMIZE) can neither steal the ledger
-    * update nor attach it to the wrong commit. */
+    * update nor attach it to the wrong commit. Like the MV rider
+    * below, it lives outside the state record: it belongs to the
+    * writing thread until its commit consumes it. */
   private val pendingIngest =
     new ThreadLocal[Option[(String, Seq[String])]] {
       override def initialValue(): Option[(String, Seq[String])] = None
@@ -319,11 +368,6 @@ object GraftTableStore {
     pendingIngest.set(Some((name, paths)))
   private[graft] def abortIngest(name: String): Unit =
     pendingIngest.remove()
-
-  /** A materialized view's record: its definition, opaque here (the MV
-    * layer owns its format), and the source version its rows reflect. */
-  private[graft] final case class MvRecord(definition: String,
-      watermark: Long)
 
   /** MATERIALIZED-VIEW RECORDS riding commits: an MV table's record
     * becomes durable IN the commit that changes the MV's rows — the
@@ -334,9 +378,7 @@ object GraftTableStore {
     * the record on its own driver thread, the commit to that table
     * consumes it under the lock, the log entry carries it (`mvdef`,
     * `mvwm`), and replay restores it — exactly-once across a crash. It
-    * lives and dies with the table's other state: DROP, restart and
-    * rebase need nothing extra. */
-  private val mvRecords = new TrieMap[String, MvRecord]()
+    * lives and dies with the table's state record. */
   private val pendingMv =
     new ThreadLocal[Option[(String, MvRecord)]] {
       override def initialValue(): Option[(String, MvRecord)] = None
@@ -346,32 +388,28 @@ object GraftTableStore {
     pendingMv.set(Some((name, MvRecord(definition, watermark))))
   private[graft] def disarmMvRecord(): Unit = pendingMv.remove()
   private[graft] def mvRecordOf(name: String): Option[MvRecord] =
-    mvRecords.get(name)
+    stateOf(name).flatMap(_.mv)
 
-  /** IDENTITY COLUMN high-water marks (GENERATED ... AS IDENTITY):
-    * one atomic counter per table, seeded from the declared START at
-    * first use — the commit path reserves values from it under no
-    * additional lock (AtomicLong). In-JVM like the rest of the store;
-    * a real format reserves per-transaction ranges from its log. */
-  private val identityHwm =
-    new TrieMap[String, java.util.concurrent.atomic.AtomicLong]()
+  /** reserve the next IDENTITY value (GENERATED ... AS IDENTITY): the
+    * commit path draws from the table's counter under no additional
+    * lock; the first draw seeds it at the declared START. */
   private[sources] def reserveIdentity(name: String, start: Long,
-      step: Long): Long =
-    identityHwm.getOrElseUpdate(name,
-      new java.util.concurrent.atomic.AtomicLong(start))
-      .getAndAdd(step)
+      step: Long): Long = {
+    val ctr = stateOf(name).flatMap(_.identityHwm).getOrElse {
+      val fresh = new java.util.concurrent.atomic.AtomicLong(start)
+      update(name)(s => if (s.identityHwm.isDefined) s
+        else s.copy(identityHwm = Some(fresh))).identityHwm.get
+    }
+    ctr.getAndAdd(step)
+  }
 
-  /** COPY INTO file ledger: source paths already loaded into each
-    * table — what makes re-running an ingest IDEMPOTENT (Delta's COPY
-    * INTO / Auto Loader file tracking). O(ingested files) driver
-    * memory. Since round 12 the ledger update rides INSIDE the
-    * ingest's own commit ([[beginIngest]] → [[appendLocked]], one
-    * locked step, one transaction-log entry on a file-backed table) —
-    * exactly-once across a crash, and a fresh process replays it from
-    * the log. */
-  private val ingestedFiles = new TrieMap[String, Set[String]]()
+  /** the COPY INTO ledger: source paths already loaded into `name`.
+    * Since round 12 the ledger update rides INSIDE the ingest's own
+    * commit ([[beginIngest]] → [[appendLocked]], one locked step, one
+    * transaction-log entry on a file-backed table) — exactly-once
+    * across a crash, and a fresh process replays it from the log. */
   private[graft] def ingestedFor(name: String): Set[String] =
-    ingestedFiles.getOrElse(name, Set.empty)
+    stateOf(name).fold(Set.empty[String])(_.ingested)
 
   /** apply one op log to its base snapshot — the scan-side MoR merge.
     * Deletes/updates key by the stable row id; untouched rows pass
@@ -399,23 +437,25 @@ object GraftTableStore {
     * answers directly; a delta commit merges base + op log, memoized by
     * absolute version. Recursion depth ≤ RetainedVersions (retention
     * trim materializes the head, so a chain never walks off the retained
-    * window). */
-  private def resolveRel(name: String, h: History, rel: Int)
-      : Array[InternalRow] =
+    * window). The memo and the parquet schema come from `s`, the record
+    * `h` was read from, so a reader racing an install never mixes two
+    * records. */
+  private def resolveRel(name: String, s: TableState, h: History,
+      rel: Int): Array[InternalRow] =
     h.commits(rel) match {
       case f: GraftFullData => f.rows
       case d: GraftDeltaData =>
-        resolvedCache.getOrElseUpdate((name, h.firstRetained + rel), {
+        s.resolved.getOrElseUpdate(h.firstRetained + rel, {
           val base =
             if (rel == 0) Array.empty[InternalRow] // delta on empty table
-            else resolveRel(name, h, rel - 1)
+            else resolveRel(name, s, h, rel - 1)
           applyDelta(base, d)
         })
       case e: GraftEqDeleteData =>
-        resolvedCache.getOrElseUpdate((name, h.firstRetained + rel), {
+        s.resolved.getOrElseUpdate(h.firstRetained + rel, {
           val base =
             if (rel == 0) Array.empty[InternalRow]
-            else resolveRel(name, h, rel - 1)
+            else resolveRel(name, s, h, rel - 1)
           val dead = e.keys.toSet
           // rows narrower than keyOrd predate the key column (ADD
           // COLUMN evolution) — their key reads NULL, and NULL never
@@ -434,8 +474,8 @@ object GraftTableStore {
         // so reference-identity invariants (streaming prefix check,
         // change-feed equality) see through the file round-trip
         // exactly as they do in memory.
-        resolvedCache.getOrElseUpdate((name, h.firstRetained + rel), {
-          val schema = GraftParquetStore.meta(name).map(_.schema)
+        s.resolved.getOrElseUpdate(h.firstRetained + rel, {
+          val schema = s.meta.map(_.schema)
             .getOrElse(throw new IllegalStateException(
               s"$name has parquet commits but no parquet registration"))
           val prevShared: Option[(Int, Array[InternalRow])] =
@@ -443,7 +483,7 @@ object GraftTableStore {
             else h.commits(rel - 1) match {
               case pp: GraftParquetData
                 if GraftChangeFeed.extendsAsPrefix(p.files, pp.files) =>
-                Some((pp.files.length, resolveRel(name, h, rel - 1)))
+                Some((pp.files.length, resolveRel(name, s, h, rel - 1)))
               case _ => None
             }
           prevShared match {
@@ -454,9 +494,17 @@ object GraftTableStore {
         })
     }
 
+  /** [[resolveRel]] against `name`'s current record — for callers
+    * holding the table lock, where the record cannot change under
+    * them. */
+  private def resolveRel(name: String, h: History, rel: Int)
+      : Array[InternalRow] =
+    resolveRel(name, current(name), h, rel)
+
   def get(name: String): Array[InternalRow] =
-    versions.get(name) match {
-      case Some(h) if h.commits.nonEmpty =>
+    stateOf(name) match {
+      case Some(s) if s.history.commits.nonEmpty =>
+        val h = s.history
         // unqualified reads serve MAIN — staged (unpublished) branch
         // commits beyond it are invisible until fast-forward
         val rel = h.mainHead - h.firstRetained
@@ -465,18 +513,19 @@ object GraftTableStore {
             s"$name: the published (main) version ${h.mainHead} has " +
               "expired under retention while branch commits piled up — " +
               "publish or expire the branch")
-        resolveRel(name, h, rel)
+        resolveRel(name, s, h, rel)
       case _ => Array.empty
     }
   def commitCount(name: String): Int =
-    versions.get(name).map(_.commitCount).getOrElse(0)
+    historyOf(name).commitCount
   /** commits visible to unqualified/streaming/CDF readers: up to and
     * including MAIN — a WAP branch's staged commits don't stream or
     * feed until published. */
   private[graft] def publishedCount(name: String): Int =
-    versions.get(name).map(_.mainHead + 1).getOrElse(0)
+    historyOf(name).mainHead + 1
   def getVersion(name: String, v: Int): Array[InternalRow] = {
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val s = current(name)
+    val h = s.history
     if (v < 0 || v >= h.commitCount)
       throw new IllegalArgumentException(
         s"version $v of $name does not exist (${h.commitCount} commits)")
@@ -485,7 +534,7 @@ object GraftTableStore {
         s"version $v of $name has expired (retention keeps the last " +
           s"$RetainedVersions versions; earliest retained: " +
           s"${h.firstRetained})")
-    resolveRel(name, h, v - h.firstRetained)
+    resolveRel(name, s, h, v - h.firstRetained)
   }
   /** (operation, stored commit data) of a RETAINED version — what the
     * change feed derives CDC from (commit metadata, not snapshots).
@@ -493,7 +542,7 @@ object GraftTableStore {
     * snapshot path, which owns the loud errors). */
   private[sources] def commitInfo(name: String, v: Int)
       : Option[(String, GraftCommitData)] = {
-    val h = versions.getOrElse(name, return None)
+    val h = historyOf(name)
     if (v < h.firstRetained || v >= h.commitCount) return None
     val rel = v - h.firstRetained
     Some((if (rel < h.ops.length) h.ops(rel) else "append",
@@ -503,7 +552,7 @@ object GraftTableStore {
   /** the STORED form of a commit — "full" or "delta" — so tests can pin
     * that a delta commit really persisted only its op log. */
   private[graft] def commitKind(name: String, v: Int): String = {
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val h = historyOf(name)
     require(v >= h.firstRetained && v < h.commitCount,
       s"version $v of $name is not retained")
     h.commits(v - h.firstRetained) match {
@@ -517,7 +566,7 @@ object GraftTableStore {
     * prove appends re-reference prior files instead of rewriting. */
   private[graft] def commitFiles(name: String, v: Int)
       : Vector[GraftFileInfo] = {
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val h = historyOf(name)
     require(v >= h.firstRetained && v < h.commitCount,
       s"version $v of $name is not retained")
     h.commits(v - h.firstRetained) match {
@@ -538,7 +587,9 @@ object GraftTableStore {
     * ledger even under unbounded distinct-query churn against
     * long-lived tables — evicting the least-recently-committing query
     * is safe because the entry only matters for WAL replay at restart,
-    * which re-commits immediately (the entry is then at the MRU end). */
+    * which re-commits immediately (the entry is then at the MRU end).
+    * Kept outside the state record: the ledger is memory-only (no log
+    * carries it), so it must survive a rebase install. */
   private val MaxEpochEntries = 1024
   private val lastEpochs = new java.util.LinkedHashMap[
       (String, String), java.lang.Long](64, 0.75f, true) {
@@ -572,7 +623,8 @@ object GraftTableStore {
     // consistent (the atomic entry claim backstops the residual race)
     if (logIt && GraftParquetStore.isBacked(name))
       GraftLog.verifyTail(name)
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val s = current(name)
+    val h = s.history
     val head = h.commitCount - 1
     // linear-chain discipline: every commit extends the chain head.
     // A main write with staged branch commits dangling above main, or
@@ -603,15 +655,15 @@ object GraftTableStore {
     // driver-side materialization never re-reads what it just wrote.
     val stored: GraftCommitData = data match {
       case f: GraftFullData =>
-        GraftParquetStore.meta(name) match {
+        s.meta match {
           case Some(m) =>
             val prev = h.commits.lastOption.collect {
               case p: GraftParquetData =>
-                (p, resolveRel(name, h, h.commits.size - 1))
+                (p, resolveRel(name, s, h, h.commits.size - 1))
             }
             val pq = GraftParquetStore.persistFull(
               name, m, newV, f.rows, prev, f.fineLayout)
-            resolvedCache.put((name, newV), f.rows)
+            s.resolved.put(newV, f.rows)
             pq
           case None => f
         }
@@ -629,7 +681,6 @@ object GraftTableStore {
     val appended = History(h.firstRetained, h.commits :+ stored,
       h.times :+ now, h.ops :+ op, newBranches, h.tags)
     val trimmed = trimLocked(name, appended, RetainedVersions)
-    versions.put(name, trimmed)
     // a COPY INTO's ledger update rides the SAME locked step as its
     // commit (and, for a file-backed table, the same log entry) —
     // exactly-once across a crash, no commit-then-ledger window;
@@ -640,17 +691,17 @@ object GraftTableStore {
         paths
       case _ => Seq.empty
     }
-    if (ingest.nonEmpty)
-      ingestedFiles.put(name, ingestedFor(name) ++ ingest)
     // an MV's record rides ITS commit the same way — the MV layer
     // armed it on this thread, the baseline/MERGE commit consumes it
-    pendingMv.get() match {
+    val mv = pendingMv.get() match {
       case Some((n, r)) if n == name =>
         pendingMv.remove()
-        mvRecords.put(name, r)
-        ()
-      case _ => ()
+        Some(r)
+      case _ => None
     }
+    // history, ledger and MV record land as ONE record replacement
+    update(name)(st => st.copy(history = trimmed,
+      ingested = st.ingested ++ ingest, mv = mv.orElse(st.mv)))
     // DURABILITY: a file-backed table's commit appends to its on-disk
     // transaction log; a commit that trimmed retention checkpoints the
     // full state instead (and GCs the entries the checkpoint subsumes).
@@ -669,12 +720,7 @@ object GraftTableStore {
           // in-memory state would be a PHANTOM commit that forks the
           // table on the next write. Evict to the disk truth: the next
           // catalog touch replays the log, foreign entries included.
-          // (keepEpochs: this is a re-replay eviction, not end-of-life
-          // — wiping the epoch ledger would invite WAL double-commits)
-          evictInMemory(name, keepEpochs = true)
-          GraftParquetStore.evictMeta(name)
-          GraftMergeCatalog.evictDef(name)
-          GraftLog.forget(name)
+          evict(name, keepEpochs = true)
           throw t
       }
     }
@@ -687,29 +733,29 @@ object GraftTableStore {
       keep: Int): History =
     if (appended.commits.size <= keep) appended
     else {
+      val s = current(name)
       val dropN = appended.commits.size - keep
       val headRel = dropN // relative index of the new head, pre-trim
       val headData: GraftCommitData = appended.commits(headRel) match {
         case f: GraftFullData => f
         case p: GraftParquetData => p
         case _ => // delta / eq-delete head: checkpoint-before-expire
-          val rows = resolveRel(name, appended, headRel)
+          val rows = resolveRel(name, s, appended, headRel)
           // a parquet-backed delta head checkpoints AS FILES, so the
           // table never silently degrades to in-memory snapshots
-          GraftParquetStore.meta(name) match {
+          s.meta match {
             case Some(m) =>
               val v = appended.firstRetained + headRel
               val pq = GraftParquetStore.persistFull(
                 name, m, v, rows, None)
-              resolvedCache.put((name, v), rows)
+              s.resolved.put(v, rows)
               pq
             case None => GraftFullData(rows)
           }
       }
       val newFirst = appended.firstRetained + dropN
-      resolvedCache.keysIterator
-        .filter(k => k._1 == name && k._2 < newFirst)
-        .foreach(resolvedCache.remove)
+      s.resolved.keysIterator.filter(_ < newFirst)
+        .foreach(s.resolved.remove)
       // refs survive the trim untouched: one pointing below the new
       // window resolves loudly as expired (same contract as an integer
       // VERSION AS OF), it is not silently moved
@@ -743,7 +789,7 @@ object GraftTableStore {
     * immutable. */
   private[graft] def createRef(name: String, ref: String,
       isTag: Boolean, at: Option[Int] = None): Unit = withTableLock(name) {
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val h = historyOf(name)
     require(h.commits.nonEmpty, s"$name has no commits to ref")
     require(ref != "main", "'main' is the implicit published branch")
     require(!h.branches.contains(ref) && !h.tags.contains(ref),
@@ -754,14 +800,14 @@ object GraftTableStore {
     val nh =
       if (isTag) h.copy(tags = h.tags + (ref -> v))
       else h.copy(branches = h.branches + (ref -> v))
-    versions.put(name, nh)
+    setHistory(name, nh)
     if (GraftParquetStore.isBacked(name))
       GraftLog.logRef(name, nh.branches, nh.tags)
   }
 
   /** resolve a named ref to its absolute version. */
   private[sources] def refVersion(name: String, ref: String): Option[Int] = {
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val h = historyOf(name)
     h.branches.get(ref).orElse(h.tags.get(ref))
   }
 
@@ -772,7 +818,7 @@ object GraftTableStore {
     * roll the table back). */
   private[graft] def fastForward(name: String, ref: String): Int =
     withTableLock(name) {
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       val to = h.branches.get(ref).orElse(h.tags.get(ref)).getOrElse(
         throw new IllegalArgumentException(
           s"no such ref '$ref' of $name"))
@@ -780,7 +826,7 @@ object GraftTableStore {
         s"cannot fast-forward main of $name from v${h.mainHead} back " +
           s"to v$to ('$ref') — publish is forward-only")
       val nh = h.copy(branches = h.branches + ("main" -> to))
-      versions.put(name, nh)
+      setHistory(name, nh)
       if (GraftParquetStore.isBacked(name))
         GraftLog.logRef(name, nh.branches, nh.tags)
       to
@@ -795,7 +841,7 @@ object GraftTableStore {
       branch: Option[String] = None)(
       f: Array[InternalRow] => Array[InternalRow]): Unit =
     withTableLock(name) {
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       // base = the chain head; appendLocked enforces that the write
       // target (main or the branch) IS the head, so this is always the
       // right parent snapshot
@@ -882,9 +928,8 @@ object GraftTableStore {
     while (!done) {
       done = withTableLock(name) {
         val baseMeta = GraftParquetStore.meta(name)
-        val baseHead = versions.get(name).map(_.commitCount - 1)
-          .getOrElse(-1)
-        val h = versions.getOrElse(name, History(0, Vector.empty))
+        val h = historyOf(name)
+        val baseHead = h.commitCount - 1
         val prevCount = h.commits.lastOption.map(_.count).getOrElse(0)
         try {
           appendLocked(name, "delta",
@@ -932,7 +977,7 @@ object GraftTableStore {
     require(keys.nonEmpty, "equality delete with an empty key set")
     require(keys.forall(_ != null),
       "equality-delete keys must be non-null (NULL never equals)")
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val h = historyOf(name)
     val newV = h.commitCount
     val filesTotal = h.commits.lastOption match {
       case Some(p: GraftParquetData) => p.files.length
@@ -948,7 +993,7 @@ object GraftTableStore {
   /** does the table's CURRENT read suffix (past the last full commit)
     * contain an equality-delete entry? — the purge_deletes trigger. */
   private[graft] def hasEqDeleteSuffix(name: String): Boolean = {
-    val h = versions.getOrElse(name, return false)
+    val h = historyOf(name)
     val lastFull = h.commits.lastIndexWhere(c =>
       !c.isInstanceOf[GraftDeltaData] &&
         !c.isInstanceOf[GraftEqDeleteData])
@@ -1085,10 +1130,8 @@ object GraftTableStore {
         // head manifest reference; the signature map is built lazily
         // only when a conflict actually needs classification
         val baseMeta = GraftParquetStore.meta(name)
-        val baseHead = versions.get(name).map(_.commitCount)
-          .getOrElse(0)
-        val baseFiles = versions.get(name)
-          .flatMap(_.commits.lastOption) match {
+        val baseHead = commitCount(name)
+        val baseFiles = historyOf(name).commits.lastOption match {
           case Some(p: GraftParquetData) => Some(Some(p))
           case None => Some(None) // empty table: a valid append base
           case Some(_) => None // delta head: never rebased
@@ -1097,7 +1140,7 @@ object GraftTableStore {
           val m = GraftParquetStore.meta(name).getOrElse(
             throw new IllegalStateException(
               s"$name is not parquet-backed — no staged commit possible"))
-          val h = versions.getOrElse(name, History(0, Vector.empty))
+          val h = historyOf(name)
           val newV = h.commitCount
           h.commits.lastOption match {
             case None =>
@@ -1182,7 +1225,7 @@ object GraftTableStore {
     // snapshot under the lock; replace/truncate need no base at all
     val snap = withTableLock(name) {
       val m = GraftParquetStore.meta(name).getOrElse(return false)
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       h.commits.lastOption match {
         case None => Some((h.commitCount - 1, GraftParquetData(Vector.empty, 0), m))
         case Some(p: GraftParquetData) => Some((h.commitCount - 1, p, m))
@@ -1205,7 +1248,7 @@ object GraftTableStore {
     }
     if (dynamic) {
       withTableLock(name) {
-        val h = versions.getOrElse(name, History(0, Vector.empty))
+        val h = historyOf(name)
         if (h.commitCount - 1 != expectedHead) return false // re-read
         // legacy-spec base files key in a different domain than the
         // incoming batch's keys — only the row path compares those
@@ -1237,7 +1280,7 @@ object GraftTableStore {
       else GraftParquetStore.overwriteRewriteTaskSide(spark, m,
         physSchema, candidates, filters)
     withTableLock(name) {
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       if (h.commitCount - 1 != expectedHead) {
         rewritten.foreach(s => new java.io.File(s.path).delete())
         throw new IllegalStateException(
@@ -1448,7 +1491,7 @@ object GraftTableStore {
   private[graft] def snapshotHeads(tables: Seq[String]): Map[String, Int] =
     withGlobalLock {
       tables.map { t =>
-        val h = versions.getOrElse(t, History(0, Vector.empty))
+        val h = historyOf(t)
         require(h.commits.nonEmpty,
           s"readTransaction: $t has no commits to pin")
         t -> h.mainHead
@@ -1473,7 +1516,7 @@ object GraftTableStore {
             s"transaction read v${expectedHeads.getOrElse(name, -2)} " +
             "— retry the transaction")
       }
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       if (!h.commits.lastOption.forall(_.isInstanceOf[GraftParquetData])) {
         cleanup()
         throw new IllegalStateException(
@@ -1502,7 +1545,7 @@ object GraftTableStore {
       parts.map { part =>
         val name = part.name
         val m = GraftParquetStore.meta(name).get
-        val h = versions.getOrElse(name, History(0, Vector.empty))
+        val h = historyOf(name)
         val (op, data) = part match {
           case TxnStagedAppend(_, files, rows) =>
             val adopted =
@@ -1529,14 +1572,9 @@ object GraftTableStore {
       case t: Throwable =>
         cleanup() // not-yet-adopted staged files (no-op for adopted)
         parts.foreach { s =>
-          // the full restart-eviction quartet — anything less leaves a
-          // registry entry that makes the table read as EMPTY instead
-          // of lazily replaying the disk truth (keepEpochs: re-replay
-          // eviction, the ledger is not log-derived state)
-          evictInMemory(s.name, keepEpochs = true)
-          GraftParquetStore.evictMeta(s.name)
-          GraftMergeCatalog.evictDef(s.name)
-          GraftLog.forget(s.name)
+          // (keepEpochs: re-replay eviction, the ledger is not
+          // log-derived state)
+          evict(s.name, keepEpochs = true)
         }
         throw t
     }
@@ -1552,13 +1590,13 @@ object GraftTableStore {
     // next attach — or the next process — rolls the missing entries
     // forward; the marker is only retired after every entry landed.
     planned.foreach { case (name, op, data, now, _) =>
-      val firstBefore = versions.get(name).map(_.firstRetained)
+      val firstBefore = historyOf(name).firstRetained
       appendLocked(name, op, data, logIt = false,
         atTime = Some(now))
       // a txn commit that crossed the retention cap checkpoints like
       // any other trimming commit (the entry alone would replay an
       // untrimmed window; the checkpoint subsumes the pending entry)
-      if (versions.get(name).map(_.firstRetained) != firstBefore)
+      if (historyOf(name).firstRetained != firstBefore)
         GraftLog.checkpoint(name)
     }
     var wrote = 0
@@ -1606,7 +1644,7 @@ object GraftTableStore {
       files: Vector[GraftFileInfo], count: Int, op: String,
       branch: Option[String], expectedHead: Int): Unit =
     withTableLock(name) {
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       val head = h.commitCount - 1
       if (head != expectedHead)
         throw new IllegalStateException(
@@ -1619,15 +1657,16 @@ object GraftTableStore {
   /** is the published (main) pointer at the chain head? False while a
     * WAP branch holds staged commits above main — states where a
     * manifest computed from main must not commit. */
-  private[sources] def mainAtChainHead(name: String): Boolean =
-    versions.get(name).forall(h => h.mainHead == h.commitCount - 1)
+  private[sources] def mainAtChainHead(name: String): Boolean = {
+    val h = historyOf(name)
+    h.mainHead == h.commitCount - 1
+  }
 
   /** every retained commit is a plain parquet manifest — the
     * precondition for type widening (MoR delta op rows were decoded
     * under the narrow type and merge at read). */
   private[sources] def retainedAllParquet(name: String): Boolean =
-    versions.get(name)
-      .forall(_.commits.forall(_.isInstanceOf[GraftParquetData]))
+    historyOf(name).commits.forall(_.isInstanceOf[GraftParquetData])
 
   /** apply a TYPE WIDENING to the retained in-memory state: lift
     * every retained manifest's zone-map stats for `ord` into the
@@ -1646,8 +1685,8 @@ object GraftTableStore {
           f: java.lang.Float) => f.doubleValue()
         case _ => v
       }
-      versions.get(name).foreach { h =>
-        val commits2 = h.commits.map {
+      updateIfPresent(name) { st =>
+        val commits2 = st.history.commits.map {
           case p: GraftParquetData =>
             GraftParquetData(p.files.map { f =>
               f.stats.get(ord) match {
@@ -1658,12 +1697,9 @@ object GraftTableStore {
             }, p.count)
           case other => other
         }
-        versions.put(name, h.copy(commits = commits2))
-        ()
+        st.copy(history = st.history.copy(commits = commits2),
+          resolved = new TrieMap(), changeData = new TrieMap())
       }
-      resolvedCache.keysIterator.filter(_._1 == name)
-        .foreach(resolvedCache.remove)
-      GraftChangeFeed.evictStaged(name)
     }
 
   /** test seam: runs between a maintenance job's task-side staging
@@ -1727,7 +1763,7 @@ object GraftTableStore {
     var done = false
     while (!done) {
       done = withTableLock(name) {
-        val h = versions.getOrElse(name, refuse(-1))
+        val h = historyOf(name)
         val m = GraftParquetStore.meta(name).getOrElse(refuse(-1))
         val head: GraftParquetData = h.commits.lastOption match {
           case Some(pq: GraftParquetData)
@@ -1779,7 +1815,7 @@ object GraftTableStore {
     // snapshot the head manifest OUTSIDE the lock — the rewrite job
     // must not block concurrent commits
     val (expectedHead, p, m) = withTableLock(name) {
-      val h = versions.getOrElse(name, return 0)
+      val h = historyOf(name)
       h.commits.lastOption match {
         case Some(pq: GraftParquetData) if pq.files.exists(_.dv.isDefined) =>
           val meta = GraftParquetStore.meta(name).getOrElse(return 0)
@@ -1824,7 +1860,7 @@ object GraftTableStore {
     // ([[GraftParquetStore.binPackTaskSide]]); the driver never holds
     // a row.
     val (expectedHead, p, m) = withTableLock(name) {
-      val h = versions.getOrElse(name, return 0)
+      val h = historyOf(name)
       h.commits.lastOption match {
         case Some(pq: GraftParquetData) =>
           val meta = GraftParquetStore.meta(name).getOrElse(return 0)
@@ -1880,7 +1916,7 @@ object GraftTableStore {
     // already and cost nothing at read) — zero suffix = nothing to
     // compact, and a just-compacted table reports exactly that
     val (expectedHead, deltas) = withTableLock(name) {
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       val lastFull = h.commits.lastIndexWhere(c =>
         !c.isInstanceOf[GraftDeltaData] &&
           !c.isInstanceOf[GraftEqDeleteData])
@@ -1904,7 +1940,7 @@ object GraftTableStore {
       case _ =>
     }
     withTableLock(name) {
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       if (h.commitCount - 1 != expectedHead)
         throw new IllegalStateException(
           s"$name: concurrent commit detected during OPTIMIZE — retry")
@@ -1955,7 +1991,7 @@ object GraftTableStore {
           }
       }
     withTableLock(name) {
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       if (h.commitCount - 1 != expectedHead) {
         (staged ++ extraFiles).foreach(f =>
           new java.io.File(f.path).delete())
@@ -1981,7 +2017,7 @@ object GraftTableStore {
     * new version number. */
   private[graft] def restore(name: String, v: Int): Int =
     withTableLock(name) {
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       require(v >= 0 && v < h.commitCount,
         s"version $v of $name does not exist (${h.commitCount} commits)")
       require(v >= h.firstRetained,
@@ -2017,9 +2053,9 @@ object GraftTableStore {
     * version the clone captured. */
   private[graft] def cloneTable(src: String, dst: String): Int =
     withGlobalLock {
-      val h = versions.getOrElse(src, History(0, Vector.empty))
+      val h = historyOf(src)
       require(h.commits.nonEmpty, s"cannot clone $src: it has no commits")
-      require(!versions.contains(dst),
+      require(historyOf(dst).commits.isEmpty,
         s"clone target $dst already has commits")
       val headRel = h.mainHead - h.firstRetained
       val data: GraftCommitData = h.commits(headRel) match {
@@ -2049,8 +2085,8 @@ object GraftTableStore {
     // merge needs the resolved snapshot; OPTIMIZE/compact first).
     spark match {
       case Some(s) if withTableLock(name) {
-        versions.get(name).exists(_.commits.lastOption
-          .exists(_.isInstanceOf[GraftParquetData]))
+        historyOf(name).commits.lastOption
+          .exists(_.isInstanceOf[GraftParquetData])
       } => return zorderTaskSide(name, schema, ordA, ordB, s)
       case _ =>
     }
@@ -2079,8 +2115,7 @@ object GraftTableStore {
       }
     }
     val (expectedHead, p, m) = withTableLock(name) {
-      val h = versions.getOrElse(name,
-        throw new IllegalStateException(s"$name has no snapshot"))
+      val h = historyOf(name)
       h.commits.lastOption match {
         case Some(pq: GraftParquetData) =>
           (h.commitCount - 1, pq, GraftParquetStore.meta(name).get)
@@ -2196,7 +2231,7 @@ object GraftTableStore {
       case other => throw new IllegalArgumentException(
         s"ZORDER column must be integral, got $other")
     }
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val h = historyOf(name)
     require(h.commits.nonEmpty, s"$name has no snapshot to rewrite")
     val rows = resolveRel(name, h, h.commits.size - 1)
     if (rows.isEmpty) return h.commitCount - 1 // nothing to lay out
@@ -2246,11 +2281,11 @@ object GraftTableStore {
   private[graft] def expireSnapshots(name: String, keep: Int): Int =
     withTableLock(name) {
       require(keep >= 1, s"expireSnapshots: keep must be >= 1, got $keep")
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       val before = h.commits.size
       if (before <= keep) 0
       else {
-        versions.put(name, trimLocked(name, h, keep))
+        setHistory(name, trimLocked(name, h, keep))
         // an explicit expiry rewrites the retained window — the log
         // checkpoints the post-trim state (and GCs subsumed entries)
         if (GraftParquetStore.isBacked(name)) GraftLog.checkpoint(name)
@@ -2281,7 +2316,7 @@ object GraftTableStore {
       // Same cross-process probe as the commit path: refuse loudly.
       // STRICT: deletion decisions never ride the mtime cache.
       GraftLog.verifyTail(name, strict = true)
-      val h = versions.getOrElse(name, History(0, Vector.empty))
+      val h = historyOf(name)
       val referenced = h.commits.iterator.flatMap {
         case p: GraftParquetData => p.files.iterator.map(_.path)
         case _ => Iterator.empty
@@ -2327,7 +2362,7 @@ object GraftTableStore {
     * transaction log. O(retained versions), no row data copied (delta
     * commits carry their count; nothing resolves). */
   private[graft] def history(name: String): Vector[(Int, String, Int, Long)] = {
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val h = historyOf(name)
     h.commits.indices.toVector.map { i =>
       (h.firstRetained + i,
         if (i < h.ops.length) h.ops(i) else "append",
@@ -2340,7 +2375,7 @@ object GraftTableStore {
     * branch and tag with its pinned absolute version, "main" included
     * (explicit or implicit head). O(refs) metadata, nothing resolved. */
   private[graft] def refs(name: String): Vector[(String, String, Int)] = {
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val h = historyOf(name)
     val branches =
       if (h.branches.contains("main") || h.commits.isEmpty) h.branches
       else h.branches + ("main" -> h.mainHead)
@@ -2356,7 +2391,7 @@ object GraftTableStore {
     * integer version. */
   private[sources] def resolveTimestamp(name: String,
       tsMicros: Long): Int = {
-    val h = versions.getOrElse(name, History(0, Vector.empty))
+    val h = historyOf(name)
     if (h.commits.isEmpty)
       throw new IllegalArgumentException(
         s"$name has no commits to time-travel to")
@@ -2385,7 +2420,7 @@ object GraftTableStore {
       idType: org.apache.spark.sql.types.DataType)
   private[sources] def fileView(name: String,
       pinned: Option[Int]): Option[GraftFileView] = {
-    val h = versions.getOrElse(name, return None)
+    val h = historyOf(name)
     if (h.commits.isEmpty) return None
     val v = pinned.getOrElse(h.mainHead)
     if (v < h.firstRetained || v >= h.commitCount) return None
@@ -2448,34 +2483,30 @@ object GraftTableStore {
 }
 
 object GraftMergeCatalog {
-  /** JVM-shared table registry keyed by (catalog name, identifier):
-    * Spark instantiates one catalog object PER SESSION (including the
-    * per-micro-batch session clones foreachBatch runs statements in),
-    * so an instance-local map would make tables invisible across
-    * sessions — a streaming foreachBatch MERGE into a table created on
-    * the outer session is the canonical case (measured; StreamingSpec
-    * pins it). */
-  private val registry =
-    new TrieMap[(String, Identifier), GraftMergeTable]()
+  /** the store name of a catalog table: the FULL identifier, namespace
+    * included, so graft.ns1.t and graft.ns2.t never share a store. Its
+    * definition lives in the table's state record
+    * ([[GraftTableStore.TableDef]]), JVM-shared: Spark instantiates one
+    * catalog object PER SESSION (including the per-micro-batch session
+    * clones foreachBatch runs statements in), so an instance-local map
+    * would make tables invisible across sessions (StreamingSpec pins
+    * the foreachBatch MERGE case). */
+  private[sources] def storeName(catalog: String, ident: Identifier)
+      : String =
+    (catalog +: (ident.namespace() :+ ident.name())).mkString(".")
 
   /** SQL VIEW registry (ViewCatalog): the stored definition is the raw
     * SQL text plus the session context it was written in (current
     * catalog/namespace) and the CREATE-time schema — exactly what
     * Spark's view resolution re-analyzes the query under, so a view
     * over `graft.t` keeps resolving after the session's current
-    * catalog moves elsewhere. JVM-shared for the same reason as the
-    * table registry. */
+    * catalog moves elsewhere. JVM-shared for the same reason as table
+    * definitions; not in the tables' state records, because a view has
+    * no store, log or history — only its warehouse sidecar. */
   private val viewRegistry =
     new TrieMap[(String, Identifier), (ViewInfo, Map[String, String])]()
 
-  /** register `dst` as a SHALLOW CLONE's catalog definition: the
-    * source's physical schema (column-mapping tombstones included —
-    * the clone reads the source's files, so it must share their slot
-    * layout), row-level mode and partition spec, under a fresh
-    * identifier in the SAME catalog. Store-side content is cloned
-    * separately ([[GraftTableStore.cloneTable]]); [[GraftApi]] wires
-    * the two. */
-  /** PARTITION SPEC EVOLUTION, registry side: swap the table's
+  /** PARTITION SPEC EVOLUTION, catalog side: swap the table's
     * current spec (validated against its visible schema). The write
     * path clusters and keys by the NEW spec from the next commit on;
     * the parquet store records the spec history so files written
@@ -2486,9 +2517,10 @@ object GraftMergeCatalog {
   private[graft] def evolvePartitioning(table: String,
       fields: Array[GraftPartField]): Unit = {
     import org.apache.spark.sql.types._
-    val (k, t) = registry.find(_._2.name() == table).getOrElse(
+    val d = GraftTableStore.definitionOf(table).getOrElse(
       throw new IllegalArgumentException(
         s"no such governed table: $table"))
+    val t = d.table
     val sch = GraftColumnMap.visible(t.physicalSchema)
     fields.foreach { p =>
       require(sch.fieldNames.contains(p.col),
@@ -2508,8 +2540,9 @@ object GraftMergeCatalog {
       require(ok, s"partition column '${p.col}' has unsupported " +
         s"type ${dt.sql} for this transform")
     }
-    registry.put(k, new GraftMergeTable(table, t.physicalSchema,
-      None, t.morRowId, fields, t.tableConstraints))
+    GraftTableStore.define(table, d.copy(table = new GraftMergeTable(
+      table, t.physicalSchema, None, t.morRowId, fields,
+      t.tableConstraints)))
     GraftParquetStore.evolveSpec(table, fields)
     if (GraftParquetStore.isBacked(table)) GraftLog.logMeta(table)
   }
@@ -2518,25 +2551,9 @@ object GraftMergeCatalog {
     * and an optimizer trusting RELY read. */
   private[graft] def constraintsOf(table: String): Array[
       org.apache.spark.sql.connector.catalog.constraints.Constraint] =
-    registry.find(_._2.name() == table).map(_._2.tableConstraints)
+    GraftTableStore.definitionOf(table).map(_.table.tableConstraints)
       .getOrElse(throw new IllegalArgumentException(
         s"no such governed table: $table"))
-
-  /** the catalog definition of a governed table BY STORE NAME — what
-    * the transaction-log writer snapshots into checkpoints/meta
-    * entries: (catalog name, identifier, definition). */
-  private[sources] def defSnapshot(storeName: String)
-      : Option[(String, Identifier, GraftMergeTable)] =
-    registry.find(_._2.name() == storeName).map {
-      case ((c, i), t) => (c, i, t)
-    }
-
-  /** evict a table's catalog definition (restart simulation). */
-  private[graft] def evictDef(storeName: String): Unit = {
-    registry.find(_._2.name() == storeName)
-      .foreach { case (k, _) => registry.remove(k) }
-    ()
-  }
 
   /** evict every in-memory view definition (restart simulation); the
     * next view touch reloads the warehouse sidecars. */
@@ -2557,28 +2574,41 @@ object GraftMergeCatalog {
       }
     }
 
+  /** register `dst` as a SHALLOW CLONE's catalog definition: the
+    * source's physical schema (column-mapping tombstones included —
+    * the clone reads the source's files, so it must share their slot
+    * layout), row-level mode and partition spec, under a fresh
+    * identifier in the SAME catalog. Store-side content is cloned
+    * separately ([[GraftTableStore.cloneTable]]); [[GraftApi]] wires
+    * the two. */
   private[graft] def cloneDef(src: String, dst: String): Unit = {
-    val (srcKey, srcT) = registry.find(_._2.name() == src).getOrElse(
+    val srcDef = GraftTableStore.definitionOf(src).getOrElse(
       throw new IllegalArgumentException(
         s"no such governed table to clone: $src"))
+    val cat = srcDef.catalog
     val parts = dst.split("\\.")
-    require(parts.length >= 2 && parts.head == srcKey._1,
-      s"clone target must be a ${srcKey._1}-catalog name " +
-        s"(${srcKey._1}.<table>), got: $dst")
-    val dstKey = (srcKey._1,
-      Identifier.of(parts.drop(1).dropRight(1), parts.last))
-    require(!registry.contains(dstKey), s"table $dst already exists")
-    registry.put(dstKey, new GraftMergeTable(dst, srcT.physicalSchema,
-      None, srcT.morRowId, srcT.partFields, srcT.tableConstraints))
-    ()
+    require(parts.length >= 2 && parts.head == cat,
+      s"clone target must be a $cat-catalog name ($cat.<table>), " +
+        s"got: $dst")
+    require(GraftTableStore.definitionOf(dst).isEmpty,
+      s"table $dst already exists")
+    val srcT = srcDef.table
+    GraftTableStore.define(dst, GraftTableStore.TableDef(cat,
+      Identifier.of(parts.drop(1).dropRight(1), parts.last),
+      new GraftMergeTable(dst, srcT.physicalSchema, None, srcT.morRowId,
+        srcT.partFields, srcT.tableConstraints)))
   }
 }
 
 class GraftMergeCatalog extends TableCatalog with FunctionCatalog
     with ViewCatalog with ProcedureCatalog {
-  import GraftMergeCatalog.{registry, viewRegistry}
+  import GraftMergeCatalog.viewRegistry
   private var catalogName: String = _
   private def key(ident: Identifier) = (catalogName, ident)
+  private def storeName(ident: Identifier): String =
+    GraftMergeCatalog.storeName(catalogName, ident)
+  private def defined(ident: Identifier): Option[GraftMergeTable] =
+    GraftTableStore.definitionOf(storeName(ident)).map(_.table)
 
   override def initialize(name: String,
       options: CaseInsensitiveStringMap): Unit = { catalogName = name }
@@ -2611,7 +2641,8 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
 
   override def listTables(namespace: Array[String]): Array[Identifier] =
     if (namespace.isEmpty)
-      registry.keys.filter(_._1 == catalogName).map(_._2).toArray
+      GraftTableStore.definitions.filter(_.catalog == catalogName)
+        .map(_.ident).toArray
     else throw new NoSuchNamespaceException(namespace)
 
   // the catalog PUBLISHES its partition-transform functions (here:
@@ -2661,16 +2692,12 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
   //                 with partition key, rows, bytes, width, stats.
   //   .refs       — named refs (Iceberg's `.refs`): every branch and
   //                 tag with its pinned version, main included.
-  /** registry lookup with LAZY LOG ATTACH on miss: a table this
+  /** definition lookup with LAZY LOG ATTACH on miss: a table this
     * process never registered but whose transaction log exists under
     * the warehouse (created by a previous process — the durability
     * contract) is rebuilt from the log on first touch and registered. */
   private def loadOrAttach(ident: Identifier): Option[GraftMergeTable] =
-    registry.get(key(ident)).orElse {
-      GraftLog.attach(catalogName, ident).map { t =>
-        registry.putIfAbsent(key(ident), t).getOrElse(t)
-      }
-    }
+    defined(ident).orElse(GraftLog.attach(catalogName, ident))
 
   override def loadTable(ident: Identifier): Table =
     loadOrAttach(ident) match {
@@ -2775,7 +2802,7 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
       consArr: Array[
         org.apache.spark.sql.connector.catalog.constraints.Constraint])
       : Table = {
-    if (registry.contains(key(ident)))
+    if (defined(ident).isDefined)
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(
           (ident.namespace() :+ ident.name()).toSeq)
@@ -2785,10 +2812,7 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
       .foreach(c => throw new IllegalArgumentException(
         s"column name '$c' uses the reserved " +
           s"'${GraftColumnMap.DroppedPrefix}' prefix"))
-    // store key carries the FULL identifier (namespace included) so
-    // graft.ns1.t and graft.ns2.t can never share a row store
-    val storeName =
-      (catalogName +: (ident.namespace() :+ ident.name())).mkString(".")
+    val storeName = this.storeName(ident)
     // TBLPROPERTIES ('graft.row-level'='merge-on-read',
     // 'graft.row-id'='<col>') opts the table into the delta-based
     // (WriteDelta) row-level plan shape; default is copy-on-write
@@ -2956,7 +2980,8 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
         s"'${c.name()}' NOT ENFORCED (informational): ${c.toDDL}"))
     val t = new GraftMergeTable(storeName, tblSchema, None, morRowId,
       partFields, consArr)
-    registry.put(key(ident), t)
+    GraftTableStore.define(storeName,
+      GraftTableStore.TableDef(catalogName, ident, t))
     // a file-backed table is durable from the instant it exists: the
     // CREATE writes the log's first checkpoint, so even a
     // never-written table re-opens after a process restart
@@ -2979,8 +3004,7 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
   // name later allocates a fresh slot (old values stay dead).
   override def alterTable(ident: Identifier,
       changes: TableChange*): Table = {
-    val t = registry.getOrElse(key(ident),
-      throw new NoSuchTableException(ident))
+    val t = defined(ident).getOrElse(throw new NoSuchTableException(ident))
     // CHECK constraints (ADD/DROP CONSTRAINT): a parallel fold —
     // Spark has already VALIDATED existing rows by the time an
     // enforced AddConstraint reaches the catalog, and enforces the
@@ -3198,7 +3222,8 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
           s"unsupported type ${a.dataType().sql}")
     }
     GraftParquetStore.updateSchema(t.name(), newSchema)
-    registry.put(key(ident), nt)
+    GraftTableStore.define(t.name(),
+      GraftTableStore.TableDef(catalogName, ident, nt))
     // a WIDENING normalizes retained zone-map stats into the widened
     // domain and drops row caches decoded under the narrow type
     val widenedOrds = schemaChanges.collect {
@@ -3221,7 +3246,7 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
   }
 
   override def dropTable(ident: Identifier): Boolean =
-    registry.remove(key(ident)) match {
+    defined(ident) match {
       case Some(t) =>
         GraftTableStore.reset(t.name())
         true
@@ -3302,7 +3327,7 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
     val ident = info.ident()
     // one namespace of names: a view shadowing a governed table would
     // make `SELECT FROM graft.x` ambiguous — refuse loudly
-    require(!registry.contains(key(ident)),
+    require(defined(ident).isEmpty,
       s"cannot CREATE VIEW $ident: a table with that name exists " +
         s"in $catalogName")
     val stored = (info,
@@ -3341,7 +3366,7 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
     GraftMergeCatalog.ensureViewsLoaded(catalogName)
     val v = viewRegistry.getOrElse(key(from),
       throw new NoSuchViewException(from))
-    require(!registry.contains(key(to)),
+    require(defined(to).isEmpty,
       s"cannot rename view to $to: a table with that name exists")
     if (viewRegistry.contains(key(to)))
       throw new ViewAlreadyExistsException(to)
@@ -4020,8 +4045,7 @@ class GraftMergeTable(tableName: String, tableSchema: StructType,
       s"$tableName: deleteWhere called outside the canDeleteWhere " +
         "contract (state changed between planning and execution)")
     val spark = org.apache.spark.sql.SparkSession.active
-    val h0 = GraftTableStore.versions.get(tableName)
-      .map(_.commitCount - 1).getOrElse(-1)
+    val h0 = GraftTableStore.commitCount(tableName) - 1
     val fv = GraftTableStore.fileView(tableName, None).get
     // PARTITION-LEVEL fast path (Iceberg's metadata partition delete):
     // when every filter references only IDENTITY partition columns of
@@ -4484,11 +4508,8 @@ object GraftFilterEval {
   }
 }
 
-/** Per-table scan telemetry for the spec suite: how many partitions
-  * the table had, how many survived STATIC partition pruning (pushed
-  * partition-column predicates), and how many were emptied by a
-  * RUNTIME filter (join-key pruning at execution). Overwritten per
-  * planInputPartitions call — a test reads it right after an action. */
+/** Per-table telemetry of the last deletion-vector DELETE, for the spec
+  * suite. */
 object GraftDvMetrics {
   /** readout of the last deletion-vector DELETE against a table: of
     * the manifest's files, how many the DV job OPENED (zone-map
@@ -4501,6 +4522,11 @@ object GraftDvMetrics {
   private[graft] val last = new TrieMap[String, Report]()
 }
 
+/** Per-table scan telemetry for the spec suite: how many partitions
+  * the table had, how many survived STATIC partition pruning (pushed
+  * partition-column predicates), and how many were emptied by a
+  * RUNTIME filter (join-key pruning at execution). Overwritten per
+  * planInputPartitions call — a test reads it right after an action. */
 object GraftScanMetrics {
   /** `files*`/`bytes*` are MEASURED I/O consequences on a
     * parquet-backed table (zero on the in-memory store): of the
@@ -5994,20 +6020,14 @@ object GraftChangeFeed {
     * VACUUM). The driver sees only file metadata — replacing the
     * snapshotDiff fallback that materialized BOTH adjacent versions
     * driver-side, O(table) per REPLACE WHERE / INSERT OVERWRITE /
-    * truncate / restore commit. */
-  private val changeDataCache =
-    new TrieMap[(String, Int), Vector[GraftFileInfo]]()
-  private val changeDataLocks = new TrieMap[(String, Int), Object]()
-  private[sources] def evictStaged(table: String): Unit = {
-    changeDataCache.keysIterator.filter(_._1 == table)
-      .foreach(changeDataCache.remove)
-    changeDataLocks.keysIterator.filter(_._1 == table)
-      .foreach(changeDataLocks.remove)
-  }
-  /** test probe: was commit `v`'s feed served from staged change-data
-    * files (the distributed path), not a driver snapshot diff? */
+    * truncate / restore commit. The memo lives in the table's state
+    * record ([[GraftTableStore.TableState]]).
+    *
+    * This probe (for tests): was commit `v`'s feed served from staged
+    * change-data files (the distributed path), not a driver snapshot
+    * diff? */
   private[graft] def isChangeDataStaged(table: String, v: Int): Boolean =
-    changeDataCache.contains((table, v))
+    GraftTableStore.stateOf(table).exists(_.changeData.contains(v))
 
   /** plan a CoW rewrite commit's feed from its MANIFEST DIFF: DV
     * swaps become position-diff partitions (the changed bits name the
@@ -6019,7 +6039,8 @@ object GraftChangeFeed {
   private def cowDiffParts(table: String, schema: StructType,
       idOrd: Int, v: Int): Option[Array[InputPartition]] = {
     if (v == 0) return None
-    val m = GraftParquetStore.meta(table).getOrElse(return None)
+    val st = GraftTableStore.stateOf(table).getOrElse(return None)
+    val m = st.meta.getOrElse(return None)
     val cur = GraftTableStore.commitInfo(table, v) match {
       case Some((_, p: GraftTableStore.GraftParquetData)) => p
       case _ => return None
@@ -6055,10 +6076,9 @@ object GraftChangeFeed {
       // memoized staging under a PER-(table,version) latch — the
       // staging runs a whole Spark job, and one commit's first read
       // must not serialize another table's feed behind it
-      val key = (table, v)
-      val staged = changeDataCache.get(key).getOrElse(
-        changeDataLocks.getOrElseUpdate(key, new Object).synchronized {
-          changeDataCache.getOrElseUpdate(key,
+      val staged = st.changeData.get(v).getOrElse(
+        st.changeDataLocks.getOrElseUpdate(v, new Object).synchronized {
+          st.changeData.getOrElseUpdate(v,
             stageCowDiff(table, m, removed, added, schema, idOrd, v))
         })
       staged.foreach { f =>

@@ -1,7 +1,5 @@
 package graft.sources
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
@@ -178,8 +176,6 @@ object GraftParquetStore {
     def curSpecId: Int = specs.length - 1
   }
 
-  private val metas = new TrieMap[String, Meta]()
-
   /** supported column types — the flat atomic set the file codec
     * round-trips exactly. Checked loudly at CREATE. */
   private[sources] def supported(dt: DataType): Boolean = dt match {
@@ -225,9 +221,10 @@ object GraftParquetStore {
       }
       ord
     }
-    val dir = freshTableDir(name)
-    metas.put(name, Meta(dir, schema, partFields, bloomOrds,
-      dvMode = dvMode, sortOrds = sortOrds))
+    val m = Meta(freshTableDir(name), schema, partFields, bloomOrds,
+      dvMode = dvMode, sortOrds = sortOrds)
+    GraftTableStore.update(name)(_.copy(meta = Some(m)))
+    ()
   }
 
   /** the table's WAREHOUSE directory — the stable, name-derived
@@ -243,21 +240,13 @@ object GraftParquetStore {
     d.getAbsolutePath
   }
 
-  /** install a log-replayed registration ([[GraftLog.attach]]). */
-  private[sources] def restoreMeta(name: String, m: Meta): Unit = {
-    metas.put(name, m)
-    ()
-  }
-
-  /** evict the in-memory registration only — disk untouched (the
-    * restart simulation; [[GraftLog.simulateProcessRestart]]). */
-  private[graft] def evictMeta(name: String): Unit = {
-    metas.remove(name)
-    ()
-  }
-
-  def isBacked(name: String): Boolean = metas.contains(name)
-  def meta(name: String): Option[Meta] = metas.get(name)
+  /** the registration lives in the table's state record
+    * ([[GraftTableStore.TableState]]). */
+  def meta(name: String): Option[Meta] =
+    GraftTableStore.stateOf(name).flatMap(_.meta)
+  def isBacked(name: String): Boolean = meta(name).isDefined
+  private def updateMeta(name: String)(f: Meta => Meta): Unit =
+    GraftTableStore.updateIfPresent(name)(s => s.copy(meta = s.meta.map(f)))
 
   /** PARTITION SPEC EVOLUTION (Iceberg's headline ALTER): make
     * `newFields` the table's CURRENT spec. Metadata-only — zero files
@@ -265,57 +254,54 @@ object GraftParquetStore {
     * by it at scan; only FUTURE commits lay out under the new spec. */
   def evolveSpec(name: String,
       newFields: Array[GraftPartField]): Unit =
-    metas.get(name).foreach { m =>
-      metas.put(name, m.copy(partFields = newFields,
-        specHistory = m.specs :+ newFields))
-      ()
-    }
+    updateMeta(name)(m => m.copy(partFields = newFields,
+      specHistory = m.specs :+ newFields))
 
   /** register `dst` with `src`'s CURRENT registration but its OWN
     * directory — the shallow-clone shape: the clone's v0 manifest
     * references the source's files in place (zero bytes copied), and
     * only the clone's FUTURE commits write under its own dir. */
   def registerLike(src: String, dst: String): Unit =
-    metas.get(src).foreach { m =>
-      metas.put(dst, m.copy(dir = freshTableDir(dst)))
+    meta(src).foreach { m =>
+      val dir = freshTableDir(dst)
+      GraftTableStore.update(dst)(_.copy(meta = Some(m.copy(dir = dir))))
       ()
     }
 
   /** ALTER keeps the registration current (the physical schema grows
     * slots / tombstones them; files already written never change). */
   def updateSchema(name: String, schema: StructType): Unit =
-    metas.get(name).foreach { m =>
+    updateMeta(name) { m =>
       // a DROP COLUMN tombstones its slot — its bloom index dies with it
       val keep = m.bloomOrds.filter(o =>
         !schema(o).name.startsWith(GraftColumnMap.DroppedPrefix))
-      metas.put(name, m.copy(schema = schema, bloomOrds = keep))
+      m.copy(schema = schema, bloomOrds = keep)
     }
 
-  /** drop the table's directory with it (DROP TABLE / reset).
-    * `shared` = file paths some OTHER registered table's retained
-    * manifest still references (a shallow clone of this table): those
-    * files survive the drop — deleting them would corrupt the clone —
-    * and their version dirs stay as long as a shared file remains. */
-  def drop(name: String, shared: Set[String] = Set.empty): Unit =
-    metas.remove(name).foreach { m =>
-      if (shared.isEmpty) deleteRecursively(new java.io.File(m.dir))
-      else {
-        val root = new java.io.File(m.dir)
-        // the dropped table's transaction log must die even when
-        // shared data files survive — a later GC sweep scanning
-        // unloaded warehouse logs would otherwise resurrect its
-        // references (and a re-CREATE could attach dead history)
-        deleteRecursively(new java.io.File(root, "_graft_log"))
-        Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(_.isDirectory).foreach { vdir =>
-            Option(vdir.listFiles()).getOrElse(Array.empty).foreach { f =>
-              if (!shared.contains(f.getAbsolutePath)) { f.delete(); () }
-            }
-            if (Option(vdir.listFiles()).forall(_.isEmpty)) vdir.delete()
+  /** drop the directory of a dropped table's registration `m` (DROP
+    * TABLE / reset). `shared` = file paths some OTHER registered
+    * table's retained manifest still references (a shallow clone of
+    * this table): those files survive the drop — deleting them would
+    * corrupt the clone — and their version dirs stay as long as a
+    * shared file remains. */
+  private[sources] def drop(m: Meta, shared: Set[String]): Unit =
+    if (shared.isEmpty) deleteRecursively(new java.io.File(m.dir))
+    else {
+      val root = new java.io.File(m.dir)
+      // the dropped table's transaction log must die even when
+      // shared data files survive — a later GC sweep scanning
+      // unloaded warehouse logs would otherwise resurrect its
+      // references (and a re-CREATE could attach dead history)
+      deleteRecursively(new java.io.File(root, "_graft_log"))
+      Option(root.listFiles()).getOrElse(Array.empty)
+        .filter(_.isDirectory).foreach { vdir =>
+          Option(vdir.listFiles()).getOrElse(Array.empty).foreach { f =>
+            if (!shared.contains(f.getAbsolutePath)) { f.delete(); () }
           }
-        if (Option(root.listFiles()).forall(_.isEmpty)) root.delete()
-        ()
-      }
+          if (Option(vdir.listFiles()).forall(_.isEmpty)) vdir.delete()
+        }
+      if (Option(root.listFiles()).forall(_.isEmpty)) root.delete()
+      ()
     }
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -1102,7 +1088,7 @@ object GraftParquetStore {
     * strict for exactly this reason. */
   private[sources] def gcUnreferenced(name: String,
       referenced: Set[String], firstRetained: Int): Int =
-    metas.get(name).map { m =>
+    meta(name).map { m =>
     var deleted = 0
     Option(new java.io.File(m.dir).listFiles()).getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.getName != "_graft_log" &&

@@ -33,6 +33,15 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.tripwireJson(Seq(("agg_hash", 0.3, 6L))) == "[]")
   }
 
+  test("load_flag marks a drive that started on a busy host") {
+    assert(Bench.loadJson(2.2, 0.4) ==
+      """"load_avg_start":2.2,"load_flag":true,"load_avg_end":0.4,""")
+    assert(Bench.loadJson(0.37, 3.1).contains(""""load_flag":false"""))
+    // the threshold is strict, and an unsupported sample (-1) is calm
+    assert(Bench.loadJson(1.0, 1.0).contains(""""load_flag":false"""))
+    assert(Bench.loadJson(-1.0, -1.0).contains(""""load_flag":false"""))
+  }
+
   test("tripwire stays silent on a clean run") {
     val ws = Bench.tripwires(Seq(
       ("agg_hash", 0.3, 6L),
