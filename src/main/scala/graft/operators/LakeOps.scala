@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   * readout. Every id's final result is plain relational output with a
   * DuckDB oracle over the same parquet corpus; the scan behavior each
   * id exists to exercise is pinned separately in CatalogSpec/PlanSpec
-  * (partition counts via GraftScanMetrics, plan shapes via
-  * executedPlan).
+  * (partition counts via the scan node's `keptPartitions` /
+  * `totalPartitions` SQL metrics, plan shapes via executedPlan).
   *
   * Scale notes (the point of the module):
   *  - partition pruning: partition-only predicates drop whole
@@ -97,9 +97,9 @@ object LakeOps extends QueryModule {
     // partition VALUE), and the pushed IN-predicate references only
     // the partition column, so 3 of the 5 partitions drop at plan time
     // without touching a row — the manifest-level pruning a lake
-    // format does from partition stats. CatalogSpec reads
-    // GraftScanMetrics and pins total=5 / kept=2; the aggregate on top
-    // is the oracle-checked readout.
+    // format does from partition stats. CatalogSpec reads the scan's
+    // `totalPartitions` / `keptPartitions` SQL metrics and pins 5 / 2;
+    // the aggregate on top is the oracle-checked readout.
     "scan_partitioned_prune" -> ((s, d) => {
       seedOrders(s, d, "lake_orders", partitioned = true)
       s.table("graft.lake_orders")
@@ -136,8 +136,9 @@ object LakeOps extends QueryModule {
     }),
 
     // MEASURED partition pruning on the parquet store: the partition-
-    // only predicate drops whole FILES at plan time — GraftScanMetrics
-    // reports files/bytes actually opened vs the manifest total, and
+    // only predicate drops whole FILES at plan time — the scan's
+    // `filesRead` / `bytesRead` SQL metrics report files/bytes actually
+    // opened vs the manifest total (`filesTotal` / `bytesTotal`), and
     // CatalogSpec pins filesRead < filesTotal AND bytesRead <
     // bytesTotal (the verdict's "measured pruning, not just
     // metrics-pinned"): at 100 TB this is I/O that never happens.
@@ -261,9 +262,9 @@ object LakeOps extends QueryModule {
     // prunes partitions — ts >= T implies days(ts) >= days(T) for the
     // monotone transform, so the scan lifts the pushed literal into
     // the key domain and drops whole day-partitions from the manifest
-    // (GraftScanMetrics-pinned in ParquetStoreSpec; the raw predicate
-    // stays row-level residual, so pruning is a conservative superset,
-    // never wrong). At 100 TB: time-range queries touch only their
+    // (pinned on the scan's `filesRead` SQL metric in ParquetStoreSpec;
+    // the raw predicate stays row-level residual, so pruning is a
+    // conservative superset, never wrong). At 100 TB: time-range queries touch only their
     // days without anyone remembering to filter a partition column.
     "scan_hidden_days" -> ((s, d) => {
       useCatalog(s)
@@ -883,7 +884,7 @@ object LakeOps extends QueryModule {
     // — the three excluded partitions are emptied before a row ships
     // (they stay present so HasPartitionKey identity survives, the
     // contract KeyGroupedPartitioning requires). CatalogSpec pins
-    // runtimeEmptied=3 via GraftScanMetrics.
+    // runtimeEmptied=3 through the scan's SQL metric of that name.
     "join_runtime_prune" -> ((s, d) => {
       seedOrders(s, d, "dpp_orders", partitioned = true)
       // the dim derives from parquet (NOT a local Seq: Catalyst folds

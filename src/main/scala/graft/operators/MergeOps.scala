@@ -55,17 +55,6 @@ object MergeOps extends QueryModule {
           .otherwise("updated"))
   }
 
-  /** physical plan of the last executed MERGE INTO statement —
-    * PlanSpec asserts the group-based ReplaceData rewrite appears
-    * (i.e. the statement really went through Spark's native row-level
-    * planner, not a relational re-expression). */
-  @volatile private[graft] var lastMergePlan: String = ""
-
-  /** id -> physical plan of its last row-level statement (sql_delete /
-    * sql_update) — same PlanSpec contract as [[lastMergePlan]]. */
-  private[graft] val lastRowLevelPlans =
-    new scala.collection.concurrent.TrieMap[String, String]()
-
   /** Seed a fresh 3-column DSv2 table under the graft catalog with the
     * customer snapshot — the shared setup of the native DELETE/UPDATE
     * ids (idempotent per invocation: drop + create + insert). With
@@ -117,7 +106,7 @@ object MergeOps extends QueryModule {
     s.sql("INSERT INTO graft.merge_target " +
       "SELECT c_custkey, c_name, c_acctbal, 'carried' " +
       "FROM graft_merge_base")
-    val m = s.sql(
+    s.sql(
       """MERGE INTO graft.merge_target t
         |USING graft_merge_delta s
         |ON t.c_custkey = s.c_custkey
@@ -130,7 +119,6 @@ object MergeOps extends QueryModule {
         |  INSERT (c_custkey, c_name, c_acctbal, action)
         |  VALUES (s.c_custkey, s.c_name, s.c_acctbal, 'insert')
         |""".stripMargin)
-    lastMergePlan = m.queryExecution.executedPlan.toString
     s.table("graft.merge_target").orderBy("c_custkey")
   }
 
@@ -150,7 +138,7 @@ object MergeOps extends QueryModule {
     val snap = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
     deltaOf(snap).createOrReplaceTempView("graft_merge_delta_mor")
-    val m = s.sql(
+    s.sql(
       """MERGE INTO graft.merge_mor_target t
         |USING graft_merge_delta_mor s
         |ON t.c_custkey = s.c_custkey
@@ -161,8 +149,6 @@ object MergeOps extends QueryModule {
         |  INSERT (c_custkey, c_name, c_acctbal)
         |  VALUES (s.c_custkey, s.c_name, s.c_acctbal)
         |""".stripMargin)
-    lastRowLevelPlans.put("merge_into_mor",
-      m.queryExecution.executedPlan.toString)
     // re-derive the action audit relationally (the MoR table carries
     // no action column — the classification is what upsert_snapshot's
     // oracle checks, so join it back from the shared classifier)
@@ -230,10 +216,7 @@ object MergeOps extends QueryModule {
     // post-state oracle.
     "sql_delete_mor" -> ((s, d) => {
       seedSnapshotTable(s, d, "del_mor_target", mor = true)
-      val st = s.sql(
-        "DELETE FROM graft.del_mor_target WHERE c_custkey % 11 = 0")
-      lastRowLevelPlans.put("sql_delete_mor",
-        st.queryExecution.executedPlan.toString)
+      s.sql("DELETE FROM graft.del_mor_target WHERE c_custkey % 11 = 0")
       s.table("graft.del_mor_target").orderBy("c_custkey")
     }),
 
@@ -245,10 +228,7 @@ object MergeOps extends QueryModule {
     // pinned by that id's oracle family.
     "sql_delete" -> ((s, d) => {
       seedSnapshotTable(s, d, "del_target")
-      val st = s.sql(
-        "DELETE FROM graft.del_target WHERE c_custkey % 11 = 0")
-      lastRowLevelPlans.put("sql_delete",
-        st.queryExecution.executedPlan.toString)
+      s.sql("DELETE FROM graft.del_target WHERE c_custkey % 11 = 0")
       s.table("graft.del_target").orderBy("c_custkey")
     }),
 
@@ -277,11 +257,8 @@ object MergeOps extends QueryModule {
     // rebalance rule.
     "sql_update" -> ((s, d) => {
       seedSnapshotTable(s, d, "upd_target")
-      val st = s.sql(
-        "UPDATE graft.upd_target SET c_acctbal = c_acctbal + 100.0 " +
-          "WHERE c_custkey % 7 = 0")
-      lastRowLevelPlans.put("sql_update",
-        st.queryExecution.executedPlan.toString)
+      s.sql("UPDATE graft.upd_target SET c_acctbal = c_acctbal + 100.0 " +
+        "WHERE c_custkey % 7 = 0")
       s.table("graft.upd_target").orderBy("c_custkey")
     }),
 

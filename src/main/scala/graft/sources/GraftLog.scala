@@ -1260,43 +1260,47 @@ object GraftLog {
     * bumps the dir mtime, which invalidates), so each log parses once
     * per (entry set, mtime) — without this, every retention trim of a
     * busy table would re-parse every evicted table's whole log. */
-  private val unloadedRefCache =
+  private[sources] val unloadedRefCache =
     new TrieMap[String, ((Long, Int), Set[String])]()
 
   private[sources] def unloadedFileRefs(loaded: String => Boolean)
       : Set[String] = {
     val tablesDir = new File(GraftWarehouse.root, "tables")
-    Option(tablesDir.listFiles()).getOrElse(Array.empty[File])
+    val dirs = Option(tablesDir.listFiles()).getOrElse(Array.empty[File])
       .filter(_.isDirectory)
-      .flatMap { d =>
-        val storeName = GraftWarehouse.storeNameOf(d)
-        if (loaded(storeName)) {
-          unloadedRefCache.remove(d.getAbsolutePath)
-          Iterator.empty
-        } else {
-          val ld = logDir(d.getAbsolutePath)
-          val entries = Option(ld.listFiles())
-            .getOrElse(Array.empty[File])
-            .filter(_.getName.endsWith(".json"))
-          val key = (ld.lastModified(), entries.length)
-          unloadedRefCache.get(d.getAbsolutePath) match {
-            case Some((k, refs)) if k == key => refs
-            case _ =>
-              // cheap textual sweep: every "path" field in the log
-              // names a live file of SOME retained version (superset
-              // is safe — GC keeps more, never less)
-              val refs = entries.iterator.flatMap { f =>
-                val j = parse(f)
-                (j filterField {
-                  case ("path", JString(_)) => true
-                  case _ => false
-                }).collect { case (_, JString(p)) => p }
-              }.toSet
-              unloadedRefCache.put(d.getAbsolutePath, (key, refs))
-              refs
-          }
+    // a table directory that is gone (DROP, another warehouse) keeps
+    // no entry: the cache is bounded by the directories listed here
+    val listed = dirs.map(_.getAbsolutePath).toSet
+    unloadedRefCache.filterInPlace((k, _) => listed(k))
+    dirs.flatMap { d =>
+      val storeName = GraftWarehouse.storeNameOf(d)
+      if (loaded(storeName)) {
+        unloadedRefCache.remove(d.getAbsolutePath)
+        Iterator.empty
+      } else {
+        val ld = logDir(d.getAbsolutePath)
+        val entries = Option(ld.listFiles())
+          .getOrElse(Array.empty[File])
+          .filter(_.getName.endsWith(".json"))
+        val key = (ld.lastModified(), entries.length)
+        unloadedRefCache.get(d.getAbsolutePath) match {
+          case Some((k, refs)) if k == key => refs
+          case _ =>
+            // cheap textual sweep: every "path" field in the log
+            // names a live file of SOME retained version (superset
+            // is safe — GC keeps more, never less)
+            val refs = entries.iterator.flatMap { f =>
+              val j = parse(f)
+              (j filterField {
+                case ("path", JString(_)) => true
+                case _ => false
+              }).collect { case (_, JString(p)) => p }
+            }.toSet
+            unloadedRefCache.put(d.getAbsolutePath, (key, refs))
+            refs
         }
-      }.toSet
+      }
+    }.toSet
   }
 
   // ---- views -----------------------------------------------------------

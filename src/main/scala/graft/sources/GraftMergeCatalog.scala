@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, NoSuchViewException, ViewAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
@@ -718,9 +719,16 @@ object GraftTableStore {
           // the commit never became durable (a foreign process won the
           // entry claim in the residual window) — serving the applied
           // in-memory state would be a PHANTOM commit that forks the
-          // table on the next write. Evict to the disk truth: the next
-          // catalog touch replays the log, foreign entries included.
-          evict(name, keepEpochs = true)
+          // table on the next write. Install the disk truth, foreign
+          // entries included, with one put, so a lock-free reader never
+          // sees the table empty; evict (the next catalog touch
+          // replays) only when the replay itself fails.
+          try GraftLog.replayByName(name) match {
+            case Some(r) => GraftLog.install(name, r)
+            case None => evict(name, keepEpochs = true)
+          } catch {
+            case _: Throwable => evict(name, keepEpochs = true)
+          }
           throw t
       }
     }
@@ -2709,13 +2717,8 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
           ident.namespace().last)
         val base = loadOrAttach(baseIdent).getOrElse(
           throw new NoSuchTableException(ident))
-        ident.name() match {
-          case "changes" => new GraftCdfTable(base)
-          case "history" => new GraftHistoryTable(base)
-          case "partitions" => new GraftPartitionsTable(base)
-          case "files" => new GraftFilesTable(base)
-          case "refs" => new GraftRefsTable(base)
-        }
+        if (ident.name() == "changes") new GraftCdfTable(base)
+        else GraftMetadataTable(base, ident.name())
       case None => throw new NoSuchTableException(ident)
     }
 
@@ -4509,7 +4512,11 @@ object GraftFilterEval {
 }
 
 /** Per-table telemetry of the last deletion-vector DELETE, for the spec
-  * suite. */
+  * suite. It stays a last-write-wins map because the DV commit has no
+  * per-query metric channel: Spark 4.1's `DeleteFromTableExec` (the
+  * metadata-only DELETE) declares no custom metrics, and an equality
+  * delete ([[GraftTableStore.commitEqDelete]]) is a direct call, not a
+  * query. */
 object GraftDvMetrics {
   /** readout of the last deletion-vector DELETE against a table: of
     * the manifest's files, how many the DV job OPENED (zone-map
@@ -4522,20 +4529,62 @@ object GraftDvMetrics {
   private[graft] val last = new TrieMap[String, Report]()
 }
 
-/** Per-table scan telemetry for the spec suite: how many partitions
-  * the table had, how many survived STATIC partition pruning (pushed
-  * partition-column predicates), and how many were emptied by a
-  * RUNTIME filter (join-key pruning at execution). Overwritten per
-  * planInputPartitions call — a test reads it right after an action. */
+/** Scan telemetry through Spark's DSv2 metric channel. A scan mixes in
+  * [[Reporting]], records the [[Report]] of its latest
+  * `planInputPartitions` call, and Spark's `BatchScanExec` posts it once
+  * runtime filtering has run: the numbers are SQL metrics of that
+  * query's scan node, so they are per query and kept by the SQL status
+  * store with the rest of the plan's metrics. */
 object GraftScanMetrics {
-  /** `files*`/`bytes*` are MEASURED I/O consequences on a
+  /** Of the scanned version: how many partitions the table had, how
+    * many survived STATIC partition pruning (pushed partition-column
+    * predicates), and how many a RUNTIME filter emptied (join-key
+    * pruning at execution). `files*`/`bytes*` are MEASURED I/O on a
     * parquet-backed table (zero on the in-memory store): of the
     * version's manifest, how many files / bytes the planned scan
-    * actually opens after static pruning and runtime emptying. */
+    * actually opens after static pruning and runtime emptying. Each
+    * field is one SQL metric of the same name. */
   final case class Report(totalPartitions: Int, keptPartitions: Int,
       runtimeEmptied: Int, filesTotal: Int = 0, filesRead: Int = 0,
-      bytesTotal: Long = 0L, bytesRead: Long = 0L)
-  private[graft] val lastScan = new TrieMap[String, Report]()
+      bytesTotal: Long = 0L, bytesRead: Long = 0L) {
+    def taskMetrics: Array[CustomTaskMetric] =
+      productElementNames.zip(productIterator).map { case (n, v) =>
+        val l = v.asInstanceOf[Number].longValue
+        new CustomTaskMetric {
+          override def name(): String = n
+          override def value(): Long = l
+        }: CustomTaskMetric
+      }.toArray
+  }
+
+  /** the seven metrics, one per [[Report]] field */
+  val supported: Array[CustomMetric] = Array(
+    "totalPartitions" -> "partitions in the scanned version",
+    "keptPartitions" -> "partitions kept by static pruning",
+    "runtimeEmptied" -> "partitions emptied by runtime filters",
+    "filesTotal" -> "files in the scanned manifest",
+    "filesRead" -> "files the scan opens",
+    "bytesTotal" -> "bytes in the scanned manifest",
+    "bytesRead" -> "bytes the scan opens"
+  ).map { case (n, d) => new GraftScanMetric(n, d): CustomMetric }
+
+  /** a scan's side of the channel: `record` at planning time, Spark
+    * reads it back through `reportDriverMetrics` */
+  trait Reporting extends Scan {
+    @volatile private var reported = Array.empty[CustomTaskMetric]
+    protected def record(r: Report): Unit = reported = r.taskMetrics
+    override def supportedCustomMetrics(): Array[CustomMetric] = supported
+    override def reportDriverMetrics(): Array[CustomTaskMetric] = reported
+  }
+}
+
+/** One [[GraftScanMetrics]] number; Spark sums the reported values. The
+  * SQL status store re-creates the class through its no-argument
+  * constructor to aggregate, which needs only the sum. */
+class GraftScanMetric(n: String, d: String) extends CustomSumMetric {
+  def this() = this("", "")
+  override def name(): String = n
+  override def description(): String = d
 }
 
 class GraftScan(tableName: String, tableSchema: StructType,
@@ -4549,7 +4598,8 @@ class GraftScan(tableName: String, tableSchema: StructType,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     metaCols: Seq[String] = Nil)
     extends Scan with Batch with SupportsReportStatistics
-    with SupportsReportPartitioning with SupportsRuntimeV2Filtering {
+    with SupportsReportPartitioning with SupportsRuntimeV2Filtering
+    with GraftScanMetrics.Reporting {
   import org.apache.spark.sql.connector.expressions.{Expressions, Literal, NamedReference}
   import org.apache.spark.sql.connector.expressions.filter.Predicate
   import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
@@ -4850,8 +4900,7 @@ class GraftScan(tableName: String, tableSchema: StructType,
       case p: GraftFileScanPartition => p.files
       case p: GraftKeyedFileScanPartition => p.files
     }.flatten
-    GraftScanMetrics.lastScan.put(tableName, GraftScanMetrics.Report(
-      total, groups.length, emptied,
+    record(GraftScanMetrics.Report(total, groups.length, emptied,
       filesTotal = fv.files.length, filesRead = readFiles.length,
       bytesTotal = fv.files.map(_.bytes).sum,
       bytesRead = readFiles.map(_.bytes).sum))
@@ -5121,8 +5170,7 @@ class GraftScan(tableName: String, tableSchema: StructType,
         GraftProjectedPartition(limited, ordinals, types)
       else GraftKeyedPartition(limited, ordinals, types, key)
     }
-    GraftScanMetrics.lastScan.put(tableName,
-      GraftScanMetrics.Report(total, kept.length, emptied))
+    record(GraftScanMetrics.Report(total, kept.length, emptied))
     parts
   }
   override def createReaderFactory(): PartitionReaderFactory =
@@ -5251,7 +5299,7 @@ class GraftAggScan(tableName: String, tableSchema: StructType,
 class GraftManifestAggScan(tableName: String, tableSchema: StructType,
     pinnedVersion: Option[Int], partFields: Array[GraftPartField],
     agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-    extends Scan with Batch {
+    extends Scan with Batch with GraftScanMetrics.Reporting {
   import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.connector.expressions.aggregate._
@@ -5348,8 +5396,8 @@ class GraftManifestAggScan(tableName: String, tableSchema: StructType,
     }
     // the readout the spec pins: the whole manifest was "scanned",
     // ZERO files opened, zero bytes read
-    GraftScanMetrics.lastScan.put(tableName, GraftScanMetrics.Report(
-      1, 1, 0, filesTotal = files.length, filesRead = 0,
+    record(GraftScanMetrics.Report(1, 1, 0,
+      filesTotal = files.length, filesRead = 0,
       bytesTotal = files.map(_.bytes).sum, bytesRead = 0L))
     Array(GraftInputPartition(out))
   }
@@ -6447,149 +6495,46 @@ class GraftCdfMicroBatchStream(tableName: String,
     GraftCdfReaderFactory
 }
 
-/** The `graft.<table>.history` metadata relation — DESCRIBE HISTORY as
-  * a queryable table: one row per RETAINED commit (version, operation,
-  * n_rows, commit_ts), served from the store's transaction log.
-  * O(retained versions ≤ 64) metadata; no row data is touched, which
-  * is exactly how a lake format answers this from its log. */
-class GraftHistoryTable(base: GraftMergeTable)
+/** A `graft.<table>.<kind>` metadata relation: O(metadata) rows served
+  * from the store's log and manifest, never from data files — how a
+  * lake format answers these. `fields` is the schema, `check` the
+  * precondition a scan must pass, `rows` the current readout; the four
+  * kinds are [[GraftMetadataTable.apply]]. */
+class GraftMetadataTable(base: GraftMergeTable, kind: String,
+    fields: Seq[org.apache.spark.sql.types.StructField],
+    check: () => Unit, rows: () => Array[InternalRow])
     extends Table with SupportsRead {
-  import org.apache.spark.sql.types.{LongType, StringType, StructField, TimestampType}
-  override def name(): String = s"${base.name()}.history"
-  override def schema(): StructType = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("operation", StringType, nullable = false),
-    StructField("n_rows", LongType, nullable = false),
-    StructField("commit_ts", TimestampType, nullable = false)))
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = () => new Scan with Batch {
-    override def readSchema(): StructType = GraftHistoryTable.this.schema()
-    override def toBatch: Batch = this
-    override def description(): String = s"GraftHistoryScan[${base.name()}]"
-    override def planInputPartitions(): Array[InputPartition] = {
-      import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-      import org.apache.spark.unsafe.types.UTF8String
-      val rows = GraftTableStore.history(base.name()).map {
-        case (v, op, n, tMs) =>
-          new GenericInternalRow(Array[Any](v.toLong,
-            UTF8String.fromString(op), n.toLong,
-            tMs * 1000L)): InternalRow
-      }
-      Array(GraftInputPartition(rows.toArray))
-    }
-    override def createReaderFactory(): PartitionReaderFactory =
-      GraftRowsReaderFactory
-  }
-}
-
-/** The `graft.<table>.refs` metadata relation (Iceberg's `.refs`
-  * shape): every named ref — branches (mutable pointers, "main"
-  * included) and tags (immutable) — with the absolute version it
-  * pins. O(refs) metadata served from the transaction log; the
-  * readout an operator checks before a WAP publish or a branch
-  * cleanup. */
-class GraftRefsTable(base: GraftMergeTable)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types.{LongType, StringType, StructField}
-  override def name(): String = s"${base.name()}.refs"
-  override def schema(): StructType = StructType(Seq(
-    StructField("ref_name", StringType, nullable = false),
-    StructField("ref_type", StringType, nullable = false),
-    StructField("version", LongType, nullable = false)))
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = () => new Scan with Batch {
-    override def readSchema(): StructType = GraftRefsTable.this.schema()
-    override def toBatch: Batch = this
-    override def description(): String = s"GraftRefsScan[${base.name()}]"
-    override def planInputPartitions(): Array[InputPartition] = {
-      import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-      import org.apache.spark.unsafe.types.UTF8String
-      val rows = GraftTableStore.refs(base.name()).map {
-        case (n, kind, v) =>
-          new GenericInternalRow(Array[Any](UTF8String.fromString(n),
-            UTF8String.fromString(kind), v.toLong)): InternalRow
-      }
-      Array(GraftInputPartition(rows.toArray))
-    }
-    override def createReaderFactory(): PartitionReaderFactory =
-      GraftRowsReaderFactory
-  }
-}
-
-/** The `graft.<table>.partitions` metadata relation (Iceberg's
-  * `.partitions` shape): per-partition row counts of the CURRENT
-  * snapshot — the readout that drives partition-layout decisions
-  * (skew checks, compaction targets) without scanning data. Requires
-  * a partitioned base table. */
-class GraftPartitionsTable(base: GraftMergeTable)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types.{LongType, StructField}
-  override def name(): String = s"${base.name()}.partitions"
-  override def schema(): StructType = StructType(
-    base.partFields.map {
-      case GraftIdentityPart(c) => base.schema()(c)
-      case GraftBucketPart(c, _) => StructField(s"${c}_bucket",
-        org.apache.spark.sql.types.IntegerType, nullable = true)
-      case p @ GraftDaysPart(c) => StructField(s"${c}_day",
-        GraftPartField.keyType(p, base.physicalSchema), nullable = true)
-      case p @ GraftTruncatePart(c, _) => StructField(s"${c}_trunc",
-        GraftPartField.keyType(p, base.physicalSchema), nullable = true)
-    } :+ StructField("row_count", LongType, nullable = false))
+  override def name(): String = s"${base.name()}.$kind"
+  override def schema(): StructType = StructType(fields)
   override def capabilities(): util.Set[TableCapability] =
     Set(TableCapability.BATCH_READ).asJava
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder = {
-    require(base.partFields.nonEmpty,
-      s"${name()}: the partitions metadata table requires a " +
-        "partitioned base table")
+    check()
     () => new Scan with Batch {
-      override def readSchema(): StructType =
-        GraftPartitionsTable.this.schema()
+      override def readSchema(): StructType = GraftMetadataTable.this.schema()
       override def toBatch: Batch = this
       override def description(): String =
-        s"GraftPartitionsScan[${base.name()}]"
-      override def planInputPartitions(): Array[InputPartition] = {
-        import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-        val sch = base.physicalSchema // stored-row layout
-        val keyTypes = base.partFields.map(
-          GraftPartField.keyType(_, sch))
-        val keyProj = org.apache.spark.sql.catalyst.expressions
-          .UnsafeProjection.create(base.partFields.map(
-            GraftPartField.keyExpr(_, sch)).toIndexedSeq)
-        val padded = GraftChangeFeed.padTo(
-          GraftTableStore.get(base.name()), sch)
-        val rows = padded
-          .groupBy(r => keyProj(r).copy())
-          .toArray.sortBy(_._1.toString)
-          .map { case (k, rs) =>
-            new GenericInternalRow(
-              (keyTypes.indices.map(i => k.get(i, keyTypes(i))) :+
-                rs.length.toLong).toArray[Any]): InternalRow
-          }
-        Array(GraftInputPartition(rows))
-      }
+        s"Graft${kind.capitalize}Scan[${base.name()}]"
+      override def planInputPartitions(): Array[InputPartition] =
+        Array(GraftInputPartition(rows()))
       override def createReaderFactory(): PartitionReaderFactory =
         GraftRowsReaderFactory
     }
   }
 }
 
-/** The `graft.<table>.files` metadata relation (Iceberg's `.files`
-  * shape): the CURRENT manifest of a parquet-backed table — one row
-  * per data file with its partition key, row count, size, physical
-  * width and stats coverage. O(files) metadata, no data file opened;
-  * the readout compaction/layout decisions come from (small-file
-  * counts, per-partition file spread, stats coverage). */
-class GraftFilesTable(base: GraftMergeTable)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField}
-  override def name(): String = s"${base.name()}.files"
-  override def schema(): StructType = StructType(
-    base.partFields.map {
+object GraftMetadataTable {
+  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+  import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, TimestampType}
+  import org.apache.spark.unsafe.types.UTF8String
+
+  private def row(vals: Any*): InternalRow =
+    new GenericInternalRow(vals.toArray)
+
+  /** one key column per partition field, named after the field. */
+  private def partKeyFields(base: GraftMergeTable): Seq[StructField] =
+    base.partFields.toSeq.map {
       case GraftIdentityPart(c) => base.schema()(c)
       case GraftBucketPart(c, _) =>
         StructField(s"${c}_bucket", IntegerType, nullable = true)
@@ -6597,56 +6542,95 @@ class GraftFilesTable(base: GraftMergeTable)
         GraftPartField.keyType(p, base.physicalSchema), nullable = true)
       case p @ GraftTruncatePart(c, _) => StructField(s"${c}_trunc",
         GraftPartField.keyType(p, base.physicalSchema), nullable = true)
-    } ++ Seq(
-      StructField("file_path", StringType, nullable = false),
-      StructField("row_count", LongType, nullable = false),
-      StructField("size_bytes", LongType, nullable = false),
-      StructField("num_cols", IntegerType, nullable = false),
-      StructField("stats_cols", IntegerType, nullable = false)))
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = {
-    require(GraftParquetStore.isBacked(base.name()),
-      s"${name()}: the files metadata table requires a parquet-backed " +
-        "base table (TBLPROPERTIES 'graft.store'='parquet')")
-    () => new Scan with Batch {
-      override def readSchema(): StructType = GraftFilesTable.this.schema()
-      override def toBatch: Batch = this
-      override def description(): String =
-        s"GraftFilesScan[${base.name()}]"
-      override def planInputPartitions(): Array[InputPartition] = {
-        import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-        import org.apache.spark.unsafe.types.UTF8String
-        val fv = GraftTableStore.fileView(base.name(), None).getOrElse(
-          throw new IllegalStateException(
-            s"${name()}: no file view — was the table written through " +
-              "a non-parquet path?"))
-        val keyTypes = base.partFields.map(
-          GraftPartField.keyType(_, base.physicalSchema))
-        val curSpecId = GraftParquetStore.meta(base.name())
-          .map(_.curSpecId).getOrElse(0)
-        val rows = fv.files.sortBy(_.path).map { f =>
-          val vals = new Array[Any](keyTypes.length + 5)
-          // a file written under an OLDER partition spec has its key
-          // in a different domain — its current-spec key columns read
-          // NULL (the honest answer; Iceberg's .files carries the
-          // per-spec tuple for the same reason)
-          keyTypes.indices.foreach(i =>
-            vals(i) =
+    }
+
+  def apply(base: GraftMergeTable, kind: String): GraftMetadataTable = {
+    val t = base.name()
+    kind match {
+      // DESCRIBE HISTORY as a table: one row per RETAINED commit
+      // (≤ 64), served from the transaction log
+      case "history" => new GraftMetadataTable(base, kind, Seq(
+          StructField("version", LongType, nullable = false),
+          StructField("operation", StringType, nullable = false),
+          StructField("n_rows", LongType, nullable = false),
+          StructField("commit_ts", TimestampType, nullable = false)),
+        () => (),
+        () => GraftTableStore.history(t).map { case (v, op, n, tMs) =>
+          row(v.toLong, UTF8String.fromString(op), n.toLong, tMs * 1000L)
+        }.toArray)
+
+      // Iceberg's `.refs`: every branch ("main" included) and tag with
+      // the absolute version it pins — what an operator checks before
+      // a WAP publish or a branch cleanup
+      case "refs" => new GraftMetadataTable(base, kind, Seq(
+          StructField("ref_name", StringType, nullable = false),
+          StructField("ref_type", StringType, nullable = false),
+          StructField("version", LongType, nullable = false)),
+        () => (),
+        () => GraftTableStore.refs(t).map { case (n, k, v) =>
+          row(UTF8String.fromString(n), UTF8String.fromString(k), v.toLong)
+        }.toArray)
+
+      // Iceberg's `.partitions`: per-partition row counts of the
+      // CURRENT snapshot — skew checks and compaction targets without
+      // scanning data
+      case "partitions" => new GraftMetadataTable(base, kind,
+        partKeyFields(base) :+
+          StructField("row_count", LongType, nullable = false),
+        () => require(base.partFields.nonEmpty,
+          s"$t.partitions: the partitions metadata table requires a " +
+            "partitioned base table"),
+        () => {
+          val sch = base.physicalSchema // stored-row layout
+          val keyTypes = base.partFields.map(
+            GraftPartField.keyType(_, sch))
+          val keyProj = org.apache.spark.sql.catalyst.expressions
+            .UnsafeProjection.create(base.partFields.map(
+              GraftPartField.keyExpr(_, sch)).toIndexedSeq)
+          GraftChangeFeed.padTo(GraftTableStore.get(t), sch)
+            .groupBy(r => keyProj(r).copy())
+            .toArray.sortBy(_._1.toString)
+            .map { case (k, rs) =>
+              row(keyTypes.indices.map(i => k.get(i, keyTypes(i))) :+
+                rs.length.toLong: _*)
+            }
+        })
+
+      // Iceberg's `.files`: the CURRENT manifest of a parquet-backed
+      // table, one row per data file — small-file counts, per-partition
+      // spread and stats coverage without opening a file
+      case "files" => new GraftMetadataTable(base, kind,
+        partKeyFields(base) ++ Seq(
+          StructField("file_path", StringType, nullable = false),
+          StructField("row_count", LongType, nullable = false),
+          StructField("size_bytes", LongType, nullable = false),
+          StructField("num_cols", IntegerType, nullable = false),
+          StructField("stats_cols", IntegerType, nullable = false)),
+        () => require(GraftParquetStore.isBacked(t),
+          s"$t.files: the files metadata table requires a " +
+            "parquet-backed base table (TBLPROPERTIES " +
+            "'graft.store'='parquet')"),
+        () => {
+          val fv = GraftTableStore.fileView(t, None).getOrElse(
+            throw new IllegalStateException(
+              s"$t.files: no file view — was the table written " +
+                "through a non-parquet path?"))
+          val keyTypes = base.partFields.map(
+            GraftPartField.keyType(_, base.physicalSchema))
+          val curSpecId = GraftParquetStore.meta(t)
+            .map(_.curSpecId).getOrElse(0)
+          fv.files.sortBy(_.path).map { f =>
+            // a file written under an OLDER partition spec has its key
+            // in a different domain — its current-spec key columns read
+            // NULL (the honest answer; Iceberg's .files carries the
+            // per-spec tuple for the same reason)
+            val key = keyTypes.indices.map(i =>
               if (f.specId == curSpecId) f.key.get(i, keyTypes(i))
               else null)
-          vals(keyTypes.length) = UTF8String.fromString(f.path)
-          vals(keyTypes.length + 1) = f.rows.toLong
-          vals(keyTypes.length + 2) = f.bytes
-          vals(keyTypes.length + 3) = f.numCols
-          vals(keyTypes.length + 4) = f.stats.size
-          new GenericInternalRow(vals): InternalRow
-        }.toArray
-        Array(GraftInputPartition(rows))
-      }
-      override def createReaderFactory(): PartitionReaderFactory =
-        GraftRowsReaderFactory
+            row(key ++ Seq(UTF8String.fromString(f.path), f.rows.toLong,
+              f.bytes, f.numCols, f.stats.size): _*)
+          }.toArray
+        })
     }
   }
 }

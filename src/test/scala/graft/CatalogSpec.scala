@@ -579,17 +579,44 @@ class CatalogSpec extends AnyFunSuite {
 
   test("partitioned scan: one input partition per value, partition-only " +
       "predicates prune partitions statically") {
-    SparkEntry.queries("scan_partitioned_prune")(spark, sf).count()
-    val r = graft.sources.GraftScanMetrics.lastScan("graft.lake_orders")
+    val r = scanMetrics(SparkEntry.queries("scan_partitioned_prune")(spark, sf),
+      "graft.lake_orders")
     assert(r.totalPartitions == 5 && r.keptPartitions == 2,
       s"expected 2/5 partitions kept after static pruning, got $r")
     assert(r.runtimeEmptied == 0, s"no runtime filter in this query: $r")
   }
 
+  test("scan metrics are per query: a pruned query keeps its own " +
+      "partition and file counts after a full query scans the same " +
+      "table, on both stores") {
+    freshCatalog()
+    for ((t, props) <- Seq("graft.isoq_mem" -> "",
+        "graft.isoq_pq" -> " TBLPROPERTIES ('graft.store'='parquet')")) {
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      spark.sql(s"CREATE TABLE $t (k BIGINT, p STRING) " +
+        s"PARTITIONED BY (p)$props")
+      spark.sql(s"INSERT INTO $t SELECT id, CAST(id % 3 AS STRING) " +
+        "FROM range(12)")
+      val q1 = spark.table(t).where(col("p") === "0")
+      val q2 = spark.table(t)
+      q1.collect()
+      q2.collect()
+      val m1 = scanReport(q1, t)
+      assert(m1.totalPartitions == 3 && m1.keptPartitions == 1,
+        s"$t: the pruned query reads another query's report: $m1")
+      val m2 = scanReport(q2, t)
+      assert(m2.totalPartitions == 3 && m2.keptPartitions == 3, s"$t: $m2")
+      if (props.nonEmpty)
+        assert(m1.filesRead < m1.filesTotal &&
+          m2.filesRead == m2.filesTotal, s"$t: $m1 vs $m2")
+      spark.sql(s"DROP TABLE $t")
+    }
+  }
+
   test("runtime (dynamic) partition pruning empties the partitions a " +
       "selective join excludes — without changing partition identity") {
-    SparkEntry.queries("join_runtime_prune")(spark, sf).count()
-    val r = graft.sources.GraftScanMetrics.lastScan("graft.dpp_orders")
+    val r = scanMetrics(SparkEntry.queries("join_runtime_prune")(spark, sf),
+      "graft.dpp_orders")
     assert(r.totalPartitions == 5 && r.keptPartitions == 5,
       s"static pruning must not fire (no pushable partition filter): $r")
     assert(r.runtimeEmptied == 3,
@@ -684,10 +711,11 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql("INSERT INTO graft.ttp_t VALUES (100, 'c')") // v1
     // a pinned (VERSION AS OF) scan of the partitioned table still
     // prunes: v0 has partitions a,b only; the filter keeps one
-    val n = spark.sql("SELECT * FROM graft.ttp_t VERSION AS OF 0")
-      .where(col("p") === "a").count()
+    val pinned = spark.sql("SELECT * FROM graft.ttp_t VERSION AS OF 0")
+      .where(col("p") === "a")
+    val n = pinned.count()
     assert(n == 3, s"pinned partitioned read wrong: $n")
-    val m = graft.sources.GraftScanMetrics.lastScan("graft.ttp_t")
+    val m = scanMetrics(pinned, "graft.ttp_t")
     assert(m.totalPartitions == 2 && m.keptPartitions == 1,
       s"pruning did not apply to the pinned scan: $m")
     val ex = intercept[Exception] {
@@ -913,8 +941,8 @@ class CatalogSpec extends AnyFunSuite {
       s"mixed partition metadata wrong: ${parts.mkString(", ")}")
     // a predicate on the IDENTITY field statically prunes; the bucket
     // field stays row-level
-    spark.table("graft.mixp_t").where(col("seg") === "a").count()
-    val m = graft.sources.GraftScanMetrics.lastScan("graft.mixp_t")
+    val m = scanMetrics(spark.table("graft.mixp_t").where(col("seg") === "a"),
+      "graft.mixp_t")
     assert(m.totalPartitions == 2 && m.keptPartitions == 1,
       s"identity-field pruning over mixed partitioning wrong: $m")
     spark.sql("DROP TABLE graft.mixp_t")

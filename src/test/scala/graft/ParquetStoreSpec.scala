@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{GraftMergeCatalog, GraftParquetStore, GraftScanMetrics, GraftTableStore}
+import graft.sources.{GraftMergeCatalog, GraftParquetStore, GraftTableStore}
 
 /** The parquet-backed store (round 10): file-granular commits, scans
   * that ship paths instead of rows, measured pruning, append manifest
@@ -87,8 +87,8 @@ class ParquetStoreSpec extends AnyFunSuite {
   test("partition pruning is MEASURED on the parquet store: a " +
       "partition-only predicate opens fewer files and fewer bytes") {
     freshCatalog()
-    SparkEntry.queries("store_parquet_prune")(spark, sf).collect()
-    val m = GraftScanMetrics.lastScan("graft.pqp_orders")
+    val m = scanMetrics(SparkEntry.queries("store_parquet_prune")(spark, sf),
+      "graft.pqp_orders")
     assert(m.filesTotal > 0 && m.bytesTotal > 0, s"no files measured: $m")
     assert(m.filesRead < m.filesTotal,
       s"pruning opened every file: $m")
@@ -97,9 +97,9 @@ class ParquetStoreSpec extends AnyFunSuite {
     // an unfiltered UNPUSHABLE aggregate reads the whole manifest
     // (plain count() would be answered from the manifest with zero
     // files opened — the manifest-agg test pins that separately)
-    spark.table("graft.pqp_orders")
-      .agg(org.apache.spark.sql.functions.sum("o_totalprice")).collect()
-    val full = GraftScanMetrics.lastScan("graft.pqp_orders")
+    val full = scanMetrics(spark.table("graft.pqp_orders")
+      .agg(org.apache.spark.sql.functions.sum("o_totalprice")),
+      "graft.pqp_orders")
     assert(full.filesRead == full.filesTotal &&
       full.bytesRead == full.bytesTotal && full.filesRead > 0, s"$full")
     spark.sql("DROP TABLE graft.pqp_orders")
@@ -353,19 +353,19 @@ class ParquetStoreSpec extends AnyFunSuite {
     // legacy(B) + all new files
     val legacyB = v0.count(f =>
       f.key.getUTF8String(0).toString == "B")
-    assert(spark.table("graft.pse_t")
-      .where(col("p") === "B").count() == 30 + 1333)
-    val m1 = GraftScanMetrics.lastScan.get("graft.pse_t").get
+    val pB = spark.table("graft.pse_t").where(col("p") === "B")
+    assert(pB.count() == 30 + 1333)
+    val m1 = scanMetrics(pB, "graft.pse_t")
     assert(m1.filesRead == legacyB + newFiles.length,
       s"legacy per-spec pruning off: read ${m1.filesRead}, " +
         s"expected ${legacyB + newFiles.length} of ${m1.filesTotal}")
     // MEASURED new-spec prune: a k range inside ONE truncate range
     // keeps only that range's new files; every legacy file dies by
     // zone maps (their k max < 100000)
-    assert(spark.table("graft.pse_t")
+    val kRange = spark.table("graft.pse_t")
       .where(col("k") >= 101000L && col("k") < 101500L)
-      .count() == 500)
-    val m2 = GraftScanMetrics.lastScan.get("graft.pse_t").get
+    assert(kRange.count() == 500)
+    val m2 = scanMetrics(kRange, "graft.pse_t")
     assert(m2.filesRead < m2.filesTotal &&
       m2.filesRead <= newFiles.length,
       s"new-spec hidden pruning off: ${m2.filesRead}/${m2.filesTotal}")
@@ -447,16 +447,17 @@ class ParquetStoreSpec extends AnyFunSuite {
       "unpartitioned column opens only the files whose min/max can " +
       "match") {
     freshCatalog()
-    SparkEntry.queries("store_parquet_skip")(spark, sf).collect()
-    val m = GraftScanMetrics.lastScan("graft.pqs_orders")
+    val m = scanMetrics(SparkEntry.queries("store_parquet_skip")(spark, sf),
+      "graft.pqs_orders")
     assert(m.filesTotal > 1,
       s"need multiple files for a skipping readout: $m")
     assert(m.filesRead < m.filesTotal, s"zone maps skipped nothing: $m")
     assert(m.bytesRead < m.bytesTotal && m.bytesRead > 0, s"$m")
     // a predicate outside every file's range opens NOTHING
-    assert(spark.table("graft.pqs_orders")
-      .where(col("o_orderkey") < -1L).count() == 0)
-    val none = GraftScanMetrics.lastScan("graft.pqs_orders")
+    val impossible = spark.table("graft.pqs_orders")
+      .where(col("o_orderkey") < -1L)
+    assert(impossible.count() == 0)
+    val none = scanMetrics(impossible, "graft.pqs_orders")
     assert(none.filesRead == 0, s"impossible range still read: $none")
     spark.sql("DROP TABLE graft.pqs_orders")
   }
@@ -469,8 +470,7 @@ class ParquetStoreSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("GraftManifestAggScan"),
       s"expected the manifest agg scan in:\n$plan")
-    df.collect()
-    val m = GraftScanMetrics.lastScan("graft.pqagg_orders")
+    val m = scanMetrics(df, "graft.pqagg_orders")
     assert(m.filesTotal > 0 && m.filesRead == 0 && m.bytesRead == 0L,
       s"manifest aggregate opened files: $m")
     // correctness cross-check against the unpushed computation
@@ -590,11 +590,10 @@ class ParquetStoreSpec extends AnyFunSuite {
     freshCatalog()
     SparkEntry.queries("store_parquet_zorder")(spark, sf).collect()
     def skipped(c: String): (Int, Int) = {
-      spark.table("graft.pqz_orders")
+      val m = scanMetrics(spark.table("graft.pqz_orders")
         .where(col(c) < 100L)
-        .agg(org.apache.spark.sql.functions.sum("o_totalprice"))
-        .collect()
-      val m = GraftScanMetrics.lastScan("graft.pqz_orders")
+        .agg(org.apache.spark.sql.functions.sum("o_totalprice")),
+        "graft.pqz_orders")
       (m.filesRead, m.filesTotal)
     }
     val (ra, ta) = skipped("o_orderkey")
@@ -635,9 +634,8 @@ class ParquetStoreSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions
         .expr("percentile_approx(o_orderkey, 0.5)"))
       .collect()(0).getLong(0)
-    spark.table("graft.pqb_orders")
-      .where(col("o_orderkey") === aKey).collect()
-    val m = GraftScanMetrics.lastScan("graft.pqb_orders")
+    val m = scanMetrics(spark.table("graft.pqb_orders")
+      .where(col("o_orderkey") === aKey), "graft.pqb_orders")
     assert(m.filesTotal > 1, s"need multiple files: ${m.filesTotal}")
     assert(m.filesRead < m.filesTotal,
       s"bloom probe read all files: ${m.filesRead}/${m.filesTotal}")
@@ -651,9 +649,8 @@ class ParquetStoreSpec extends AnyFunSuite {
       .repartitionByRange(4, col("o_custkey"))
       .sortWithinPartitions("o_custkey")
       .writeTo("graft.pqb_ctrl").append()
-    spark.table("graft.pqb_ctrl")
-      .where(col("o_orderkey") === aKey).collect()
-    val c = GraftScanMetrics.lastScan("graft.pqb_ctrl")
+    val c = scanMetrics(spark.table("graft.pqb_ctrl")
+      .where(col("o_orderkey") === aKey), "graft.pqb_ctrl")
     assert(c.filesRead == c.filesTotal && c.filesTotal > 1,
       s"control should read every file: ${c.filesRead}/${c.filesTotal}")
     // correctness of the skip: the probe found the row
@@ -675,10 +672,9 @@ class ParquetStoreSpec extends AnyFunSuite {
       "it), and stays row-exact at mid-day boundaries") {
     freshCatalog()
     SparkEntry.queries("scan_hidden_days")(spark, sf).collect()
-    spark.table("graft.hpd_events")
+    val m = scanMetrics(spark.table("graft.hpd_events")
       .where(col("ts") >= org.apache.spark.sql.functions
-        .lit("2024-01-25 00:00:00").cast("timestamp")).collect()
-    val m = GraftScanMetrics.lastScan("graft.hpd_events")
+        .lit("2024-01-25 00:00:00").cast("timestamp")), "graft.hpd_events")
     assert(m.filesTotal >= 25,
       s"expected ~30 day-files: ${m.filesTotal}")
     assert(m.filesRead < m.filesTotal / 2,
@@ -691,10 +687,9 @@ class ParquetStoreSpec extends AnyFunSuite {
       "ts TIMESTAMP, user_id BIGINT, value DOUBLE) " +
       "PARTITIONED BY (days(ts))")
     spark.sql("INSERT INTO graft.hpd_mem SELECT * FROM hpd_events_src")
-    spark.table("graft.hpd_mem")
+    val mm = scanMetrics(spark.table("graft.hpd_mem")
       .where(col("ts") >= org.apache.spark.sql.functions
-        .lit("2024-01-25 00:00:00").cast("timestamp")).collect()
-    val mm = GraftScanMetrics.lastScan("graft.hpd_mem")
+        .lit("2024-01-25 00:00:00").cast("timestamp")), "graft.hpd_mem")
     assert(mm.totalPartitions >= 25,
       s"expected ~30 day groups: ${mm.totalPartitions}")
     assert(mm.keptPartitions < mm.totalPartitions / 2,
@@ -732,9 +727,8 @@ class ParquetStoreSpec extends AnyFunSuite {
       "PARTITIONED BY (truncate(256, o_orderkey)) " +
       "TBLPROPERTIES ('graft.store'='parquet')")
     spark.sql("INSERT INTO graft.hpt_pq SELECT * FROM hpt_orders_src")
-    spark.table("graft.hpt_pq")
-      .where(col("o_orderkey") < 200L).collect()
-    val m = GraftScanMetrics.lastScan("graft.hpt_pq")
+    val m = scanMetrics(spark.table("graft.hpt_pq")
+      .where(col("o_orderkey") < 200L), "graft.hpt_pq")
     assert(m.filesTotal > 2,
       s"need several range files: ${m.filesTotal}")
     assert(m.filesRead < m.filesTotal,
@@ -748,18 +742,16 @@ class ParquetStoreSpec extends AnyFunSuite {
       "o_orderstatus STRING, o_totalprice DOUBLE) " +
       "PARTITIONED BY (truncate(256, o_orderkey))")
     spark.sql("INSERT INTO graft.hpt_mem SELECT * FROM hpt_orders_src")
-    spark.table("graft.hpt_mem")
-      .where(col("o_orderkey") < 200L).collect()
-    val mm = GraftScanMetrics.lastScan("graft.hpt_mem")
+    val mm = scanMetrics(spark.table("graft.hpt_mem")
+      .where(col("o_orderkey") < 200L), "graft.hpt_mem")
     assert(mm.totalPartitions > 2,
       s"need several truncation ranges: ${mm.totalPartitions}")
     assert(mm.keptPartitions == 1,
       s"sub-width range must keep ONE range group: " +
         s"${mm.keptPartitions}/${mm.totalPartitions}")
     // equality probes exactly one truncation range
-    spark.table("graft.hpt_mem")
-      .where(col("o_orderkey") === 1200L).collect()
-    val me = GraftScanMetrics.lastScan("graft.hpt_mem")
+    val me = scanMetrics(spark.table("graft.hpt_mem")
+      .where(col("o_orderkey") === 1200L), "graft.hpt_mem")
     assert(me.keptPartitions <= 1,
       s"equality must keep at most one range: ${me.keptPartitions}")
     spark.sql("DROP TABLE graft.hpt_mem")
@@ -941,16 +933,16 @@ class ParquetStoreSpec extends AnyFunSuite {
       .agg(org.apache.spark.sql.functions.count(
         org.apache.spark.sql.functions.lit(1)).as("n"))
     assert(cnt.collect()(0).getLong(0) == bound)
-    val mCnt = GraftScanMetrics.lastScan("graft.pqdv_a")
+    val mCnt = scanReport(cnt, "graft.pqdv_a")
     assert(mCnt.filesRead == 0,
       s"COUNT(*) must stay manifest-answered under DVs: $mCnt")
     // MIN/MAX can no longer trust physical zone maps (the extreme row
     // may be deleted) — the scan opens files and computes exactly
-    val mx = spark.table("graft.pqdv_a").groupBy()
+    val mxDf = spark.table("graft.pqdv_a").groupBy()
       .agg(org.apache.spark.sql.functions.max("k").as("mx"))
-      .collect()(0).getLong(0)
+    val mx = mxDf.collect()(0).getLong(0)
     assert(mx == bound - 1, s"MAX must reflect the DV: $mx")
-    val mMax = GraftScanMetrics.lastScan("graft.pqdv_a")
+    val mMax = scanReport(mxDf, "graft.pqdv_a")
     assert(mMax.filesRead > 0,
       s"MAX on a DV'd table must not be manifest-answered: $mMax")
     spark.sql("DROP TABLE graft.pqdv_a")
@@ -1110,8 +1102,8 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(files1.exists(_ eq dvd.head),
       "the DV'd file must survive by reference")
     // merged files keep the partition-key grouping: pruning still works
-    spark.table("graft.pqbp_t").where(col("p") === "x").count()
-    val m = GraftScanMetrics.lastScan("graft.pqbp_t")
+    val m = scanMetrics(spark.table("graft.pqbp_t").where(col("p") === "x"),
+      "graft.pqbp_t")
     assert(m.filesRead < m.filesTotal,
       s"partition pruning must survive the pack: $m")
     val post = spark.table("graft.pqbp_t").orderBy("k")
@@ -1563,8 +1555,8 @@ class ParquetStoreSpec extends AnyFunSuite {
         (0L until 100).map(_ + 10000000000L).sum, sums)
     assert(sums.getDouble(1) == 0.0 && sums.getDouble(2) == 99.0)
     // zone maps prune pre-widen files through the BIGINT predicate
-    spark.table("graft.widp_t").where("k < 500").collect()
-    val m = GraftScanMetrics.lastScan("graft.widp_t")
+    val m = scanMetrics(spark.table("graft.widp_t").where("k < 500"),
+      "graft.widp_t")
     assert(m.filesTotal >= 3 && m.filesRead < m.filesTotal,
       s"widened-domain pruning opened every file: $m")
     // the equality probe beyond INT range prunes the narrow files
@@ -1576,8 +1568,8 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(spark.table("graft.widp_t").count() == 2100)
     assert(spark.table("graft.widp_t").schema("k").dataType ==
       org.apache.spark.sql.types.LongType)
-    spark.table("graft.widp_t").where("k < 500").collect()
-    val m2 = GraftScanMetrics.lastScan("graft.widp_t")
+    val m2 = scanMetrics(spark.table("graft.widp_t").where("k < 500"),
+      "graft.widp_t")
     assert(m2.filesRead < m2.filesTotal,
       s"pruning lost after replay: $m2")
     // ---- refusal matrix
@@ -1648,8 +1640,9 @@ class ParquetStoreSpec extends AnyFunSuite {
           "FROM range(30000)")
     } finally spark.conf.set(coalesceKey, coalesceWas)
     def prunes(tag: String): Unit = {
-      assert(spark.table("graft.tso_p").where("k < 1000").count() > 0)
-      val m = GraftScanMetrics.lastScan("graft.tso_p")
+      val low = spark.table("graft.tso_p").where("k < 1000")
+      assert(low.count() > 0)
+      val m = scanMetrics(low, "graft.tso_p")
       assert(m.filesTotal >= 3 && m.filesRead < m.filesTotal,
         s"$tag: sort-order pruning opened every file: $m")
     }

@@ -651,14 +651,25 @@ class PlanSpec extends AnyFunSuite {
       s"a single-partition exchange feeds on more than the head:\n$p")
   }
 
+  /** executed plan of the one row-level statement (MERGE, DELETE or
+    * UPDATE, i.e. an analyzed ReplaceData / WriteDelta) query `id` ran */
+  private def rowLevelPlan(id: String): String = {
+    val ps = commandPlans { SparkEntry.queries(id)(spark, sf).count(); () }
+      .filter(_.analyzed.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.RowLevelWrite])
+      .map(_.executedPlan.toString)
+    assert(ps.length == 1,
+      s"$id ran ${ps.length} row-level statements:\n${ps.mkString("\n")}")
+    ps.head
+  }
+
   test("merge_into goes through Spark's native row-level MERGE planner") {
     // the id must exercise the REAL MERGE INTO path — analysis, the
     // cardinality check, and Catalyst's group-based copy-on-write
     // rewrite — not a relational re-expression: the executed plan of
     // the statement must carry ReplaceData (the row-level write node)
     // over a MergeRows operator joining the v2 target relation.
-    SparkEntry.queries("merge_into")(spark, sf).count()
-    val p = operators.MergeOps.lastMergePlan
+    val p = rowLevelPlan("merge_into")
     assert(p.contains("ReplaceData"),
       s"merge did not plan as a row-level ReplaceData write:\n$p")
     assert(p.contains("MergeRows"),
@@ -671,8 +682,7 @@ class PlanSpec extends AnyFunSuite {
     // rewrite as MERGE — not fall back to an error or a relational
     // re-expression
     for (id <- Seq("sql_delete", "sql_update")) {
-      SparkEntry.queries(id)(spark, sf).count()
-      val p = operators.MergeOps.lastRowLevelPlans(id)
+      val p = rowLevelPlan(id)
       assert(p.contains("ReplaceData"),
         s"$id did not plan as a row-level ReplaceData write:\n$p")
     }
@@ -686,8 +696,7 @@ class PlanSpec extends AnyFunSuite {
     // plan Delta and Iceberg produce); both lake-format shapes are now
     // covered and pinned: ReplaceData above, WriteDelta here
     for (id <- Seq("merge_into_mor", "sql_delete_mor")) {
-      SparkEntry.queries(id)(spark, sf).count()
-      val p = operators.MergeOps.lastRowLevelPlans(id)
+      val p = rowLevelPlan(id)
       assert(p.contains("WriteDelta"),
         s"$id did not plan as a delta-based WriteDelta write:\n$p")
       assert(!p.contains("ReplaceData"),

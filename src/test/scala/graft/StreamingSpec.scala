@@ -1104,8 +1104,9 @@ class StreamingSpec extends AnyFunSuite {
       assert(parts == Seq(("a", 2L), ("b", 2L)),
         s"streamed partition counts wrong: $parts")
       // the partitioned scan of the streamed table still prunes
-      spark.table("graft.spart_sink").where(col("p") === "a").count()
-      val m = graft.sources.GraftScanMetrics.lastScan("graft.spart_sink")
+      val m = scanMetrics(
+        spark.table("graft.spart_sink").where(col("p") === "a"),
+        "graft.spart_sink")
       assert(m.totalPartitions == 2 && m.keptPartitions == 1,
         s"pruning over the streamed table wrong: $m")
       // each epoch was one stream-append commit

@@ -71,6 +71,46 @@ class TableStateSpec extends AnyFunSuite {
     spark.sql(s"DROP TABLE $t")
   }
 
+  test("a commit whose log write fails leaves the last durable " +
+      "snapshot readable") {
+    val t = "graft.tss_failed_write"
+    parquetTable(t, 20)
+    val before = GraftTableStore.get(t).map(_.toString).sorted.toSeq
+    assert(before.length == 20)
+    // a foreign writer takes every claimed slot before our content
+    // lands: each attempt's log write fails after the in-memory apply
+    GraftLog.claimStallHook = Some(claim => { claim.delete(); () })
+    val ex = try intercept[Exception] {
+      spark.sql(s"INSERT INTO $t SELECT id + 100, 'c' FROM range(5)")
+    } finally GraftLog.claimStallHook = None
+    assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[GraftConcurrentCommitException]), ex)
+    // read lock-free right after the failure, with no catalog touch
+    val after = GraftTableStore.get(t).map(_.toString).sorted.toSeq
+    assert(after == before, s"read ${after.length} rows, not the " +
+      s"${before.length} durable ones")
+    assert(rowsOf(t).length == 20)
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("the unloaded-table reference memo drops a table directory " +
+      "that is gone") {
+    val t = "graft.tss_gone"
+    parquetTable(t, 10)
+    GraftLog.simulateProcessRestart(Seq(t))
+    val dir = GraftWarehouse.tableDir(t)
+    assert(GraftLog.unloadedFileRefs(_ != t).nonEmpty)
+    assert(GraftLog.unloadedRefCache.contains(dir.getAbsolutePath))
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm))
+      f.delete(); ()
+    }
+    rm(dir)
+    GraftLog.unloadedFileRefs(_ != t)
+    assert(!GraftLog.unloadedRefCache.contains(dir.getAbsolutePath),
+      "a deleted table directory kept its memo entry")
+  }
+
   test("lock-free reads racing repeated installs always see the full " +
       "table") {
     val t = "graft.tss_race"
