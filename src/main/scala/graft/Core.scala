@@ -1,10 +1,14 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, TimeoutException}
+
+import scala.collection.mutable.ArrayBuffer
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -34,15 +38,47 @@ trait QueryModule {
   def oracles: Map[String, String]
 }
 
+/** An eager local checkpoint of a frame with aggregates observed on the
+  * job that writes it (`Dataset.observe`): a count or a diagnostic over
+  * a frame the code snapshots anyway costs no job of its own. */
+private[graft] object Snapshot {
+  /** Bound on the wait for the observed row. The writing job has ended
+    * when the checkpoint returns; only the listener bus that delivers
+    * the row is still in flight, so the bound is never reached unless
+    * the observation was lost. */
+  private val ObservedWait = 60.seconds
+
+  /** `frame`, checkpointed eagerly, and the row of `metrics` over it. */
+  def observed(frame: DataFrame, metric: Column,
+      metrics: Column*): (DataFrame, Row) = {
+    val obs = Observation()
+    val snap = frame.observe(obs, metric, metrics: _*).localCheckpoint()
+    (snap, awaitRow(obs))
+  }
+
+  private[graft] def awaitRow(obs: Observation,
+      bound: FiniteDuration = ObservedWait): Row = {
+    val row = try Await.result(obs.future, bound)
+      catch { case e: TimeoutException =>
+        throw new IllegalStateException(s"observation ${obs.name} " +
+          s"was not delivered within $bound", e)
+      }
+    require(row.length > 0,
+      s"observation ${obs.name} completed without its metrics")
+    row
+  }
+}
+
 /** Size gate for the local solves (connected components, graph_bfs, MMR
   * rerank, BPE fit). Each site has an exact single-task or driver-side
   * solve and a distributed twin with identical results, and picks one
-  * from the size of a frame it has ALREADY materialized, so the count is
-  * one cheap job, not a re-evaluation: at `rows × weight ≤ budget` the
-  * local solve runs, above it the distributed path — the one that scales
-  * to any input — runs unchanged. Budgets are per-site constants sized to
-  * what one task or the driver holds comfortably; no conf changes them.
-  * Every decision is logged once at INFO under `graft.Gate`. */
+  * from the size of the frame it checkpoints: [[snapshot]] observes the
+  * row count on the job that writes the checkpoint, so the gate costs
+  * no job. At `rows × weight ≤ budget` the local solve runs, above it
+  * the distributed path — the one that scales to any input — runs
+  * unchanged. Budgets are per-site constants sized to what one task or
+  * the driver holds comfortably; no conf changes them. Every decision
+  * is logged once at INFO under `graft.Gate`. */
 private[graft] object Gate {
   final case class Decision(rows: Long, local: Boolean)
 
@@ -51,16 +87,19 @@ private[graft] object Gate {
   /** gates that [[distributed]] turned from local to distributed */
   private[graft] val overrides = new java.util.concurrent.atomic.AtomicLong
 
-  def apply(site: String, frame: DataFrame, budget: Long,
-      weight: Long = 1L): Decision = {
-    val rows = frame.count()
+  /** `frame` checkpointed eagerly, and the gate's decision on its row
+    * count. */
+  def snapshot(site: String, frame: DataFrame, budget: Long,
+      weight: Long = 1L): (DataFrame, Decision) = {
+    val (snap, m) = Snapshot.observed(frame, count(lit(1)).as("rows"))
+    val rows = m.getLong(0)
     // rows·w ≤ budget without the overflow of the product
     val fits = rows <= budget / math.max(weight, 1L)
     val local = fits && !forced.value
     if (fits && !local) overrides.incrementAndGet()
     log.info(s"$site: ${if (local) "local" else "distributed"} ($rows rows" +
       s" × $weight vs budget $budget${if (fits && !local) ", forced" else ""})")
-    Decision(rows, local)
+    (snap, Decision(rows, local))
   }
 
   /** Test hook: every gate evaluated inside `body` (on this thread) takes
@@ -71,8 +110,13 @@ private[graft] object Gate {
 
 /** The local session the dev mains (Bench, Verify, RunOne) run in:
   * `local[$SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
-  * partitions, UTC session time, no UI and WARN logging. */
+  * partitions, UTC session time, no UI, WARN logging, and a
+  * generated-class cache of [[CodegenCacheEntries]] instead of Spark's
+  * 100 (README, "Deployment: the generated-code cache"). */
 private[graft] object LocalSession {
+  /** a static conf: it takes effect only in the JVM's first session */
+  val CodegenCacheEntries = 1000
+
   def apply(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -80,6 +124,8 @@ private[graft] object LocalSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
@@ -89,12 +135,31 @@ private[graft] object LocalSession {
 /** What a capped candidate path dropped — the shingle maxDf cap
   * (`TextOps.prunePostings`) and the LSH bucket budget
   * (`VectorOps.cappedBucketPairs`) — logged at WARN under `graft.Drops`,
-  * so no cap drops recall silently. */
+  * so no cap drops recall silently. Both counts are exact: each site
+  * observes them on the job that writes its ranked checkpoint. */
 private[graft] object Drops {
-  private val log = org.slf4j.LoggerFactory.getLogger("graft.Drops")
+  /** `groups` posting lists or buckets past the cap, holding `rows`
+    * dropped or sampled-away member rows */
+  final case class Drop(tag: String, groups: Long, rows: Long)
 
-  def apply(tag: String, what: String): Unit =
-    log.warn(s"[graft] $tag: $what")
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.Drops")
+  private val recording =
+    new scala.util.DynamicVariable[Option[ArrayBuffer[Drop]]](None)
+
+  /** Log a nonzero drop, described by `what`. */
+  def apply(d: Drop, what: String): Unit =
+    if (d.groups > 0) {
+      recording.value.foreach(_ += d)
+      log.warn(s"[graft] ${d.tag}: $what")
+    }
+
+  /** Test hook: `body`'s result and the drops it reported on this
+    * thread. */
+  private[graft] def recorded[A](body: => A): (A, Seq[Drop]) = {
+    val buf = ArrayBuffer.empty[Drop]
+    val a = recording.withValue(Some(buf))(body)
+    (a, buf.toSeq)
+  }
 }
 
 /** The one memo for values computed once per session and reused by later

@@ -618,8 +618,10 @@ object AnalyticsOps extends QueryModule {
       // materialized ONCE: the copurchase subtree (scan + distinct +
       // self-join + support agg) used to re-evaluate for the gate count
       // AND again per consumer leg — the exact multi-leg re-evaluation
-      // the r15 round fixed elsewhere with localCheckpoint (r15 ADVICE)
-      val e = copurchaseEdges(s, d).localCheckpoint(true)
+      // the r15 round fixed elsewhere with localCheckpoint (r15 ADVICE);
+      // the gate's count rides the checkpoint's own job
+      val (e, gate) = Gate.snapshot("graph_bfs", copurchaseEdges(s, d),
+        BfsLocalSolveMaxEdges)
       // size-gated exact local solve (the GraphOps/CC pattern): the
       // support-filtered co-purchase graph is a tiny residual at test
       // SF — 6 relax rounds of join+union+agg+checkpoint are pure job
@@ -628,7 +630,7 @@ object AnalyticsOps extends QueryModule {
       // the identical BFS (source = max-degree hub, ties min id; dist
       // = min over ≤6 hops); above it the distributed frontier loop is
       // the parts-scale path.
-      if (Gate("graph_bfs", e, BfsLocalSolveMaxEdges).local) {
+      if (gate.local) {
         import s.implicits._
         val out = e.select(col("a"), col("b")).as[(Long, Long)]
           .coalesce(1)

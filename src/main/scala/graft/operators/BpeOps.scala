@@ -193,8 +193,9 @@ object BpeOps extends QueryModule {
     * local fit above; larger ones run the unrolled relational rounds. */
   private[graft] def trainChain(docs: DataFrame): (DataFrame, DataFrame) = {
     val spark = docs.sparkSession
-    val words = wordCounts(docs).localCheckpoint()
-    if (Gate("bpeTrain", words, LocalFitMaxWords).local) {
+    val (words, gate) =
+      Gate.snapshot("bpeTrain", wordCounts(docs), LocalFitMaxWords)
+    if (gate.local) {
       val rows = words.collect()
         .map(r => (r.getString(0), r.getLong(1)))
       return localFit(spark, rows)

@@ -181,12 +181,15 @@ object GraphOps {
     */
   def connectedComponents(nodes: DataFrame, pairs: DataFrame,
       rounds: Int = 16): DataFrame = {
-    val outerEdges = pairs
-      .select(col("id1").as("a"), col("id2").as("b"))
-      .union(pairs.select(col("id2").as("a"), col("id1").as("b")))
-      .localCheckpoint(true)
+    // both directions of each pair from ONE pass over `pairs` (a union
+    // would evaluate the caller's join-and-verify pipeline twice)
+    val (outerEdges, gate) = Gate.snapshot("connectedComponents",
+      pairs.select(explode(array(
+          struct(col("id1").as("a"), col("id2").as("b")),
+          struct(col("id2").as("a"), col("id1").as("b")))).as("e"))
+        .select(col("e.a").as("a"), col("e.b").as("b")),
+      LocalSolveMaxEdges)
     val spark = outerEdges.sparkSession
-    val gate = Gate("connectedComponents", outerEdges, LocalSolveMaxEdges)
     if (gate.local) {
       val labels = localSolve(outerEdges).localCheckpoint(true)
       outerEdges.unpersist()

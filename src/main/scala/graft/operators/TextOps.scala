@@ -1,7 +1,7 @@
 package graft.operators
 
-import graft.{Drops, Q, QueryModule, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.{Drops, Q, QueryModule, Snapshot, Tables}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -216,10 +216,10 @@ object TextOps extends QueryModule {
     * strictly lower — pinned by a test asserting a zero drop count on
     * the test corpus; the knob (`spark.graft.shingle.maxDf`, ≤ 0
     * disables) parameterizes production, where the right value tracks
-    * the boilerplate df knee, O(100) on web corpora. Cost: one
-    * O(postings) count aggregation over the already-checkpointed
-    * shingle frame + an O(distinct shingles) semi-join that shares the
-    * candidate join's `tok` partitioning.
+    * the boilerplate df knee, O(100) on web corpora. Cost: the
+    * window that counts df over the checkpointed postings, which
+    * shares the candidate join's `tok` partitioning; the drop counts
+    * ride that checkpoint's job.
     *
     * df counts the docs holding `tokCol` in `post`, so its meaning is
     * the caller's: [[ngramCandidates]] passes prefix postings and caps
@@ -232,21 +232,28 @@ object TextOps extends QueryModule {
       .getOption("spark.graft.shingle.maxDf").map(_.toInt).getOrElse(64)
     if (cap <= 0) return post
     // ONE tok-keyed shuffle (the cappedBucketPairs shape): the per-token
-    // df rides an unordered window over the same hashpartitioning(tok)
-    // the downstream candidate join needs, and the localCheckpoint pins
-    // both the rows and that partitioning — the self-join over the
-    // snapshot adds no exchange of its own, and the postings explode is
-    // computed once instead of once per join side. The eager drop
-    // diagnostic (exact at build time, by contract) is a cached-block
-    // scan, not a second pass over the inputs; the snapshot's blocks are
-    // released by the ContextCleaner when the result is dropped.
-    val ranked = post.withColumn("__df",
-      count(lit(1)).over(Window.partitionBy(tokCol))).localCheckpoint()
-    val over = ranked.where(col("__df") > cap)
-      .agg(countDistinct(col(tokCol)).as("nt"), count(lit(1)).as("np"))
-      .collect()(0)
-    if (over.getLong(0) > 0)
-      Drops(tag, s"maxDf=$cap dropped " +
+    // df rides a window over the same hashpartitioning(tok) the
+    // downstream candidate join needs, and the localCheckpoint pins both
+    // the rows and that partitioning — the self-join over the snapshot
+    // adds no exchange of its own, and the postings explode is computed
+    // once instead of once per join side. The drop diagnostic (exact at
+    // build time, by contract) is observed on the checkpoint's own job:
+    // each list past the cap has exactly one row numbered cap+1 (the
+    // window orders by tok alone, so the numbering is arbitrary within
+    // a list, but its length is not; it is observed, not stored in the
+    // snapshot). The snapshot's blocks are released by the
+    // ContextCleaner when the result is dropped.
+    val w = Window.partitionBy(tokCol).orderBy(col(tokCol))
+    val obs = Observation()
+    val ranked = post.withColumn("__df", count(lit(1)).over(
+          w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
+      .withColumn("__rn", row_number().over(w))
+      .observe(obs, count(when(col("__rn") === cap.toLong + 1, 1)).as("nt"),
+        count(when(col("__df") > cap, 1)).as("np"))
+      .drop("__rn").localCheckpoint()
+    val over = Snapshot.awaitRow(obs)
+    Drops(Drops.Drop(tag, over.getLong(0), over.getLong(1)),
+      s"maxDf=$cap dropped " +
         s"${over.getLong(0)} shingle posting list(s) " +
         s"(${over.getLong(1)} postings) from candidate generation — " +
         "pairs sharing ONLY ubiquitous shingles are not proposed " +

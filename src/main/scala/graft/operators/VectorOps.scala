@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{Drops, Gate, Q, QueryModule, SessionMemo, Tables}
+import graft.{Drops, Gate, Q, QueryModule, SessionMemo, Snapshot, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -78,42 +78,43 @@ object VectorOps extends QueryModule {
       // the growing selection each step: selected_t names selected_{t-1}
       // three times (max-sim join, anti-join, union), so an unbroken
       // lineage is 3^k plan nodes — the GraphOps fixpoint lesson.
-      val pool = e.where(col("embedding").isNotNull)
-        .crossJoin(broadcast(q.where(col("q_emb").isNotNull)))
-        .where(if (excludeSelf) col("vec_id") =!= col("q_id") else lit(true))
-        .select(col("q_id"), col("vec_id"),
-          dot(col("q_emb"), col("embedding")).as("qs"))
-        .withColumn("rn", row_number().over(wq))
-        .where(col("rn") <= poolSize).drop("rn")
-        .localCheckpoint()
-      val pe = pool.join(e, "vec_id")
-      val pairs = pe.select(col("q_id"), col("vec_id").as("c1"),
-          col("embedding").as("e1"))
-        .join(pe.select(col("q_id"), col("vec_id").as("c2"),
-          col("embedding").as("e2")), Seq("q_id"))
-        .where(col("c1") =!= col("c2"))
-        .select(col("q_id"), col("c1"), col("c2"),
-          dot(col("e1"), col("e2")).as("cs"))
-        .localCheckpoint()
       // Size-gated exact greedy (round 15, the GraphOps local-solve
-      // pattern): the pool is O(queries · poolSize) BY CONSTRUCTION and
-      // both frames are already materialized with every double (qs, cs)
-      // computed by the same codegen dot the relational steps would
-      // read, so when the pool fits the gate the k-step argmax loop runs
-      // driver-side over those exact doubles — λ·qs − λC·max(cs) with
-      // identical IEEE arithmetic, ties on vec_id — instead of paying
-      // k × (2 joins + window + checkpoint) of job latency; a
-      // million-query batch rerank takes the unrolled relational chain.
-      // The gate weighs the COLLECTED volume, pool rows × poolSize (the
-      // pairs frame), not pool rows alone: a wide poolSize must not pull
-      // hundreds of millions of pairs to the driver (r15 ADVICE).
-      if (Gate("mmrRerank", pool, MmrLocalSolveMaxVolume, poolSize).local) {
-        val ps = pool.select(col("q_id"), col("vec_id"), col("qs"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        val sims = pairs.select(col("q_id"), col("c1"), col("c2"), col("cs"))
-          .collect()
-          .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)),
-            r.getDouble(3))).toMap
+      // pattern): the pool is O(queries · poolSize) BY CONSTRUCTION, so
+      // when it fits the gate the k-step argmax loop runs driver-side —
+      // λ·qs − λC·max(cs) with identical IEEE arithmetic, ties on
+      // vec_id — instead of paying k × (2 joins + window + checkpoint)
+      // of job latency; a million-query batch rerank takes the unrolled
+      // relational chain. The gate weighs the COLLECTED volume, pool
+      // rows × poolSize (the pairwise similarities), not pool rows
+      // alone: a wide poolSize must not pull hundreds of millions of
+      // pairs to the driver (r15 ADVICE).
+      val (pool, gate) = Gate.snapshot("mmrRerank",
+        e.where(col("embedding").isNotNull)
+          .crossJoin(broadcast(q.where(col("q_emb").isNotNull)))
+          .where(if (excludeSelf) col("vec_id") =!= col("q_id")
+            else lit(true))
+          .select(col("q_id"), col("vec_id"),
+            dot(col("q_emb"), col("embedding")).as("qs"))
+          .withColumn("rn", row_number().over(wq))
+          .where(col("rn") <= poolSize).drop("rn"),
+        MmrLocalSolveMaxVolume, poolSize)
+      val pe = pool.join(e, "vec_id")
+      if (gate.local) {
+        // one collect of the pool with its embeddings; qs comes from the
+        // codegen dot, cs from the same arithmetic on the driver
+        val ps = pe.select(col("q_id"), col("vec_id"), col("qs"),
+            col("embedding"))
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+            r.getSeq[Float](3).toArray))
+        // DotProductF's arithmetic: float→double products summed in
+        // index order, so every cs is the double the pairs frame holds
+        def cosSim(a: Array[Float], b: Array[Float]): Double = {
+          val n = math.min(a.length, b.length)
+          var acc = 0.0
+          var i = 0
+          while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+          acc
+        }
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
         // Spark's window ordering treats NaN as GREATER than every other
         // double (and all NaNs equal, −0.0 equal to 0.0); every local
@@ -126,6 +127,7 @@ object VectorOps extends QueryModule {
           else if (b.isNaN) -1
           else if (a > b) 1 else if (a < b) -1 else 0
         ps.groupBy(_._1).toSeq.foreach { case (qid, cands) =>
+          val emb = cands.map(c => c._2 -> c._4).toMap
           // step 1 = max qs (NaN greatest), ties min vec_id (the rn=1 row)
           val ordered = cands.sortWith { (x, y) =>
             val c = scoreCmp(x._3, y._3)
@@ -138,12 +140,12 @@ object VectorOps extends QueryModule {
           while (step <= k && remaining.nonEmpty) {
             var bestId = -1L
             var bestScore = Double.NegativeInfinity
-            remaining.foreach { case (_, cid, qs) =>
+            remaining.foreach { case (_, cid, qs, _) =>
               var ms = Double.NegativeInfinity
               selectedIds.foreach { sid =>
                 // scoreCmp also mirrors the relational max("cs"):
                 // Spark's max puts NaN above every other double
-                val cs = sims((qid, cid, sid))
+                val cs = cosSim(emb(cid), emb(sid))
                 if (scoreCmp(cs, ms) > 0) ms = cs
               }
               val score = lambda * qs - lambdaC * ms
@@ -161,6 +163,14 @@ object VectorOps extends QueryModule {
         import e.sparkSession.implicits._
         return out.toSeq.toDF("q_id", "vec_id", "rank")
       }
+      val pairs = pe.select(col("q_id"), col("vec_id").as("c1"),
+          col("embedding").as("e1"))
+        .join(pe.select(col("q_id"), col("vec_id").as("c2"),
+          col("embedding").as("e2")), Seq("q_id"))
+        .where(col("c1") =!= col("c2"))
+        .select(col("q_id"), col("c1"), col("c2"),
+          dot(col("e1"), col("e2")).as("cs"))
+        .localCheckpoint()
       var selected = pool
         .withColumn("rn", row_number().over(wq))
         .where(col("rn") === 1)
@@ -499,25 +509,21 @@ object VectorOps extends QueryModule {
       cap: Int = BucketCandidateCap, dedup: Boolean = true): DataFrame = {
     // ONE scan of `keyed`: the ranked projection (ids + bucket keys +
     // per-bucket rank — no payload columns) is localCheckpoint'ed
-    // eagerly, then BOTH the never-silent-drop diagnostic and the
-    // pair self-join read the snapshot. The window shuffle — the
-    // expensive part — runs exactly once; the snapshot's RDD blocks
-    // are released by the ContextCleaner when the result is dropped
-    // (no cacheManager entry to leak across the 350-query drive).
-    val ranked = keyed
-      .withColumn("__hr", row_number().over(Window.partitionBy(keyCol)
-        .orderBy(xxhash64(col(idCol), col(keyCol)))))
-      .localCheckpoint()
-    // the diagnostic stays EAGER by contract (the drop count must be
-    // exact at build time, logged before anyone consumes the feed) —
-    // over the snapshot it is a cheap cached-block scan, not a second
-    // pass over the inputs
-    val over = ranked.where(col("__hr") > cap)
-      .agg(countDistinct(col(keyCol)).as("nb"),
-        count(lit(1)).as("dropped"))
-      .collect()(0)
-    if (over.getLong(0) > 0)
-      Drops(tag, s"${over.getLong(0)} bucket(s) " +
+    // eagerly, and the pair self-join reads the snapshot. The window
+    // shuffle — the expensive part — runs exactly once; the snapshot's
+    // RDD blocks are released by the ContextCleaner when the result is
+    // dropped (no cacheManager entry to leak across the 350-query
+    // drive). The never-silent-drop diagnostic is observed on the
+    // checkpoint's own job, exact and logged before anyone consumes the
+    // feed: each bucket past the budget has exactly one row ranked
+    // cap+1, and every row ranked past cap is a sampled-away slot.
+    val (ranked, over) = Snapshot.observed(
+      keyed.withColumn("__hr", row_number().over(Window.partitionBy(keyCol)
+        .orderBy(xxhash64(col(idCol), col(keyCol))))),
+      count(when(col("__hr") === cap.toLong + 1, 1)).as("nb"),
+      count(when(col("__hr") > cap, 1)).as("dropped"))
+    Drops(Drops.Drop(tag, over.getLong(0), over.getLong(1)),
+      s"${over.getLong(0)} bucket(s) " +
         s"past the $cap-member candidate budget — ${over.getLong(1)} " +
         "member slot(s) degraded to hash-deterministic sampling " +
         "(recall within those buckets is sampled, never silently so)")

@@ -24,9 +24,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * blind-append rebase). Subtypes IllegalStateException so callers
   * (and pins) that match the broad type keep working; the retry layer
   * alone discriminates. Delta models the same split with
-  * ConcurrentModificationException subclasses. */
-final class GraftConcurrentCommitException(msg: String)
-  extends IllegalStateException(msg)
+  * ConcurrentModificationException subclasses. `installed` is the
+  * table's record after a single-table commit installed the disk truth
+  * in answer to the conflict: the state the retry classifies on, with
+  * no second replay of the log. */
+final class GraftConcurrentCommitException(msg: String,
+    private[sources] val installed: Option[GraftTableStore.TableState] = None,
+    cause: Throwable = null)
+  extends IllegalStateException(msg, cause)
 
 /** The WAREHOUSE ROOT: the one stable directory governed tables and
   * catalog sidecars live under — what makes a table findable again
@@ -1042,11 +1047,16 @@ object GraftLog {
     t
   }
 
+  /** log replays so far, for the specs that pin how often a commit
+    * path reads the whole log */
+  private[graft] val replays = new java.util.concurrent.atomic.AtomicLong
+
   /** parse a table's on-disk log into a [[Replayed]] state WITHOUT
     * installing anything — pure read (it may only collect a crashed
     * zero-byte tail claim, exactly as attach does). */
   private[sources] def replayByName(storeName: String)
       : Option[Replayed] = {
+    replays.incrementAndGet()
     val dir = GraftWarehouse.tableDir(storeName)
     val ld = logDir(dir.getAbsolutePath)
     var entries = Option(ld.listFiles()).getOrElse(Array.empty[File])

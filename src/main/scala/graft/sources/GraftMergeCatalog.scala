@@ -621,9 +621,14 @@ object GraftTableStore {
     // cross-process OCC, BEFORE the in-memory apply: a foreign
     // process's entries on disk past our counter mean this process's
     // view of the table is stale — refuse while state is still
-    // consistent (the atomic entry claim backstops the residual race)
+    // consistent (the atomic entry claim backstops the residual race),
+    // with the disk truth installed when the log replays
     if (logIt && GraftParquetStore.isBacked(name))
-      GraftLog.verifyTail(name)
+      try GraftLog.verifyTail(name)
+      catch {
+        case e: GraftConcurrentCommitException =>
+          throw installDiskTruth(name).fold(e)(rebased(e, _))
+      }
     val s = current(name)
     val h = s.history
     val head = h.commitCount - 1
@@ -723,16 +728,32 @@ object GraftTableStore {
           // entries included, with one put, so a lock-free reader never
           // sees the table empty; evict (the next catalog touch
           // replays) only when the replay itself fails.
-          try GraftLog.replayByName(name) match {
-            case Some(r) => GraftLog.install(name, r)
-            case None => evict(name, keepEpochs = true)
-          } catch {
-            case _: Throwable => evict(name, keepEpochs = true)
-          }
-          throw t
+          val installed = installDiskTruth(name)
+          if (installed.isEmpty) evict(name, keepEpochs = true)
+          throw ((t, installed) match {
+            case (e: GraftConcurrentCommitException, Some(st)) =>
+              rebased(e, st)
+            case _ => t
+          })
       }
     }
   }
+
+  /** After a commit conflict: replay the log once and install the disk
+    * truth, foreign entries included, with one put. The installed
+    * record, or None when the log does not replay (the caller's state
+    * is then left as it is). */
+  private def installDiskTruth(name: String): Option[TableState] =
+    try GraftLog.replayByName(name).map { r =>
+      GraftLog.install(name, r)
+      current(name)
+    } catch { case _: Throwable => None }
+
+  /** `e` carrying the record installed in answer to it — what the
+    * conflict retries classify on. */
+  private def rebased(e: GraftConcurrentCommitException,
+      st: TableState): GraftConcurrentCommitException =
+    new GraftConcurrentCommitException(e.getMessage, Some(st), e)
 
   /** retention trim to the last `keep` versions of `appended` — MUST
     * run under [[lock]]. Shared by the per-commit cap and the explicit
@@ -881,12 +902,12 @@ object GraftTableStore {
     * from ours (two writers touching the same row is the genuine
     * conflict every format refuses); anything else (CoW rewrites,
     * overwrites, restores, evolution) refuses. */
-  private def deltaRebaseOk(peek: GraftLog.Replayed, baseHead: Int,
+  private def deltaRebaseOk(st: TableState, baseHead: Int,
       baseMeta: Option[GraftParquetStore.Meta],
       ourIds: Set[Any], idOrd: Int,
       idType: org.apache.spark.sql.types.DataType): Boolean = {
-    if (!baseMeta.map(metaSig).contains(metaSig(peek.m))) return false
-    val h = peek.h
+    if (!sameMeta(baseMeta, st.meta)) return false
+    val h = st.history
     if (h.firstRetained > baseHead + 1) return false // expired interleave
     ((baseHead + 1) until h.commitCount).forall { v =>
       val rel = v - h.firstRetained
@@ -948,12 +969,10 @@ object GraftTableStore {
           case e: GraftConcurrentCommitException =>
             attempts += 1
             if (branch.isDefined || attempts > MaxAppendRetries) throw e
-            val peek =
-              (try GraftLog.replayByName(name)
-              catch { case _: Throwable => throw e }).getOrElse(throw e)
-            if (!deltaRebaseOk(peek, baseHead, baseMeta,
+            // classify on the disk truth appendLocked installed
+            val st = e.installed.getOrElse(throw e)
+            if (!deltaRebaseOk(st, baseHead, baseMeta,
                 ourIds.toSet, idOrd, idType)) throw e
-            GraftLog.install(name, peek)
             false // loop: recompute the count on the foreign head
         }
       }
@@ -1096,11 +1115,11 @@ object GraftTableStore {
     * is usually an application bug worth surfacing). Metadata
     * evolution always refuses (the staged files were written under
     * the old schema/spec). */
-  private def appendInterleaveOk(peek: GraftLog.Replayed,
+  private def appendInterleaveOk(st: TableState,
       baseHead: Int,
       baseMeta: Option[GraftParquetStore.Meta]): Boolean = {
-    if (!baseMeta.map(metaSig).contains(metaSig(peek.m))) return false
-    val h = peek.h
+    if (!sameMeta(baseMeta, st.meta)) return false
+    val h = st.history
     if (h.firstRetained > baseHead + 1) return false
     ((baseHead + 1) until h.commitCount).forall { v =>
       val rel = v - h.firstRetained
@@ -1180,24 +1199,20 @@ object GraftTableStore {
             if (!retryable || attempts > MaxAppendRetries ||
                 cur.isEmpty || baseMeta.isEmpty || baseFiles.isEmpty)
               throw e
-            // PEEK the disk truth first — classification must run
-            // before any in-memory state is destroyed, and a foreign
-            // entry this process cannot even parse keeps the original
-            // loud refusal with the table still readable
-            val peeked =
-              try GraftLog.replayByName(name)
-              catch { case _: Throwable => throw e }
-            val peek = peeked.getOrElse(throw e)
+            // classify on the disk truth appendLocked installed; a
+            // foreign entry this process cannot even parse installed
+            // nothing and keeps the original loud refusal with the
+            // table still readable
+            val st = e.installed.getOrElse(throw e)
+            val m = st.meta.getOrElse(throw e)
             val baseSig =
               appendSigOf(baseMeta.get, baseFiles.get, baseHead)
             // (baseHead here is the base COMMIT COUNT — the op-class
             // classifier wants the base head INDEX)
-            if (!appendCompatible(baseSig,
-                appendSigOf(peek.m, peek.h)) &&
-                !appendInterleaveOk(peek, baseHead - 1, baseMeta)) throw e
-            // compatible: install the rebased state (epoch ledger
-            // survives — install preserves it by contract)
-            GraftLog.install(name, peek)
+            if (!appendCompatible(baseSig, appendSigOf(m, st.history)) &&
+                !appendInterleaveOk(st, baseHead - 1, baseMeta)) throw e
+            // compatible: the rebased state is installed (the epoch
+            // ledger survives — install preserves it by contract)
             ingestArmed.foreach(v => pendingIngest.set(Some(v)))
             mvArmed.foreach(v => pendingMv.set(Some(v)))
             false // loop: re-adopt `cur` onto the rebased head
@@ -1722,6 +1737,10 @@ object GraftTableStore {
       m.specs.map(_.map(_.toString).mkString(",")).mkString(";") +
         "|" + m.partFields.map(_.toString).mkString(","),
       m.dvMode)
+  /** both registrations present and of one schema, spec and DV mode */
+  private def sameMeta(a: Option[GraftParquetStore.Meta],
+      b: Option[GraftParquetStore.Meta]): Boolean =
+    a.zip(b).exists { case (x, y) => metaSig(x) == metaSig(y) }
 
   /** Commit a MAINTENANCE REWRITE (binpack / purge-dv / zorder) under
     * Iceberg `rewrite_data_files` conflict semantics: the rewrite
@@ -1788,18 +1807,15 @@ object GraftTableStore {
           case e: GraftConcurrentCommitException =>
             attempts += 1
             if (attempts > MaxAppendRetries) { cleanup(); throw e }
-            // PEEK the disk truth and classify BEFORE destroying any
-            // in-memory state (the commitParquetAppend discipline)
-            val peek =
-              (try GraftLog.replayByName(name)
-              catch { case _: Throwable => cleanup(); throw e })
-                .getOrElse { cleanup(); throw e }
-            val ok = peek.h.commits.lastOption match {
-              case Some(pq: GraftParquetData) => liveOk(peek.m, pq)
-              case _ => false
+            // classify on the disk truth appendLocked installed (the
+            // commitParquetAppend discipline)
+            val ok = e.installed.exists { st =>
+              (st.meta, st.history.commits.lastOption) match {
+                case (Some(m), Some(pq: GraftParquetData)) => liveOk(m, pq)
+                case _ => false
+              }
             }
             if (!ok) { cleanup(); throw e }
-            GraftLog.install(name, peek)
             false // loop: re-attempt on the installed foreign head
         }
       }

@@ -26,6 +26,43 @@ class EmptyInputSpec extends AnyFunSuite {
     dir
   }
 
+  test("each gated local solve completes over an empty input, in both " +
+      "regimes, with the empty-input result") {
+    import spark.implicits._
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    // connected components: no pairs, so every node is its own rep
+    val nodes = Seq(3L, 1L, 2L).toDF("doc_id")
+    val pairs = Seq.empty[(Long, Long)].toDF("id1", "id2")
+    assert(regimesAgree("connectedComponents empty") {
+      rows(operators.GraphOps.connectedComponents(nodes, pairs))
+    } == Seq("[1,1]", "[2,2]", "[3,3]"))
+    val corpus = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val queries = Seq.empty[(Long, Array[Float])].toDF("q_id", "q_emb")
+    assert(regimesAgree("mmrRerank empty") {
+      rows(operators.VectorOps.mmrRerank(corpus, queries))
+    }.isEmpty)
+    assert(regimesAgree("graph_bfs empty") {
+      rows(SparkEntry.queries("graph_bfs")(spark, emptyDir))
+    }.isEmpty)
+    assert(regimesAgree("trainChain empty") {
+      val (table, pieces) = operators.BpeOps.trainChain(
+        Tables.documents(spark, emptyDir))
+      (rows(table), rows(pieces))
+    } == ((Seq.empty, Seq.empty)))
+  }
+
+  test("waiting on an observation that never arrives fails within its " +
+      "bound") {
+    import scala.concurrent.duration._
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      Snapshot.awaitRow(org.apache.spark.sql.Observation(), 200.millis)
+    }
+    assert(e.getMessage.contains("not delivered"), e.getMessage)
+    assert(System.nanoTime() - t0 < 10000000000L, "the wait overran")
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
     test(s"$name returns (possibly zero) rows on empty tables") {
       val n = fn(spark, emptyDir).count()

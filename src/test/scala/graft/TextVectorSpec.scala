@@ -262,12 +262,15 @@ class TextVectorSpec extends AnyFunSuite {
         "id AS doc_id")
       .union(spark.range(100, 105).selectExpr(
         "CAST('cold' AS STRING) AS b", "id AS doc_id"))
-    def pairs() = graft.operators.VectorOps
+    def pairs() = Drops.recorded(graft.operators.VectorOps
       .cappedBucketPairs(keyed, "b", "doc_id", "budget-pin", cap = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val p1 = pairs()
-    val p2 = pairs() // layout-independent determinism
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+    val (p1, drops) = pairs()
+    val (p2, _) = pairs() // layout-independent determinism
     assert(p1 == p2, "capped sample is not deterministic")
+    // the observed diagnostic is exact: the hot bucket alone is past the
+    // budget, and 60 − 8 of its members were sampled away
+    assert(drops == Seq(Drops.Drop("budget-pin", 1, 52)), drops)
     val hot = p1.filter(_._1 < 100)
     val cold = p1.filter(_._1 >= 100)
     assert(hot.size == 28, s"hot bucket proposed ${hot.size} pairs")
@@ -391,12 +394,15 @@ class TextVectorSpec extends AnyFunSuite {
     val post = Seq((1L, 10L), (2L, 10L), (3L, 10L), (4L, 10L),
       (1L, 20L), (2L, 20L)).toDF("doc_id", "tok")
     spark.conf.set("spark.graft.shingle.maxDf", "3")
-    val kept = try operators.TextOps.prunePostings(post, "tok", "test")
-        .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("tok")))
-        .sorted.toVector
+    val (kept, drops) = try Drops.recorded(
+        operators.TextOps.prunePostings(post, "tok", "test")
+          .collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("tok")))
+          .sorted.toVector)
       finally spark.conf.unset("spark.graft.shingle.maxDf")
     assert(kept == Vector((1L, 20L), (2L, 20L)),
       s"cap=3 must drop tok 10 (df 4) and keep tok 20 intact: $kept")
+    // the observed diagnostic is exact: one list, its four postings
+    assert(drops == Seq(Drops.Drop("test", 1, 4)), drops)
   }
 
   test("dedup_containment matches the brute-force directed relation") {

@@ -79,12 +79,22 @@ class TableStateSpec extends AnyFunSuite {
     assert(before.length == 20)
     // a foreign writer takes every claimed slot before our content
     // lands: each attempt's log write fails after the in-memory apply
-    GraftLog.claimStallHook = Some(claim => { claim.delete(); () })
+    val attempts = new java.util.concurrent.atomic.AtomicLong
+    GraftLog.claimStallHook = Some { claim =>
+      attempts.incrementAndGet(); claim.delete(); ()
+    }
+    val replays0 = GraftLog.replays.get
     val ex = try intercept[Exception] {
       spark.sql(s"INSERT INTO $t SELECT id + 100, 'c' FROM range(5)")
     } finally GraftLog.claimStallHook = None
     assert(Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
       .exists(_.isInstanceOf[GraftConcurrentCommitException]), ex)
+    // the retry classifies on the state the failure path installed:
+    // one log replay per attempt, not a second peek
+    assert(attempts.get > 1, "the conflicted append was not retried")
+    assert(GraftLog.replays.get - replays0 == attempts.get,
+      s"${GraftLog.replays.get - replays0} replays for " +
+        s"${attempts.get} attempts")
     // read lock-free right after the failure, with no catalog touch
     val after = GraftTableStore.get(t).map(_.toString).sorted.toSeq
     assert(after == before, s"read ${after.length} rows, not the " +
