@@ -4782,10 +4782,12 @@ class GraftScan(tableName: String, tableSchema: StructType,
       val liveFiles = fv.files.filterNot(f =>
         rowFilters.exists(GraftZoneMap.skips(_, f, tableSchema)))
       if (partFields.isEmpty) {
-        // one input partition PER FILE — the parallel read the
-        // in-memory store cannot give — plus one for the extras
-        val fileGroups = liveFiles.map(f =>
-          GraftFileGroup(null, Vector(f), Array.empty))
+        // live files packed into about defaultParallelism input
+        // partitions (`packFiles`) — the parallel read the in-memory
+        // store cannot give, without a task per small file — plus one
+        // for the extras
+        val fileGroups = GraftParquetStore.packFiles(liveFiles)
+          .map(GraftFileGroup(null, _, Array.empty))
         val groups =
           if (paddedExtras.isEmpty) fileGroups
           else fileGroups :+
@@ -6755,8 +6757,9 @@ class GraftMicroBatchStream(tableName: String,
     val e = end.asInstanceOf[GraftStreamOffset].commits
     if (e <= s) return Array.empty
     // FILE-GRANULAR micro-batches on a parquet-backed table: commit
-    // METADATA decides — an append commit ships one partition per
-    // appended file (rows read task-side, nothing driver-resolved),
+    // METADATA decides — append commits ship their appended files,
+    // packed like the batch scan's (rows read task-side, nothing
+    // driver-resolved),
     // an insert-only MoR delta ships its O(changes) op rows,
     // maintenance commits (compact/binpack/zorder/purge-dv) are
     // content-neutral and contribute NOTHING (the row path would
@@ -6810,6 +6813,19 @@ class GraftMicroBatchStream(tableName: String,
           "stream the change feed instead")
     val parts =
       scala.collection.mutable.ArrayBuffer[InputPartition]()
+    // appended files of consecutive commits pack together, as in the
+    // batch scan; an op-log commit flushes them so rows keep commit
+    // order
+    var pending = Vector.empty[GraftFileInfo]
+    def flushFiles(): Unit = {
+      GraftParquetStore.packFiles(pending).foreach { files =>
+        parts += GraftFileScanPartition(files, Array.empty,
+          tableSchema, ords, ords,
+          Array.empty, Array.empty, -1,
+          org.apache.spark.sql.types.NullType, -1)
+      }
+      pending = Vector.empty
+    }
     var v = s
     while (v < e) {
       GraftTableStore.commitInfo(tableName, v) match {
@@ -6818,12 +6834,7 @@ class GraftMicroBatchStream(tableName: String,
           () // layout maintenance: same rows, nothing to deliver
         case Some((_, p: GraftParquetData)) =>
           GraftChangeFeed.appendedFiles(tableName, v, p) match {
-            case Some(files) => files.foreach { f =>
-              parts += GraftFileScanPartition(Vector(f), Array.empty,
-                tableSchema, ords, ords,
-                Array.empty, Array.empty, -1,
-                org.apache.spark.sql.types.NullType, -1)
-            }
+            case Some(files) => pending ++= files
             case None =>
               // only a PARQUET predecessor whose manifest is not a
               // prefix PROVES a rewrite (appendedFiles is always
@@ -6836,6 +6847,7 @@ class GraftMicroBatchStream(tableName: String,
           }
         case Some((_, d: GraftDeltaData)) =>
           if (d.ops.exists(_.op != 'I')) notAppendOnly()
+          flushFiles()
           parts += GraftProjectedPartition(
             GraftChangeFeed.padTo(d.ops.map(_.row), tableSchema),
             ords, types)
@@ -6845,6 +6857,7 @@ class GraftMicroBatchStream(tableName: String,
       }
       v += 1
     }
+    flushFiles()
     Some(parts.toArray)
   }
 

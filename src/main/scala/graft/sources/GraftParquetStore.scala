@@ -1,13 +1,15 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile, LocalOutputFile}
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -154,8 +156,12 @@ object GraftBloom {
   * that carries to 1000 executors. */
 object GraftParquetStore {
 
-  /** one immutable Configuration for every file handle — building a
-    * fresh Hadoop Configuration per file is measurable init cost. */
+  /** the one Hadoop Configuration the store hands parquet (codec
+    * lookup, writer and read options); never mutated. It loads no
+    * default resources: a default `Configuration` parses Hadoop's XML
+    * defaults on first use, 8–20 ms per file when parquet builds one
+    * per open. Files are read and written through parquet's local
+    * `InputFile`/`OutputFile`, never through a Hadoop `FileSystem`. */
   private[sources] val sharedConf = new Configuration(false)
 
   /** registration of a parquet-backed table: its directory plus the
@@ -438,11 +444,18 @@ object GraftParquetStore {
     // shared conf + small initial buffers: a partitioned commit opens
     // one writer per partition key, and writer INIT cost (not data
     // volume) dominates a many-partition small-batch write — the same
-    // reason real lake writers pool or tune their file handles
-    private val w = ExampleParquetWriter.builder(new HPath(path))
+    // reason real lake writers pool or tune their file handles. The
+    // file is written through parquet's LocalOutputFile, not Hadoop's
+    // LocalFileSystem, which without native IO forks `chmod` for the
+    // file and for its `.crc` sibling (about 20 ms per file). Page
+    // CRCs replace the `.crc` file as corruption detection: every
+    // read verifies them ([[GraftParquetStore.openChecked]]).
+    private val w = ExampleParquetWriter
+      .builder(new LocalOutputFile(java.nio.file.Paths.get(path)))
       .withConf(GraftParquetStore.sharedConf).withType(mt)
       .withCompressionCodec(CompressionCodecName.SNAPPY)
       .withRowGroupSize(8L << 20).withPageSize(64 << 10)
+      .withPageWriteChecksumEnabled(true)
       .build()
     private val gf = new SimpleGroupFactory(mt)
     private var n = 0
@@ -586,44 +599,113 @@ object GraftParquetStore {
     if (present.isEmpty) {
       // no requested column exists in this file (COUNT over a
       // pre-evolution projection): emit default-filled rows, one per
-      // row — still must read the row count from the file. One shared
-      // row: scan consumers treat reader output as reusable buffers
+      // row, counted by the manifest; no page is decoded, so only the
+      // file length is checked. One shared row: scan consumers treat
+      // reader output as reusable buffers
+      checkLength(file, new java.io.File(file.path).length())
       val row = new GenericInternalRow(fillAbsent(new Array[Any](width)))
       return Iterator.fill(file.rows)(row: InternalRow)
     }
-    // projection by ORDINAL against the FILE'S OWN schema (resolved in
-    // the read support's init, which receives the footer schema): a
+    // projection by ORDINAL against the FILE'S OWN footer schema: a
     // file written before an `ALTER COLUMN ... TYPE` widening stores
     // the NARROW physical type, so deriving the requested fields from
     // the current table schema would make parquet-mr refuse the read
-    // (INT64 requested over an INT32 column). Columns are
-    // position-named (`c<i>`), so ordinals are the stable identity.
-    val conf = new Configuration(false)
-    conf.set(GraftOrdReadSupport.OrdsKey, present.mkString(","))
-    val reader = ParquetReader
-      .builder(new GraftOrdReadSupport(), new HPath(file.path))
-      .withConf(conf).build()
-    new Iterator[InternalRow] {
-      private var nextGroup: Group = reader.read()
-      override def hasNext: Boolean = {
-        val h = nextGroup != null
-        if (!h) reader.close()
-        h
-      }
-      override def next(): InternalRow = {
-        val g = nextGroup
-        nextGroup = reader.read()
-        val vals = new Array[Any](width)
-        var j = 0
-        while (j < present.length) {
-          val ord = present(j)
-          if (g.getFieldRepetitionCount(j) > 0)
-            vals(ord) = getValue(g, j, schema(ord).dataType)
-          j += 1
-        }
-        new GenericInternalRow(fillAbsent(vals))
-      }
+    // (INT64 requested over an INT32 column); `getValue` upcasts.
+    // Columns are position-named (`c<i>`), so ordinals are the stable
+    // identity.
+    val reader = openChecked(file)
+    val fileSchema = reader.getFooter.getFileMetaData.getSchema
+    val requested = {
+      import scala.jdk.CollectionConverters._
+      new MessageType(fileSchema.getName,
+        present.map(fileSchema.getFields.get(_)).toList.asJava)
     }
+    reader.setRequestedSchema(requested)
+    val columnIO = new ColumnIOFactory(
+      reader.getFooter.getFileMetaData.getCreatedBy)
+      .getColumnIO(requested, fileSchema, true)
+    val groups: Iterator[Group] = Iterator
+      .continually(reader.readNextRowGroup())
+      .takeWhile { pages =>
+        if (pages == null) reader.close()
+        pages != null
+      }
+      .flatMap { pages =>
+        val rr = columnIO.getRecordReader(pages,
+          new GroupRecordConverter(requested), FilterCompat.NOOP)
+        Iterator.fill(pages.getRowCount.toInt)(rr.read())
+      }
+    groups.map { g =>
+      val vals = new Array[Any](width)
+      var j = 0
+      while (j < present.length) {
+        val ord = present(j)
+        if (g.getFieldRepetitionCount(j) > 0)
+          vals(ord) = getValue(g, j, schema(ord).dataType)
+        j += 1
+      }
+      new GenericInternalRow(fillAbsent(vals)): InternalRow
+    }
+  }
+
+  /** Open one data file for decoding, checked against its manifest
+    * entry: the file's length must equal `bytes` (a truncated or
+    * replaced file fails here, before any row is read), its footer's
+    * row count must equal `rows`, and every page read verifies the
+    * page CRC the writer stored (a flipped byte fails the read). A
+    * check that fails throws; no row of the file is returned. */
+  private def openChecked(file: GraftFileInfo)
+      : ParquetFileReader = {
+    val in = new LocalInputFile(java.nio.file.Paths.get(file.path))
+    checkLength(file, in.getLength)
+    val reader = ParquetFileReader.open(in,
+      HadoopReadOptions.builder(sharedConf)
+        .usePageChecksumVerification(true).build())
+    if (reader.getRecordCount != file.rows) {
+      reader.close()
+      throw corrupt(file, s"footer holds ${reader.getRecordCount} " +
+        s"rows, the manifest records ${file.rows}")
+    }
+    reader
+  }
+
+  // a manifest entry replayed from a log that predates `bytes` carries
+  // 0 (no parquet file is empty), so only a recorded length is checked
+  private def checkLength(file: GraftFileInfo, length: Long): Unit =
+    if (file.bytes > 0 && length != file.bytes)
+      throw corrupt(file,
+        s"is $length bytes, the manifest records ${file.bytes}")
+
+  private def corrupt(file: GraftFileInfo, what: String) =
+    new IllegalStateException(s"corrupt data file ${file.path}: $what")
+
+  /** Pack data files into scan bins, keeping their manifest order, by
+    * Spark's `FilePartition` sizing: a file weighs its bytes plus
+    * `spark.sql.files.openCostInBytes`, and a bin holds about
+    * min(`maxPartitionBytes`, max(open cost, total weight /
+    * parallelism)). Small files so share about `defaultParallelism`
+    * bins, one task each, instead of paying a task per file; a large
+    * table still splits by `maxPartitionBytes`. Spark fills bins
+    * next-fit, which can open up to twice as many; here a file joins
+    * the bin its starting offset falls in, so bins are contiguous and
+    * never more than ceil(total / bin size), which is at most
+    * `parallelism` unless bins are capped by `maxPartitionBytes`.
+    * Driver-side (planning). */
+  private[sources] def packFiles(files: Vector[GraftFileInfo])
+      : Vector[Vector[GraftFileInfo]] = {
+    if (files.length <= 1) return files.map(Vector(_))
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val parallelism = math.max(1, conf.filesMinPartitionNum.getOrElse(
+      org.apache.spark.sql.SparkSession.active.sparkContext
+        .defaultParallelism))
+    val starts = files.scanLeft(0L)(_ + _.bytes + openCost)
+    val total = math.max(1L, starts.last)
+    val binBytes = math.max(1L, math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, (total + parallelism - 1) / parallelism)))
+    val bins = (total + binBytes - 1) / binBytes
+    files.indices.groupBy(i => starts(i) * bins / total).toVector
+      .sortBy(_._1).map(_._2.map(files).toVector)
   }
 
   private def getValue(g: Group, j: Int, dt: DataType): Any = dt match {
@@ -1114,47 +1196,6 @@ object GraftParquetStore {
   * scan anyway (the residual contract), so a mistake here could only
   * cost I/O, never correctness. Strings compare in UTF8String binary
   * order (Spark's collation), mirroring GraftFilterEval. */
-/** [[GroupReadSupport]] variant that projects by ORDINAL: the
-  * requested fields resolve against the FILE's footer schema inside
-  * init, so each file is read with its OWN stored types — what makes
-  * `ALTER COLUMN ... TYPE` widening metadata-only (pre-widen files
-  * keep INT32/FLOAT slots; [[GraftParquetStore.readFileRaw]] upcasts
-  * the decoded values). Columns are position-named, so ordinals are
-  * the stable column identity. */
-private[sources] class GraftOrdReadSupport extends GroupReadSupport {
-  private def project(ordsSpec: String, fileSchema: MessageType)
-      : org.apache.parquet.hadoop.api.ReadSupport.ReadContext = {
-    import scala.jdk.CollectionConverters._
-    val ords = ordsSpec.split(",").filter(_.nonEmpty).map(_.toInt)
-    val fields = ords.filter(_ < fileSchema.getFieldCount)
-      .map(fileSchema.getFields.get(_)).toList
-    new org.apache.parquet.hadoop.api.ReadSupport.ReadContext(
-      new MessageType(fileSchema.getName, fields.asJava))
-  }
-  // parquet 1.14+ routes ParquetReader through the
-  // ParquetConfiguration overload — BOTH must project, or the
-  // hadoop-Configuration one silently never runs and the read
-  // degrades to the full file schema (misaligned columns)
-  override def init(configuration: Configuration,
-      keyValueMetaData: java.util.Map[String, String],
-      fileSchema: MessageType)
-      : org.apache.parquet.hadoop.api.ReadSupport.ReadContext =
-    project(configuration.get(GraftOrdReadSupport.OrdsKey, ""),
-      fileSchema)
-  override def init(
-      configuration: org.apache.parquet.conf.ParquetConfiguration,
-      keyValueMetaData: java.util.Map[String, String],
-      fileSchema: MessageType)
-      : org.apache.parquet.hadoop.api.ReadSupport.ReadContext =
-    project(
-      Option(configuration.get(GraftOrdReadSupport.OrdsKey))
-        .getOrElse(""),
-      fileSchema)
-}
-private[sources] object GraftOrdReadSupport {
-  val OrdsKey = "graft.read.ords"
-}
-
 object GraftZoneMap {
   import org.apache.spark.sql.sources._
 

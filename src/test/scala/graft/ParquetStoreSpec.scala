@@ -1458,7 +1458,7 @@ class ParquetStoreSpec extends AnyFunSuite {
     // CRASHED staging: staged, never committed, aged past the grace
     val (crashed, _) = GraftParquetStore.stageAppendTaskSide(spark, m, df)
     crashed.foreach { f =>
-      // age the whole staging dir (the writer leaves .crc siblings)
+      // age the whole staging dir, every file in it
       val dir = new java.io.File(f.path).getParentFile
       Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
         .foreach(_.setLastModified(1000L))
@@ -1737,5 +1737,139 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT COUNT(*) FROM graft.eqdel_t " +
       s"VERSION AS OF $v").collect()(0).getLong(0) == 191L)
     spark.sql("DROP TABLE graft.eqdel_t")
+  }
+
+  test("scan planning packs small files: an unpartitioned N-file " +
+      "table plans at most defaultParallelism input partitions and " +
+      "reads every file; a partitioned table keeps one per key") {
+    freshCatalog()
+    val par = math.max(1, spark.sparkContext.defaultParallelism)
+    spark.sql("DROP TABLE IF EXISTS graft.pack_t")
+    spark.sql("CREATE TABLE graft.pack_t (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('graft.store'='parquet')")
+    (0 until 12).foreach { i =>
+      spark.sql("INSERT INTO graft.pack_t SELECT id, CAST(id AS STRING) " +
+        s"FROM range(${i * 10}, ${i * 10 + 10}, 1, 1)")
+    }
+    val n = spark.table("graft.pack_t.files").count().toInt
+    assert(n >= 12, s"expected a file per append, found $n")
+    val df = spark.table("graft.pack_t")
+    val m = scanMetrics(df, "graft.pack_t")
+    assert(m.keptPartitions >= 1 && m.keptPartitions <= par,
+      s"$n files planned ${m.keptPartitions} partitions (> $par): $m")
+    assert(m.filesTotal == n && m.filesRead == n, s"$m")
+    assert(df.collect().map(r => (r.getLong(0), r.getString(1)))
+      .sorted.toSeq == (0L until 120L).map(k => (k, k.toString)))
+    spark.sql("DROP TABLE graft.pack_t")
+
+    spark.sql("DROP TABLE IF EXISTS graft.packp_t")
+    spark.sql("CREATE TABLE graft.packp_t (k BIGINT, p STRING) " +
+      "PARTITIONED BY (p) TBLPROPERTIES ('graft.store'='parquet')")
+    (0 until 4).foreach { i =>
+      spark.sql("INSERT INTO graft.packp_t SELECT id, " +
+        "CASE id % 3 WHEN 0 THEN 'a' WHEN 1 THEN 'b' ELSE 'c' END " +
+        s"FROM range(${i * 30}, ${i * 30 + 30}, 1, 1)")
+    }
+    val np = spark.table("graft.packp_t.files").count().toInt
+    assert(np >= 12, s"expected a file per key per append, found $np")
+    val pdf = spark.table("graft.packp_t")
+    val mp = scanMetrics(pdf, "graft.packp_t")
+    assert(mp.totalPartitions == 3 && mp.keptPartitions == 3 &&
+      mp.filesRead == np, s"one partition per key expected: $mp")
+    assert(pdf.collect().map(_.getLong(0)).sorted.toSeq == (0L until 120L))
+    spark.sql("DROP TABLE graft.packp_t")
+  }
+
+  test("a corrupted data file fails its scan: a flipped byte inside a " +
+      "data page trips the page CRC, a truncated file the manifest " +
+      "length check") {
+    import java.nio.file.Files
+    freshCatalog()
+    spark.sql("DROP TABLE IF EXISTS graft.crpt_t")
+    spark.sql("CREATE TABLE graft.crpt_t (k BIGINT, v STRING) " +
+      "TBLPROPERTIES ('graft.store'='parquet')")
+    (0 until 2).foreach { i =>
+      spark.sql("INSERT INTO graft.crpt_t SELECT id, CONCAT('v', id) " +
+        s"FROM range(${i * 100}, ${i * 100 + 100}, 1, 1)")
+    }
+    val head = GraftTableStore.commitCount("graft.crpt_t") - 1
+    val files = GraftTableStore.commitFiles("graft.crpt_t", head)
+      .map(f => new java.io.File(f.path))
+    assert(files.length == 2, s"files: $files")
+    val Seq(a, b) = files
+    def scan(): Set[Long] =
+      spark.table("graft.crpt_t").collect().map(_.getLong(0)).toSet
+    def failure(): String = {
+      val ex = intercept[Exception](scan())
+      Iterator.iterate(ex: Throwable)(_.getCause).takeWhile(_ != null)
+        .flatMap(t => Option(t.getMessage)).mkString(" / ")
+    }
+    assert(scan() == (0L until 200L).toSet)
+    // the last byte of the first column chunk lies in its last data
+    // page's payload
+    val pos = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        new org.apache.parquet.io.LocalInputFile(a.toPath))
+      try {
+        val c = r.getFooter.getBlocks.get(0).getColumns.get(0)
+        (c.getStartingPos + c.getTotalSize - 1).toInt
+      } finally r.close()
+    }
+    val original = Files.readAllBytes(a.toPath)
+    val flipped = original.clone()
+    flipped(pos) = (flipped(pos) ^ 0x5a).toByte
+    Files.write(a.toPath, flipped)
+    val crc = failure()
+    assert(crc.contains("CRC"), s"flipped byte not caught by CRC: $crc")
+    Files.write(a.toPath, original)
+    assert(scan() == (0L until 200L).toSet)
+    val raf = new java.io.RandomAccessFile(b, "rw")
+    try raf.setLength(b.length() - 16) finally raf.close()
+    val cut = failure()
+    assert(cut.contains("corrupt data file") && cut.contains(b.getName),
+      s"truncation not caught: $cut")
+    spark.sql("DROP TABLE graft.crpt_t")
+  }
+
+  test("parquet-store writes start no OS process and leave no .crc " +
+      "file: appends, an UPDATE and a compaction under JFR") {
+    import scala.jdk.CollectionConverters._
+    freshCatalog()
+    spark.sql("DROP TABLE IF EXISTS graft.noproc_t")
+    spark.sql("CREATE TABLE graft.noproc_t (k BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('graft.store'='parquet')")
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    val dump = java.nio.file.Files.createTempFile("graft-noproc", ".jfr")
+    rec.start()
+    val compacted =
+      try {
+        (0 until 4).foreach { i =>
+          spark.sql("INSERT INTO graft.noproc_t SELECT id, " +
+            s"CAST(id AS DOUBLE) FROM range(${i * 50}, ${i * 50 + 50})")
+        }
+        spark.sql("UPDATE graft.noproc_t SET v = v + 1 WHERE k % 3 = 0")
+        graft.api.GraftApi.rewriteSmallFiles(spark, "graft.noproc_t",
+          1000)
+      } finally {
+        rec.stop(); rec.dump(dump); rec.close()
+      }
+    val started = jdk.jfr.consumer.RecordingFile.readAllEvents(dump)
+      .asScala.filter(_.getEventType.getName == "jdk.ProcessStart")
+      .map(_.getString("command"))
+    java.nio.file.Files.delete(dump)
+    val nStarted = started.length
+    assert(nStarted == 0,
+      s"$nStarted OS processes started, first: ${started.take(4)}")
+    assert(compacted > 0, "the compaction rewrote no file")
+    val dir = GraftParquetStore.meta("graft.noproc_t").get.dir
+    val crcs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .iterator.asScala.filter(_.toString.endsWith(".crc")).toList
+    assert(crcs.isEmpty, s".crc files left: $crcs")
+    val rows = spark.table("graft.noproc_t").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(rows == (0L until 200L).map(k =>
+      k -> (if (k % 3 == 0) k + 1.0 else k.toDouble)).toMap)
+    spark.sql("DROP TABLE graft.noproc_t")
   }
 }

@@ -927,6 +927,50 @@ class StreamingSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.feed")
   }
 
+  test("a micro-batch over many appended parquet files packs them into " +
+      "at most defaultParallelism partitions and delivers each row once") {
+    spark.conf.set("spark.sql.catalog.graft",
+      classOf[graft.sources.GraftMergeCatalog].getName)
+    val par = math.max(1, spark.sparkContext.defaultParallelism)
+    spark.sql("DROP TABLE IF EXISTS graft.pack_feed")
+    spark.sql("CREATE TABLE graft.pack_feed (k BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('graft.store'='parquet')")
+    def appendFiles(from: Int, until: Int): Unit = (from until until)
+      .foreach { i =>
+        spark.sql("INSERT INTO graft.pack_feed SELECT id, " +
+          s"CAST(id AS DOUBLE) FROM range(${i * 10}, ${i * 10 + 10}, 1, 1)")
+      }
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_pack_ckpt").toString
+    val keys = scala.collection.mutable.ArrayBuffer[Long]()
+    val parts = scala.collection.mutable.ArrayBuffer[Int]()
+    def start() = spark.readStream.table("graft.pack_feed")
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch {
+        (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+         _: Long) =>
+          keys.synchronized {
+            parts += b.rdd.getNumPartitions
+            keys ++= b.collect().map(_.getLong(0))
+          }
+          ()
+      }
+      .start()
+    // the first trigger covers ten append commits, one file each; the
+    // restarted query's first trigger the ten that land while it is down
+    appendFiles(0, 10)
+    val q1 = start()
+    try q1.processAllAvailable() finally q1.stop()
+    appendFiles(10, 20)
+    val q2 = start()
+    try q2.processAllAvailable() finally q2.stop()
+    assert(parts.nonEmpty && parts.forall(_ <= par),
+      s"micro-batch partitions $parts exceed defaultParallelism $par")
+    assert(keys.sorted.toSeq == (0L until 200L),
+      s"rows lost or repeated: ${keys.sorted.take(20)}…")
+    spark.sql("DROP TABLE graft.pack_feed")
+  }
+
   test("admission control on the governed stream: maxCommitsPerTrigger " +
       "paces batches; Trigger.AvailableNow drains a frozen target in " +
       "row-bounded batches and stops") {
