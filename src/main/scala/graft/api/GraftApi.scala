@@ -194,7 +194,7 @@ object GraftApi {
     * operator surface. `table` is catalog-qualified ("graft.t"). */
   def optimizeTable(spark: org.apache.spark.sql.SparkSession,
       table: String): Int =
-    graft.sources.GraftTableStore.compact(table, Some(spark))
+    graft.sources.GraftTableStore.compact(table, spark)
 
   // ---- incremental materialized views --------------------------------
 
@@ -669,7 +669,7 @@ object GraftApi {
     // test resolves exactly once, and the read path stops walking the
     // chain) — then bitmap-carrying files rewrite as usual
     if (graft.sources.GraftTableStore.hasEqDeleteSuffix(table))
-      graft.sources.GraftTableStore.compact(table, Some(spark))
+      graft.sources.GraftTableStore.compact(table, spark)
     graft.sources.GraftTableStore.purgeDvs(table, spark)
   }
 
@@ -912,7 +912,7 @@ object GraftApi {
       throw new IllegalArgumentException(
         s"OPTIMIZE ZORDER requires a parquet-backed table: $table"))
     graft.sources.GraftTableStore.zorder(table, m.schema,
-      m.schema.fieldIndex(colA), m.schema.fieldIndex(colB), Some(spark))
+      m.schema.fieldIndex(colA), m.schema.fieldIndex(colB), spark)
   }
 
   /** Create a BRANCH — a writable named ref over the version chain —

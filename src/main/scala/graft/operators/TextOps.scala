@@ -1467,7 +1467,7 @@ object TextOps extends QueryModule {
     // the stateless shape a 100 TB admission gate needs.
     "text_quality_model" -> ((s, d) => {
       import graft.functions.QualityModel.{Bias, Dims, Weights}
-      val wArr = array(Weights.take(Dims).map(lit(_)): _*)
+      val wArr = array(Weights.take(Dims).toIndexedSeq.map(lit(_)): _*)
       Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         .where(length(col("tok")) > 0)

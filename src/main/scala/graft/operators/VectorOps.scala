@@ -363,7 +363,7 @@ object VectorOps extends QueryModule {
     * DuckDB oracles. */
   private def assignWin(cents: Array[Array[Double]]): Column = {
     import graft.functions.VectorExprs.dotF
-    val scored = array(cents.zipWithIndex.map { case (c, i) =>
+    val scored = array(cents.toIndexedSeq.zipWithIndex.map { case (c, i) =>
       val cf = c.map(_.toFloat)
       val c2 = cf.map(x => x.toDouble * x.toDouble).sum
       struct((lit(c2) - lit(2.0) * dotF(col("embedding"),
@@ -599,7 +599,7 @@ object VectorOps extends QueryModule {
     import graft.functions.VectorExprs.dotF
     val sub = cb(m).head.length
     val xm = slice(col("embedding"), m * sub + 1, sub)
-    val scored = array(cb(m).zipWithIndex.map { case (c, i) =>
+    val scored = array(cb(m).toIndexedSeq.zipWithIndex.map { case (c, i) =>
       val c2 = c.map(x => x * x).sum
       struct(
         (lit(c2) - lit(2.0) * dotF(xm, typedLit(c.map(_.toFloat).toSeq)))
@@ -627,7 +627,7 @@ object VectorOps extends QueryModule {
     import graft.functions.VectorExprs.dotF
     val sub = cb(m).head.length
     val xm = slice(col("embedding"), m * sub + 1, sub)
-    val scored = array(cb(m).zipWithIndex.map { case (c, i) =>
+    val scored = array(cb(m).toIndexedSeq.zipWithIndex.map { case (c, i) =>
       val c2 = c.map(x => x * x).sum
       struct(
         (lit(c2) - lit(2.0) * dotF(xm, typedLit(c.map(_.toFloat).toSeq)))
@@ -1332,7 +1332,7 @@ object VectorOps extends QueryModule {
         case Some(cents) =>
           val both = ivfAppendUnion(s, d)
           // float-cast centroid norms, exactly assignWin's |c_f|² terms
-          val c2 = array(cents.map { c =>
+          val c2 = array(cents.toIndexedSeq.map { c =>
             lit(c.map { x => val f = x.toFloat.toDouble; f * f }.sum)
           }: _*)
           val asg = both.select(col("is_new"), assignWin(cents).as("w"))
@@ -1464,7 +1464,7 @@ object VectorOps extends QueryModule {
             .select(col("vec_id"), col("embedding"),
               when(col("vec_id") % 9 === 0, 1L).otherwise(0L)
                 .as("is_del"))
-          val c2 = array(cents.map { c =>
+          val c2 = array(cents.toIndexedSeq.map { c =>
             lit(c.map { x => val f = x.toFloat.toDouble; f * f }.sum)
           }: _*)
           val asg = e.select(col("is_del"), assignWin(cents).as("w"))

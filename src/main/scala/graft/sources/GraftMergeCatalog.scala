@@ -79,8 +79,7 @@ object GraftTableStore {
     * MoR unique-row-id contract (WriteDelta only deletes/updates rows
     * its scan matched, one op per matched row). */
   private[sources] sealed trait GraftCommitData { def count: Int }
-  private[sources] final case class GraftFullData(rows: Array[InternalRow],
-      fineLayout: Boolean = false)
+  private[sources] final case class GraftFullData(rows: Array[InternalRow])
       extends GraftCommitData { def count: Int = rows.length }
   private[sources] final case class GraftDeltaData(ops: Array[GraftDeltaOp],
       idOrd: Int, idType: org.apache.spark.sql.types.DataType,
@@ -668,7 +667,7 @@ object GraftTableStore {
                 (p, resolveRel(name, s, h, h.commits.size - 1))
             }
             val pq = GraftParquetStore.persistFull(
-              name, m, newV, f.rows, prev, f.fineLayout)
+              name, m, newV, f.rows, prev)
             s.resolved.put(newV, f.rows)
             pq
           case None => f
@@ -1187,7 +1186,7 @@ object GraftTableStore {
               // files. Staged inputs are consumed — no rebase after.
               val base = resolveRel(name, h, h.commits.size - 1)
               val incoming = GraftParquetStore.readAll(cur, m.schema)
-              cur.foreach(f => new java.io.File(f.path).delete())
+              GraftParquetStore.discardStaged(cur)
               cur = Vector.empty
               appendLocked(name, op,
                 GraftFullData(base ++ incoming), branch)
@@ -1233,8 +1232,8 @@ object GraftTableStore {
     *     the incoming batch does not contain survive BY REFERENCE;
     *   - static overwrite (REPLACE WHERE): base files the zone maps
     *     PROVE hold no matching row survive by reference; the rest
-    *     rewrite task-side ([[GraftParquetStore
-    *     .overwriteRewriteTaskSide]]) with OCC on the head.
+    *     rewrite task-side ([[GraftParquetStore.stageRewrites]])
+    *     with OCC on the head.
     * Returns false when the base shape prevents file-granular
     * treatment (a MoR delta-chain head, or spec-mixed files under a
     * dynamic overwrite) — the caller falls back to the row path,
@@ -1298,19 +1297,22 @@ object GraftTableStore {
       if (hasAll) (Vector.empty[GraftFileInfo], p.files)
       else p.files.partition(f => filters.exists(
         GraftZoneMap.skips(_, f, physSchema)))
+    // each unproven file keeps the rows that do NOT match the overwrite
+    // predicate (a file with no survivor is dropped); a pre-evolution
+    // row is tested with its exists-defaults, as a scan reads it
     val rewritten =
       if (hasAll) Vector.empty[GraftFileInfo]
-      else GraftParquetStore.overwriteRewriteTaskSide(spark, m,
-        physSchema, candidates, filters)
+      else GraftParquetStore.stageRewrites(spark, m,
+        candidates.map(GraftParquetStore.RewriteUnit.of)) { rows =>
+        val preds = filters.flatMap(GraftFilterEval.compile(_, physSchema))
+        require(preds.length == filters.length,
+          "overwrite rewrite: a predicate stopped compiling between " +
+            "canOverwrite and the task — refusing a partial delete set")
+        rows.filter(r => !preds.forall(_(r)))
+      }.flatten
     withTableLock(name) {
+      refuseIfMoved(name, "INSERT OVERWRITE", expectedHead, rewritten)
       val h = historyOf(name)
-      if (h.commitCount - 1 != expectedHead) {
-        rewritten.foreach(s => new java.io.File(s.path).delete())
-        throw new IllegalStateException(
-          s"$name: concurrent commit detected — this INSERT OVERWRITE " +
-            s"rewrote against version $expectedHead but the head is " +
-            s"now ${h.commitCount - 1}; retry the statement")
-      }
       val newV = h.commitCount
       val adopted = GraftParquetStore.adoptStaged(m, newV,
         rewritten ++ staged)
@@ -1353,12 +1355,6 @@ object GraftTableStore {
   private[graft] final case class TxnManifest(name: String,
       files: Vector[GraftFileInfo], count: Int, op: String)
     extends TxnWrite
-
-  private[graft] def commitTransaction(
-      staged: Seq[(String, Vector[GraftFileInfo], Long)],
-      expectedHeads: Map[String, Int]): Map[String, Int] =
-    commitTxn(staged.map(s => TxnStagedAppend(s._1, s._2, s._3)),
-      expectedHeads)
 
   /** Stage the DELETE side of a READ-WRITE cross-table transaction:
     * compute the post-delete manifest (zone-map prescreen + task-side
@@ -1525,7 +1521,7 @@ object GraftTableStore {
       expectedHeads: Map[String, Int]): Map[String, Int] = withGlobalLock {
     def cleanup(): Unit = parts.foreach {
       case TxnStagedAppend(_, files, _) =>
-        files.foreach(f => new java.io.File(f.path).delete())
+        GraftParquetStore.discardStaged(files)
       case _: TxnManifest => () // references live table files only
     }
     // verify EVERY head first — nothing commits unless all pass
@@ -1771,8 +1767,7 @@ object GraftTableStore {
       : Unit = {
     var staged = staged0
     var attempts = 0
-    def cleanup(): Unit =
-      staged.foreach(f => new java.io.File(f.path).delete())
+    def cleanup(): Unit = GraftParquetStore.discardStaged(staged)
     def refuse(head: Int): Nothing = {
       cleanup()
       throw new IllegalStateException(
@@ -1828,7 +1823,7 @@ object GraftTableStore {
     * by reference, reads are unchanged, and the per-record bit test
     * leaves the scan path. The rewrite runs TASK-SIDE (one Spark task
     * per bitmap-carrying file stages its replacement; the driver sees
-    * only metadata — [[GraftParquetStore.purgeDvsTaskSide]]) outside
+    * only metadata — [[GraftParquetStore.stageRewrites]]) outside
     * the store lock, then commits under OPTIMISTIC CONCURRENCY: the
     * swap re-verifies the head is still the version the job read —
     * the same OCC contract as the DV-computation commit it reverses.
@@ -1848,18 +1843,23 @@ object GraftTableStore {
       }
     }
     val candidates = p.files.filter(_.dv.isDefined)
-    val staged = GraftParquetStore.purgeDvsTaskSide(spark, m, candidates)
+    val staged = GraftParquetStore.stageRewrites(spark, m,
+      candidates.map(GraftParquetStore.RewriteUnit.of))(identity)
     maintenanceStallHook.foreach(_())
-    val origPaths = staged.map(_._1)
     commitMaintenance(name, "purge-dv", metaSig(m),
       candidates.iterator.map(f => f.path -> fileSig(f)).toMap,
-      expectedHead, staged.map(_._2),
+      expectedHead, staged.flatten,
       (head, adopted) => {
-        val swap = origPaths.zip(adopted).toMap
-        GraftParquetData(head.files.map(f => swap.getOrElse(f.path, f)),
-          head.count)
+        // each candidate swaps for its staged live-row file (adopted in
+        // staging order), or for none when no row was live
+        val next = adopted.iterator
+        val swap = candidates.zip(staged).map { case (f, out) =>
+          f.path -> out.map(_ => next.next())
+        }.toMap
+        GraftParquetData(head.files.flatMap(f =>
+          swap.getOrElse(f.path, Vector(f))), head.count)
       })
-    staged.length
+    candidates.length
   }
 
   /** BIN-PACKING compaction (OPTIMIZE's small-file rewrite — Delta's
@@ -1879,10 +1879,10 @@ object GraftTableStore {
       spark: org.apache.spark.sql.SparkSession): Int = {
     require(targetRows > 0, s"targetRows must be positive: $targetRows")
     // snapshot OUTSIDE the lock; merge task-side; commit under OCC —
-    // same three-phase shape as the DV purge above. One Spark task
-    // per (partition key, spec, width) group stages its merged files
-    // ([[GraftParquetStore.binPackTaskSide]]); the driver never holds
-    // a row.
+    // same three-phase shape as the DV purge above. Each (partition
+    // key, spec, width) group is one unit of the rewrite job
+    // ([[GraftParquetStore.stageRewrites]]); the driver never holds a
+    // row.
     val (expectedHead, p, m) = withTableLock(name) {
       val h = historyOf(name)
       h.commits.lastOption match {
@@ -1898,14 +1898,36 @@ object GraftTableStore {
       .groupBy(f => (f.key, f.specId, f.numCols))
       .filter(_._2.length >= 2)
       .toVector.sortBy(_._2.head.path)
-      .map { case ((key, specId, width), fs) => (key, specId, width, fs) }
+      .map { case ((key, specId, width), fs) =>
+        GraftParquetStore.RewriteUnit(fs, key, width, specId)
+      }
     if (groups.isEmpty) return 0
-    val stagedPerGroup = GraftParquetStore.binPackTaskSide(
-      spark, m, groups, targetRows)
+    // a DECLARED SORT ORDER survives compaction: the group's rows merge
+    // SORTED, so the packed output files keep contiguous key ranges
+    // and zone-map skipping on the sort key stays alive without a
+    // manual ZORDER call (Iceberg sort orders)
+    val ords = m.sortOrds
+    val dts = ords.map(m.schema(_).dataType)
+    val staged = GraftParquetStore.stageRewrites(spark, m, groups,
+      targetRows) { rows =>
+      if (ords.isEmpty) rows
+      else rows.toArray.sortWith { (a, b) =>
+        var i = 0
+        var c = 0
+        while (c == 0 && i < ords.length) {
+          val o = ords(i)
+          val an = a.isNullAt(o); val bn = b.isNullAt(o)
+          c = if (an && bn) 0 else if (an) -1 else if (bn) 1
+            else GraftZoneMap.cmpStat(dts(i),
+              a.get(o, dts(i)), b.get(o, dts(i)))
+          i += 1
+        }
+        c < 0
+      }.iterator
+    }.flatten
     maintenanceStallHook.foreach(_())
-    val mergedFiles = groups.flatMap(_._4)
+    val mergedFiles = groups.flatMap(_.files)
     val mergedAway = mergedFiles.map(_.path).toSet
-    val staged = stagedPerGroup.flatten.toVector
     commitMaintenance(name, "binpack", metaSig(m),
       mergedFiles.iterator.map(f => f.path -> fileSig(f)).toMap,
       expectedHead, staged,
@@ -1934,7 +1956,7 @@ object GraftTableStore {
     * commit is made (idempotent, like OPTIMIZE on an already-compacted
     * table). */
   private[graft] def compact(name: String,
-      spark: Option[org.apache.spark.sql.SparkSession] = None): Int = {
+      spark: org.apache.spark.sql.SparkSession): Int = {
     // what the CURRENT read path walks: the delta suffix after the
     // last full commit (earlier deltas sit under a full snapshot
     // already and cost nothing at read) — zero suffix = nothing to
@@ -1953,21 +1975,15 @@ object GraftTableStore {
     // exactly what the MoR scan does) re-stage where the task runs;
     // only the O(changes) op-log extras pass through the driver. The
     // resolveRel materialization below remains for in-memory tables
-    // (their rows live in the JVM regardless).
-    spark match {
-      case Some(s) if GraftParquetStore.isBacked(name) =>
-        fileView(name, None) match {
-          case Some(fv) =>
-            return compactTaskSide(name, s, fv, expectedHead, deltas)
-          case None => // unfoldable chain: row path owns it
-        }
-      case _ =>
-    }
+    // (their rows live in the JVM regardless) and for a chain
+    // [[fileView]] cannot fold.
+    if (GraftParquetStore.isBacked(name))
+      fileView(name, None).foreach { fv =>
+        return compactTaskSide(name, spark, fv, expectedHead, deltas)
+      }
     withTableLock(name) {
+      refuseIfMoved(name, "OPTIMIZE", expectedHead, Vector.empty)
       val h = historyOf(name)
-      if (h.commitCount - 1 != expectedHead)
-        throw new IllegalStateException(
-          s"$name: concurrent commit detected during OPTIMIZE — retry")
       val current = resolveRel(name, h, h.commits.size - 1)
       appendLocked(name, "compact", GraftFullData(current))
       deltas
@@ -1981,21 +1997,12 @@ object GraftTableStore {
     val deleted: Set[Any] = fv.deletedIds.toSet
     val idOrd = fv.idOrd
     val idType = fv.idType
-    val staged = spark.sparkContext
-      .parallelize(fv.files, math.min(math.max(1, fv.files.length),
-        math.max(1, spark.sparkContext.defaultParallelism * 2)))
-      .flatMap { f =>
-        val rows = GraftParquetStore
-          .readFile(f, m.schema, Array.range(0, f.numCols))
-          .filter(r => deleted.isEmpty || idOrd < 0 ||
-            idOrd >= r.numFields ||
-            !deleted.contains(r.get(idOrd, idType)))
-          .toArray
-        if (rows.isEmpty) Iterator.empty
-        else Iterator.single(GraftParquetStore.stageRewriteFile(
-          m, rows.iterator, f.key, f.numCols, f.specId))
-      }
-      .collect().toVector
+    val staged = GraftParquetStore.stageRewrites(spark, m,
+      fv.files.map(GraftParquetStore.RewriteUnit.of)) { rows =>
+      if (deleted.isEmpty || idOrd < 0) rows
+      else rows.filter(r => idOrd >= r.numFields ||
+        !deleted.contains(r.get(idOrd, idType)))
+    }.flatten
     // op-log extras are O(changes) driver rows by definition — stage
     // them grouped by partition key so pruning semantics hold
     val extraFiles =
@@ -2015,21 +2022,29 @@ object GraftTableStore {
           }
       }
     withTableLock(name) {
-      val h = historyOf(name)
-      if (h.commitCount - 1 != expectedHead) {
-        (staged ++ extraFiles).foreach(f =>
-          new java.io.File(f.path).delete())
-        throw new IllegalStateException(
-          s"$name: concurrent commit detected — this OPTIMIZE " +
-            s"compacted version $expectedHead but the head is now " +
-            s"${h.commitCount - 1}; retry the statement")
-      }
-      val adopted = GraftParquetStore.adoptStaged(m, h.commitCount,
+      refuseIfMoved(name, "OPTIMIZE", expectedHead, staged ++ extraFiles)
+      val adopted = GraftParquetStore.adoptStaged(m, commitCount(name),
         staged ++ extraFiles)
       appendLocked(name, "compact",
         GraftParquetData(adopted, adopted.map(_.rows).sum))
     }
     deltas
+  }
+
+  /** Refuse a commit whose rewrite was computed against `expectedHead`
+    * once the head has moved: the staged files are deleted and the
+    * statement fails loudly, to be retried against the new head. MUST
+    * run under the table lock. */
+  private def refuseIfMoved(name: String, what: String,
+      expectedHead: Int, staged: Vector[GraftFileInfo]): Unit = {
+    val head = commitCount(name) - 1
+    if (head != expectedHead) {
+      GraftParquetStore.discardStaged(staged)
+      throw new IllegalStateException(
+        s"$name: concurrent commit detected — this $what rewrote " +
+          s"against version $expectedHead but the head is now $head; " +
+          "retry the statement")
+    }
   }
 
   /** RESTORE (rollback): make version `v`'s content the CURRENT state
@@ -2094,40 +2109,27 @@ object GraftTableStore {
 
   /** OPTIMIZE ZORDER BY (colA, colB): rewrite the current snapshot
     * sorted by the Morton interleave of the two columns' min/max-
-    * normalized values, so the chunked output files hold z-contiguous
-    * ranges and ZONE MAPS skip files for predicates on EITHER column
-    * — the multi-dimensional layout optimization (Delta's OPTIMIZE
-    * ZORDER). Only meaningful on a parquet-backed table (the
-    * in-memory store has no files to lay out); integral columns.
-    * Returns the new version number. */
-  private[graft] def zorder(name: String, schema: StructType,
-      ordA: Int, ordB: Int,
-      spark: Option[org.apache.spark.sql.SparkSession] = None): Int = {
-    // TASK-SIDE path when the head is a pure file manifest (the
-    // common CoW case): rows never touch the driver. A delta-chain
-    // head falls back to the legacy driver materialization (the MoR
-    // merge needs the resolved snapshot; OPTIMIZE/compact first).
-    spark match {
-      case Some(s) if withTableLock(name) {
-        historyOf(name).commits.lastOption
-          .exists(_.isInstanceOf[GraftParquetData])
-      } => return zorderTaskSide(name, schema, ordA, ordB, s)
-      case _ =>
-    }
-    zorderDriverSide(name, schema, ordA, ordB)
-  }
-
-  /** DISTRIBUTED z-order rewrite: bounds come from the MANIFEST's
-    * zone-map stats (O(files) driver metadata, no row read); a
-    * bounded `takeSample` of task-computed z-values picks quantile
-    * cut points so output files size evenly; the rewrite itself is a
-    * single shuffle — each row routes to its (partition key, spec,
-    * width, z-bucket) group and ONE TASK PER GROUP stages one
-    * z-contiguous file. The driver sees file metadata only; commit is
-    * OCC against the head the job read. This is the 100 TB OPTIMIZE
+    * normalized values, so the output files hold z-contiguous ranges
+    * and ZONE MAPS skip files for predicates on EITHER column — the
+    * multi-dimensional layout optimization (Delta's OPTIMIZE ZORDER).
+    * Only meaningful on a parquet-backed table (the in-memory store
+    * has no files to lay out); integral columns. Returns the new
+    * version number.
+    *
+    * Distributed throughout: a merge-on-read head is first folded into
+    * a file manifest by [[compact]] (task-side wherever [[fileView]]
+    * folds the chain; one content-neutral `compact` version before the
+    * `zorder` one). Bounds come from the
+    * MANIFEST's zone-map stats (O(files) driver metadata, no row
+    * read); a bounded `takeSample` of task-computed z-values picks
+    * quantile cut points so output files size evenly; the rewrite
+    * itself is a single shuffle — each row routes to its (partition
+    * key, spec, width, z-bucket) group and ONE TASK PER GROUP stages
+    * one z-contiguous file. The driver sees file metadata only; commit
+    * is OCC against the head the job read. This is the 100 TB OPTIMIZE
     * ZORDER shape: one pass over the data, zone maps skip on either
     * dimension afterwards. */
-  private def zorderTaskSide(name: String, schema: StructType,
+  private[graft] def zorder(name: String, schema: StructType,
       ordA: Int, ordB: Int,
       spark: org.apache.spark.sql.SparkSession): Int = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -2138,13 +2140,18 @@ object GraftTableStore {
           s"ZORDER column must be integral, got $other")
       }
     }
+    // a merge-on-read head folds into a file manifest first
+    compact(name, spark)
     val (expectedHead, p, m) = withTableLock(name) {
       val h = historyOf(name)
       h.commits.lastOption match {
         case Some(pq: GraftParquetData) =>
           (h.commitCount - 1, pq, GraftParquetStore.meta(name).get)
-        case _ => throw new IllegalStateException(
-          s"$name: head is not a file manifest")
+        case None => throw new IllegalArgumentException(
+          s"$name has no snapshot to rewrite")
+        case Some(_) => throw new IllegalStateException(
+          s"$name: concurrent commit detected — a merge-on-read " +
+            "commit landed on the compacted head; retry the statement")
       }
     }
     if (p.files.isEmpty) return expectedHead // nothing to lay out
@@ -2242,59 +2249,6 @@ object GraftTableStore {
         adopted ++ head.files.filterNot(f => rewrittenPaths.contains(f.path)),
         head.count - p.count + adopted.map(_.rows).sum))
     commitCount(name) - 1
-  }
-
-  private def zorderDriverSide(name: String, schema: StructType,
-      ordA: Int, ordB: Int): Int = withTableLock(name) {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    require(GraftParquetStore.isBacked(name),
-      s"OPTIMIZE ZORDER requires a parquet-backed table: $name")
-    def longAt(r: InternalRow, o: Int): Long = schema(o).dataType match {
-      case LongType => r.getLong(o)
-      case IntegerType => r.getInt(o).toLong
-      case other => throw new IllegalArgumentException(
-        s"ZORDER column must be integral, got $other")
-    }
-    val h = historyOf(name)
-    require(h.commits.nonEmpty, s"$name has no snapshot to rewrite")
-    val rows = resolveRel(name, h, h.commits.size - 1)
-    if (rows.isEmpty) return h.commitCount - 1 // nothing to lay out
-    // min/max scale each dimension to the full 16-bit range first —
-    // without it the wider dimension owns every high z-bit and the
-    // curve degenerates to a 1-D sort (the fn_zorder lesson)
-    val width = schema.length
-    def boundsOf(o: Int): (Long, Long) = {
-      var lo = Long.MaxValue; var hi = Long.MinValue
-      rows.foreach { r =>
-        if (o < r.numFields && !r.isNullAt(o)) {
-          val x = longAt(r, o); if (x < lo) lo = x; if (x > hi) hi = x
-        }
-      }
-      if (lo > hi) (0L, 0L) else (lo, hi)
-    }
-    val (alo, ahi) = boundsOf(ordA)
-    val (blo, bhi) = boundsOf(ordB)
-    def z(r: InternalRow): Long = {
-      def norm(o: Int, lo: Long, hi: Long): Long =
-        if (o >= r.numFields || r.isNullAt(o)) 0L
-        else (longAt(r, o) - lo) * 65535L / math.max(hi - lo, 1L)
-      val a = norm(ordA, alo, ahi); val b = norm(ordB, blo, bhi)
-      var out = 0L; var i = 0
-      while (i < 16) {
-        out |= ((a >> i) & 1L) << (2 * i)
-        out |= ((b >> i) & 1L) << (2 * i + 1)
-        i += 1
-      }
-      out
-    }
-    // rows keep their identity (zone maps/feeds unaffected) — only the
-    // FILE LAYOUT changes; chunking inside persistFull gives the
-    // z-contiguous files their disjoint min/max ranges
-    val sorted = rows.sortBy(z)
-    // fine chunking: many z-contiguous files is the POINT of the
-    // layout rewrite — zone maps only skip at file granularity
-    appendLocked(name, "zorder", GraftFullData(sorted, fineLayout = true))
-    h.commitCount
   }
 
   /** Explicit snapshot expiry (VACUUM / expire_snapshots): drop all but
@@ -2622,6 +2576,24 @@ object GraftMergeCatalog {
       new GraftMergeTable(dst, srcT.physicalSchema, None, srcT.morRowId,
         srcT.partFields, srcT.tableConstraints)))
   }
+}
+
+/** A stored SQL view, as the catalog serves it to Spark's view
+  * resolution. */
+private[sources] final case class GraftView(ident: Identifier,
+    info: ViewInfo,
+    props: Map[String, String]) extends View {
+  override def name(): String = ident.toString
+  override def query(): String = info.sql()
+  override def currentCatalog(): String = info.currentCatalog()
+  override def currentNamespace(): Array[String] =
+    info.currentNamespace()
+  override def schema(): StructType = info.schema()
+  override def queryColumnNames(): Array[String] =
+    info.queryColumnNames()
+  override def columnAliases(): Array[String] = info.columnAliases()
+  override def columnComments(): Array[String] = info.columnComments()
+  override def properties(): util.Map[String, String] = props.asJava
 }
 
 class GraftMergeCatalog extends TableCatalog with FunctionCatalog
@@ -3309,21 +3281,6 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
   // AND schema-compatible evolution for free — O(text) metadata, the
   // governance surface (stable query interfaces, column renames behind
   // a contract) a warehouse expects from its catalog.
-
-  private final case class GraftView(ident: Identifier, info: ViewInfo,
-      props: Map[String, String]) extends View {
-    override def name(): String = ident.toString
-    override def query(): String = info.sql()
-    override def currentCatalog(): String = info.currentCatalog()
-    override def currentNamespace(): Array[String] =
-      info.currentNamespace()
-    override def schema(): StructType = info.schema()
-    override def queryColumnNames(): Array[String] =
-      info.queryColumnNames()
-    override def columnAliases(): Array[String] = info.columnAliases()
-    override def columnComments(): Array[String] = info.columnComments()
-    override def properties(): util.Map[String, String] = props.asJava
-  }
 
   override def listViews(namespace: String*): Array[Identifier] = {
     GraftMergeCatalog.ensureViewsLoaded(catalogName)
@@ -4603,6 +4560,12 @@ class GraftScanMetric(n: String, d: String) extends CustomSumMetric {
   override def description(): String = d
 }
 
+/** One input partition's share of a file scan: the files of one
+  * partition key (`key` null when unpartitioned) plus the op-log
+  * extras that belong to it. */
+private[sources] final case class GraftFileGroup(key: InternalRow,
+    files: Vector[GraftFileInfo], extras: Array[InternalRow])
+
 class GraftScan(tableName: String, tableSchema: StructType,
     pinnedVersion: Option[Int] = None,
     requiredSchema: StructType = null,
@@ -4758,8 +4721,6 @@ class GraftScan(tableName: String, tableSchema: StructType,
   // manifest-pruned file scan a lake format plans at 100 TB. Extras =
   // delta-commit inserts/updates (O(changes), driver-held op logs)
   // ride pre-projected in their key's partition.
-  private final case class GraftFileGroup(key: InternalRow,
-      files: Vector[GraftFileInfo], extras: Array[InternalRow])
   private lazy val filePlan
       : Option[(Int, Array[GraftFileGroup],
         GraftTableStore.GraftFileView)] =
@@ -7075,7 +7036,7 @@ class GraftWriteBuilder(tableName: String, writeSchema: StructType,
             // fallback (MoR delta suffix / mixed specs): materialize
             // the staged rows once and take the row path below
             val rows = GraftParquetStore.readAll(staged, m.schema)
-            staged.foreach(f => new java.io.File(f.path).delete())
+            GraftParquetStore.discardStaged(staged)
             rowPathCommit(rows)
           case None =>
             // incoming rows were projected into the PHYSICAL layout at
@@ -7091,7 +7052,7 @@ class GraftWriteBuilder(tableName: String, writeSchema: StructType,
       override def abort(messages: Array[WriterCommitMessage]): Unit =
         messages.foreach {
           case GraftFilesMessage(files) =>
-            files.foreach(f => new java.io.File(f.path).delete())
+            GraftParquetStore.discardStaged(files)
           case _ => ()
         }
 
@@ -7176,7 +7137,7 @@ class GraftWriteBuilder(tableName: String, writeSchema: StructType,
                 epochId)) {
               // WAL replay of an already-committed epoch: its rows
               // are in the table — drop the re-staged files
-              staged.foreach(f => new java.io.File(f.path).delete())
+              GraftParquetStore.discardStaged(staged)
               return
             }
             if (doTruncate)
@@ -7208,7 +7169,7 @@ class GraftWriteBuilder(tableName: String, writeSchema: StructType,
             messages: Array[WriterCommitMessage]): Unit =
           messages.foreach {
             case GraftFilesMessage(files) =>
-              files.foreach(f => new java.io.File(f.path).delete())
+              GraftParquetStore.discardStaged(files)
             case _ => ()
           }
       }

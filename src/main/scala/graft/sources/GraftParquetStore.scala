@@ -368,8 +368,7 @@ object GraftParquetStore {
   private[sources] def persistFull(name: String, m: Meta, version: Int,
       rows: Array[InternalRow],
       prev: Option[(GraftTableStore.GraftParquetData,
-        Array[InternalRow])],
-      fineLayout: Boolean = false)
+        Array[InternalRow])])
       : GraftTableStore.GraftParquetData = {
     val (reusedFiles, suffixFrom) = prev match {
       case Some((p, prevRows)) if rows.length >= prevRows.length &&
@@ -379,7 +378,7 @@ object GraftParquetStore {
     }
     val suffix = if (suffixFrom == 0) rows else rows.drop(suffixFrom)
     GraftTableStore.GraftParquetData(
-      reusedFiles ++ writeFiles(m, version, suffix, fineLayout),
+      reusedFiles ++ writeFiles(m, version, suffix),
       rows.length)
   }
 
@@ -400,8 +399,7 @@ object GraftParquetStore {
     * files so an unpartitioned scan still parallelizes per file and
     * zone maps get range granularity. */
   private def writeFiles(m: Meta, version: Int,
-      rows: Array[InternalRow], fineLayout: Boolean = false)
-      : Vector[GraftFileInfo] = {
+      rows: Array[InternalRow]): Vector[GraftFileInfo] = {
     if (rows.isEmpty) return Vector.empty
     val vdir = new java.io.File(m.dir, f"v$version%05d")
     vdir.mkdirs()
@@ -417,12 +415,7 @@ object GraftParquetStore {
       (k, r.numFields)
     }.toArray.sortBy { case ((k, w), _) => (k.toString, w) }
     groups.zipWithIndex.flatMap { case (((key, width), rs), seq) =>
-      // a layout rewrite (ZORDER) chunks FINE: skipping works at file
-      // granularity, so the curve needs enough files for a z-range to
-      // exclude whole quadrants of either dimension
-      val chunks =
-        if (fineLayout) math.max(1, math.min(16, (rs.length + 63) / 64))
-        else math.max(1, math.min(8, (rs.length + 1023) / 1024))
+      val chunks = math.max(1, math.min(8, (rs.length + 1023) / 1024))
       val per = (rs.length + chunks - 1) / chunks
       rs.grouped(per).zipWithIndex.map { case (chunk, ci) =>
         val f = new java.io.File(vdir, f"f$seq%04d-c$ci%02d.parquet")
@@ -802,70 +795,23 @@ object GraftParquetStore {
       .collect().toMap
   }
 
-  /** Rewrite ONE deletion-vector-carrying file as a fresh file holding
-    * only its live rows (OPTIMIZE's DV purge): the new file keeps the
-    * old one's partition key, spec id and write-time width, so pruning
-    * and evolution-on-read semantics are unchanged — only the bitmap
-    * is gone. The old file stays owned by older versions until
-    * retention GC. */
-  private[sources] def rewriteDvFile(m: Meta, version: Int,
-      f: GraftFileInfo, seq: Int): GraftFileInfo = {
-    val vdir = new java.io.File(m.dir, f"v$version%05d")
-    vdir.mkdirs()
-    val target = new java.io.File(vdir, f"purge$seq%04d.parquet")
-    val h = new GraftFileHandle(m.schema, f.numCols,
-      target.getAbsolutePath, f.key, m.bloomOrds, f.specId)
-    readFile(f, m.schema, Array.range(0, f.numCols)).foreach { r =>
-      if (r.numFields == f.numCols) h.add(r)
-      else {
-        val vals = new Array[Any](f.numCols)
-        var i = 0
-        while (i < f.numCols) {
-          vals(i) = r.get(i, m.schema(i).dataType); i += 1
-        }
-        h.add(new GenericInternalRow(vals))
-      }
-    }
-    h.close()
-  }
-
-  /** write ONE merged file from already-read rows (bin-packing
-    * compaction): same partition key, spec id and write-time width as
-    * the small files it replaces, so pruning and evolution-on-read
-    * semantics are unchanged. */
-  private[sources] def writeMergedFile(m: Meta, version: Int,
-      rows: Iterator[InternalRow], key: InternalRow, width: Int,
-      specId: Int, seq: Int): GraftFileInfo = {
-    val vdir = new java.io.File(m.dir, f"v$version%05d")
-    vdir.mkdirs()
-    val target = new java.io.File(vdir, f"merge$seq%04d.parquet")
-    val h = new GraftFileHandle(m.schema, width,
-      target.getAbsolutePath, key, m.bloomOrds, specId)
-    rows.foreach { r =>
-      if (r.numFields == width) h.add(r)
-      else {
-        val vals = new Array[Any](width)
-        var i = 0
-        while (i < width) { vals(i) = r.get(i, m.schema(i).dataType); i += 1 }
-        h.add(new GenericInternalRow(vals))
-      }
-    }
-    h.close()
-  }
-
-  /** write ONE staged rewrite file from rows in a TASK: the rewrite
-    * path's write primitive — a temp-dir file whose metadata ships
+  /** write ONE staged rewrite file in a TASK from the next (at most
+    * `limit`) rows of `rows`: a temp-dir file whose metadata ships
     * back to the driver; the commit adopts it (rename) once the
-    * version number is known under the store lock. Same width/key/
-    * spec normalization as the legacy driver-side writers, so
-    * pruning and evolution-on-read semantics are unchanged. */
+    * version number is known under the store lock. The file keeps the
+    * partition key, spec id and write-time width it is given — rows
+    * narrower or wider than `width` are re-shaped to it — so pruning
+    * and evolution-on-read semantics are unchanged. */
   private[sources] def stageRewriteFile(m: Meta, rows: Iterator[InternalRow],
-      key: InternalRow, width: Int, specId: Int): GraftFileInfo = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-rewrite-")
+      key: InternalRow, width: Int, specId: Int,
+      limit: Int = Int.MaxValue): GraftFileInfo = {
+    val dir = java.nio.file.Files.createTempDirectory(RewriteStagePrefix)
     val h = new GraftFileHandle(m.schema, width,
       new java.io.File(dir.toFile, "staged.parquet").getAbsolutePath,
       key, m.bloomOrds, specId)
-    rows.foreach { r =>
+    var n = 0
+    while (n < limit && rows.hasNext) {
+      val r = rows.next()
       if (r.numFields == width) h.add(r)
       else {
         val vals = new Array[Any](width)
@@ -877,109 +823,51 @@ object GraftParquetStore {
         }
         h.add(new GenericInternalRow(vals))
       }
+      n += 1
     }
     h.close()
   }
 
-  /** DISTRIBUTED deletion-vector purge: ONE TASK PER bitmap-carrying
-    * file reads its live rows and stages a fresh bitmap-free file
-    * where the task runs — the driver sees only (old path → staged
-    * metadata), never a row. At 100 TB a purge touches exactly the
-    * DV-carrying files, in parallel, with O(files) driver state —
-    * the same shape as the DV-computation job it reverses. */
-  private[sources] def purgeDvsTaskSide(
-      spark: org.apache.spark.sql.SparkSession, m: Meta,
-      candidates: Vector[GraftFileInfo])
-      : Vector[(String, GraftFileInfo)] =
-    spark.sparkContext
-      .parallelize(candidates, math.min(candidates.length,
-        math.max(1, spark.sparkContext.defaultParallelism * 2)))
-      .map { f =>
-        f.path -> stageRewriteFile(m,
-          readFile(f, m.schema, Array.range(0, f.numCols)).iterator,
-          f.key, f.numCols, f.specId)
-      }
-      .collect().toVector
+  /** One unit of a task-side rewrite: the files whose live rows one
+    * task reads, and the partition key, spec id and write-time width
+    * its output files keep. */
+  private[sources] final case class RewriteUnit(files: Vector[GraftFileInfo],
+      key: InternalRow, width: Int, specId: Int)
+  private[sources] object RewriteUnit {
+    /** a unit of one file, rewritten in its own shape */
+    def of(f: GraftFileInfo): RewriteUnit =
+      RewriteUnit(Vector(f), f.key, f.numCols, f.specId)
+  }
 
-  /** DISTRIBUTED bin-packing: ONE TASK PER (partition key, spec,
-    * width) group of small files — the task reads its group's rows
-    * and stages merged files of up to `targetRows`, shipping only
-    * metadata. Group shapes (key/spec/width) are preserved so pruning
-    * and evolution-on-read are unchanged; the driver never holds a
-    * row. */
-  private[sources] def binPackTaskSide(
+  /** The TASK-SIDE REWRITE JOB every maintenance verb stages through
+    * (DV purge, bin-pack, MoR compaction, static overwrite): the units
+    * slice into min(units, 2 × defaultParallelism) tasks; a task reads
+    * each unit's live rows (deletion vectors applied), passes them
+    * through `transform` and stages what comes out as files of up to
+    * `fileRows` rows — none when no row survives. Rows reach
+    * `transform` at the table's full width, a slot the file predates
+    * holding its exists-default exactly as a scan reads it; the staged
+    * file keeps the unit's width. The driver receives file metadata
+    * only, one vector per unit in unit order, and never a row.
+    * `transform` runs in the task, once per unit. */
+  private[sources] def stageRewrites(
       spark: org.apache.spark.sql.SparkSession, m: Meta,
-      groups: Vector[(InternalRow, Int, Int, Vector[GraftFileInfo])],
-      targetRows: Int): Vector[Vector[GraftFileInfo]] =
+      units: Vector[RewriteUnit], fileRows: Int = Int.MaxValue)(
+      transform: Iterator[InternalRow] => Iterator[InternalRow])
+      : Vector[Vector[GraftFileInfo]] = {
+    if (units.isEmpty) return Vector.empty
     spark.sparkContext
-      .parallelize(groups, math.min(groups.length,
+      .parallelize(units, math.min(units.length,
         math.max(1, spark.sparkContext.defaultParallelism * 2)))
-      .map { case (key, specId, width, fs) =>
-        val rows = fs.iterator
-          .flatMap(f => readFile(f, m.schema, Array.range(0, width)))
-        // a DECLARED SORT ORDER survives compaction: the group's rows
-        // merge SORTED, so the packed output files keep contiguous
-        // key ranges and zone-map skipping on the sort key stays
-        // alive without a manual ZORDER call (Iceberg sort orders)
-        val ordered =
-          if (m.sortOrds.isEmpty) rows
-          else {
-            val ords = m.sortOrds
-            val dts = ords.map(m.schema(_).dataType)
-            rows.toArray.sortWith { (a, b) =>
-              var i = 0
-              var c = 0
-              while (c == 0 && i < ords.length) {
-                val o = ords(i)
-                val an = a.isNullAt(o); val bn = b.isNullAt(o)
-                c = if (an && bn) 0 else if (an) -1 else if (bn) 1
-                  else GraftZoneMap.cmpStat(dts(i),
-                    a.get(o, dts(i)), b.get(o, dts(i)))
-                i += 1
-              }
-              c < 0
-            }.iterator
-          }
-        ordered
-          .grouped(targetRows)
-          .map(chunk => stageRewriteFile(m, chunk.iterator, key, width,
-            specId))
-          .toVector
-      }
-      .collect().toVector
-
-  /** DISTRIBUTED static-overwrite rewrite (INSERT OVERWRITE /
-    * REPLACE WHERE): for each base file the zone maps could NOT prove
-    * clean, ONE TASK filters out the rows matching the overwrite
-    * predicate and stages a survivor file (dropped entirely when no
-    * row survives). Driver sees metadata only; files the stats proved
-    * clean never reach here (kept by reference by the caller). */
-  private[sources] def overwriteRewriteTaskSide(
-      spark: org.apache.spark.sql.SparkSession, m: Meta,
-      physSchema: StructType,
-      candidates: Vector[GraftFileInfo],
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : Vector[GraftFileInfo] = {
-    if (candidates.isEmpty) return Vector.empty
-    spark.sparkContext
-      .parallelize(candidates, math.min(candidates.length,
-        math.max(1, spark.sparkContext.defaultParallelism * 2)))
-      .flatMap { f =>
-        val preds = filters.flatMap(GraftFilterEval.compile(_, physSchema))
-        require(preds.length == filters.length,
-          "overwrite rewrite: a predicate stopped compiling between " +
-            "canOverwrite and the task — refusing a partial delete set")
-        val rows = readFile(f, m.schema, Array.range(0, f.numCols)).toArray
-        // predicates evaluate against the PADDED full-schema view
-        // (pre-evolution rows read their exists-defaults); the
-        // ORIGINAL narrow rows are what survive into the new file
-        val padded = GraftChangeFeed.padTo(rows, physSchema)
-        val survivors = rows.indices.collect {
-          case i if !preds.forall(_(padded(i))) => rows(i)
-        }
-        if (survivors.isEmpty) Iterator.empty
-        else Iterator.single(stageRewriteFile(m, survivors.iterator,
-          f.key, f.numCols, f.specId))
+      .map { u =>
+        val allOrds = Array.range(0, m.schema.length)
+        val rows = transform(u.files.iterator.flatMap(f =>
+          readFile(f, m.schema, allOrds)))
+        val out = Vector.newBuilder[GraftFileInfo]
+        while (rows.hasNext)
+          out += stageRewriteFile(m, rows, u.key, u.width, u.specId,
+            fileRows)
+        out.result()
       }
       .collect().toVector
   }
@@ -1040,7 +928,8 @@ object GraftParquetStore {
     // one job, no extra scan; NULL passes, FALSE refuses (SQL CHECK)
     val augmented =
       if (nChecks == 0) df
-      else df.select(df.columns.map(org.apache.spark.sql.functions.col)
+      else df.select(df.columns.toIndexedSeq
+        .map(org.apache.spark.sql.functions.col)
         ++ checks.zipWithIndex.map { case ((_, sql), i) =>
           org.apache.spark.sql.functions.expr(sql).as(s"__graft_chk_$i")
         }: _*)
@@ -1116,11 +1005,39 @@ object GraftParquetStore {
       // so the grace window restarts at commit time — the same reason
       // transactAppend touches mtimes at commit.
       target.setLastModified(now)
+      dropEmptyStageDir(src.getParentFile)
       f.copy(path = target.getAbsolutePath)
     }
     vdir.setLastModified(now)
     adopted
   }
+
+  /** temp-directory name prefixes of task-side staging: one
+    * `graft-stage-` directory per append-writing task, one
+    * `graft-rewrite-` directory per rewrite file. */
+  private[sources] val AppendStagePrefix = "graft-stage-"
+  private[sources] val RewriteStagePrefix = "graft-rewrite-"
+  private def isStageDir(d: java.io.File): Boolean =
+    d.getName.startsWith(AppendStagePrefix) ||
+      d.getName.startsWith(RewriteStagePrefix)
+
+  /** remove a staging directory once its last file has been adopted or
+    * discarded (a directory that still holds files stays: another
+    * staged file of the same task is not committed yet). Any directory
+    * that is not a staging directory is left alone. */
+  private def dropEmptyStageDir(d: java.io.File): Unit =
+    if (d != null && isStageDir(d)) { d.delete(); () }
+
+  /** delete files no commit will adopt (a refused, aborted or replayed
+    * write) and their emptied staging directories. Files already
+    * adopted into a version directory are deleted the same way; the
+    * version directory stays. */
+  private[sources] def discardStaged(files: Seq[GraftFileInfo]): Unit =
+    files.foreach { f =>
+      val file = new java.io.File(f.path)
+      file.delete()
+      dropEmptyStageDir(file.getParentFile)
+    }
 
   /** sweep CRASHED STAGING DIRECTORIES: `graft-stage-*` /
     * `graft-rewrite-*` temp dirs whose newest file is older than the
@@ -1134,9 +1051,7 @@ object GraftParquetStore {
     val cutoff = System.currentTimeMillis() - graceMs
     var deleted = 0
     Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(d => d.isDirectory &&
-        (d.getName.startsWith("graft-stage-") ||
-          d.getName.startsWith("graft-rewrite-")))
+      .filter(d => d.isDirectory && isStageDir(d))
       .foreach { d =>
         val kids = Option(d.listFiles()).getOrElse(Array.empty[java.io.File])
         val newest = (d.lastModified() +: kids.map(_.lastModified())).max
@@ -1407,9 +1322,14 @@ case class GraftParquetAppendWriterFactory(
     // tasks see one key)
     private val open = scala.collection.mutable.LinkedHashMap[
       InternalRow, GraftParquetStore.GraftFileHandle]()
-    private val stageDir = {
-      val d = java.nio.file.Files.createTempDirectory("graft-stage-")
-      d.toFile.getAbsolutePath
+    // created with the task's first file: a task that writes no row
+    // leaves no directory behind
+    private var stageDir: java.io.File = _
+    private def dir: java.io.File = {
+      if (stageDir == null)
+        stageDir = java.nio.file.Files.createTempDirectory(
+          GraftParquetStore.AppendStagePrefix).toFile
+      stageDir
     }
     override def write(row: InternalRow): Unit = {
       val phys0 = projFor(row)(row)
@@ -1417,14 +1337,17 @@ case class GraftParquetAppendWriterFactory(
       val key = keyProj(phys).copy(): InternalRow
       val h = open.getOrElseUpdate(key,
         new GraftParquetStore.GraftFileHandle(meta.schema, width,
-          new java.io.File(stageDir,
+          new java.io.File(dir,
             f"p$partitionId%05d-k${open.size}%03d.parquet")
             .getAbsolutePath, key, meta.bloomOrds, meta.curSpecId))
       h.add(phys)
     }
     override def commit(): WriterCommitMessage =
       GraftFilesMessage(open.values.map(_.close()).toVector)
-    override def abort(): Unit = open.values.foreach(_.abort())
+    override def abort(): Unit = {
+      open.values.foreach(_.abort())
+      if (stageDir != null) { stageDir.delete(); () }
+    }
     override def close(): Unit = ()
   }
 }

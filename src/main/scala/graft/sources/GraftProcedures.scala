@@ -8,7 +8,6 @@ import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** SYSTEM PROCEDURES (Spark 4's DSv2 `ProcedureCatalog` — the `CALL`
   * statement, wired in-engine since 4.0): the catalog's maintenance
@@ -130,7 +129,4 @@ private[graft] object GraftProcedures {
 
   def load(name: String, catalogName: String): Option[UnboundProcedure] =
     all(catalogName).get(name)
-
-  /** UTF8String import kept referenced (readout construction). */
-  private val _ = UTF8String.EMPTY_UTF8
 }

@@ -1441,6 +1441,173 @@ class ParquetStoreSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.pqcmp_t")
   }
 
+  test("OPTIMIZE ZORDER of a MoR table with a delta head stays " +
+      "task-side: the chain compacts into a manifest first, rows are " +
+      "unchanged and no version materializes driver-side") {
+    freshCatalog()
+    spark.sql("DROP TABLE IF EXISTS graft.pqzmor_t")
+    spark.sql("CREATE TABLE graft.pqzmor_t (k BIGINT, b INT, s STRING) " +
+      "TBLPROPERTIES ('graft.store'='parquet', " +
+      "'graft.row-level'='merge-on-read', 'graft.row-id'='k')")
+    spark.sql("INSERT INTO graft.pqzmor_t " +
+      "SELECT id, CAST(id * 7 % 50 AS INT), 'x' FROM range(300)")
+    spark.sql("DELETE FROM graft.pqzmor_t WHERE k % 9 = 0") // v1 delta
+    spark.sql("UPDATE graft.pqzmor_t SET s = 'y' WHERE k % 7 = 0") // v2
+    assert(GraftTableStore.commitKind("graft.pqzmor_t", 2) == "delta")
+    val before = spark.table("graft.pqzmor_t").collect()
+      .map(_.toString).sorted.toSeq
+    val t = tasksDuring {
+      graft.api.GraftApi.optimizeZorder(spark, "graft.pqzmor_t", "k", "b")
+    }
+    val head = GraftTableStore.commitCount("graft.pqzmor_t") - 1
+    (0 to head).foreach(v =>
+      assert(!GraftTableStore.isResolvedCached("graft.pqzmor_t", v),
+        s"z-order resolved v$v driver-side"))
+    assert(t >= 1, "z-order launched no Spark task — driver loop?")
+    assert(GraftTableStore.commitKind("graft.pqzmor_t", head) == "parquet",
+      "the z-ordered head must be a file manifest")
+    // the MoR chain folds through one content-neutral compact first
+    assert(GraftTableStore.history("graft.pqzmor_t").map(_._2)
+      .takeRight(2) == Vector("compact", "zorder"))
+    assert(spark.table("graft.pqzmor_t").collect()
+      .map(_.toString).sorted.toSeq == before, "z-order changed reads")
+    spark.sql("DROP TABLE graft.pqzmor_t")
+  }
+
+  test("a MoR chain of equality deletes on two columns (no file view " +
+      "folds it) reads, compacts and z-orders to the recomputed rows") {
+    freshCatalog()
+    val t = "graft.pqeq2_t"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, g BIGINT, s STRING) " +
+      "TBLPROPERTIES ('graft.store'='parquet', " +
+      "'graft.row-level'='merge-on-read', 'graft.row-id'='k')")
+    spark.sql(s"INSERT INTO $t SELECT id, id % 10, concat('s', id) " +
+      "FROM range(200)")
+    // the rows a from-scratch recomputation gives after deleting `ks`
+    // by k and `gs` by g
+    var ks = Set.empty[Long]
+    var gs = Set.empty[Long]
+    def expected: Seq[String] = (0L until 200L)
+      .filter(k => !ks.contains(k) && !gs.contains(k % 10))
+      .map(k => org.apache.spark.sql.Row(k, k % 10, s"s$k").toString)
+      .sorted
+    def rows: Seq[String] =
+      spark.table(t).collect().map(_.toString).sorted.toSeq
+    def deleteBoth(k: Seq[Long], g: Seq[Long]): Unit = {
+      graft.api.GraftApi.deleteWhereKeyIn(spark, t, "k", k)
+      graft.api.GraftApi.deleteWhereKeyIn(spark, t, "g", g)
+      ks ++= k; gs ++= g
+    }
+    deleteBoth(Seq(10L, 21L, 32L), Seq(3L))
+    assert(rows == expected, "scan of the two-column chain")
+    // the scan took the row path: it resolved the head on the driver
+    val v2 = GraftTableStore.commitCount(t) - 1
+    assert(GraftTableStore.isResolvedCached(t, v2),
+      "the two-column chain was expected to take the row path")
+    assert(graft.api.GraftApi.optimizeTable(spark, t) == 2)
+    val v3 = GraftTableStore.commitCount(t) - 1
+    assert(GraftTableStore.commitKind(t, v3) == "parquet")
+    assert(rows == expected, "compact of the two-column chain")
+    deleteBoth(Seq(44L, 55L), Seq(7L))
+    graft.api.GraftApi.optimizeZorder(spark, t, "k", "g")
+    val head = GraftTableStore.commitCount(t) - 1
+    assert(GraftTableStore.commitKind(t, head) == "parquet")
+    assert(GraftTableStore.history(t).map(_._2).takeRight(2) ==
+      Vector("compact", "zorder"))
+    assert(rows == expected, "z-order of the two-column chain")
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("REPLACE WHERE onto a parquet MoR table whose head is a delta " +
+      "commit takes the row path and lands the recomputed rows") {
+    freshCatalog()
+    val t = "graft.pqrwmor_t"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('graft.store'='parquet', " +
+      "'graft.row-level'='merge-on-read', 'graft.row-id'='k')")
+    spark.sql(s"INSERT INTO $t SELECT id, id * 2.0 FROM range(100)")
+    spark.sql(s"DELETE FROM $t WHERE k % 10 = 0") // v1 delta head
+    assert(GraftTableStore.commitKind(t, 1) == "delta")
+    spark.sql(s"INSERT INTO $t REPLACE WHERE k >= 50 " +
+      "SELECT id + 1000 AS k, 1.0 AS v FROM range(10)")
+    val expected = ((0L until 100L)
+      .filter(k => k % 10 != 0 && k < 50).map(k => (k, k * 2.0)) ++
+      (0L until 10L).map(i => (i + 1000L, 1.0))).sorted
+    val got = spark.table(t).collect()
+      .map(r => (r.getLong(0), r.getDouble(1))).sorted.toSeq
+    assert(got == expected)
+    // the fallback merged the delta base on the driver
+    assert(GraftTableStore.isResolvedCached(t, 1),
+      "the overwrite was expected to take the row path")
+    assert(GraftTableStore.history(t).map(_._2).last == "overwrite")
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("REPLACE WHERE on a column added with a DEFAULT replaces the " +
+      "files written before the column, whose rows read the default") {
+    freshCatalog()
+    val t = "graft.pqrwdef_t"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT) " +
+      "TBLPROPERTIES ('graft.store'='parquet')")
+    spark.sql(s"INSERT INTO $t SELECT id FROM range(10)")
+    spark.sql(s"ALTER TABLE $t ADD COLUMN d INT DEFAULT 5")
+    spark.sql(s"INSERT INTO $t SELECT id + 10, 7 FROM range(3)")
+    assert(spark.table(t).where(col("d") === 5).count() == 10)
+    spark.sql(s"INSERT INTO $t REPLACE WHERE d = 5 AND k >= 4 " +
+      "SELECT 100L AS k, 6 AS d")
+    val got = spark.table(t).collect()
+      .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
+    val expected = ((0L until 4L).map(k => (k, 5)) ++
+      (10L until 13L).map(k => (k, 7)) :+ ((100L, 6))).sorted
+    assert(got == expected)
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("appends, an UPDATE, a bin-pack and a refused maintenance " +
+      "commit leave none of their staging directories behind") {
+    freshCatalog()
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def stageDirs: Set[String] =
+      Option(tmp.listFiles()).getOrElse(Array.empty[java.io.File])
+        .filter(d => d.isDirectory && (d.getName.startsWith("graft-stage-")
+          || d.getName.startsWith("graft-rewrite-")))
+        .map(_.getName).toSet
+    val t = "graft.pqstage_t"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, s STRING) " +
+      "TBLPROPERTIES ('graft.store'='parquet')")
+    val before = stageDirs
+    (0 until 4).foreach(i =>
+      spark.sql(s"INSERT INTO $t SELECT id, 'a' " +
+        s"FROM range(${i * 20}, ${i * 20 + 20})"))
+    spark.sql(s"UPDATE $t SET s = 'b' WHERE k % 3 = 0")
+    (0 until 3).foreach(i =>
+      spark.sql(s"INSERT INTO $t SELECT id, 'c' " +
+        s"FROM range(${100 + i * 10}, ${110 + i * 10})"))
+    assert(graft.api.GraftApi.rewriteSmallFiles(spark, t, 1000) > 0)
+    // a DELETE lands between the next bin-pack's staging and its
+    // commit and rewrites the files it merged: the commit is refused
+    (0 until 3).foreach(i =>
+      spark.sql(s"INSERT INTO $t SELECT id, 'd' " +
+        s"FROM range(${200 + i * 10}, ${210 + i * 10})"))
+    GraftTableStore.maintenanceStallHook = Some { () =>
+      spark.sql(s"DELETE FROM $t WHERE s = 'd' AND k % 2 = 0"); ()
+    }
+    val ex =
+      try intercept[Exception] {
+        graft.api.GraftApi.rewriteSmallFiles(spark, t, 1000)
+      } finally GraftTableStore.maintenanceStallHook = None
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("concurrent")),
+      ex.toString)
+    val left = stageDirs -- before
+    assert(left.isEmpty, s"staging directories left behind: $left")
+    spark.sql(s"DROP TABLE $t")
+  }
+
   test("VACUUM orphan sweep: crashed staging past the grace window " +
       "is collected, in-flight staging survives, a conflicted " +
       "commit's adopted files are collected, and referenced files " +
