@@ -70,12 +70,14 @@ private[graft] object Snapshot {
 }
 
 /** Size gate for the local solves (connected components, graph_bfs, MMR
-  * rerank, BPE fit). Each site has an exact single-task or driver-side
-  * solve and a distributed twin with identical results, and picks one
-  * from the size of the frame it checkpoints: [[snapshot]] observes the
-  * row count on the job that writes the checkpoint, so the gate costs
-  * no job. At `rows × weight ≤ budget` the local solve runs, above it
-  * the distributed path — the one that scales to any input — runs
+  * rerank, BPE fit) and the store's driver-side resolutions (change-feed
+  * pre-images, exact scan ndv). Each site has an exact single-task or
+  * driver-side solve and a distributed twin with identical results, and
+  * picks one from a size it knows without a job: [[snapshot]] observes
+  * the row count of a frame on the job that writes its checkpoint, and
+  * [[decide]] takes a count the caller already holds (a manifest's). At
+  * `rows × weight ≤ budget` the local solve runs, above it the
+  * distributed path — the one that scales to any input — runs
   * unchanged. Budgets are per-site constants sized to what one task or
   * the driver holds comfortably; no conf changes them. Every decision
   * is logged once at INFO under `graft.Gate`. */
@@ -92,14 +94,21 @@ private[graft] object Gate {
   def snapshot(site: String, frame: DataFrame, budget: Long,
       weight: Long = 1L): (DataFrame, Decision) = {
     val (snap, m) = Snapshot.observed(frame, count(lit(1)).as("rows"))
-    val rows = m.getLong(0)
+    (snap, decide(site, m.getLong(0), budget, weight))
+  }
+
+  /** the gate's decision on `rows` the caller already counted */
+  def decide(site: String, rows: Long, budget: Long,
+      weight: Long = 1L): Decision = {
     // rows·w ≤ budget without the overflow of the product
     val fits = rows <= budget / math.max(weight, 1L)
     val local = fits && !forced.value
     if (fits && !local) overrides.incrementAndGet()
-    log.info(s"$site: ${if (local) "local" else "distributed"} ($rows rows" +
-      s" × $weight vs budget $budget${if (fits && !local) ", forced" else ""})")
-    (snap, Decision(rows, local))
+    if (log.isInfoEnabled)
+      log.info(s"$site: ${if (local) "local" else "distributed"} ($rows " +
+        s"rows × $weight vs budget $budget" +
+        s"${if (fits && !local) ", forced" else ""})")
+    Decision(rows, local)
   }
 
   /** Test hook: every gate evaluated inside `body` (on this thread) takes

@@ -553,9 +553,6 @@ object GraftApi {
       "a transaction writes each table at most once")
     writes.foreach { case (t, _) =>
       spark.table(t) // force the lazy catalog attach before head reads
-      require(GraftParquetStore.isBacked(t),
-        s"transaction: $t is not parquet-backed — multi-table commits " +
-          "are a file-store surface")
     }
     val heads = expectedHeads.getOrElse(
       writes.map(w => w._1 -> (GraftTableStore.commitCount(w._1) - 1))
@@ -832,19 +829,14 @@ object GraftApi {
     * targets. `table` catalog-qualified ("graft.t"). */
   def tableDetail(spark: org.apache.spark.sql.SparkSession,
       table: String): DataFrame = {
-    import graft.sources.{GraftParquetStore, GraftTableStore}
+    import graft.sources.GraftTableStore
     val hist = GraftTableStore.history(table)
     require(hist.nonEmpty, s"no such governed table (or no commits): " +
       s"$table")
-    val backed = GraftParquetStore.isBacked(table)
-    val files =
-      if (backed) GraftTableStore.commitFiles(table, hist.last._1)
-      else Vector.empty
-    val nParts =
-      if (backed) files.map(_.key).distinct.length.toLong else 0L
+    val files = GraftTableStore.commitFiles(table, hist.last._1)
+    val nParts = files.map(_.key).distinct.length.toLong
     import spark.implicits._
-    Seq((if (backed) "parquet" else "memory",
-      hist.last._3.toLong, hist.size.toLong, nParts,
+    Seq(("parquet", hist.last._3.toLong, hist.size.toLong, nParts,
       files.nonEmpty && files.forall(_.bytes > 0)))
       .toDF("format", "num_rows", "n_versions", "n_partitions",
         "has_files")
@@ -868,13 +860,12 @@ object GraftApi {
 
   /** SHALLOW CLONE (Delta's `CREATE TABLE dst SHALLOW CLONE src`):
     * create `dst` as a new governed table whose v0 commit REFERENCES
-    * `src`'s current published content — on a parquet-backed source
-    * the clone re-lists the source's file manifest verbatim (zero
-    * rows read, zero bytes copied: at 100 TB a clone is one manifest
-    * write), in memory the snapshot array is shared by reference.
-    * The clone copies the source's full definition (physical schema
-    * with column-mapping slots, partition spec, row-level mode,
-    * parquet backing) and the two tables evolve independently from
+    * `src`'s current published content — the clone re-lists the
+    * source's file manifest verbatim (zero rows read, zero bytes
+    * copied: at 100 TB a clone is one manifest write). The clone
+    * copies the source's full definition (physical schema with
+    * column-mapping slots, partition spec, row-level mode, parquet
+    * registration) and the two tables evolve independently from
     * that instant: the clone's own commits write under its own
     * directory. Shared files are GC-safe — every file-delete sweep
     * (retention trim, VACUUM, DROP TABLE) consults every registered
@@ -887,8 +878,7 @@ object GraftApi {
   def cloneTable(spark: org.apache.spark.sql.SparkSession,
       src: String, dst: String): Int = {
     graft.sources.GraftMergeCatalog.cloneDef(src, dst)
-    if (graft.sources.GraftParquetStore.isBacked(src))
-      graft.sources.GraftParquetStore.registerLike(src, dst)
+    graft.sources.GraftParquetStore.registerLike(src, dst)
     graft.sources.GraftTableStore.cloneTable(src, dst)
   }
 

@@ -115,17 +115,16 @@ object GraftWarehouse {
   *     COLUMN, defaults), partition-spec evolution, constraint
   *     ADD/DROP.
   *
-  * Only parquet-backed tables log — they are the ones whose DATA
-  * survives the process; an in-memory table's rows die with the JVM
-  * regardless of any log. All writes happen under the store commit
-  * lock (the callers hold it), so entries are totally ordered per
-  * table. At 100 TB the same design holds: the log is O(metadata)
+  * Every governed table logs: its DATA lives in files that survive
+  * the process, and the log makes its state re-findable. All writes
+  * happen under the store commit lock (the callers hold it), so
+  * entries are totally ordered per table. At 100 TB the same design holds: the log is O(metadata)
   * (file paths + stats, never rows except MoR deltas, which are
   * O(changed rows) by definition), and replay is bounded by the
   * checkpoint. */
 object GraftLog {
   import GraftParquetStore.Meta
-  import GraftTableStore.{GraftCommitData, GraftDeltaData, GraftEqDeleteData, GraftFullData, GraftParquetData, History}
+  import GraftTableStore.{GraftCommitData, GraftDeltaData, GraftEqDeleteData, GraftParquetData, History}
 
   private def logDir(dir: String): File = new File(dir, "_graft_log")
 
@@ -391,9 +390,6 @@ object GraftLog {
       // checkpoint/commit time — the O(1) promise is the point)
       ("kind" -> "eqdelete") ~ ("keyOrd" -> e.keyOrd) ~
         ("keys" -> JArray(e.keys.toList.map(jval(e.keyType, _))))
-    case _: GraftFullData => throw new IllegalStateException(
-      "a parquet-backed table cannot hold in-memory full commits — " +
-        "the commit path persists them as files before logging")
   }
   private def unjCommitData(m: Meta, j: JValue, storeName: String,
       version: Int): GraftCommitData =

@@ -35,13 +35,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * stable row id), the deletion-vector/MoR shape whose write cost is
   * O(changed rows) — the right one for small mutations at 100 TB.
   *
-  * Two stores, chosen per table at CREATE: the default in-JVM row
-  * store, where a commit holds UnsafeRow copies (or, merge-on-read, an
-  * op log merged at read), and the parquet store
-  * (TBLPROPERTIES ('graft.store'='parquet'), [[GraftParquetStore]]),
-  * where a commit is a file manifest and [[GraftLog]] makes every
-  * state change durable under the warehouse root. Rows travel through
-  * the standard DataWriter / WriterCommitMessage protocol either way.
+  * One store: every governed table is parquet-backed
+  * ([[GraftParquetStore]]). A commit is a file manifest, a
+  * merge-on-read op log or an equality delete, and [[GraftLog]] makes
+  * every state change durable under the warehouse root; scans ship
+  * file paths, never rows. (`'graft.store'='parquet'` is still
+  * accepted at CREATE and changes nothing.)
   *
   * Each table's in-memory state is ONE immutable [[TableState]] record
   * per store name, in one map: history, parquet registration, catalog
@@ -65,28 +64,38 @@ object GraftTableStore {
     * format's VACUUM/retention window gives. */
   private[graft] val RetainedVersions = 64
 
-  /** What one commit STORES — the merge-on-read distinction made real:
-    * a full commit materializes its snapshot (append / replace /
-    * overwrite paths, where the writer produced the rows anyway); a
-    * DELTA commit stores only the row-level op log (`WriteDelta`'s
-    * delete/update/insert stream) — O(changed rows), never the table.
-    * The snapshot a delta commit denotes is MERGED AT READ TIME
-    * ([[GraftTableStore.resolveRel]]): base(v-1) + op log, exactly the
-    * scan-side base+delta merge a deletion-vector/MoR reader performs.
-    * `count` is the post-commit row count, carried so DESCRIBE HISTORY
-    * and streaming admission control stay O(metadata): for a delta it
-    * is prevCount − |distinct delete ids| + |inserts|, exact under the
-    * MoR unique-row-id contract (WriteDelta only deletes/updates rows
-    * its scan matched, one op per matched row). */
-  private[sources] sealed trait GraftCommitData { def count: Int }
+  /** What a commit is handed: rows to persist as files
+    * ([[GraftFullData]]) or an already-stored form
+    * ([[GraftCommitData]]). */
+  private[sources] sealed trait GraftCommitInput
+  /** rows the commit persists as a file manifest before the history
+    * records it ([[GraftParquetStore.persistFull]]) — the row paths
+    * that produce rows on the driver (IDENTITY writes, a fold of a
+    * chain [[fileView]] cannot fold); never retained as such. */
   private[sources] final case class GraftFullData(rows: Array[InternalRow])
-      extends GraftCommitData { def count: Int = rows.length }
+      extends GraftCommitInput
+  /** What one commit STORES — the merge-on-read distinction made real:
+    * a file manifest ([[GraftParquetData]]); a DELTA commit stores only
+    * the row-level op log (`WriteDelta`'s delete/update/insert
+    * stream) — O(changed rows), never the table. The snapshot a delta
+    * commit denotes is MERGED AT READ TIME (scans fold it through
+    * [[fileView]]; driver reads through [[GraftTableStore.resolveRel]]):
+    * base(v-1) + op log, exactly the scan-side base+delta merge a
+    * deletion-vector/MoR reader performs. `count` is the post-commit
+    * row count, carried so DESCRIBE HISTORY and streaming admission
+    * control stay O(metadata): for a delta it is prevCount − |distinct
+    * delete ids| + |inserts|, exact under the MoR unique-row-id
+    * contract (WriteDelta only deletes/updates rows its scan matched,
+    * one op per matched row). */
+  private[sources] sealed trait GraftCommitData extends GraftCommitInput {
+    def count: Int
+  }
   private[sources] final case class GraftDeltaData(ops: Array[GraftDeltaOp],
       idOrd: Int, idType: org.apache.spark.sql.types.DataType,
       count: Int) extends GraftCommitData
-  /** a full commit of a PARQUET-BACKED table ([[GraftParquetStore]]):
-    * the manifest — file list + count — IS the commit; rows live in the
-    * files and scans ship paths, not rows. A plain append re-references
+  /** a file-manifest commit ([[GraftParquetStore]]): the manifest —
+    * file list + count — IS the commit; rows live in the files and
+    * scans ship paths, not rows. A plain append re-references
     * every prior file and adds only the new rows' files. */
   private[sources] final case class GraftParquetData(
       files: Vector[GraftFileInfo], count: Int) extends GraftCommitData
@@ -151,7 +160,7 @@ object GraftTableStore {
   /** EVERYTHING this process holds in memory about one table, as one
     * immutable record:
     *   - `history`: the retained commits;
-    *   - `meta`: the parquet registration (None on the row store);
+    *   - `meta`: the parquet registration (set at CREATE or attach);
     *   - `definition`: the catalog definition. Spark builds one catalog
     *     object per session (foreachBatch clones included), so it lives
     *     here, JVM-shared, and not in the catalog instance;
@@ -433,17 +442,16 @@ object GraftTableStore {
     }.toArray ++ inserts
   }
 
-  /** rows of the commit at RELATIVE index `rel` in `h`: a full commit
-    * answers directly; a delta commit merges base + op log, memoized by
-    * absolute version. Recursion depth ≤ RetainedVersions (retention
-    * trim materializes the head, so a chain never walks off the retained
-    * window). The memo and the parquet schema come from `s`, the record
-    * `h` was read from, so a reader racing an install never mixes two
-    * records. */
+  /** rows of the commit at RELATIVE index `rel` in `h`, resolved on the
+    * driver and memoized by absolute version: a manifest reads its
+    * files, a delta commit merges base + op log. Recursion depth ≤
+    * RetainedVersions (retention trim checkpoints the head as files,
+    * so a chain never walks off the retained window). The memo and the
+    * parquet schema come from `s`, the record `h` was read from, so a
+    * reader racing an install never mixes two records. */
   private def resolveRel(name: String, s: TableState, h: History,
       rel: Int): Array[InternalRow] =
     h.commits(rel) match {
-      case f: GraftFullData => f.rows
       case d: GraftDeltaData =>
         s.resolved.getOrElseUpdate(h.firstRetained + rel, {
           val base =
@@ -472,8 +480,7 @@ object GraftTableStore {
         // prefix of this one's (the append shape), its resolved rows
         // are reused BY REFERENCE and only the new files are read —
         // so reference-identity invariants (streaming prefix check,
-        // change-feed equality) see through the file round-trip
-        // exactly as they do in memory.
+        // change-feed equality) see through the file round-trip.
         s.resolved.getOrElseUpdate(h.firstRetained + rel, {
           val schema = s.meta.map(_.schema)
             .getOrElse(throw new IllegalStateException(
@@ -549,14 +556,14 @@ object GraftTableStore {
       h.commits(rel)))
   }
 
-  /** the STORED form of a commit — "full" or "delta" — so tests can pin
-    * that a delta commit really persisted only its op log. */
+  /** the STORED form of a commit — "parquet", "delta" or "eqdelete" —
+    * so tests can pin that a delta commit really persisted only its op
+    * log. */
   private[graft] def commitKind(name: String, v: Int): String = {
     val h = historyOf(name)
     require(v >= h.firstRetained && v < h.commitCount,
       s"version $v of $name is not retained")
     h.commits(v - h.firstRetained) match {
-      case _: GraftFullData => "full"
       case _: GraftDeltaData => "delta"
       case _: GraftEqDeleteData => "eqdelete"
       case _: GraftParquetData => "parquet"
@@ -610,25 +617,27 @@ object GraftTableStore {
 
   /** Append one commit and apply retention — MUST run under [[lock]].
     * When the trim drops versions, the commit that becomes the new
-    * retained HEAD is materialized first (a delta head would otherwise
-    * need its expired predecessor to resolve) — the checkpoint a lake
-    * format writes before expiring snapshots; dropped versions' cached
-    * resolutions are evicted with them. */
+    * retained HEAD is checkpointed as files first (a delta head would
+    * otherwise need its expired predecessor to resolve) — the
+    * checkpoint a lake format writes before expiring snapshots;
+    * dropped versions' cached resolutions are evicted with them. */
   private def appendLocked(name: String, op: String,
-      data: GraftCommitData, branch: Option[String] = None,
+      data: GraftCommitInput, branch: Option[String] = None,
       logIt: Boolean = true, atTime: Option[Long] = None): Unit = {
+    val s = current(name)
+    val m = s.meta.getOrElse(throw new IllegalStateException(
+      s"$name is not a registered table — no commit possible"))
     // cross-process OCC, BEFORE the in-memory apply: a foreign
     // process's entries on disk past our counter mean this process's
     // view of the table is stale — refuse while state is still
     // consistent (the atomic entry claim backstops the residual race),
     // with the disk truth installed when the log replays
-    if (logIt && GraftParquetStore.isBacked(name))
+    if (logIt)
       try GraftLog.verifyTail(name)
       catch {
         case e: GraftConcurrentCommitException =>
           throw installDiskTruth(name).fold(e)(rebased(e, _))
       }
-    val s = current(name)
     val h = s.history
     val head = h.commitCount - 1
     // linear-chain discipline: every commit extends the chain head.
@@ -653,26 +662,21 @@ object GraftTableStore {
               s"chain head v$head — only the head branch can be written")
     }
     val newV = head + 1
-    // parquet-backed table: a full commit PERSISTS as files (append
-    // re-references the previous manifest and writes only the suffix);
-    // delta commits stay op logs merged at read, exactly as in memory.
-    // The just-committed rows seed the resolution cache so the first
-    // driver-side materialization never re-reads what it just wrote.
+    // rows PERSIST as files (an append re-references the previous
+    // manifest and writes only the suffix); delta commits stay op logs
+    // merged at read. The just-committed rows seed the resolution
+    // cache so the first driver-side materialization never re-reads
+    // what it just wrote.
     val stored: GraftCommitData = data match {
       case f: GraftFullData =>
-        s.meta match {
-          case Some(m) =>
-            val prev = h.commits.lastOption.collect {
-              case p: GraftParquetData =>
-                (p, resolveRel(name, s, h, h.commits.size - 1))
-            }
-            val pq = GraftParquetStore.persistFull(
-              name, m, newV, f.rows, prev)
-            s.resolved.put(newV, f.rows)
-            pq
-          case None => f
+        val prev = h.commits.lastOption.collect {
+          case p: GraftParquetData =>
+            (p, resolveRel(name, s, h, h.commits.size - 1))
         }
-      case other => other
+        val pq = GraftParquetStore.persistFull(name, m, newV, f.rows, prev)
+        s.resolved.put(newV, f.rows)
+        pq
+      case c: GraftCommitData => c
     }
     val newBranches = branch match {
       case None => h.branches + ("main" -> newV)
@@ -707,12 +711,12 @@ object GraftTableStore {
     // history, ledger and MV record land as ONE record replacement
     update(name)(st => st.copy(history = trimmed,
       ingested = st.ingested ++ ingest, mv = mv.orElse(st.mv)))
-    // DURABILITY: a file-backed table's commit appends to its on-disk
+    // DURABILITY: the commit appends to the table's on-disk
     // transaction log; a commit that trimmed retention checkpoints the
     // full state instead (and GCs the entries the checkpoint subsumes).
     // The cross-table transaction path writes its (marker-protected)
     // entries itself — logIt=false.
-    if (GraftParquetStore.isBacked(name) && logIt) {
+    if (logIt) {
       try {
         if (trimmed.firstRetained != h.firstRetained)
           GraftLog.checkpoint(name)
@@ -765,21 +769,15 @@ object GraftTableStore {
       val dropN = appended.commits.size - keep
       val headRel = dropN // relative index of the new head, pre-trim
       val headData: GraftCommitData = appended.commits(headRel) match {
-        case f: GraftFullData => f
         case p: GraftParquetData => p
-        case _ => // delta / eq-delete head: checkpoint-before-expire
+        case _ => // delta / eq-delete head: checkpointed as files
+          // before its base expires
           val rows = resolveRel(name, s, appended, headRel)
-          // a parquet-backed delta head checkpoints AS FILES, so the
-          // table never silently degrades to in-memory snapshots
-          s.meta match {
-            case Some(m) =>
-              val v = appended.firstRetained + headRel
-              val pq = GraftParquetStore.persistFull(
-                name, m, v, rows, None)
-              s.resolved.put(v, rows)
-              pq
-            case None => GraftFullData(rows)
-          }
+          val v = appended.firstRetained + headRel
+          val pq = GraftParquetStore.persistFull(
+            name, s.meta.get, v, rows, None)
+          s.resolved.put(v, rows)
+          pq
       }
       val newFirst = appended.firstRetained + dropN
       s.resolved.keysIterator.filter(_ < newFirst)
@@ -797,17 +795,15 @@ object GraftTableStore {
       // retained commit still lists them — including a SHALLOW
       // CLONE's manifest (another table referencing files under THIS
       // table's dir), so a source-side trim can never corrupt a clone
-      if (GraftParquetStore.isBacked(name)) {
-        val referenced = trimmed.commits.iterator.flatMap {
-          case p: GraftParquetData => p.files.iterator.map(_.path)
-          case _ => Iterator.empty
-        }.toSet ++ fileRefsExcept(name)
-        // sweep EXPIRED version dirs only (< newFirst): a dir at or
-        // above it can hold a concurrent foreign writer's just-adopted
-        // files whose commit this process hasn't replayed yet —
-        // deleting those corrupts the winner (gcUnreferenced scaladoc)
-        GraftParquetStore.gcUnreferenced(name, referenced, newFirst)
-      }
+      val referenced = trimmed.commits.iterator.flatMap {
+        case p: GraftParquetData => p.files.iterator.map(_.path)
+        case _ => Iterator.empty
+      }.toSet ++ fileRefsExcept(name)
+      // sweep EXPIRED version dirs only (< newFirst): a dir at or
+      // above it can hold a concurrent foreign writer's just-adopted
+      // files whose commit this process hasn't replayed yet —
+      // deleting those corrupts the winner (gcUnreferenced scaladoc)
+      GraftParquetStore.gcUnreferenced(name, referenced, newFirst)
       trimmed
     }
 
@@ -829,8 +825,7 @@ object GraftTableStore {
       if (isTag) h.copy(tags = h.tags + (ref -> v))
       else h.copy(branches = h.branches + (ref -> v))
     setHistory(name, nh)
-    if (GraftParquetStore.isBacked(name))
-      GraftLog.logRef(name, nh.branches, nh.tags)
+    GraftLog.logRef(name, nh.branches, nh.tags)
   }
 
   /** resolve a named ref to its absolute version. */
@@ -855,16 +850,18 @@ object GraftTableStore {
           s"to v$to ('$ref') — publish is forward-only")
       val nh = h.copy(branches = h.branches + ("main" -> to))
       setHistory(name, nh)
-      if (GraftParquetStore.isBacked(name))
-        GraftLog.logRef(name, nh.branches, nh.tags)
+      GraftLog.logRef(name, nh.branches, nh.tags)
       to
     }
 
   /** Atomic read-modify-write commit: `f` maps the current committed
-    * rows to the next snapshot; the swap of (current, history) is one
-    * synchronized step, so no concurrent commit can interleave between
-    * the read and the write, and the history always ends in the row set
-    * `get` serves. */
+    * rows (resolved on the driver) to the next snapshot, which persists
+    * as files; the swap of (current, history) is one synchronized step,
+    * so no concurrent commit can interleave between the read and the
+    * write, and the history always ends in the row set `get` serves.
+    * Kept for the IDENTITY row-message path (ids are assigned at commit
+    * time, on the driver) and the row fallback of a rewrite the
+    * manifest cannot answer. */
   private[graft] def mutate(name: String, op: String = "append",
       branch: Option[String] = None)(
       f: Array[InternalRow] => Array[InternalRow]): Unit =
@@ -925,7 +922,6 @@ object GraftTableStore {
         case e: GraftEqDeleteData =>
           e.keyOrd == idOrd && e.keyType == idType &&
             e.keys.forall(k => !ourIds.contains(k))
-        case _ => false
       }
     }
   }
@@ -1032,9 +1028,10 @@ object GraftTableStore {
     * adopts the staged files into the new version's directory (one
     * rename each, under the lock, once the version number is known)
     * and extends the previous manifest. The driver never sees a row:
-    * a manifest-only commit, the lake-format append. Falls back to a
-    * materializing commit only when the chain head is a delta op log
-    * (the new content must append AFTER the merged state). */
+    * a manifest-only commit, the lake-format append. Onto a delta
+    * op-log head (the new content must append AFTER the merged state)
+    * the rows are read once on the driver and commit as an insert-only
+    * op log ([[insertDelta]]), O(appended). */
   /** what a blind append BASED on, for conflict classification: the
     * head manifest as path → content signature, plus the metadata
     * surfaces a foreign commit could have evolved. headSig is None
@@ -1181,15 +1178,18 @@ object GraftTableStore {
                 GraftParquetData(p.files ++ files,
                   p.count + files.map(_.rows).sum), branch)
             case Some(_) =>
-              // delta (or legacy in-memory) head: materialize base +
-              // the staged rows and let the full-persist path lay out
-              // files. Staged inputs are consumed — no rebase after.
-              val base = resolveRel(name, h, h.commits.size - 1)
+              // delta head: the staged rows join the chain as an
+              // insert-only op log — O(appended), the base untouched.
+              // Where the fold could not keep them apart from the
+              // head's rows, base + staged rows persist as files.
+              // Staged inputs are consumed either way — no rebase after.
               val incoming = GraftParquetStore.readAll(cur, m.schema)
               GraftParquetStore.discardStaged(cur)
               cur = Vector.empty
-              appendLocked(name, op,
-                GraftFullData(base ++ incoming), branch)
+              appendLocked(name, op, insertDelta(name, h, incoming)
+                .getOrElse(GraftFullData(
+                  resolveRel(name, h, h.commits.size - 1) ++ incoming)),
+                branch)
           }
           true
         } catch {
@@ -1218,6 +1218,30 @@ object GraftTableStore {
         }
       }
     }
+  }
+
+  /** `rows` appended onto the delta head of `h` as an insert-only op
+    * log, or None where [[fileView]]'s fold could not keep them apart
+    * from the head's rows (it keys extras by row id): the table has no
+    * row id, the chain folds in another id domain, or an appended id
+    * is NULL, repeats in the batch or is an extra already. */
+  private def insertDelta(name: String, h: History,
+      rows: Array[InternalRow]): Option[GraftDeltaData] = {
+    val schema = current(name).meta.get.schema
+    val idOrd = definitionOf(name).flatMap(_.table.morRowId)
+      .map(schema.fieldIndex).getOrElse(return None)
+    val idType = schema(idOrd).dataType
+    val fv = fileView(name, Some(h.commitCount - 1))
+      .filter(v => v.idOrd == idOrd && v.idType == idType)
+      .getOrElse(return None)
+    val ids = rows.map(r =>
+      if (idOrd >= r.numFields || r.isNullAt(idOrd)) null
+      else r.get(idOrd, idType))
+    val extraIds = fv.extras.iterator.map(_.get(idOrd, idType)).toSet
+    if (ids.contains(null) || ids.distinct.length != ids.length ||
+        ids.exists(extraIds)) None
+    else Some(GraftDeltaData(rows.map(GraftDeltaOp('I', null, _)), idOrd,
+      idType, h.commits.last.count + rows.length))
   }
 
   /** Commit a REWRITING write (replace / truncate / overwrite /
@@ -1373,9 +1397,7 @@ object GraftTableStore {
         s"transaction: $name is not parquet-backed"))
     require(sessionWapBranch.isEmpty && mainAtChainHead(name),
       s"transaction: $name has staged branch commits — publish first")
-    val fv = fileView(name, None).getOrElse(
-      GraftFileView(Vector.empty, Array.empty, Array.empty, -1,
-        org.apache.spark.sql.types.NullType))
+    val fv = fileView(name, None).getOrElse(plainView(Vector.empty))
     require(fv.extras.isEmpty && fv.deletedIds.isEmpty,
       s"transaction: $name has a merge-on-read delta head — " +
         "OPTIMIZE (compact) it before a transactional DELETE")
@@ -1970,17 +1992,14 @@ object GraftTableStore {
       if (d == 0) return 0
       (h.commitCount - 1, d)
     }
-    // TASK-SIDE path for a file-backed base: each base file's live
-    // rows (the folded delta deletes applied as the file decodes —
-    // exactly what the MoR scan does) re-stage where the task runs;
-    // only the O(changes) op-log extras pass through the driver. The
-    // resolveRel materialization below remains for in-memory tables
-    // (their rows live in the JVM regardless) and for a chain
-    // [[fileView]] cannot fold.
-    if (GraftParquetStore.isBacked(name))
-      fileView(name, None).foreach { fv =>
-        return compactTaskSide(name, spark, fv, expectedHead, deltas)
-      }
+    // TASK-SIDE: each base file's live rows (the folded delta deletes
+    // applied as the file decodes — exactly what the MoR scan does)
+    // re-stage where the task runs; only the O(changes) op-log extras
+    // pass through the driver. The resolveRel materialization below
+    // remains for a chain [[fileView]] cannot fold.
+    fileView(name, None).foreach { fv =>
+      return compactTaskSide(name, spark, fv, expectedHead, deltas)
+    }
     withTableLock(name) {
       refuseIfMoved(name, "OPTIMIZE", expectedHead, Vector.empty)
       val h = historyOf(name)
@@ -2061,9 +2080,8 @@ object GraftTableStore {
         s"version $v of $name does not exist (${h.commitCount} commits)")
       require(v >= h.firstRetained,
         s"version $v of $name has expired — cannot restore to it")
-      val data: GraftCommitData = h.commits(v - h.firstRetained) match {
+      val data: GraftCommitInput = h.commits(v - h.firstRetained) match {
         case p: GraftParquetData => p // manifest re-reference, no I/O
-        case f: GraftFullData => f // shared row references, no copy
         case _ => // delta / eq-delete: materialize the merged state once
           GraftFullData(resolveRel(name, h, v - h.firstRetained))
       }
@@ -2073,11 +2091,10 @@ object GraftTableStore {
 
   /** SHALLOW CLONE (Delta's CLONE / the Iceberg snapshot-ref export):
     * make `dst` a brand-new table whose v0 commit REFERENCES `src`'s
-    * current published content. On a parquet-backed source this is
-    * METADATA-ONLY — the clone commit re-lists the source's file
-    * manifest verbatim (zero rows read, zero bytes copied; at 100 TB
-    * a clone costs one manifest write); in memory the row array is
-    * shared by reference. From that instant the two tables evolve
+    * current published content, METADATA-ONLY — the clone commit
+    * re-lists the source's file manifest verbatim (zero rows read,
+    * zero bytes copied; at 100 TB a clone costs one manifest write).
+    * From that instant the two tables evolve
     * independently: the clone's own commits land under its OWN
     * directory (copy-on-write at file granularity). Shared files are
     * GC-safe by construction — every delete sweep ([[trimLocked]],
@@ -2097,9 +2114,8 @@ object GraftTableStore {
       require(historyOf(dst).commits.isEmpty,
         s"clone target $dst already has commits")
       val headRel = h.mainHead - h.firstRetained
-      val data: GraftCommitData = h.commits(headRel) match {
+      val data: GraftCommitInput = h.commits(headRel) match {
         case p: GraftParquetData => p // manifest re-reference: zero copy
-        case f: GraftFullData => f // shared row references: zero copy
         case _ => // delta / eq-delete head materializes once
           GraftFullData(resolveRel(src, h, headRel))
       }
@@ -2112,9 +2128,7 @@ object GraftTableStore {
     * normalized values, so the output files hold z-contiguous ranges
     * and ZONE MAPS skip files for predicates on EITHER column — the
     * multi-dimensional layout optimization (Delta's OPTIMIZE ZORDER).
-    * Only meaningful on a parquet-backed table (the in-memory store
-    * has no files to lay out); integral columns. Returns the new
-    * version number.
+    * Integral columns. Returns the new version number.
     *
     * Distributed throughout: a merge-on-read head is first folded into
     * a file manifest by [[compact]] (task-side wherever [[fileView]]
@@ -2266,7 +2280,7 @@ object GraftTableStore {
         setHistory(name, trimLocked(name, h, keep))
         // an explicit expiry rewrites the retained window — the log
         // checkpoints the post-trim state (and GCs subsumed entries)
-        if (GraftParquetStore.isBacked(name)) GraftLog.checkpoint(name)
+        GraftLog.checkpoint(name)
         before - keep
       }
     }
@@ -2382,43 +2396,46 @@ object GraftTableStore {
     h.firstRetained + idx
   }
 
-  /** The FILE-GRANULAR view of a version of a parquet-backed table —
-    * what the scan plans from WITHOUT materializing a row: the last
-    * full commit's file manifest, plus the delta suffix folded into
-    * (deleted row ids, extra rows). Folding preserves sequential
-    * [[applyDelta]] semantics under the MoR unique-row-id contract:
-    * an UPDATE of a base row becomes delete-from-files + extra row
-    * (the row may change partition), an op chain on one id collapses
-    * to its net effect. `None` = not file-backed at this version (the
-    * scan falls back to the row path, which also owns the loud
+  /** The FILE-GRANULAR view of a version of a table — what the scan
+    * plans from WITHOUT materializing a row: the last manifest, plus
+    * the delta suffix folded into (deleted row ids, extra rows).
+    * Folding preserves sequential [[applyDelta]] semantics under the
+    * MoR unique-row-id contract: an UPDATE of a base row becomes
+    * delete-from-files + extra row (the row may change partition), an
+    * op chain on one id collapses to its net effect. A registered
+    * table with no commits is the empty manifest. `None` = the suffix
+    * mixes id domains (the driver-side resolution folds it) or the
+    * version is not retained (the driver-side path owns the loud
     * invalid-version errors). */
   private[sources] final case class GraftFileView(
       files: Vector[GraftFileInfo], extras: Array[InternalRow],
       deletedIds: Array[Any], idOrd: Int,
       idType: org.apache.spark.sql.types.DataType)
+  /** a view with no pending deletes */
+  private def plainView(files: Vector[GraftFileInfo],
+      extras: Array[InternalRow] = Array.empty): GraftFileView =
+    GraftFileView(files, extras, Array.empty, -1,
+      org.apache.spark.sql.types.NullType)
   private[sources] def fileView(name: String,
       pinned: Option[Int]): Option[GraftFileView] = {
     val h = historyOf(name)
-    if (h.commits.isEmpty) return None
+    if (h.commits.isEmpty)
+      return if (pinned.isDefined || GraftParquetStore.meta(name).isEmpty)
+        None
+      else Some(plainView(Vector.empty))
     val v = pinned.getOrElse(h.mainHead)
     if (v < h.firstRetained || v >= h.commitCount) return None
     val rel = v - h.firstRetained
     val lastFull = h.commits.lastIndexWhere(c =>
       !c.isInstanceOf[GraftDeltaData] &&
         !c.isInstanceOf[GraftEqDeleteData], rel)
-    val base = if (lastFull < 0) {
-      // delta chain on an empty table: file-backed iff registered
-      if (!GraftParquetStore.isBacked(name)) return None
-      GraftParquetData(Vector.empty, 0)
-    } else h.commits(lastFull) match {
-      case p: GraftParquetData => p
-      case _ => return None
+    val base = h.commits.lift(lastFull) match {
+      case Some(p: GraftParquetData) => p
+      case _ => GraftParquetData(Vector.empty, 0) // delta chain on empty
     }
     val deltas = ((lastFull max 0) + (if (lastFull < 0) 0 else 1) to rel)
       .map(h.commits(_))
-    if (deltas.isEmpty)
-      return Some(GraftFileView(base.files, Array.empty, Array.empty,
-        -1, org.apache.spark.sql.types.NullType))
+    if (deltas.isEmpty) return Some(plainView(base.files))
     // delta ops key on the MoR row id, eq-deletes on their declared
     // key column: the fold below is only sound when the whole suffix
     // shares ONE id domain (the CDC-upsert shape, where the upsert
@@ -2458,6 +2475,20 @@ object GraftTableStore {
     Some(GraftFileView(base.files, extras.values.toArray,
       deleted.toArray, idOrd, idType))
   }
+
+  /** live rows of a file view, from the manifest (a deleted id that
+    * no file row holds is subtracted too, so it may undercount) */
+  private[sources] def liveRows(fv: GraftFileView): Long =
+    fv.files.iterator.map(_.liveRows.toLong).sum + fv.extras.length -
+      fv.deletedIds.length
+
+  /** a version [[fileView]] cannot fold, resolved on the driver as a
+    * file-less view whose rows ride as extras; an invalid or expired
+    * version fails loudly here */
+  private[sources] def resolvedView(name: String,
+      pinned: Option[Int]): GraftFileView =
+    plainView(Vector.empty,
+      pinned.map(getVersion(name, _)).getOrElse(get(name)))
 }
 
 object GraftMergeCatalog {
@@ -2489,9 +2520,7 @@ object GraftMergeCatalog {
     * path clusters and keys by the NEW spec from the next commit on;
     * the parquet store records the spec history so files written
     * under the old spec keep pruning by it ([[GraftParquetStore
-    * .evolveSpec]]). In-memory tables key rows at SCAN time, so for
-    * them the swap re-partitions retroactively (documented — a file
-    * format physically cannot). */
+    * .evolveSpec]]). */
   private[graft] def evolvePartitioning(table: String,
       fields: Array[GraftPartField]): Unit = {
     import org.apache.spark.sql.types._
@@ -2522,7 +2551,7 @@ object GraftMergeCatalog {
       table, t.physicalSchema, None, t.morRowId, fields,
       t.tableConstraints)))
     GraftParquetStore.evolveSpec(table, fields)
-    if (GraftParquetStore.isBacked(table)) GraftLog.logMeta(table)
+    GraftLog.logMeta(table)
   }
 
   /** the stored constraint set of a governed table — what DESCRIBE
@@ -2904,25 +2933,24 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
             "(supported: identity, bucket, days, truncate)")
       }
     }
-    // TBLPROPERTIES ('graft.store'='parquet') — or the session default
-    // `graft.store.default=parquet` — opts the table into FILE-BACKED
-    // storage: commits persist as parquet files and scans ship paths,
-    // not rows ([[GraftParquetStore]]). Default stays the in-memory
-    // store (the test vehicle's fastest correctness loop).
-    val storeMode = Option(properties.get("graft.store")).orElse(
-      org.apache.spark.sql.SparkSession.getActiveSession.flatMap(s =>
-        Option(s.conf.get("graft.store.default", null))))
+    // every table is FILE-BACKED: commits persist as parquet files and
+    // scans ship paths, not rows ([[GraftParquetStore]]).
+    // TBLPROPERTIES ('graft.store'='parquet') names that one store and
+    // is accepted for the DDL that still spells it out; any other
+    // value is refused
+    Option(properties.get("graft.store")).filter(_ != "parquet").foreach {
+      other => throw new IllegalArgumentException(
+        s"unknown graft.store mode '$other' (the one store is parquet)")
+    }
     // TBLPROPERTIES ('graft.bloom.columns'='k1,k2'): per-file bloom
     // filter index on the named columns ([[GraftBloom]]) — point-probe
-    // file skipping where zone maps cannot help. File-backed only: the
-    // in-memory store has no files to skip.
+    // file skipping where zone maps cannot help.
     val bloomCols = Option(properties.get("graft.bloom.columns"))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty))
       .getOrElse(Array.empty[String])
     // TBLPROPERTIES ('graft.delete.mode'='dv'): pushable DELETEs take
     // the metadata path (SupportsDeleteV2) and commit per-file
-    // DELETION VECTORS instead of a copy-on-write snapshot rewrite —
-    // file-backed only (a DV addresses physical record positions).
+    // DELETION VECTORS instead of a copy-on-write snapshot rewrite.
     val dvMode = Option(properties.get("graft.delete.mode")) match {
       case Some("dv") => true
       case Some("cow") | None => false
@@ -2935,23 +2963,8 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
     val sortCols = Option(properties.get("graft.sort-order"))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty))
       .getOrElse(Array.empty[String])
-    storeMode match {
-      case Some("parquet") =>
-        GraftParquetStore.register(storeName, tblSchema, partFields,
-          bloomCols, dvMode, sortCols)
-      case Some("memory") | None =>
-        require(sortCols.isEmpty,
-          "graft.sort-order requires graft.store=parquet " +
-            "(the in-memory store has no file layout to sort)")
-        require(bloomCols.isEmpty,
-          "graft.bloom.columns requires graft.store=parquet " +
-            "(the in-memory store has no files to skip)")
-        require(!dvMode,
-          "graft.delete.mode=dv requires graft.store=parquet " +
-            "(deletion vectors address file record positions)")
-      case Some(other) => throw new IllegalArgumentException(
-        s"unknown graft.store mode '$other' (supported: parquet, memory)")
-    }
+    GraftParquetStore.register(storeName, tblSchema, partFields,
+      bloomCols, dvMode, sortCols)
     // generated/identity guards: the formulas must analyze NOW (loud
     // CREATE failure beats a broken first INSERT), constraints must
     // be CHECK, and the MoR delta writers do not recompute formulas —
@@ -2973,11 +2986,10 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
       partFields, consArr)
     GraftTableStore.define(storeName,
       GraftTableStore.TableDef(catalogName, ident, t))
-    // a file-backed table is durable from the instant it exists: the
-    // CREATE writes the log's first checkpoint, so even a
-    // never-written table re-opens after a process restart
-    if (GraftParquetStore.isBacked(storeName))
-      GraftLog.checkpoint(storeName)
+    // a table is durable from the instant it exists: the CREATE writes
+    // the log's first checkpoint, so even a never-written table
+    // re-opens after a process restart
+    GraftLog.checkpoint(storeName)
     t
   }
 
@@ -3160,9 +3172,7 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
               s"supported (INT→BIGINT, FLOAT→DOUBLE), not " +
               s"${from.sql} → ${to.sql}")
           val m = GraftParquetStore.meta(t.name()).getOrElse(
-            throw new UnsupportedOperationException(
-              s"ALTER COLUMN $c TYPE: type widening is a file-store " +
-                "surface — in-memory tables hold typed rows"))
+            throw new NoSuchTableException(ident))
           // a partition key (ANY spec, legacy included) prunes by
           // typed key values; widening it would split the key domain
           require(!m.specs.exists(_.exists(_.col == c)),
@@ -3207,10 +3217,9 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
     // files already on disk never change (position-named columns make
     // them rename- and drop-proof)
     changes.collectFirst { case a: TableChange.AddColumn => a }.foreach {
-      a => require(GraftParquetStore.meta(t.name()).isEmpty ||
-        GraftParquetStore.supported(a.dataType()),
-        s"graft.store=parquet table ${t.name()}: added column has " +
-          s"unsupported type ${a.dataType().sql}")
+      a => require(GraftParquetStore.supported(a.dataType()),
+        s"table ${t.name()}: added column has unsupported type " +
+          s"${a.dataType().sql} (flat atomic types only)")
     }
     GraftParquetStore.updateSchema(t.name(), newSchema)
     GraftTableStore.define(t.name(),
@@ -3225,14 +3234,12 @@ class GraftMergeCatalog extends TableCatalog with FunctionCatalog
       GraftTableStore.applyWiden(t.name(), o,
         newSchema(o).dataType))
     // metadata-only evolutions persist like every other state change
-    if (GraftParquetStore.isBacked(t.name())) {
-      GraftLog.logMeta(t.name())
-      // a widen additionally CHECKPOINTS: the checkpoint serializes
-      // the normalized stats under the widened schema and subsumes
-      // every pre-widen entry, so replay never decodes stats in a
-      // mixed type domain
-      if (widenedOrds.nonEmpty) GraftLog.checkpoint(t.name())
-    }
+    GraftLog.logMeta(t.name())
+    // a widen additionally CHECKPOINTS: the checkpoint serializes the
+    // normalized stats under the widened schema and subsumes every
+    // pre-widen entry, so replay never decodes stats in a mixed type
+    // domain
+    if (widenedOrds.nonEmpty) GraftLog.checkpoint(t.name())
     nt
   }
 
@@ -3912,17 +3919,13 @@ class GraftMergeTable(tableName: String, tableSchema: StructType,
     with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns
     with org.apache.spark.sql.connector.catalog.TruncatableTable {
 
-  /** `_file`/`_pos` — advertised only where rows actually live in
-    * files; the in-memory store has no file addresses to serve. A
-    * DATA column of the same name SHADOWS the metadata column
-    * (Spark's SupportsMetadataColumns contract) — don't even
-    * advertise the shadowed one. */
+  /** `_file`/`_pos`. A DATA column of the same name SHADOWS the
+    * metadata column (Spark's SupportsMetadataColumns contract) —
+    * don't even advertise the shadowed one. */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
-    if (GraftParquetStore.isBacked(tableName))
-      GraftMetaCols.columns.filterNot(m =>
-        tableSchema.fieldNames.contains(m.name()))
-    else Array.empty
+    GraftMetaCols.columns.filterNot(m =>
+      tableSchema.fieldNames.contains(m.name()))
 
   /** CHECK constraints (SUPPORT_TABLE_CONSTRAINT): stored here as a
     * lake format stores them in table metadata; Spark's analyzer
@@ -3943,14 +3946,13 @@ class GraftMergeTable(tableName: String, tableSchema: StructType,
   override def schema(): StructType = GraftColumnMap.visible(tableSchema)
 
   // the SQL `TRUNCATE TABLE` statement (metadata-only delete-all: one
-  // empty-snapshot commit, history preserved — time travel to the
+  // empty-manifest commit, history preserved — time travel to the
   // pre-truncate version still works)
   override def truncateTable(): Boolean = {
     require(pinnedVersion.isEmpty,
       s"$tableName VERSION AS OF ${pinnedVersion.get} is read-only")
-    GraftTableStore.mutate(tableName, "truncate")(_ =>
-      Array.empty[InternalRow])
-    true
+    GraftTableStore.commitParquetRewrite(tableName, Vector.empty,
+      "truncate", None, dynamic = false, partFields, tableSchema, None)
   }
   override def partitioning(): Array[Transform] =
     partFields.map(GraftPartField.toTransform)
@@ -4148,7 +4150,7 @@ class GraftScanBuilder(tableName: String, tableSchema: StructType,
     rowLevelReplace: Boolean = false)
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with SupportsPushDownFilters with SupportsPushDownLimit
-    with SupportsPushDownTopN with SupportsPushDownAggregates {
+    with SupportsPushDownAggregates {
   import org.apache.spark.sql.connector.expressions.aggregate._
   import org.apache.spark.sql.connector.expressions.NamedReference
   import org.apache.spark.sql.sources._
@@ -4194,62 +4196,24 @@ class GraftScanBuilder(tableName: String, tableSchema: StructType,
   }
   override def pushedFilters(): Array[Filter] = pushed
   // LIMIT pushdown: the store stops emitting after `n` surviving rows
-  // per partition. Partial contract (isPartiallyPushed true for both
-  // the limit and top-N forms — Scala requires one explicit override
-  // where the two interfaces' default methods meet): Spark re-applies
-  // the global limit/sort above, the pushdown only bounds what ships
-  // out of the scan.
+  // per partition. Partial contract: Spark re-applies the global limit
+  // above, the pushdown only bounds what ships out of the scan. (No
+  // top-N pushdown: a file scan would have to sort inside the reader;
+  // TakeOrderedAndProject above the scan does that work.)
   override def pushLimit(n: Int): Boolean =
     if (agg.isDefined || rowLevelReplace) false
     else { limit = Some(n); true }
   override def isPartiallyPushed(): Boolean = true
 
-  // ORDER BY ... LIMIT n pushdown (top-N): the store sorts surviving
-  // rows per partition and ships only the first n of each — Spark's
-  // TakeOrderedAndProject above merges them, so the global result is
-  // exact while the scan ships O(n × partitions) rows instead of the
-  // table. Supported for flat comparable sort columns; declines
-  // otherwise (expression keys, complex types).
-  private var topN: Option[(Array[GraftSortKey], Int)] = None
-  override def pushTopN(orders: Array[
-      org.apache.spark.sql.connector.expressions.SortOrder],
-      n: Int): Boolean = {
-    import org.apache.spark.sql.connector.expressions.{NullOrdering, SortDirection}
-    import org.apache.spark.sql.types._
-    if (agg.isDefined || rowLevelReplace) return false
-    // a file-backed scan would have to sort inside the reader to honor
-    // this — decline and let TakeOrdered do its job (filters, column
-    // projection and the per-partition LIMIT bound still push)
-    if (GraftParquetStore.isBacked(tableName)) return false
-    val keys = orders.map { so =>
-      so.expression() match {
-        case r: NamedReference if r.fieldNames().length == 1 =>
-          val ord = tableSchema.fieldNames.indexOf(r.fieldNames()(0))
-          if (ord < 0) return false
-          tableSchema(ord).dataType match {
-            case LongType | IntegerType | DoubleType | StringType |
-                DateType =>
-            case _ => return false
-          }
-          GraftSortKey(ord,
-            so.direction() == SortDirection.ASCENDING,
-            so.nullOrdering() == NullOrdering.NULLS_FIRST)
-        case _ => return false
-      }
-    }
-    topN = Some((keys, n))
-    true
-  }
-
   /** AGGREGATE pushdown (complete): COUNT(*) / COUNT(col) / MIN / MAX,
-    * optionally grouped by flat columns, are answered from the store
-    * without shipping a single data row — the analogue of serving
-    * MIN/MAX/COUNT from parquet footer statistics or a metadata table.
-    * Complete-pushdown contract: the scan emits exactly one final row
-    * per group (single input partition), and Spark replaces the whole
-    * Aggregate with a scan readout. Anything outside the supported
-    * shape (SUM/AVG/DISTINCT, expression-valued group keys) declines
-    * and takes the normal aggregation path. */
+    * optionally grouped by flat columns, are answered from the
+    * manifest without shipping a single data row — MIN/MAX/COUNT from
+    * parquet footer statistics. Complete-pushdown contract: the scan
+    * emits exactly one final row per group (single input partition),
+    * and Spark replaces the whole Aggregate with a scan readout.
+    * Anything outside the supported shape (SUM/AVG/DISTINCT,
+    * expression-valued group keys) declines and takes the normal
+    * aggregation path. */
   private def aggSupported(a: Aggregation): Boolean = {
     import org.apache.spark.sql.types._
     def flatCol(e: org.apache.spark.sql.connector.expressions.Expression)
@@ -4281,12 +4245,12 @@ class GraftScanBuilder(tableName: String, tableSchema: StructType,
   // OURS, so a future planner change could only cost the pushdown,
   // never correctness
   private def aggCompatible: Boolean =
-    pushed.isEmpty && limit.isEmpty && topN.isEmpty && !rowLevelReplace
+    pushed.isEmpty && limit.isEmpty && !rowLevelReplace
 
-  /** On a PARQUET-BACKED table an aggregate only pushes when the
-    * MANIFEST alone can answer it exactly — zero files opened, zero
-    * rows materialized (Iceberg answering COUNT(*) from manifests;
-    * parquet footer stats): the version must be delta-free (a pending
+  /** An aggregate only pushes when the MANIFEST alone can answer it
+    * exactly — zero files opened, zero rows materialized (Iceberg
+    * answering COUNT(*) from manifests; parquet footer stats): the
+    * version must be delta-free (a pending
     * delete would falsify counts), group keys must be identity
     * partition columns (the manifest key), and every aggregated column
     * must carry zone-map stats. Anything else declines and takes the
@@ -4336,8 +4300,7 @@ class GraftScanBuilder(tableName: String, tableSchema: StructType,
     }
   }
   private def aggAcceptable(a: Aggregation): Boolean =
-    aggCompatible && aggSupported(a) &&
-      (!GraftParquetStore.isBacked(tableName) || manifestAggSupported(a))
+    aggCompatible && aggSupported(a) && manifestAggSupported(a)
   override def supportCompletePushDown(a: Aggregation): Boolean =
     aggAcceptable(a)
   override def pushAggregation(a: Aggregation): Boolean = {
@@ -4350,20 +4313,14 @@ class GraftScanBuilder(tableName: String, tableSchema: StructType,
   }
 
   override def build(): Scan = agg match {
-    case Some(a) if GraftParquetStore.isBacked(tableName) =>
+    case Some(a) =>
       new GraftManifestAggScan(tableName, tableSchema, pinnedVersion,
         partFields, a)
-    case Some(a) =>
-      new GraftAggScan(tableName, tableSchema, pinnedVersion, a)
     case None =>
       new GraftScan(tableName, tableSchema, pinnedVersion, required,
-        pushed, partFields, limit, topN, options, metaCols)
+        pushed, partFields, limit, options, metaCols)
   }
 }
-
-/** One pushed sort key: column ordinal in the TABLE schema, direction,
-  * and null placement — the store-evaluable form of a v2 SortOrder. */
-case class GraftSortKey(ord: Int, asc: Boolean, nullsFirst: Boolean)
 
 /** Best-effort row-predicate compiler for the v1 Filter algebra over
   * flat columns of primitive/string type — `None` marks a filter the
@@ -4512,9 +4469,8 @@ object GraftScanMetrics {
   /** Of the scanned version: how many partitions the table had, how
     * many survived STATIC partition pruning (pushed partition-column
     * predicates), and how many a RUNTIME filter emptied (join-key
-    * pruning at execution). `files*`/`bytes*` are MEASURED I/O on a
-    * parquet-backed table (zero on the in-memory store): of the
-    * version's manifest, how many files / bytes the planned scan
+    * pruning at execution). `files*`/`bytes*` are MEASURED I/O: of
+    * the version's manifest, how many files / bytes the planned scan
     * actually opens after static pruning and runtime emptying. Each
     * field is one SQL metric of the same name. */
   final case class Report(totalPartitions: Int, keptPartitions: Int,
@@ -4573,7 +4529,6 @@ class GraftScan(tableName: String, tableSchema: StructType,
       Array.empty,
     partFields: Array[GraftPartField] = Array.empty,
     limit: Option[Int] = None,
-    topN: Option[(Array[GraftSortKey], Int)] = None,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     metaCols: Seq[String] = Nil)
     extends Scan with Batch with SupportsReportStatistics
@@ -4614,194 +4569,110 @@ class GraftScan(tableName: String, tableSchema: StructType,
       if (partitionCols.isEmpty) ""
       else s", partitionedBy=[${partitionCols.mkString(",")}]"
     val lm = limit.map(n => s", limit=$n").getOrElse("")
-    val tn = topN.map { case (keys, n) =>
-      s", pushedTopN=[${keys.map(k =>
-        tableSchema.fieldNames(k.ord) +
-          (if (k.asc) " ASC" else " DESC")).mkString(",")} LIMIT $n]"
-    }.getOrElse("")
     s"GraftScan[$tableName$at, " +
-      s"cols=[${outSchema.fieldNames.mkString(",")}]$fs$pb$lm$tn]"
+      s"cols=[${outSchema.fieldNames.mkString(",")}]$fs$pb$lm]"
   }
 
-  /** store-side comparator for the pushed top-N sort keys. */
-  private def rowOrdering(keys: Array[GraftSortKey])
-      : Ordering[InternalRow] = new Ordering[InternalRow] {
-    import org.apache.spark.sql.types._
-    override def compare(a: InternalRow, b: InternalRow): Int = {
-      var i = 0
-      while (i < keys.length) {
-        val k = keys(i)
-        val an = a.isNullAt(k.ord); val bn = b.isNullAt(k.ord)
-        val c =
-          if (an && bn) 0
-          else if (an) { if (k.nullsFirst) -1 else 1 }
-          else if (bn) { if (k.nullsFirst) 1 else -1 }
-          else {
-            val raw = tableSchema(k.ord).dataType match {
-              case LongType =>
-                java.lang.Long.compare(a.getLong(k.ord), b.getLong(k.ord))
-              case IntegerType | DateType =>
-                Integer.compare(a.getInt(k.ord), b.getInt(k.ord))
-              case DoubleType => java.lang.Double.compare(
-                a.getDouble(k.ord), b.getDouble(k.ord))
-              case StringType =>
-                a.getUTF8String(k.ord).compareTo(b.getUTF8String(k.ord))
-              case other => throw new IllegalStateException(
-                s"unsupported pushed top-N column type: $other")
-            }
-            if (k.asc) raw else -raw
-          }
-        if (c != 0) return c
-        i += 1
-      }
-      0
-    }
-  }
+  /** the scanned version as a file view. A chain [[GraftTableStore
+    * .fileView]] cannot fold (mixed id domains) resolves on the driver
+    * and rides as extras; an invalid or expired version fails loudly
+    * there. */
+  private lazy val view: GraftTableStore.GraftFileView =
+    GraftTableStore.fileView(tableName, pinnedVersion).getOrElse(
+      GraftTableStore.resolvedView(tableName, pinnedVersion))
 
-  // ---- partition grouping + static pruning (computed once) ----------
+  // ---- the FILE-GRANULAR plan ----------------------------------------
   //
-  // Committed rows ride INSIDE the partitions (UnsafeRow serializes),
-  // so the reader works wherever the task lands; rows written before
-  // an ADD COLUMN are narrower than the current schema and get their
-  // missing trailing fields padded with NULL here (schema evolution on
-  // read). Pushed filters run against the PADDED full-schema rows
-  // before anything ships — non-matching rows never leave the store
-  // (data skipping); Spark re-applies the same filters above the scan
-  // (residual contract). On a PARTITIONED table the rows group into
-  // one input partition per partition VALUE (sorted by key for
-  // deterministic planning), and partition-column-only predicates
-  // evaluate ONCE per group against its first row — whole partitions
-  // drop without touching their rows, the manifest-level pruning a
-  // lake format does from partition stats.
-  private lazy val grouped: (Int, Array[(InternalRow, Array[InternalRow])]) = {
-    val raw = pinnedVersion
-      .map(GraftTableStore.getVersion(tableName, _))
-      .getOrElse(GraftTableStore.get(tableName))
-    val padded = GraftChangeFeed.padTo(raw, tableSchema)
+  // The scan never materializes a data row at the driver: static
+  // pruning drops whole FILES by the manifest key, each surviving
+  // partition ships (paths, residual filters, deletion ids) and the
+  // task opens its own files where it runs — the manifest-pruned file
+  // scan a lake format plans at 100 TB. Extras = delta-commit
+  // inserts/updates (O(changes), driver-held op logs) ride
+  // pre-projected in their key's partition. Rows written before an ADD
+  // COLUMN are narrower than the current schema and read their missing
+  // trailing fields as NULL (or the exists-default): schema evolution
+  // on read. Pushed filters run task-side against the padded rows;
+  // Spark re-applies them above the scan (residual contract).
+  private lazy val filePlan
+      : (Int, Array[GraftFileGroup], GraftTableStore.GraftFileView) = {
+    val fv = view
     val partOnly = pushedFilters.filter(
       _.references.forall(identityCols.contains))
     val partPreds = partOnly.flatMap(
       GraftFilterEval.compile(_, tableSchema))
-    val rowPreds = pushedFilters.diff(partOnly).flatMap(
-      GraftFilterEval.compile(_, tableSchema))
-    // hidden partitioning: raw-column predicates lifted into the
-    // transform-key domain prune groups; the raw predicate stays in
-    // rowPreds (exactness is row-level, pruning is a superset)
     val hiddenPreds = pushedFilters.flatMap(
       GraftPartField.hiddenPrune(partFields, tableSchema, _))
+    val rowFilters = pushedFilters.diff(partOnly)
+    val rowPreds = rowFilters.flatMap(
+      GraftFilterEval.compile(_, tableSchema))
+    val paddedExtras = GraftChangeFeed.padTo(fv.extras,
+      tableSchema).filter(r => rowPreds.forall(_(r)))
+    // ZONE-MAP FILE SKIPPING: a pushed row predicate that the
+    // manifest's per-file min/max/nulls PROVE unsatisfiable drops
+    // the file before any partition forms — data skipping beyond
+    // partition pruning (parquet footer stats, served manifest-side)
+    val liveFiles = fv.files.filterNot(f =>
+      rowFilters.exists(GraftZoneMap.skips(_, f, tableSchema)))
     if (partFields.isEmpty) {
-      val kept =
-        if (rowPreds.isEmpty && partPreds.isEmpty) padded
-        else padded.filter(r =>
-          partPreds.forall(_(r)) && rowPreds.forall(_(r)))
-      (1, Array((InternalRow.empty: InternalRow, kept)))
+      // live files packed into about defaultParallelism input
+      // partitions (`packFiles`) — a parallel read without a task per
+      // small file — plus one for the extras
+      val fileGroups = GraftParquetStore.packFiles(liveFiles)
+        .map(GraftFileGroup(null, _, Array.empty))
+      val groups =
+        if (paddedExtras.isEmpty) fileGroups
+        else fileGroups :+
+          GraftFileGroup(null, Vector.empty, paddedExtras)
+      (math.max(groups.length, 1), groups.toArray, fv)
     } else {
-      val keyProj = org.apache.spark.sql.catalyst.expressions
-        .UnsafeProjection.create(partFields.map(
-          GraftPartField.keyExpr(_, tableSchema)).toIndexedSeq)
-      val groups = padded.groupBy(r => keyProj(r).copy())
-      val total = groups.size
-      val kept = groups.toArray
-        .sortBy(_._1.toString)
-        .collect { case (k, rs) if partPreds.forall(_(rs.head)) &&
-            hiddenPreds.forall(_(k)) =>
-          (k: InternalRow,
-            if (rowPreds.isEmpty) rs else rs.filter(r => rowPreds.forall(_(r))))
+      // PARTITION SPEC EVOLUTION (Iceberg's spec-id indirection):
+      // files written under an OLDER spec keep their own key domain
+      // — they prune by THEIR spec (legacyKeeps) and never join the
+      // current spec's key-grouped alignment; only current-spec
+      // files key-group, and outputPartitioning reports Unknown
+      // while any legacy file is live (SPJ needs one domain).
+      val specs = GraftParquetStore.meta(tableName).map(_.specs)
+        .getOrElse(Vector(partFields))
+      val curSpecId = specs.length - 1
+      val (curFiles, legacyFiles) =
+        liveFiles.partition(_.specId == curSpecId)
+      val legacyGroups = legacyFiles.filter(legacyKeeps(specs, _))
+        .map(f => GraftFileGroup(null, Vector(f), Array.empty))
+      // one input partition per partition VALUE (key-grouped, SPJ-
+      // aligned); identity-only predicates evaluate against a
+      // synthetic row carrying the manifest key — no file opened
+      val extrasByKey = {
+        val keyProj = org.apache.spark.sql.catalyst.expressions
+          .UnsafeProjection.create(partFields.map(
+            GraftPartField.keyExpr(_, tableSchema)).toIndexedSeq)
+        paddedExtras.groupBy(r => keyProj(r).copy(): InternalRow)
+      }
+      val filesByKey = curFiles.groupBy(_.key)
+      val allKeys = (filesByKey.keySet ++ extrasByKey.keySet).toArray
+        .sortBy(_.toString)
+      def keyRow(key: InternalRow): InternalRow = {
+        val synth = new org.apache.spark.sql.catalyst.expressions
+          .GenericInternalRow(tableSchema.length)
+        partFields.zipWithIndex.foreach {
+          case (GraftIdentityPart(c), i) =>
+            synth.update(tableSchema.fieldIndex(c),
+              key.get(i, partTypes(i)))
+          case _ => () // bucket slots vary within the file — preds
+            // over them are never partition-only
         }
-      (total, kept)
+        synth
+      }
+      val kept = allKeys.collect {
+        case k if partPreds.forall(_(keyRow(k))) &&
+            hiddenPreds.forall(_(k)) => GraftFileGroup(k,
+          filesByKey.getOrElse(k, Vector.empty),
+          extrasByKey.getOrElse(k, Array.empty))
+      }
+      (allKeys.length + legacyGroups.length,
+        kept ++ legacyGroups, fv)
     }
   }
-
-  // ---- the FILE-GRANULAR plan (parquet-backed tables) ----------------
-  //
-  // When the version is file-backed, the scan never materializes a data
-  // row at the driver: static pruning drops whole FILES by the manifest
-  // key, each surviving partition ships (paths, residual filters,
-  // deletion ids) and the task opens its own files where it runs — the
-  // manifest-pruned file scan a lake format plans at 100 TB. Extras =
-  // delta-commit inserts/updates (O(changes), driver-held op logs)
-  // ride pre-projected in their key's partition.
-  private lazy val filePlan
-      : Option[(Int, Array[GraftFileGroup],
-        GraftTableStore.GraftFileView)] =
-    GraftTableStore.fileView(tableName, pinnedVersion).map { fv =>
-      val partOnly = pushedFilters.filter(
-        _.references.forall(identityCols.contains))
-      val partPreds = partOnly.flatMap(
-        GraftFilterEval.compile(_, tableSchema))
-      val hiddenPreds = pushedFilters.flatMap(
-        GraftPartField.hiddenPrune(partFields, tableSchema, _))
-      val rowFilters = pushedFilters.diff(partOnly)
-      val rowPreds = rowFilters.flatMap(
-        GraftFilterEval.compile(_, tableSchema))
-      val paddedExtras = GraftChangeFeed.padTo(fv.extras,
-        tableSchema).filter(r => rowPreds.forall(_(r)))
-      // ZONE-MAP FILE SKIPPING: a pushed row predicate that the
-      // manifest's per-file min/max/nulls PROVE unsatisfiable drops
-      // the file before any partition forms — data skipping beyond
-      // partition pruning (parquet footer stats, served manifest-side)
-      val liveFiles = fv.files.filterNot(f =>
-        rowFilters.exists(GraftZoneMap.skips(_, f, tableSchema)))
-      if (partFields.isEmpty) {
-        // live files packed into about defaultParallelism input
-        // partitions (`packFiles`) — the parallel read the in-memory
-        // store cannot give, without a task per small file — plus one
-        // for the extras
-        val fileGroups = GraftParquetStore.packFiles(liveFiles)
-          .map(GraftFileGroup(null, _, Array.empty))
-        val groups =
-          if (paddedExtras.isEmpty) fileGroups
-          else fileGroups :+
-            GraftFileGroup(null, Vector.empty, paddedExtras)
-        (math.max(groups.length, 1), groups.toArray, fv)
-      } else {
-        // PARTITION SPEC EVOLUTION (Iceberg's spec-id indirection):
-        // files written under an OLDER spec keep their own key domain
-        // — they prune by THEIR spec (legacyKeeps) and never join the
-        // current spec's key-grouped alignment; only current-spec
-        // files key-group, and outputPartitioning reports Unknown
-        // while any legacy file is live (SPJ needs one domain).
-        val specs = GraftParquetStore.meta(tableName).map(_.specs)
-          .getOrElse(Vector(partFields))
-        val curSpecId = specs.length - 1
-        val (curFiles, legacyFiles) =
-          liveFiles.partition(_.specId == curSpecId)
-        val legacyGroups = legacyFiles.filter(legacyKeeps(specs, _))
-          .map(f => GraftFileGroup(null, Vector(f), Array.empty))
-        // one input partition per partition VALUE (key-grouped, SPJ-
-        // aligned); identity-only predicates evaluate against a
-        // synthetic row carrying the manifest key — no file opened
-        val extrasByKey = {
-          val keyProj = org.apache.spark.sql.catalyst.expressions
-            .UnsafeProjection.create(partFields.map(
-              GraftPartField.keyExpr(_, tableSchema)).toIndexedSeq)
-          paddedExtras.groupBy(r => keyProj(r).copy(): InternalRow)
-        }
-        val filesByKey = curFiles.groupBy(_.key)
-        val allKeys = (filesByKey.keySet ++ extrasByKey.keySet).toArray
-          .sortBy(_.toString)
-        def keyRow(key: InternalRow): InternalRow = {
-          val synth = new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(tableSchema.length)
-          partFields.zipWithIndex.foreach {
-            case (GraftIdentityPart(c), i) =>
-              synth.update(tableSchema.fieldIndex(c),
-                key.get(i, partTypes(i)))
-            case _ => () // bucket slots vary within the file — preds
-              // over them are never partition-only
-          }
-          synth
-        }
-        val kept = allKeys.collect {
-          case k if partPreds.forall(_(keyRow(k))) &&
-              hiddenPreds.forall(_(k)) => GraftFileGroup(k,
-            filesByKey.getOrElse(k, Vector.empty),
-            extrasByKey.getOrElse(k, Array.empty))
-        }
-        (allKeys.length + legacyGroups.length,
-          kept ++ legacyGroups, fv)
-      }
-    }
 
   /** may a file written under an older partition spec survive the
     * pushed predicates? Evaluated in ITS OWN spec's key domain:
@@ -4834,9 +4705,8 @@ class GraftScan(tableName: String, tableSchema: StructType,
       .forall(_(synth))
   }
 
-  private def planFileModePartitions(total: Int,
-      groups: Array[GraftFileGroup],
-      fv: GraftTableStore.GraftFileView): Array[InputPartition] = {
+  override def planInputPartitions(): Array[InputPartition] = {
+    val (total, groups, fv) = filePlan
     val outOrds = outSchema.fieldNames.map(tableSchema.fieldIndex)
     val shipFilters = pushedFilters.filter(
       !_.references.forall(identityCols.contains))
@@ -4888,44 +4758,23 @@ class GraftScan(tableName: String, tableSchema: StructType,
 
   // ---- statistics (SupportsReportStatistics) ------------------------
   //
-  // Post-pushdown estimates from the store itself: exact surviving row
-  // count and a byte size scaled by the pruned column ratio — what a
-  // lake format derives from manifest/footer stats. This is what lets
-  // Catalyst AUTO-broadcast a small governed table in a join (no hint):
+  // MANIFEST-ONLY estimates after static pruning: file row counts and
+  // sizes, delta adjustments from op-log counts, a byte size scaled by
+  // the pruned column ratio — no row materializes for a stats probe,
+  // exactly the numbers a lake format serves from its manifests.
+  // Post-pushdown row filters are not discounted (estimates,
+  // conservatively high). This is what lets Catalyst AUTO-broadcast a
+  // small governed table in a join (no hint):
   // DataSourceV2ScanRelation.computeStats reads it at plan time.
   override def estimateStatistics(): Statistics = {
     val colRatio =
       math.max(1, outSchema.length).toDouble / math.max(1, tableSchema.length)
-    // file mode: MANIFEST-ONLY statistics (file row counts and sizes
-    // after static pruning, delta adjustments from op-log counts) — no
-    // row materializes for a stats probe, exactly the numbers a lake
-    // format serves from its manifests. Post-pushdown row filters are
-    // not discounted (estimates, conservatively high).
-    filePlan.foreach { case (_, groups, fv) =>
-      val fileRows =
-        groups.iterator.flatMap(_.files).map(_.liveRows.toLong).sum
-      val extras = groups.iterator.map(_.extras.length.toLong).sum
-      val rows = math.max(0L, fileRows - fv.deletedIds.length + extras)
-      val limited = limit.map(n => math.min(rows,
-        n.toLong * math.max(groups.length, 1))).getOrElse(rows)
-      val fb = groups.iterator.flatMap(_.files).map(_.bytes).sum
-      val scaledF = math.max(1L, (fb * colRatio).toLong)
-      return new Statistics {
-        override def sizeInBytes(): java.util.OptionalLong =
-          java.util.OptionalLong.of(scaledF)
-        override def numRows(): java.util.OptionalLong =
-          java.util.OptionalLong.of(limited)
-      }
-    }
-    val rows = grouped._2.iterator.map(_._2.length.toLong).sum
+    val (_, groups, _) = filePlan
+    val rows = plannedRows
     val limited = limit.map(n => math.min(rows,
-      n.toLong * math.max(grouped._2.length, 1))).getOrElse(rows)
-    val bytes = grouped._2.iterator.flatMap(_._2.iterator).map {
-      case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
-        u.getSizeInBytes.toLong
-      case r => 16L * math.max(1, r.numFields)
-    }.sum
-    val scaled = math.max(1L, (bytes * colRatio).toLong)
+      n.toLong * math.max(groups.length, 1))).getOrElse(rows)
+    val fb = groups.iterator.flatMap(_.files).map(_.bytes).sum
+    val scaled = math.max(1L, (fb * colRatio).toLong)
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of(scaled)
@@ -4934,71 +4783,120 @@ class GraftScan(tableName: String, tableSchema: StructType,
       override def columnStats(): java.util.Map[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
-        graftColumnStats
+        if (org.apache.spark.sql.internal.SQLConf.get.cboEnabled)
+          graftColumnStats
+        else java.util.Collections.emptyMap()
     }
   }
 
-  /** Per-column CBO statistics (ndv / nullCount / numeric min+max) for
-    * the surviving projected columns — `transformV2Stats` translates
-    * these into catalyst ColumnStat under spark.sql.cbo.enabled, which
-    * is what lets join reordering and selectivity estimation treat a
-    * governed table like an ANALYZE'd one (a lake format serves the
-    * same numbers from manifest/footer stats; the store computes them
-    * exactly). Lazy: only a CBO-enabled plan pays the pass. */
+  /** live rows of the planned files and extras */
+  private lazy val plannedRows: Long = {
+    val (_, groups, fv) = filePlan
+    math.max(0L, GraftTableStore.liveRows(
+      fv.copy(files = groups.toVector.flatMap(_.files),
+        extras = groups.flatMap(_.extras))))
+  }
+
+  /** Per-column CBO statistics (nullCount / numeric min+max / ndv) of
+    * the projected columns — `transformV2Stats` translates these into
+    * catalyst ColumnStat under spark.sql.cbo.enabled, which is what
+    * lets join reordering and selectivity estimation treat a governed
+    * table like an ANALYZE'd one. Nulls, min and max fold the planned
+    * files' zone maps plus the extras (exact on a delete-free version;
+    * a deleted row's value still counts, so they bound). The ndv is
+    * exact when the planned live rows fit the driver-resolution budget
+    * ([[GraftChangeFeed.DriverRows]], through [[graft.Gate.decide]]) —
+    * one driver read of the projected columns — and absent above it. A
+    * column with an exists-default or without zone maps carries none.
+    * Only a CBO-enabled plan pays (Spark asks every scan). */
   private lazy val graftColumnStats: java.util.Map[
       org.apache.spark.sql.connector.expressions.NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
     import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
     import org.apache.spark.sql.types._
-    val m = new java.util.HashMap[NamedReference, ColumnStatistics]()
-    outSchema.fields.foreach { f =>
-      val ord = tableSchema.fieldIndex(f.name)
-      val dt = f.dataType
-      val numeric = dt match {
-        case LongType | IntegerType | DoubleType | DateType => true
-        case _ => false
-      }
-      dt match {
+    val (_, groups, fv) = filePlan
+    val files = groups.iterator.flatMap(_.files).toVector
+    val extras = groups.flatMap(_.extras)
+    val cols = outSchema.fields.map(f =>
+      (f, tableSchema.fieldIndex(f.name))).filter { case (f, ord) =>
+      (f.dataType match {
         case LongType | IntegerType | DoubleType | DateType | StringType =>
-          val seen = new java.util.HashSet[Any]()
-          var nulls = 0L
-          var minV: Any = null
-          var maxV: Any = null
-          val ordering = dt match {
-            case LongType => Ordering.Long.on[Any](_.asInstanceOf[Long])
-            case IntegerType | DateType =>
-              Ordering.Int.on[Any](_.asInstanceOf[Int])
-            case _ => Ordering.Double.TotalOrdering
-              .on[Any](_.asInstanceOf[Double])
-          }
-          grouped._2.iterator.flatMap(_._2.iterator).foreach { r =>
-            if (r.isNullAt(ord)) nulls += 1
-            else {
-              val v = r.get(ord, dt)
-              seen.add(v match {
-                case u: org.apache.spark.unsafe.types.UTF8String =>
-                  u.toString
-                case other => other
-              })
-              if (numeric) {
-                if (minV == null || ordering.lt(v, minV)) minV = v
-                if (maxV == null || ordering.gt(v, maxV)) maxV = v
-              }
-            }
-          }
-          val (mn, mx, nd, nc) = (minV, maxV, seen.size.toLong, nulls)
-          m.put(Expressions.column(f.name), new ColumnStatistics {
-            override def distinctCount(): java.util.OptionalLong =
-              java.util.OptionalLong.of(nd)
-            override def nullCount(): java.util.OptionalLong =
-              java.util.OptionalLong.of(nc)
-            override def min(): java.util.Optional[Object] =
-              java.util.Optional.ofNullable(mn.asInstanceOf[Object])
-            override def max(): java.util.Optional[Object] =
-              java.util.Optional.ofNullable(mx.asInstanceOf[Object])
-          })
-        case _ => // complex / binary columns carry no column stats
+          true
+        case _ => false
+      }) && !GraftDefaults.has(tableSchema, ord) &&
+        files.forall(fl => ord >= fl.numCols || fl.stats.contains(ord))
+    }
+    // the exact ndv's one driver read: projected columns (and the row
+    // id a pending delete keys by) of the planned files, plus extras
+    lazy val liveVals: Array[InternalRow] = {
+      val ords = (cols.map(_._2) ++
+        (if (fv.deletedIds.nonEmpty) Array(fv.idOrd) else Array.empty[Int]))
+        .distinct
+      val deleted = fv.deletedIds.toSet
+      files.iterator.flatMap(GraftParquetStore.readFile(_, tableSchema,
+        ords)).filter(r => deleted.isEmpty ||
+          !deleted.contains(r.get(fv.idOrd, fv.idType))).toArray ++ extras
+    }
+    val rows = plannedRows
+    val exactNdv = cols.nonEmpty && graft.Gate.decide("scan column ndv",
+      rows, GraftChangeFeed.DriverRows).local
+    val m = new java.util.HashMap[NamedReference, ColumnStatistics]()
+    cols.foreach { case (f, ord) =>
+      val dt = f.dataType
+      var nulls = 0L
+      var minV: Any = null
+      var maxV: Any = null
+      def fold(lo: Any, hi: Any): Unit = {
+        if (lo != null && (minV == null ||
+            GraftZoneMap.cmpStat(dt, lo, minV) < 0)) minV = lo
+        if (hi != null && (maxV == null ||
+            GraftZoneMap.cmpStat(dt, hi, maxV) > 0)) maxV = hi
       }
+      files.foreach { fl =>
+        if (ord >= fl.numCols) nulls += fl.rows // slot absent: all null
+        else {
+          val st = fl.stats(ord)
+          nulls += st.nulls
+          fold(st.min, st.max)
+        }
+      }
+      extras.foreach { r =>
+        if (r.isNullAt(ord)) nulls += 1
+        else { val v = r.get(ord, dt); fold(v, v) }
+      }
+      val ndv =
+        if (!exactNdv) None
+        else {
+          val seen = new java.util.HashSet[Any]()
+          liveVals.foreach { r =>
+            if (!r.isNullAt(ord)) seen.add(r.get(ord, dt) match {
+              case u: org.apache.spark.unsafe.types.UTF8String => u.toString
+              case other => other
+            })
+          }
+          Some(seen.size.toLong)
+        }
+      // numeric columns only (a pre-widening file's stat may still be
+      // the narrow Number): CBO reads string min/max as nothing
+      def num(v: Any): Any = (dt, v) match {
+        case (_, null) | (StringType, _) => null
+        case (LongType, n: Number) => n.longValue()
+        case (DoubleType, n: Number) => n.doubleValue()
+        case _ => v
+      }
+      val (mn, mx) = (num(minV), num(maxV))
+      val nc = math.min(nulls, math.max(rows, 0L))
+      m.put(Expressions.column(f.name), new ColumnStatistics {
+        override def distinctCount(): java.util.OptionalLong =
+          ndv.fold(java.util.OptionalLong.empty())(
+            java.util.OptionalLong.of)
+        override def nullCount(): java.util.OptionalLong =
+          java.util.OptionalLong.of(nc)
+        override def min(): java.util.Optional[Object] =
+          java.util.Optional.ofNullable(mn.asInstanceOf[Object])
+        override def max(): java.util.Optional[Object] =
+          java.util.Optional.ofNullable(mx.asInstanceOf[Object])
+      })
     }
     m
   }
@@ -5012,10 +4910,7 @@ class GraftScan(tableName: String, tableSchema: StructType,
   // storage-partitioned join — at 100 TB the single biggest exchange
   // in a fact-fact join simply disappears). Input partitions carry
   // their key via HasPartitionKey; Spark groups and aligns them.
-  private def numPlannedPartitions: Int = filePlan match {
-    case Some((_, groups, _)) => groups.length
-    case None => grouped._2.length
-  }
+  private def numPlannedPartitions: Int = filePlan._2.length
   override def outputPartitioning(): Partitioning =
     // every transform kind reports: identity compares raw values,
     // and bucket/days/truncate resolve through the catalog-published
@@ -5037,12 +4932,10 @@ class GraftScan(tableName: String, tableSchema: StructType,
     * scan must not claim KeyGroupedPartitioning (an SPJ alignment
     * over mixed domains would mis-join); the claim returns as soon as
     * a rewrite (OPTIMIZE / overwrite) retires the legacy files. */
-  private lazy val hasLegacySpecFiles: Boolean =
-    GraftTableStore.fileView(tableName, pinnedVersion).exists { fv =>
-      val cur = GraftParquetStore.meta(tableName)
-        .map(_.curSpecId).getOrElse(0)
-      fv.files.exists(_.specId != cur)
-    }
+  private lazy val hasLegacySpecFiles: Boolean = {
+    val cur = GraftParquetStore.meta(tableName).map(_.curSpecId).getOrElse(0)
+    view.files.exists(_.specId != cur)
+  }
 
   // ---- runtime filtering (SupportsRuntimeV2Filtering) ---------------
   //
@@ -5118,163 +5011,24 @@ class GraftScan(tableName: String, tableSchema: StructType,
     if (keep.nonEmpty) runtimeKeep = Some(keep.toMap)
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    filePlan.foreach { case (total, groups, fv) =>
-      return planFileModePartitions(total, groups, fv)
-    }
-    val (total, kept) = grouped
-    // requested metadata columns on the ROW path read NULL (no file
-    // address exists): sentinel ordinal → Literal(null) in the reader
-    val ordinals = outSchema.fieldNames.map(tableSchema.fieldIndex) ++
-      metaCols.map(_ => Int.MinValue)
-    val types = outSchema.fields.map(_.dataType) ++
-      metaCols.map(GraftMetaCols.dtOf)
-    var emptied = 0
-    val parts: Array[InputPartition] = kept.map { case (key, rows) =>
-      val keepRows = runtimeKeep match {
-        case Some(byPos) =>
-          val in = byPos.forall { case (pos, vals) =>
-            vals.contains(key.get(pos, partTypes(pos)))
-          }
-          if (in) rows else { emptied += 1; Array.empty[InternalRow] }
-        case None => rows
-      }
-      val topped = topN match {
-        case Some((keys, n)) if keepRows.length > n =>
-          keepRows.sorted(rowOrdering(keys)).take(n)
-        case _ => keepRows
-      }
-      val limited = limit.map(topped.take).getOrElse(topped)
-      if (partFields.isEmpty)
-        GraftProjectedPartition(limited, ordinals, types)
-      else GraftKeyedPartition(limited, ordinals, types, key)
-    }
-    record(GraftScanMetrics.Report(total, kept.length, emptied))
-    parts
-  }
   override def createReaderFactory(): PartitionReaderFactory =
-    if (filePlan.isDefined) GraftFileReaderFactory
-    else GraftProjectedReaderFactory
+    GraftFileReaderFactory
 }
 
-/** Complete-pushdown aggregate scan: one input partition holding the
-  * FINAL aggregate rows (group keys + COUNT/MIN/MAX values), computed
-  * store-side — Spark replaces the whole Aggregate node with this
-  * readout, so zero data rows ship (the parquet-footer-stats answer
-  * shape). Output rows sort by group key for deterministic planning. */
-class GraftAggScan(tableName: String, tableSchema: StructType,
-    pinnedVersion: Option[Int],
-    agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
-    extends Scan with Batch {
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.sql.connector.expressions.NamedReference
-  import org.apache.spark.sql.connector.expressions.aggregate._
-  import org.apache.spark.sql.types._
-
-  private def ordOf(e: org.apache.spark.sql.connector.expressions.Expression)
-      : Int = tableSchema.fieldNames.indexOf(
-    e.asInstanceOf[NamedReference].fieldNames()(0))
-  private val groupOrds = agg.groupByExpressions().map(ordOf)
-
-  override def readSchema(): StructType = StructType(
-    groupOrds.map(tableSchema(_)) ++
-      agg.aggregateExpressions().zipWithIndex.map {
-        case (_: CountStar, i) =>
-          StructField(s"agg_$i", LongType, nullable = false)
-        case (c: Count, i) =>
-          StructField(s"agg_$i", LongType, nullable = false)
-        case (m: Min, i) =>
-          StructField(s"agg_$i", tableSchema(ordOf(m.column())).dataType)
-        case (m: Max, i) =>
-          StructField(s"agg_$i", tableSchema(ordOf(m.column())).dataType)
-        case (other, _) => throw new IllegalStateException(
-          s"unsupported pushed aggregate: $other")
-      })
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftAggScan[$tableName, pushedAggregates=[" +
-      s"${agg.aggregateExpressions().mkString(",")}], groupBy=[" +
-      s"${agg.groupByExpressions().mkString(",")}]]"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val raw = pinnedVersion
-      .map(GraftTableStore.getVersion(tableName, _))
-      .getOrElse(GraftTableStore.get(tableName))
-    val rows = GraftChangeFeed.padTo(raw, tableSchema)
-    val groupTypes = groupOrds.map(tableSchema(_).dataType)
-    def ordering(dt: DataType): Ordering[Any] = (dt match {
-      case LongType => Ordering.Long.on[Any](_.asInstanceOf[Long])
-      case IntegerType | DateType =>
-        Ordering.Int.on[Any](_.asInstanceOf[Int])
-      case DoubleType => Ordering.Double.TotalOrdering
-        .on[Any](_.asInstanceOf[Double])
-      case StringType =>
-        // MIN/MAX over strings must use UTF8String BINARY order (what
-        // Spark's Min/Max compute) — this is a COMPLETE pushdown, so a
-        // UTF-16-ordered answer for non-BMP data would ship as final
-        new Ordering[Any] {
-          def compare(a: Any, b: Any): Int =
-            a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
-              .compareTo(
-                b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-        }
-      case other => throw new IllegalStateException(
-        s"unsupported pushed-aggregate column type: $other")
-    })
-    // a GLOBAL aggregate (no group keys) over an empty table still
-    // returns exactly one row — COUNT 0, MIN/MAX NULL (SQL semantics;
-    // without this a pushed `SELECT count(*)` on a fresh/truncated
-    // table would return no rows at all). Grouped aggregates correctly
-    // return zero rows on empty input.
-    val groups =
-      if (groupOrds.isEmpty && rows.isEmpty)
-        Map(IndexedSeq.empty[Any] -> Array.empty[InternalRow])
-      else rows.groupBy(r =>
-        groupOrds.indices.map(i =>
-          r.get(groupOrds(i), groupTypes(i))).toIndexedSeq)
-    val out = groups.toArray.sortBy(_._1.toString).map { case (k, rs) =>
-      val vals = new Array[Any](groupOrds.length +
-        agg.aggregateExpressions().length)
-      k.indices.foreach(i => vals(i) = k(i))
-      agg.aggregateExpressions().zipWithIndex.foreach { case (fn, i) =>
-        val slot = groupOrds.length + i
-        vals(slot) = fn match {
-          case _: CountStar => rs.length.toLong
-          case c: Count =>
-            val o = ordOf(c.column())
-            rs.count(!_.isNullAt(o)).toLong
-          case m: Min =>
-            val o = ordOf(m.column()); val dt = tableSchema(o).dataType
-            val nn = rs.iterator.filter(!_.isNullAt(o)).map(_.get(o, dt))
-            if (nn.isEmpty) null else nn.min(ordering(dt))
-          case m: Max =>
-            val o = ordOf(m.column()); val dt = tableSchema(o).dataType
-            val nn = rs.iterator.filter(!_.isNullAt(o)).map(_.get(o, dt))
-            if (nn.isEmpty) null else nn.max(ordering(dt))
-          case other => throw new IllegalStateException(
-            s"unsupported pushed aggregate: $other")
-        }
-      }
-      new GenericInternalRow(vals): InternalRow
-    }
-    Array(GraftInputPartition(out))
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    GraftRowsReaderFactory
-}
-
-/** Aggregate pushdown answered FROM THE MANIFEST of a parquet-backed
-  * table — ZERO files opened, zero rows materialized: COUNT(*) sums
-  * file row counts, COUNT(col) sums (rows − nulls), MIN/MAX fold the
-  * per-file zone maps (EXACT by construction — collected from every
-  * value as the file was written, never truncated). Group keys are
-  * identity partition columns, read off the manifest key. This is
-  * Iceberg answering COUNT(*) from manifests / parquet footer stats,
-  * and it is why a 100 TB `SELECT count(*) ... GROUP BY partition`
-  * costs one metadata pass. Planned only for delta-free versions
-  * (checked at push time); if a delta lands between push and plan,
-  * planning falls back to the exact row computation rather than serve
-  * a stale manifest answer. */
+/** Aggregate pushdown answered FROM THE MANIFEST — ZERO files opened,
+  * zero rows materialized: COUNT(*) sums file row counts, COUNT(col)
+  * sums (rows − nulls), MIN/MAX fold the per-file zone maps (EXACT by
+  * construction — collected from every value as the file was written,
+  * never truncated). Group keys are identity partition columns, read
+  * off the manifest key. One input partition holds the FINAL rows
+  * (group keys + COUNT/MIN/MAX values), sorted by group key; Spark
+  * replaces the whole Aggregate with this readout. This is Iceberg
+  * answering COUNT(*) from manifests / parquet footer stats, and it is
+  * why a 100 TB `SELECT count(*) ... GROUP BY partition` costs one
+  * metadata pass. Planned only for delta-free versions (checked at
+  * push time); if a delta lands between push and plan, planning
+  * computes the answer exactly from the version's rows rather than
+  * serve a stale manifest answer. */
 class GraftManifestAggScan(tableName: String, tableSchema: StructType,
     pinnedVersion: Option[Int], partFields: Array[GraftPartField],
     agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
@@ -5321,12 +5075,73 @@ class GraftManifestAggScan(tableName: String, tableSchema: StructType,
         (v.files.forall(_.dv.isEmpty) ||
           agg.aggregateExpressions().forall(_.isInstanceOf[CountStar])))
     fv match {
-      case None =>
-        // a delta (or spec change) landed after push — compute exactly
-        new GraftAggScan(tableName, tableSchema, pinnedVersion, agg)
-          .planInputPartitions()
+      case None => planExactly() // a delta (or spec change) landed
       case Some(v) => planFromManifest(v.files)
     }
+  }
+
+  /** the exact answer from the version's driver-resolved rows — only
+    * when a commit between push and plan made the manifest unable to
+    * answer (a rare race; the push gate declines such versions). */
+  private def planExactly(): Array[InputPartition] = {
+    val raw = pinnedVersion
+      .map(GraftTableStore.getVersion(tableName, _))
+      .getOrElse(GraftTableStore.get(tableName))
+    val rows = GraftChangeFeed.padTo(raw, tableSchema)
+    val groupTypes = groupOrds.map(tableSchema(_).dataType)
+    def ordering(dt: DataType): Ordering[Any] = (dt match {
+      case LongType => Ordering.Long.on[Any](_.asInstanceOf[Long])
+      case IntegerType | DateType =>
+        Ordering.Int.on[Any](_.asInstanceOf[Int])
+      case DoubleType => Ordering.Double.TotalOrdering
+        .on[Any](_.asInstanceOf[Double])
+      case StringType =>
+        // MIN/MAX over strings must use UTF8String BINARY order (what
+        // Spark's Min/Max compute) — this is a COMPLETE pushdown, so a
+        // UTF-16-ordered answer for non-BMP data would ship as final
+        new Ordering[Any] {
+          def compare(a: Any, b: Any): Int =
+            a.asInstanceOf[org.apache.spark.unsafe.types.UTF8String]
+              .compareTo(
+                b.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+        }
+      case other => throw new IllegalStateException(
+        s"unsupported pushed-aggregate column type: $other")
+    })
+    // a GLOBAL aggregate (no group keys) over an empty table still
+    // returns exactly one row — COUNT 0, MIN/MAX NULL (SQL semantics)
+    val groups =
+      if (groupOrds.isEmpty && rows.isEmpty)
+        Map(IndexedSeq.empty[Any] -> Array.empty[InternalRow])
+      else rows.groupBy(r =>
+        groupOrds.indices.map(i =>
+          r.get(groupOrds(i), groupTypes(i))).toIndexedSeq)
+    val out = groups.toArray.sortBy(_._1.toString).map { case (k, rs) =>
+      val vals = new Array[Any](groupOrds.length +
+        agg.aggregateExpressions().length)
+      k.indices.foreach(i => vals(i) = k(i))
+      agg.aggregateExpressions().zipWithIndex.foreach { case (fn, i) =>
+        val slot = groupOrds.length + i
+        vals(slot) = fn match {
+          case _: CountStar => rs.length.toLong
+          case c: Count =>
+            val o = ordOf(c.column())
+            rs.count(!_.isNullAt(o)).toLong
+          case m: Min =>
+            val o = ordOf(m.column()); val dt = tableSchema(o).dataType
+            val nn = rs.iterator.filter(!_.isNullAt(o)).map(_.get(o, dt))
+            if (nn.isEmpty) null else nn.min(ordering(dt))
+          case m: Max =>
+            val o = ordOf(m.column()); val dt = tableSchema(o).dataType
+            val nn = rs.iterator.filter(!_.isNullAt(o)).map(_.get(o, dt))
+            if (nn.isEmpty) null else nn.max(ordering(dt))
+          case other => throw new IllegalStateException(
+            s"unsupported pushed aggregate: $other")
+        }
+      }
+      new GenericInternalRow(vals): InternalRow
+    }
+    Array(GraftInputPartition(out))
   }
 
   private def planFromManifest(files: Vector[GraftFileInfo])
@@ -5402,32 +5217,15 @@ class GraftManifestAggScan(tableName: String, tableSchema: StructType,
     GraftRowsReaderFactory
 }
 
-/** Shared shape of the projected store partitions: rows + the
-  * pruned-column ordinals; the reader applies the narrow projection
-  * executor-side. */
-sealed trait GraftProjectedRows {
-  def rows: Array[InternalRow]
-  def ordinals: Array[Int]
-  def types: Array[org.apache.spark.sql.types.DataType]
-}
-
+/** Driver-held rows + the pruned-column ordinals of the content
+  * stream's row path (op-log inserts, the driver-side fallback); the
+  * reader applies the narrow projection executor-side. */
 case class GraftProjectedPartition(rows: Array[InternalRow],
     ordinals: Array[Int],
     types: Array[org.apache.spark.sql.types.DataType])
-    extends InputPartition with GraftProjectedRows
+    extends InputPartition
 
-/** One partition VALUE of a partitioned governed table; the key rides
-  * along (HasPartitionKey) so Spark can group and align partitions for
-  * storage-partitioned joins. */
-case class GraftKeyedPartition(rows: Array[InternalRow],
-    ordinals: Array[Int],
-    types: Array[org.apache.spark.sql.types.DataType],
-    key: InternalRow)
-    extends InputPartition with GraftProjectedRows with HasPartitionKey {
-  override def partitionKey(): InternalRow = key
-}
-
-/** A FILE-granular scan partition of a parquet-backed table: paths and
+/** A FILE-granular scan partition: paths and
   * metadata ride to the task, the ROWS never touch the driver. The
   * reader opens each file where it runs, decodes only `readOrds`,
   * drops MoR-deleted ids, applies the pushed residual filters, and
@@ -5555,14 +5353,11 @@ object GraftProjectedReaderFactory extends PartitionReaderFactory {
   import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
   override def createReader(p: InputPartition)
       : PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[GraftProjectedRows]
+    val part = p.asInstanceOf[GraftProjectedPartition]
     new PartitionReader[InternalRow] {
       private val proj = UnsafeProjection.create(
         part.ordinals.zip(part.types).map { case (ord, dt) =>
-          if (ord < 0) // metadata slot with no file address → NULL
-            org.apache.spark.sql.catalyst.expressions.Literal(null, dt)
-              : org.apache.spark.sql.catalyst.expressions.Expression
-          else BoundReference(ord, dt, nullable = true)
+          BoundReference(ord, dt, nullable = true)
             : org.apache.spark.sql.catalyst.expressions.Expression
         }.toSeq)
       private var i = -1
@@ -5609,7 +5404,7 @@ object GraftRowsReaderFactory extends PartitionReaderFactory {
   * default was declared, i.e. every pre-defaults column keeps reading
   * NULL). Memoized per schema: the evaluation parses SQL, and scans
   * resolve it once per plan, not per row. Runs wherever padding runs
-  * (driver for the in-memory store, tasks for the file reader). */
+  * (driver for driver-resolved rows, tasks for the file reader). */
 object GraftDefaults {
   private val cache =
     new TrieMap[StructType, Array[Any]]()
@@ -5819,7 +5614,7 @@ object GraftChangeFeed {
   }
 
   /** are two manifest entries the SAME file state? Reference identity
-    * in-memory; after a LOG REPLAY consecutive commits no longer share
+    * within a process; after a LOG REPLAY consecutive commits no longer share
     * objects (and bloom/DV arrays compare by reference under case-class
     * equality), so fall back to the identifying fields — path names the
     * immutable bytes, and a deletion-vector swap (same path, new
@@ -5860,15 +5655,29 @@ object GraftChangeFeed {
     }
   }
 
+  /** Live rows of version `v-1` of `table` that a feed derivation may
+    * resolve on the driver instead of running a distributed lookup over
+    * its files (a Spark job per commit): up to this many, the state
+    * record's memo holds them once for every later commit of the
+    * window and the scans after it. */
+  private[sources] val DriverRows = 50000L
+
+  /** does the pre-image state `fv` resolve on the driver? The gate
+    * reads the live row count the manifest already records — no job. */
+  private def preImagesOnDriver(fv: GraftTableStore.GraftFileView): Boolean =
+    graft.Gate.decide("change feed pre-images",
+      GraftTableStore.liveRows(fv), DriverRows).local
+
   /** O(changes) derivation of a MoR delta commit's feed rows. Inserts
     * and update POST-images come straight from the op log; delete and
-    * update PRE-IMAGES resolve against the v-1 state: first the folded
-    * delta extras (already O(changes) in memory), then a DISTRIBUTED
-    * lookup over the base files with the id set pushed as an In filter
-    * — zone maps and bloom indexes drop files that cannot hold a
-    * target id, and only matching rows ship back (O(changes), never
-    * O(table)). An in-memory base keeps the resolved-array path (its
-    * rows live in memory regardless). */
+    * update PRE-IMAGES resolve against the v-1 state. A small state
+    * resolves on the driver ([[preImagesOnDriver]]); a large one looks
+    * in the folded delta extras (already O(changes) in memory), then
+    * runs a DISTRIBUTED lookup over the base files with the id set
+    * pushed as an In filter — zone maps and bloom indexes drop files
+    * that cannot hold a target id, and only matching rows ship back
+    * (O(changes), never O(table)). A chain [[GraftTableStore.fileView]]
+    * cannot fold resolves on the driver at any size. */
   private def deltaChanges(table: String, schema: StructType,
       idOrd: Int, v: Int,
       d: GraftTableStore.GraftDeltaData): Array[InternalRow] = {
@@ -5880,8 +5689,9 @@ object GraftChangeFeed {
       if (o.op == 'D' || o.op == 'U') targets += o.id.get(0, idType)
     }
     val pre: collection.Map[Any, InternalRow] =
-      GraftTableStore.fileView(table, Some(v - 1)) match {
-        case Some(fv) if v > 0 =>
+      if (targets.isEmpty) Map.empty // insert-only: no pre-image
+      else GraftTableStore.fileView(table, Some(v - 1)) match {
+        case Some(fv) if v > 0 && !preImagesOnDriver(fv) =>
           val found = scala.collection.mutable.HashMap[Any, InternalRow]()
           // folded extras first: an id updated by an EARLIER delta has
           // its live pre-image there, not in the base files
@@ -5904,8 +5714,7 @@ object GraftChangeFeed {
           }
           found
         case _ =>
-          // in-memory (or unresolvable) base: the resolved rows are in
-          // memory anyway — index the targets
+          // the driver-side state, memoized: index the targets
           val base =
             if (v == 0) Array.empty[InternalRow]
             else GraftTableStore.getVersion(table, v - 1)
@@ -5935,11 +5744,11 @@ object GraftChangeFeed {
 
   /** O(matched) derivation of an EQUALITY DELETE commit's feed rows:
     * the commit names only KEYS — which of them actually matched a
-    * live row is discovered here, at feed-read time, by the same
-    * zone-map/bloom-pruned distributed id lookup a MoR delta's
-    * pre-images use (never a base materialization on a file-backed
-    * table). Keys that matched nothing emit nothing — exactly the
-    * snapshot-diff answer. */
+    * live row is discovered here, at feed-read time, the way a MoR
+    * delta's pre-images are: on the driver for a small state, by the
+    * zone-map/bloom-pruned distributed id lookup otherwise (never a
+    * large base materialization). Keys that matched nothing emit
+    * nothing — exactly the snapshot-diff answer. */
   private def eqDeleteChanges(table: String, schema: StructType,
       v: Int, e: GraftTableStore.GraftEqDeleteData): Array[InternalRow] = {
     val vis = GraftColumnMap.visible(schema)
@@ -5948,12 +5757,12 @@ object GraftChangeFeed {
     val matched = scala.collection.mutable.ArrayBuffer[InternalRow]()
     // the distributed lookup is only sound when the folded suffix's
     // deletion-id domain is the eq-delete's own key domain (or there
-    // is no suffix at all) — a mismatched chain falls back to the
-    // driver-resident base, which is in memory for exactly those
-    // unfoldable shapes
+    // is no suffix at all) — a mismatched chain, like a small state,
+    // resolves on the driver
     GraftTableStore.fileView(table, Some(v - 1)) match {
       case Some(fv) if v > 0 && (fv.idOrd < 0 || fv.idOrd == e.keyOrd ||
-          (fv.deletedIds.isEmpty && fv.extras.isEmpty)) =>
+          (fv.deletedIds.isEmpty && fv.extras.isEmpty)) &&
+          !preImagesOnDriver(fv) =>
         val deletedEarlier: Set[Any] =
           if (fv.idOrd == e.keyOrd) fv.deletedIds.toSet else Set.empty
         fv.extras.foreach { r =>
@@ -6061,8 +5870,8 @@ object GraftChangeFeed {
     * rows — zero bytes rewritten, zero bytes diffed beyond the one
     * file), removed∖added files key-diff distributed and serve as
     * staged change-data file partitions. None when the adjacent
-    * manifest is unavailable (expired / legacy in-memory shapes keep
-    * the snapshot-diff fallback). */
+    * manifest is unavailable (an expired or delta neighbour keeps the
+    * snapshot-diff fallback). */
   private def cowDiffParts(table: String, schema: StructType,
       idOrd: Int, v: Int): Option[Array[InputPartition]] = {
     if (v == 0) return None
@@ -6197,8 +6006,8 @@ object GraftChangeFeed {
   }
 
   /** the FALLBACK diff of ONE commit: full snapshot materialization —
-    * only the commit kinds commit metadata cannot answer (legacy
-    * in-memory full commits; expired adjacent manifests) pay it. */
+    * kept for the manifest commits commit metadata cannot answer (one
+    * whose neighbour is a delta or has expired). */
   private def snapshotDiff(table: String, schema: StructType,
       idOrd: Int, v: Int): Array[InternalRow] = {
     val idType = schema(idOrd).dataType
@@ -6402,7 +6211,12 @@ class GraftCdfScan(tableName: String, tableSchema: StructType,
   override def description(): String =
     s"GraftCdfScan[$tableName@v$startingVersion" +
       (if (endingVersion < 0) "+]" else s"..v$endingVersion]")
-  override def planInputPartitions(): Array[InputPartition] = {
+  // planned ONCE per scan: every BatchScanExec Spark builds over this
+  // scan asks for the partitions (its supportsColumnar check — the
+  // planner strategy's node and the copy physical preparation makes
+  // are two), and planning can run Spark jobs (distributed pre-image
+  // lookups, CoW diff staging)
+  private lazy val parts: Array[InputPartition] = {
     val latest = GraftTableStore.publishedCount(tableName)
     val to =
       if (endingVersion < 0) latest
@@ -6410,10 +6224,11 @@ class GraftCdfScan(tableName: String, tableSchema: StructType,
     // commit-metadata CDC: append commits ship as FILE partitions
     // (inserts read task-side from exactly the appended files),
     // MoR deltas as O(changes) row partitions, maintenance commits
-    // as nothing, CoW rewrites as the snapshot-diff fallback
+    // as nothing, CoW rewrites as staged diff files
     GraftChangeFeed.planParts(tableName, tableSchema, idOrd,
       startingVersion, to)
   }
+  override def planInputPartitions(): Array[InputPartition] = parts
   override def createReaderFactory(): PartitionReaderFactory =
     GraftCdfReaderFactory
   override def toMicroBatchStream(checkpointLocation: String)
@@ -6585,15 +6400,12 @@ object GraftMetadataTable {
           StructField("size_bytes", LongType, nullable = false),
           StructField("num_cols", IntegerType, nullable = false),
           StructField("stats_cols", IntegerType, nullable = false)),
-        () => require(GraftParquetStore.isBacked(t),
-          s"$t.files: the files metadata table requires a " +
-            "parquet-backed base table (TBLPROPERTIES " +
-            "'graft.store'='parquet')"),
+        () => (),
         () => {
           val fv = GraftTableStore.fileView(t, None).getOrElse(
             throw new IllegalStateException(
-              s"$t.files: no file view — was the table written " +
-                "through a non-parquet path?"))
+              s"$t.files: the head's delta chain mixes id domains — " +
+                "OPTIMIZE (compact) it first"))
           val keyTypes = base.partFields.map(
             GraftPartField.keyType(_, base.physicalSchema))
           val curSpecId = GraftParquetStore.meta(t)
@@ -6726,9 +6538,9 @@ class GraftMicroBatchStream(tableName: String,
     // content-neutral and contribute NOTHING (the row path would
     // mis-read their fresh row objects as a rewrite), and a genuine
     // rewrite raises the same loud append-only error WITHOUT
-    // materializing a snapshot. The row path below remains for
-    // in-memory tables and expired-window edges (it owns those
-    // errors).
+    // materializing a snapshot. The row path below stays for the
+    // windows metadata cannot answer — an append onto a MoR delta
+    // head, expired versions (it owns those errors).
     planFileGranular(s, e).foreach(parts => return parts)
     val base = snapAt(s)
     val cur = snapAt(e)
@@ -6756,14 +6568,13 @@ class GraftMicroBatchStream(tableName: String,
   }
 
   /** commit-metadata planning of the window [s, e) — None when any
-    * commit's shape cannot be answered from metadata (in-memory
-    * tables, expired versions): the caller falls back to the row
+    * commit's shape cannot be answered from metadata (an append onto
+    * a delta head, expired versions): the caller falls back to the row
     * path. Throws the SAME loud append-only error as the row path
     * when metadata PROVES a rewrite — no snapshot materializes either
     * way. */
   private def planFileGranular(s: Int, e: Int)
       : Option[Array[InputPartition]] = {
-    if (!GraftParquetStore.isBacked(tableName)) return None
     import GraftTableStore.{GraftDeltaData, GraftParquetData}
     val ords = outSchema.fieldNames.map(tableSchema.fieldIndex)
     val types = outSchema.fields.map(_.dataType)
@@ -6814,7 +6625,6 @@ class GraftMicroBatchStream(tableName: String,
             ords, types)
         case Some((_, _: GraftTableStore.GraftEqDeleteData)) =>
           notAppendOnly() // an equality delete retires earlier rows
-        case Some(_) => return None // legacy in-memory full commit
       }
       v += 1
     }
@@ -6828,7 +6638,7 @@ class GraftMicroBatchStream(tableName: String,
 
 /** reader factory of the content stream: file partitions (task-side
   * reads of appended files) and projected row partitions (op-log
-  * inserts, in-memory fallback) share one stream. */
+  * inserts, the driver-side fallback) share one stream. */
 object GraftStreamReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition)
       : PartitionReader[InternalRow] = p match {
@@ -6945,8 +6755,8 @@ class GraftWriteBuilder(tableName: String, writeSchema: StructType,
   }
 
   private lazy val baseWrite: Write = new Write {
-    /** EVERY write to a parquet-backed table writes FILES in the
-      * tasks (the driver sees only metadata) — plain appends commit
+    /** EVERY write writes FILES in the tasks (the driver sees only
+      * metadata) — plain appends commit
       * manifest-extending, rewriting shapes (replace / truncate /
       * overwrite / dynamic overwrite) commit FILE-GRANULAR
       * ([[GraftTableStore.commitParquetRewrite]]: base survival

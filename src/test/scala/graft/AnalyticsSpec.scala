@@ -318,7 +318,7 @@ class AnalyticsSpec extends AnyFunSuite {
           .sorted.lastOption.map(_._2).getOrElse(-1L)
     }
     assert(want.values.map(_._2).toSeq.sorted !=
-      backOnly.sorted, "forward matches never chosen — vacuous corpus")
+      backOnly.sorted.toSeq, "forward matches never chosen — vacuous corpus")
   }
 
   test("agg_decay matches a brute-force half-life model bit-for-bit " +

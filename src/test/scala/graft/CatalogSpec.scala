@@ -289,12 +289,21 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.m3_mor")
   }
 
+  /** register `name` as a bare one-BIGINT-column store table, for the
+    * store-level tests that commit rows without the catalog */
+  private def bareTable(name: String): Unit = {
+    GraftTableStore.reset(name)
+    graft.sources.GraftParquetStore.register(name,
+      StructType(Seq(StructField("k", LongType))), Array.empty)
+  }
+
   test("version history is retention-capped with stable absolute numbers") {
     val name = "graft.cap_test_store"
-    GraftTableStore.reset(name)
+    bareTable(name)
     val total = GraftTableStore.RetainedVersions + 6
     (0 until total).foreach { i =>
-      GraftTableStore.put(name, Array.fill[InternalRow](i)(null))
+      GraftTableStore.put(name,
+        Array.tabulate[InternalRow](i)(j => InternalRow(j.toLong)))
     }
     assert(GraftTableStore.commitCount(name) == total)
     // the latest and the earliest RETAINED snapshot resolve by their
@@ -318,14 +327,14 @@ class CatalogSpec extends AnyFunSuite {
 
   test("concurrent commits serialize: no lost update, history consistent") {
     val name = "graft.concurrency_test_store"
-    GraftTableStore.reset(name)
+    bareTable(name)
     val threads = (0 until 4).map { _ =>
       new Thread(() =>
         (0 until 25).foreach { _ =>
           // read-modify-write: grow the snapshot by one row — a lost
           // update would leave the final size below 100
           GraftTableStore.mutate(name)(base =>
-            base :+ (null: InternalRow))
+            base :+ InternalRow(base.length.toLong))
         })
     }
     threads.foreach(_.start()); threads.foreach(_.join())
@@ -1109,7 +1118,7 @@ class CatalogSpec extends AnyFunSuite {
     val df = spark.table("graft.agge_t")
       .agg(count(col("k")), min(col("v")), max(col("v")))
     assert(df.queryExecution.executedPlan.toString
-      .contains("GraftAggScan"), "aggregate not pushed")
+      .contains("pushedAggregates="), "aggregate not pushed")
     val rows = df.collect()
     assert(rows.length == 1, s"global agg must return ONE row, " +
       s"got ${rows.length} (SQL empty-aggregate semantics)")
@@ -1190,7 +1199,7 @@ class CatalogSpec extends AnyFunSuite {
     val agg = spark.table("graft.utf8_t")
       .agg(org.apache.spark.sql.functions.max(col("s")))
     assert(agg.queryExecution.executedPlan.toString
-      .contains("GraftAggScan"), "aggregate not pushed")
+      .contains("pushedAggregates="), "aggregate not pushed")
     assert(agg.collect()(0).getString(0) == "😀",
       "pushed MAX must use UTF8String binary order")
     spark.sql("DROP TABLE graft.utf8_t")
@@ -1203,8 +1212,12 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql("CREATE TABLE graft.dupid_t (k BIGINT, v STRING) " +
       "TBLPROPERTIES ('graft.row-level'='merge-on-read', " +
       "'graft.row-id'='k')")
-    // plain INSERT never validates uniqueness — seed a duplicate id
+    // plain INSERT never validates uniqueness — seed a duplicate id.
+    // An append's feed reads its files and cannot under-report; the
+    // copy-on-write rewrite after it diffs by row id, where the
+    // duplicate would collapse
     spark.sql("INSERT INTO graft.dupid_t VALUES (1, 'a'), (1, 'b')")
+    spark.sql("INSERT OVERWRITE graft.dupid_t VALUES (1, 'c'), (1, 'd')")
     val ex = intercept[Exception] {
       spark.table("graft.dupid_t.changes").collect()
     }
@@ -1229,7 +1242,7 @@ class CatalogSpec extends AnyFunSuite {
     spark.sql("DELETE FROM graft.morlog_t WHERE k % 10 = 0")
     // the commit stored an op log, not a snapshot — and v0's array is
     // the SAME object, untouched by the delta commit
-    assert(GraftTableStore.commitKind("graft.morlog_t", 0) == "full")
+    assert(GraftTableStore.commitKind("graft.morlog_t", 0) == "parquet")
     assert(GraftTableStore.commitKind("graft.morlog_t", 1) == "delta")
     assert(GraftTableStore.getVersion("graft.morlog_t", 0) eq base,
       "a delta commit must not rewrite or copy the base snapshot")
@@ -1255,15 +1268,16 @@ class CatalogSpec extends AnyFunSuite {
       "TBLPROPERTIES ('graft.row-level'='merge-on-read', " +
       "'graft.row-id'='k')")
     spark.sql("INSERT INTO graft.morchain_t " +
-      "SELECT id, CAST(id AS DOUBLE) FROM range(50)") // v0 full, 50
+      "SELECT id, CAST(id AS DOUBLE) FROM range(50)") // v0 manifest, 50
     spark.sql("DELETE FROM graft.morchain_t WHERE k < 10") // v1 delta, 40
     spark.sql("INSERT INTO graft.morchain_t " +
-      "SELECT id + 100, -1.0 FROM range(5)") // v2 full append, 45
+      "SELECT id + 100, -1.0 FROM range(5)") // v2 append, 45
     spark.sql("UPDATE graft.morchain_t SET v = v + 1000.0 " +
       "WHERE k >= 100") // v3 delta, 45
+    // the append onto the delta head joins the op log as inserts
     assert((0 to 3).map(v =>
       GraftTableStore.commitKind("graft.morchain_t", v)) ==
-      Seq("full", "delta", "full", "delta"))
+      Seq("parquet", "delta", "delta", "delta"))
     assert((0 to 3).map(v => spark.sql(
       s"SELECT COUNT(*) FROM graft.morchain_t VERSION AS OF $v")
       .collect()(0).getLong(0)) == Seq(50L, 40L, 45L, 45L))
@@ -1289,14 +1303,14 @@ class CatalogSpec extends AnyFunSuite {
     val before = spark.table("graft.opt_t").orderBy("k").collect().toSeq
     val subsumed = graft.api.GraftApi.optimizeTable(spark, "graft.opt_t")
     assert(subsumed == 2, s"expected 2 delta commits subsumed: $subsumed")
-    // reads unchanged; the compacted head is a FULL commit; history
+    // reads unchanged; the compacted head is a file manifest; history
     // records the maintenance op
     assert(spark.table("graft.opt_t").orderBy("k").collect().toSeq
       == before)
     val hist = GraftTableStore.history("graft.opt_t")
     assert(hist.last._2 == "compact" && hist.last._3 == 40)
     assert(GraftTableStore.commitKind("graft.opt_t", hist.last._1)
-      == "full")
+      == "parquet")
     // idempotent: a second OPTIMIZE finds no deltas and commits nothing
     val n = GraftTableStore.commitCount("graft.opt_t")
     assert(graft.api.GraftApi.optimizeTable(spark, "graft.opt_t") == 0)
@@ -1319,7 +1333,7 @@ class CatalogSpec extends AnyFunSuite {
     // expired) must still resolve — checkpoint-before-expire
     assert(graft.api.GraftApi.expireSnapshots(spark, "graft.vac_t", 2)
       == 1)
-    assert(GraftTableStore.commitKind("graft.vac_t", 1) == "full",
+    assert(GraftTableStore.commitKind("graft.vac_t", 1) == "parquet",
       "the new earliest retained version must be materialized")
     assert(spark.sql(
       "SELECT COUNT(*) FROM graft.vac_t VERSION AS OF 1")

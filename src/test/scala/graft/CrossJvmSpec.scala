@@ -63,6 +63,19 @@ class CrossJvmSpec extends AnyFunSuite {
       s"${System.getProperty("java.home")}/bin/java").canExecute &&
       System.getProperty("java.class.path", "").contains("scala-library")
 
+  /** `what` plus what a failed child JVM printed: its first exception
+    * line and every `Caused by:` line — the error itself, which a long
+    * trace pushes out of the log's tail — then the tail. */
+  private def childFailure(log: java.io.File, what: String): String = {
+    val lines = new String(java.nio.file.Files.readAllBytes(log.toPath))
+      .split("\n").toSeq
+    val exLine = """(Exception in thread .*|[\w.$]+(Exception|Error)\b.*)""".r
+    val errors = lines.find(exLine.matches).toSeq ++
+      lines.filter(_.startsWith("Caused by:"))
+    s"$what\n${errors.mkString("\n")}\n--- log tail ---\n" +
+      lines.mkString("\n").takeRight(4000)
+  }
+
   test("two REAL JVMs appending to one governed table: every commit " +
       "from both processes lands exactly once, the log stays linear, " +
       "and a fresh replay agrees") {
@@ -110,11 +123,8 @@ class CrossJvmSpec extends AnyFunSuite {
         i += 1
         if (i > 600) fail("child JVM did not exit within ~2 minutes")
       }
-      assert(proc.waitFor() == 0, {
-        val log = new String(java.nio.file.Files.readAllBytes(
-          childLog.toPath))
-        s"child JVM failed:\n${log.takeRight(4000)}"
-      })
+      assert(proc.waitFor() == 0,
+        childFailure(childLog, "child JVM failed:"))
       val parentRows = i * 10L
       // this process is stale (the child committed behind its back):
       // a fresh replay is the disk truth both agree on
@@ -191,12 +201,9 @@ class CrossJvmSpec extends AnyFunSuite {
       }
       // one final compaction over everything the child left behind
       graft.api.GraftApi.rewriteSmallFiles(spark, t, 1000)
-      assert(proc.waitFor() == 0, {
-        val log = new String(java.nio.file.Files.readAllBytes(
-          childLog.toPath))
-        s"child JVM failed (its appends must rebase across binpack " +
-          s"rewrites):\n${log.takeRight(4000)}"
-      })
+      assert(proc.waitFor() == 0, childFailure(childLog,
+        "child JVM failed (its appends must rebase across binpack " +
+          "rewrites):"))
       assert(optRuns > 0)
       val parentRows = i * 5L
       graft.sources.GraftLog.simulateProcessRestart(Seq(t))

@@ -343,7 +343,7 @@ class OperatorSpec extends AnyFunSuite {
     def bboxFracs(files: Array[String]): (Double, Double) = {
       val st = files.map { f =>
         val r = spark.read.parquet(f)
-          .agg(min("user_id"), max("user_id"), min(hour), max(hour)).head
+          .agg(min("user_id"), max("user_id"), min(hour), max(hour)).head()
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
       }
       val uSpan = (st.map(_._2).max - st.map(_._1).min).toDouble

@@ -7,56 +7,13 @@ import graft.sources.{GraftMergeCatalog, GraftParquetStore, GraftTableStore}
 
 /** The parquet-backed store (round 10): file-granular commits, scans
   * that ship paths instead of rows, measured pruning, append manifest
-  * reuse, MoR deltas merged per-file, retention GC, and — the flagship
-  * pin — RESULT EQUIVALENCE of the governed-catalog query battery
-  * between the in-memory and parquet backends. */
+  * reuse, MoR deltas merged per-file, retention GC. */
 class ParquetStoreSpec extends AnyFunSuite {
   import TestSpark._
 
   private def freshCatalog(): Unit =
     spark.conf.set("spark.sql.catalog.graft",
       classOf[GraftMergeCatalog].getName)
-
-  test("the governed-catalog id battery is backend-equivalent: " +
-      "graft.store.default=parquet reproduces every in-memory result") {
-    // every id whose tables live in the governed catalog — the verdict's
-    // "LakeOps ids re-run green against a parquet-backed table", widened
-    // to the row-level/CDC/evolution/WAP surface
-    val battery = Seq(
-      "scan_partitioned_prune", "join_governed_broadcast",
-      "join_storage_partitioned", "join_bucketed_spj",
-      "join_runtime_prune", "agg_pushdown_scan", "table_partitions",
-      "table_history", "table_optimize", "table_vacuum",
-      "sink_partition_overwrite", "merge_into", "sql_delete",
-      "sql_update", "merge_into_mor", "sql_delete_mor",
-      "sql_time_travel", "sql_alter_evolve", "sql_alter_drop",
-      "sql_branch_wap", "cdc_feed_scan", "cdc_table_changes",
-      // round-10 waves F-I: defaults, constraints, identity, refs,
-      // the three-branch MERGE (the parquet-forcing ids — clone,
-      // spec evolution, replace-where, generated — run the same
-      // backend twice here, a harmless identity check)
-      "sql_alter_default", "sql_check_constraint", "sql_identity_col",
-      "table_refs", "merge_three_branch", "sink_replace_where",
-      "table_clone", "sql_partition_evolve", "sql_generated_col",
-      "sql_rely_constraints", "table_detail",
-      // round 11: the backend-agnostic additions (the DV/metadata ids
-      // are parquet-only by nature and force the backend themselves)
-      "mv_incremental", "sql_call_procedure", "join_elim_rely",
-      "sql_catalog_view")
-    battery.foreach { id =>
-      assert(SparkEntry.queries.contains(id), s"unknown battery id: $id")
-      freshCatalog()
-      val mem = SparkEntry.queries(id)(spark, sf)
-        .collect().map(_.toString).sorted.toSeq
-      spark.conf.set("graft.store.default", "parquet")
-      val pq =
-        try SparkEntry.queries(id)(spark, sf)
-          .collect().map(_.toString).sorted.toSeq
-        finally spark.conf.unset("graft.store.default")
-      assert(pq == mem, s"$id diverges on the parquet backend: " +
-        s"mem=${mem.take(3)}… pq=${pq.take(3)}…")
-    }
-  }
 
   test("appends re-reference prior files: the new commit's manifest " +
       "extends the old one and only the new rows' files are written") {
@@ -519,16 +476,7 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(files.forall(r => r.getAs[Long]("size_bytes") > 0 &&
       r.getAs[Int]("num_cols") == 2 && r.getAs[Int]("stats_cols") == 2))
     assert(files.map(_.getAs[String]("p")).toSet == Set("even", "odd"))
-    // the relation refuses on an in-memory table
-    spark.sql("DROP TABLE IF EXISTS graft.memf_t")
-    spark.sql("CREATE TABLE graft.memf_t (k BIGINT)")
-    spark.sql("INSERT INTO graft.memf_t VALUES (1)")
-    val ex = intercept[Exception] {
-      spark.table("graft.memf_t.files").collect()
-    }
-    assert(ex.getMessage.contains("parquet-backed"), ex.getMessage)
     spark.sql("DROP TABLE graft.pqfm_t")
-    spark.sql("DROP TABLE graft.memf_t")
   }
 
   test("SQL equality of ±0.0 survives store-side filter evaluation " +
@@ -609,16 +557,7 @@ class ParquetStoreSpec extends AnyFunSuite {
         "o_custkey", "o_totalprice").collect().toSeq)
     assert(GraftTableStore.history("graft.pqz_orders")
       .map(_._2).contains("zorder"))
-    // the in-memory store has no files to lay out — loud refusal
-    spark.sql("DROP TABLE IF EXISTS graft.memz_t")
-    spark.sql("CREATE TABLE graft.memz_t (a BIGINT, b BIGINT)")
-    spark.sql("INSERT INTO graft.memz_t VALUES (1, 2)")
-    val ex = intercept[Exception] {
-      graft.api.GraftApi.optimizeZorder(spark, "graft.memz_t", "a", "b")
-    }
-    assert(ex.getMessage.contains("parquet-backed"), ex.getMessage)
     spark.sql("DROP TABLE graft.pqz_orders")
-    spark.sql("DROP TABLE graft.memz_t")
   }
 
   test("bloom-filter file index gives MEASURED point-probe skipping " +
@@ -656,20 +595,12 @@ class ParquetStoreSpec extends AnyFunSuite {
     // correctness of the skip: the probe found the row
     assert(spark.table("graft.pqb_orders")
       .where(col("o_orderkey") === aKey).count() == 1)
-    // bloom on the in-memory store refuses at CREATE
-    val ex = intercept[Exception] {
-      spark.sql("CREATE TABLE graft.memb_t (k BIGINT) " +
-        "TBLPROPERTIES ('graft.bloom.columns'='k')")
-    }
-    assert(ex.getMessage.contains("graft.store=parquet"), ex.getMessage)
     spark.sql("DROP TABLE graft.pqb_orders")
     spark.sql("DROP TABLE graft.pqb_ctrl")
   }
 
   test("hidden partitioning days(ts): a raw timestamp range predicate " +
-      "skips day-files on the parquet store, prunes day-GROUPS on the " +
-      "in-memory store (no zone maps there — the transform lift does " +
-      "it), and stays row-exact at mid-day boundaries") {
+      "skips day-files and stays row-exact at mid-day boundaries") {
     freshCatalog()
     SparkEntry.queries("scan_hidden_days")(spark, sf).collect()
     val m = scanMetrics(spark.table("graft.hpd_events")
@@ -680,21 +611,6 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(m.filesRead < m.filesTotal / 2,
       s"raw ts predicate should skip most day-files: " +
         s"${m.filesRead}/${m.filesTotal}")
-    // in-memory days table: no files, no zone maps — group pruning
-    // must come from the hidden-partition transform lift alone
-    spark.sql("DROP TABLE IF EXISTS graft.hpd_mem")
-    spark.sql("CREATE TABLE graft.hpd_mem (event_id BIGINT, " +
-      "ts TIMESTAMP, user_id BIGINT, value DOUBLE) " +
-      "PARTITIONED BY (days(ts))")
-    spark.sql("INSERT INTO graft.hpd_mem SELECT * FROM hpd_events_src")
-    val mm = scanMetrics(spark.table("graft.hpd_mem")
-      .where(col("ts") >= org.apache.spark.sql.functions
-        .lit("2024-01-25 00:00:00").cast("timestamp")), "graft.hpd_mem")
-    assert(mm.totalPartitions >= 25,
-      s"expected ~30 day groups: ${mm.totalPartitions}")
-    assert(mm.keptPartitions < mm.totalPartitions / 2,
-      s"hidden prune should drop most day groups: " +
-        s"${mm.keptPartitions}/${mm.totalPartitions}")
     // exactness: mid-day boundary — pruning keeps the whole day, the
     // residual row filter trims inside it
     val cut = "2024-01-28 12:00:00"
@@ -710,7 +626,6 @@ class ParquetStoreSpec extends AnyFunSuite {
     val pcols = spark.table("graft.hpd_events.partitions").columns
     assert(pcols.contains("ts_day"), pcols.mkString(","))
     spark.sql("DROP TABLE graft.hpd_events")
-    spark.sql("DROP TABLE graft.hpd_mem")
   }
 
   test("hidden partitioning truncate(w, k): raw key ranges prune " +
@@ -734,27 +649,15 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(m.filesRead < m.filesTotal,
       s"range predicate should skip files: " +
         s"${m.filesRead}/${m.filesTotal}")
-    spark.sql("DROP TABLE graft.hpt_pq")
-    // in-memory truncate table: no zone maps — group pruning is the
-    // hidden-partition transform lift alone
-    spark.sql("DROP TABLE IF EXISTS graft.hpt_mem")
-    spark.sql("CREATE TABLE graft.hpt_mem (o_orderkey BIGINT, " +
-      "o_orderstatus STRING, o_totalprice DOUBLE) " +
-      "PARTITIONED BY (truncate(256, o_orderkey))")
-    spark.sql("INSERT INTO graft.hpt_mem SELECT * FROM hpt_orders_src")
-    val mm = scanMetrics(spark.table("graft.hpt_mem")
-      .where(col("o_orderkey") < 200L), "graft.hpt_mem")
-    assert(mm.totalPartitions > 2,
-      s"need several truncation ranges: ${mm.totalPartitions}")
-    assert(mm.keptPartitions == 1,
+    assert(m.keptPartitions == 1,
       s"sub-width range must keep ONE range group: " +
-        s"${mm.keptPartitions}/${mm.totalPartitions}")
+        s"${m.keptPartitions}/${m.totalPartitions}")
     // equality probes exactly one truncation range
-    val me = scanMetrics(spark.table("graft.hpt_mem")
-      .where(col("o_orderkey") === 1200L), "graft.hpt_mem")
+    val me = scanMetrics(spark.table("graft.hpt_pq")
+      .where(col("o_orderkey") === 1200L), "graft.hpt_pq")
     assert(me.keptPartitions <= 1,
       s"equality must keep at most one range: ${me.keptPartitions}")
-    spark.sql("DROP TABLE graft.hpt_mem")
+    spark.sql("DROP TABLE graft.hpt_pq")
     // exactness across a range boundary
     val got = spark.table("graft.hpt_orders")
       .where(col("o_orderkey").between(200L, 1300L)).count()
@@ -775,12 +678,16 @@ class ParquetStoreSpec extends AnyFunSuite {
     }
     assert(exType.getMessage.contains("unsupported type"),
       exType.getMessage)
-    val exMode = intercept[Exception] {
-      spark.sql("CREATE TABLE graft.pqbad_t (k BIGINT) " +
-        "TBLPROPERTIES ('graft.store'='orc')")
+    // parquet is the one store: any other mode refuses, the retired
+    // in-JVM 'memory' store included
+    Seq("orc", "memory").foreach { mode =>
+      val exMode = intercept[Exception] {
+        spark.sql("CREATE TABLE graft.pqbad_t (k BIGINT) " +
+          s"TBLPROPERTIES ('graft.store'='$mode')")
+      }
+      assert(exMode.getMessage.contains("unknown graft.store"),
+        exMode.getMessage)
     }
-    assert(exMode.getMessage.contains("unknown graft.store"),
-      exMode.getMessage)
   }
 
   // ---- DELETION VECTORS (round 11) ----------------------------------
@@ -1017,12 +924,6 @@ class ParquetStoreSpec extends AnyFunSuite {
       "the parquet store; unknown modes refuse)") {
     freshCatalog()
     spark.sql("DROP TABLE IF EXISTS graft.pqdvbad_t")
-    val exMem = intercept[Exception] {
-      spark.sql("CREATE TABLE graft.pqdvbad_t (k BIGINT) " +
-        "TBLPROPERTIES ('graft.delete.mode'='dv')")
-    }
-    assert(exMem.getMessage.contains("requires graft.store=parquet"),
-      exMem.getMessage)
     val exMode = intercept[Exception] {
       spark.sql("CREATE TABLE graft.pqdvbad_t (k BIGINT) " +
         "TBLPROPERTIES ('graft.store'='parquet', " +
@@ -1119,8 +1020,7 @@ class ParquetStoreSpec extends AnyFunSuite {
   }
 
   test("metadata columns _file/_pos: per-file physical addresses, " +
-      "stable across DV deletes; MoR op-log extras read NULL; the " +
-      "in-memory store advertises none") {
+      "stable across DV deletes; MoR op-log extras read NULL") {
     seedDv("pqmeta_t", 40)
     // four files, each internally dense from position 0
     val perFile = spark.sql("SELECT _file, COUNT(*) AS n, " +
@@ -1157,17 +1057,8 @@ class ParquetStoreSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
     assert(meta(2L), "the op-log post-image lives in no file")
     assert(!meta(0L), "file-resident rows keep their address")
-    // in-memory tables advertise no metadata columns at all
-    spark.sql("DROP TABLE IF EXISTS graft.pqmeta_mem")
-    spark.sql("CREATE TABLE graft.pqmeta_mem (k BIGINT)")
-    spark.sql("INSERT INTO graft.pqmeta_mem SELECT id FROM range(3)")
-    val ex = intercept[Exception] {
-      spark.sql("SELECT _file FROM graft.pqmeta_mem").collect()
-    }
-    assert(ex.getMessage.contains("_file"), ex.getMessage)
     spark.sql("DROP TABLE graft.pqmeta_t")
     spark.sql("DROP TABLE graft.pqmeta_m")
-    spark.sql("DROP TABLE graft.pqmeta_mem")
   }
 
   test("streaming reads a parquet-backed table per commit: the " +
@@ -1371,8 +1262,10 @@ class ParquetStoreSpec extends AnyFunSuite {
       "FROM range(20)") // v1 append (shares v0 files)
     spark.sql("DELETE FROM graft.pqcdf_t WHERE k % 25 = 3") // v2 delta
     val physSchema = GraftParquetStore.meta("graft.pqcdf_t").get.schema
-    val parts = graft.sources.GraftChangeFeed.planParts(
-      "graft.pqcdf_t", physSchema, 0, 0, 3)
+    // the distributed pre-image regime (a small table's v1 state would
+    // resolve on the driver instead — the feed pins below cover that)
+    val parts = Gate.distributed(graft.sources.GraftChangeFeed.planParts(
+      "graft.pqcdf_t", physSchema, 0, 0, 3))
     // v0 + v1: file partitions over exactly the appended files
     val fileParts = parts.collect {
       case f: graft.sources.GraftCdfFilePartition => f
@@ -1401,6 +1294,89 @@ class ParquetStoreSpec extends AnyFunSuite {
     assert(feed3.count() == 0,
       "a content-neutral maintenance commit must not appear in the feed")
     spark.sql("DROP TABLE graft.pqcdf_t")
+  }
+
+  /** a MoR table of `n` rows (v0), then a DELETE and an UPDATE — two
+    * delta commits whose feed needs pre-images */
+  private def seedMorDeltas(t: String, n: Int): Unit = {
+    freshCatalog()
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('graft.row-level'='merge-on-read', " +
+      "'graft.row-id'='k')")
+    spark.sql(s"INSERT INTO $t SELECT id, id * 1.0 FROM range($n)")
+    spark.sql(s"DELETE FROM $t WHERE k % 10 = 3") // v1 delta
+    spark.sql(s"UPDATE $t SET v = -v WHERE k % 10 = 4") // v2 delta
+  }
+
+  test("a small MoR table's 2-commit change feed runs ONE Spark job: " +
+      "pre-images resolve on the driver, and the distributed regime " +
+      "plans its lookups once per scan") {
+    val t = "graft.pqcdf_jobs"
+    seedMorDeltas(t, 1500)
+    def feed = spark.read.option("startingVersion", 1)
+      .table(s"$t.changes")
+    val jobs = new JobCounter(spark.sparkContext)
+    try {
+      val rows = jobs.tagged("gated")(feed.collect())
+      assert(rows.length == 150 + 2 * 150, s"${rows.length} feed rows")
+      assert(jobs.jobs("gated") == 1,
+        s"the feed ran ${jobs.jobs("gated")} jobs, not 1")
+      // forced distributed: one id lookup per delta commit, planned
+      // once — a scan planned twice would run each lookup twice
+      Gate.distributed(jobs.tagged("distributed")(feed.collect()))
+      assert(jobs.jobs("distributed") == 1 + 2,
+        s"the distributed feed ran ${jobs.jobs("distributed")} jobs")
+    } finally jobs.close()
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("change-feed pre-image regimes agree: a delta window and an " +
+      "equality-delete window read the same rows resolved on the " +
+      "driver and by the distributed lookup") {
+    val t = "graft.pqcdf_regimes"
+    seedMorDeltas(t, 400)
+    def feed(from: Int): Seq[String] = spark.read
+      .option("startingVersion", from).table(s"$t.changes")
+      .collect().map(_.toString).sorted.toSeq
+    val deltas = regimesAgree("delta pre-images")(feed(1))
+    assert(deltas.count(_.contains("update_preimage")) == 40 &&
+      deltas.count(_.contains(",delete,")) == 40, deltas.take(3))
+    // keys 1 and 4 are live (4 updated at v2), 3 was deleted at v1
+    graft.api.GraftApi.deleteWhereKeyIn(spark, t, "k", Seq(1L, 4L, 3L))
+    val eq = regimesAgree("equality-delete pre-images")(feed(3))
+    assert(eq == Seq("[1,1.0,delete,3]", "[4,-4.0,delete,3]"), eq)
+    spark.sql(s"DROP TABLE $t")
+  }
+
+  test("an append onto a MoR delta head commits its rows as an " +
+      "insert-only op log; an id the fold cannot keep apart persists " +
+      "base + rows as files") {
+    freshCatalog()
+    val t = "graft.pqappd_t"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (k BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('graft.row-level'='merge-on-read', " +
+      "'graft.row-id'='k')")
+    spark.sql(s"INSERT INTO $t SELECT id, 1.0 FROM range(10)") // v0
+    spark.sql(s"UPDATE $t SET v = -1.0 WHERE k = 1") // v1 delta
+    spark.sql(s"INSERT INTO $t VALUES (100, 2.0), (101, 2.0)") // v2
+    assert(GraftTableStore.commitKind(t, 2) == "delta")
+    assert(GraftTableStore.history(t).map(h => (h._2, h._3)) ==
+      Vector(("append", 10), ("delta", 10), ("append", 12)))
+    assert((0 to 2).forall(v => !GraftTableStore.isResolvedCached(t, v)),
+      "the append resolved a version on the driver")
+    val feed = spark.read.option("startingVersion", 2)
+      .table(s"$t.changes").collect().map(_.toString).sorted.toSeq
+    assert(feed == Seq("[100,2.0,insert,2]", "[101,2.0,insert,2]"), feed)
+    // k = 1 lives as an op-log extra: a second row with that id must
+    // stay a second row, which the fold's by-id extras cannot hold
+    spark.sql(s"INSERT INTO $t VALUES (1, 5.0)") // v3
+    assert(GraftTableStore.commitKind(t, 3) == "parquet")
+    assert(spark.table(t).where(col("k") === 1L).collect()
+      .map(_.getDouble(1)).sorted.toSeq == Seq(-1.0, 5.0))
+    assert(spark.table(t).count() == 13)
+    spark.sql(s"DROP TABLE $t")
   }
 
   test("OPTIMIZE (compact) of a MoR delta chain runs TASK-SIDE on a " +
@@ -1837,11 +1813,6 @@ class ParquetStoreSpec extends AnyFunSuite {
       sb.toString
     }
     assert(rootMsg(ex).contains("sort order"), rootMsg(ex))
-    // the in-memory store has no file layout to sort — refuse at CREATE
-    val exM = intercept[Exception](
-      spark.sql("CREATE TABLE graft.tso_mem (k BIGINT) " +
-        "TBLPROPERTIES ('graft.sort-order'='k')"))
-    assert(rootMsg(exM).contains("graft.store=parquet"), rootMsg(exM))
     spark.sql("DROP TABLE graft.tso_p")
   }
 

@@ -530,7 +530,7 @@ class PropertySpec extends AnyFunSuite {
     forAll(words, Gen.chooseNum(1, 5), n = 40) { (ws, k) =>
       val arr = new org.apache.spark.sql.catalyst.util.GenericArrayData(
         ws.map(org.apache.spark.unsafe.types.UTF8String.fromString).toArray)
-      val got = graft.functions.ShingleUtil.hashes(arr, k).toLongArray.toSeq
+      val got = graft.functions.ShingleUtil.hashes(arr, k).toLongArray().toSeq
       val expect =
         if (ws.length < k) Seq.empty[Long]
         else ws.sliding(k).map { win =>
@@ -560,7 +560,7 @@ class PropertySpec extends AnyFunSuite {
       def sig(ws: Seq[String]): Seq[Long] = graft.functions.MinHashMd5Util
         .sig(new GenericArrayData(
           ws.map(UTF8String.fromString).toArray[Any]), 3, 12)
-        .toLongArray.toSeq
+        .toLongArray().toSeq
       def ref(ws: Seq[String]): Seq[Long] = {
         val shingles = if (ws.length < 3) Seq.empty
           else ws.sliding(3).map(_.mkString(" ")).toSeq

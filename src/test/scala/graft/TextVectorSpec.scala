@@ -919,7 +919,7 @@ class TextVectorSpec extends AnyFunSuite {
     val one = Seq(Tuple1(Array("a", "b", "c"))).toDF("t")
       .select(graft.functions.ShingleExprs.shingleHashSet(col("t")).as("h"),
         expr("xxhash64(concat_ws(' ', 'a', 'b', 'c'))").as("e"))
-      .head
+      .head()
     assert(one.getSeq[Long](0) == Seq(one.getLong(1)))
   }
 
@@ -934,7 +934,7 @@ class TextVectorSpec extends AnyFunSuite {
           abs(x.cast("double") - qi.cast("double") / col("q_scale"))))
           .multiply(col("q_scale")).as("scaled_err"),
         array_max(transform(col("q"), c => abs(c))).as("max_code"))
-      .agg(max("scaled_err"), max("max_code")).head
+      .agg(max("scaled_err"), max("max_code")).head()
     assert(q.getDouble(0) <= 0.5 + 1e-9,
       s"quantization error ${q.getDouble(0)} exceeds half a quantum")
     assert(q.getInt(1) <= 127, s"code ${q.getInt(1)} outside int8 range")
@@ -1472,7 +1472,7 @@ class TextVectorSpec extends AnyFunSuite {
     df.createOrReplaceTempView("documents_qm")
     val wArr = org.apache.spark.sql.functions.array(
       QualityModel.Weights.take(QualityModel.Dims)
-        .map(org.apache.spark.sql.functions.lit(_)): _*)
+        .map(org.apache.spark.sql.functions.lit(_)).toIndexedSeq: _*)
     import org.apache.spark.sql.functions._
     val rel = df
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
