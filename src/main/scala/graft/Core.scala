@@ -143,7 +143,7 @@ private[graft] object LocalSession {
 
 /** What a capped candidate path dropped — the shingle maxDf cap
   * (`TextOps.prunePostings`) and the LSH bucket budget
-  * (`VectorOps.cappedBucketPairs`) — logged at WARN under `graft.Drops`,
+  * (`VectorOps.cappedMembers`) — logged at WARN under `graft.Drops`,
   * so no cap drops recall silently. Both counts are exact: each site
   * observes them on the job that writes its ranked checkpoint. */
 private[graft] object Drops {

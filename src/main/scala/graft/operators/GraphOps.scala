@@ -191,8 +191,11 @@ object GraphOps {
       LocalSolveMaxEdges)
     val spark = outerEdges.sparkSession
     if (gate.local) {
-      val labels = localSolve(outerEdges).localCheckpoint(true)
-      outerEdges.unpersist()
+      // lazy: the one join below consumes the labels, so the union-find
+      // runs inside the caller's action, once per action. The edge
+      // snapshot stays cached for it; the ContextCleaner releases its
+      // blocks once the result is dropped
+      val labels = localSolve(outerEdges)
       return nodes.select(col("doc_id"))
         .join(labels.withColumnRenamed("doc_id", "pid"),
           col("doc_id") === col("pid"), "left")

@@ -231,7 +231,7 @@ object TextOps extends QueryModule {
     val cap = post.sparkSession.conf
       .getOption("spark.graft.shingle.maxDf").map(_.toInt).getOrElse(64)
     if (cap <= 0) return post
-    // ONE tok-keyed shuffle (the cappedBucketPairs shape): the per-token
+    // ONE tok-keyed shuffle (the cappedMembers shape): the per-token
     // df rides a window over the same hashpartitioning(tok) the
     // downstream candidate join needs, and the localCheckpoint pins both
     // the rows and that partitioning — the self-join over the snapshot

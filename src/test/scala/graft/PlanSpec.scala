@@ -12,6 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
 class PlanSpec extends AnyFunSuite {
   import TestSpark._
 
+  private object Plans
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
@@ -323,22 +326,51 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"), s"top-100 not incremental:\n$p")
   }
 
-  test("dedup_embedding_scaled candidate shuffles are ids-only") {
-    // the scale-path pair feed: the LSH bucket self-join must exchange
-    // (bucket-key, vec_id) only — embeddings join AFTER candidates, keyed
-    // by id. An embedding-carrying candidate exchange would shuffle the
-    // vector payload × 4 hash tables at 100 TB. Broadcast disabled so the
+  test("dedup_embedding_scaled moves vectors only in the kernel's member " +
+      "grouping") {
+    // the scale-path pair feed verifies candidates inside their LSH
+    // bucket: the one exchange that carries a vector is the kernel's
+    // member grouping, hash-partitioned on the bucket key through an
+    // explicit partition count, and it carries one row per capped
+    // bucket member (4 tables × the corpus; no bucket of the test corpus
+    // is past the budget). No exchange carries a pair row with a vector
+    // (the join plan this replaced shuffled an embedding with each
+    // candidate pair into its second join). Broadcast disabled so the
     // at-scale shuffle shape is the one planned.
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM,
+      ShuffleExchangeExec}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.types.{ArrayType, FloatType}
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val p = operators.VectorOps.scaledPairs(spark, sf)
-        .queryExecution.executedPlan.toString
-      val candEx = p.linesIterator
-        .filter(l => l.contains("Exchange hashpartitioning") &&
-          l.contains("k#")).toSeq
-      assert(candEx.nonEmpty, s"no bucket-keyed candidate exchange:\n$p")
-      assert(!candEx.exists(_.contains("embedding")),
-        s"an exchange carries embeddings into the candidate join:\n${candEx.mkString("\n")}")
+      val df = operators.VectorOps.scaledPairs(spark, sf)
+      df.collect()
+      val exchanges = Plans.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }
+      def vector(e: ShuffleExchangeExec) = e.child.output.exists(
+        _.dataType match {
+          case ArrayType(FloatType, _) => true
+          case _ => false
+        })
+      val moving = exchanges.filter(vector)
+      assert(moving.size == 1, s"expected one vector-carrying exchange, " +
+        s"got ${moving.size}:\n${df.queryExecution.executedPlan}")
+      val grouping = moving.head
+      assert(grouping.child.output.map(_.name) == Seq("g", "id", "v", "side"),
+        s"the vector exchange is not the member grouping: $grouping")
+      assert(grouping.shuffleOrigin == REPARTITION_BY_NUM &&
+        (grouping.outputPartitioning match {
+          case h: HashPartitioning =>
+            h.expressions.map(_.references.map(_.name).toSeq) == Seq(Seq("g")) &&
+              h.numPartitions == spark.sparkContext.defaultParallelism
+          case _ => false
+        }), s"members not grouped on g by an explicit count: $grouping")
+      val rows = grouping.metrics(org.apache.spark.sql.execution.metric
+        .SQLShuffleWriteMetricsReporter.SHUFFLE_RECORDS_WRITTEN).value
+      val members = 4 * Tables.embeddings(spark, sf).count()
+      assert(rows == members,
+        s"the member grouping moved $rows rows for $members bucket members")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 

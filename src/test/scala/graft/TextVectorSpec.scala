@@ -277,6 +277,103 @@ class TextVectorSpec extends AnyFunSuite {
     assert(cold.size == 10, s"cold bucket lost pairs: ${cold.size}")
   }
 
+  /** The join formulation the pair kernel replaced, written out here
+    * only: both embeddings joined to each candidate pair by id and
+    * Spark's round(dot_f(e1, e2), 4) ≥ 0.4, as sorted printable rows
+    * (a NaN sim compares equal as text). */
+  private def joinVerified(cands: org.apache.spark.sql.DataFrame,
+      e: org.apache.spark.sql.DataFrame): Seq[String] =
+    verifiedRows(cands
+      .join(e.select(col("vec_id").as("id1"), col("embedding").as("e1")),
+        "id1")
+      .join(e.select(col("vec_id").as("id2"), col("embedding").as("e2")),
+        "id2")
+      .select(col("id1"), col("id2"),
+        round(VectorExprs.dotF(col("e1"), col("e2")), 4).as("sim"))
+      .where(col("sim") >= 0.4))
+
+  private def verifiedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select("id1", "id2", "sim").as[(Long, Long, Double)].collect()
+      .map(_.toString).toSeq.sorted
+
+  test("the pair kernel equals the join formulation: scaledPairs as a " +
+      "multiset, on the test corpus and past a small bucket cap") {
+    import operators.VectorOps
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    // the capped members' ids self-joined on the bucket key — every
+    // shared bucket proposes the pair once, as the kernel emits it
+    def joined(keyed: org.apache.spark.sql.DataFrame, cap: Int) = {
+      val m = VectorOps.cappedMembers(keyed.select("k", "vec_id"), "k",
+        "vec_id", "join-pin", cap)
+      joinVerified(m.select(col("k"), col("vec_id").as("id1"))
+        .join(m.select(col("k"), col("vec_id").as("id2")), Seq("k"))
+        .where(col("id1") < col("id2")), e)
+    }
+    val lsh = VectorOps.lshKeyed(spark, sf)
+    val got = verifiedRows(VectorOps.scaledPairs(spark, sf))
+    assert(got.nonEmpty, "no LSH pair passes τ — vacuous corpus")
+    assert(got == joined(lsh, 2048), "kernel and join disagree")
+    // a hot bucket past a small cap: the vectors of every exact τ pair
+    // share one bucket of which the cap keeps about two thirds (a
+    // hash-deterministic sample, the same for both formulations), and
+    // every other vector is a bucket of its own
+    val hot = SparkEntry.queries("sim_cosine_pairs")(spark, sf)
+      .select(explode(array(col("id1"), col("id2"))).as("vec_id"))
+      .distinct()
+    val keyed = e.join(hot.withColumn("k", lit(-1L)), Seq("vec_id"), "left")
+      .select(col("vec_id"), col("embedding"),
+        coalesce(col("k"), col("vec_id")).as("k"))
+    val cap = (hot.count() * 2 / 3).toInt
+    val (capped, drops) = Drops.recorded(
+      verifiedRows(VectorOps.bucketDotPairs(keyed, "kernel-pin", cap)))
+    assert(drops.map(_.groups) == Seq(1L), drops)
+    assert(capped.nonEmpty, "the capped bucket kept no τ pair")
+    assert(capped == joined(keyed, cap), "kernel and join disagree past " +
+      "the cap")
+  }
+
+  test("sim_cosine_pairs equals the all-pairs join as a set, at any " +
+      "block count") {
+    val e = Tables.embeddings(spark, sf).select("vec_id", "embedding")
+    val want = joinVerified(e.select(col("vec_id").as("id1"))
+      .join(e.select(col("vec_id").as("id2")), col("id1") < col("id2")), e)
+    assert(want.nonEmpty)
+    assert(verifiedRows(SparkEntry.queries("sim_cosine_pairs")(spark, sf))
+      == want)
+    for (blocks <- Seq(1L, 2L, 5L))
+      assert(verifiedRows(operators.VectorOps.cosineBlockPairs(e, blocks))
+        == want, s"$blocks blocks")
+  }
+
+  test("pair kernel dots at the 4-place rounding boundary, NaN and NULL " +
+      "vectors get the same keep decision and sim as round(dot_f, 4)") {
+    // a probe (1, 0) against (x, 0) for floats x within 1e-6 either
+    // side of 0.39995, where round(·, 4) turns 0.3999 into 0.4: the dot
+    // is x exactly, so some pairs sit just under the prefilter's margin
+    // and some just over the threshold. A NaN coordinate gives NaN dots
+    // (Spark orders NaN above 0.4, so those pairs are kept); a NULL
+    // vector or a NULL id gives none.
+    val ulp = math.ulp(0.39995f)
+    val xs = (-40 to 40 by 4).map(k => 0.39995f + k * ulp)
+    val rows: Seq[(Option[Long], Array[Float])] =
+      ((0L, Array(1.0f, 0.0f)) +:
+        xs.zipWithIndex.map { case (x, i) => (i + 1L, Array(x, 0.0f)) } :+
+        ((100L, Array(Float.NaN, 0.0f))) :+ ((101L, null)))
+        .map { case (id, v) => (Option(id), v) } :+
+        ((None, Array(1.0f, 0.0f)))
+    val e = rows.toDF("vec_id", "embedding")
+    val want = joinVerified(e.select(col("vec_id").as("id1"))
+      .join(e.select(col("vec_id").as("id2")), col("id1") < col("id2")), e)
+    val probe = want.filter(r => r.startsWith("(0,") && !r.contains("NaN"))
+    assert(probe.nonEmpty && probe.size < xs.size,
+      s"the boundary is not straddled: $probe")
+    assert(want.exists(_.contains("NaN")) &&
+      !want.exists(r => r.startsWith("(101,") || r.contains(",101,")))
+    for (blocks <- Seq(1L, 3L))
+      assert(verifiedRows(operators.VectorOps.cosineBlockPairs(e, blocks))
+        == want, s"$blocks blocks")
+  }
+
   test("quantizer sample is a pure function of ids — layout-independent") {
     // round-2 judge item: a bare limit(n) picks partition-order-dependent
     // rows, so the k-means quantizer (and IVF recall) shifted under
