@@ -232,8 +232,9 @@ object Tables {
     * TimestampType so plans, function semantics (unix_timestamp, window
     * range frames) and Verify's written schemas stay identical across
     * generations. Value-preserving: every session pins
-    * spark.sql.session.timeZone=UTC. */
-  /** Resolved relations are memoized per session: every
+    * spark.sql.session.timeZone=UTC.
+    *
+    * Resolved relations are memoized per session: every
     * `spark.read.parquet` re-lists the path and re-reads footers (a
     * small driver job per call), and a 355-query drive resolves the
     * same ten files hundreds of times. Reusing the ANALYZED plan is
@@ -274,6 +275,15 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }
 
+/** Context for GENERATED oracles whose SQL embeds corpus-fitted literals
+  * (vec_pca_project's axes). The driver contract compares at one fixed
+  * sf dir; Verify sets this to its actual sfDir before dumping
+  * oracle_sql.json so the fit and the compare always see the same
+  * corpus, even if the driver's sf ever changes. */
+object OracleCtx {
+  @volatile var sfDir: String = "/root/testdata/sf0.01"
+}
+
 /** Determinism helpers for oracle-compared queries (SURVEY.md §5.3).
   *
   * Raw double SUM/AVG is partial-aggregation-order sensitive, so results
@@ -286,15 +296,6 @@ object Tables {
   * At 100 TB this stays correct: decimal sums are still exact under
   * arbitrary partial/final aggregation splits across executors.
   */
-/** Context for GENERATED oracles whose SQL embeds corpus-fitted literals
-  * (vec_pca_project's axes). The driver contract compares at one fixed
-  * sf dir; Verify sets this to its actual sfDir before dumping
-  * oracle_sql.json so the fit and the compare always see the same
-  * corpus, even if the driver's sf ever changes. */
-object OracleCtx {
-  @volatile var sfDir: String = "/root/testdata/sf0.01"
-}
-
 object Det {
   def dec2(c: Column): Column = c.cast(DecimalType(18, 2))
   /** products of two 2-dp values are exact at 4 dp */

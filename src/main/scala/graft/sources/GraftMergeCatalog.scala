@@ -1933,7 +1933,7 @@ object GraftTableStore {
     val staged = GraftParquetStore.stageRewrites(spark, m, groups,
       targetRows) { rows =>
       if (ords.isEmpty) rows
-      else rows.toArray.sortWith { (a, b) =>
+      else rows.map(_.copy()).toArray.sortWith { (a, b) =>
         var i = 0
         var c = 0
         while (c == 0 && i < ords.length) {
@@ -2213,7 +2213,7 @@ object GraftTableStore {
     val rows = spark.sparkContext.parallelize(files, nPar)
       .flatMap(f => GraftParquetStore
         .readFile(f, m.schema, Array.range(0, f.numCols))
-        .map(r => (f.key, f.specId, f.numCols, r)))
+        .map(r => (f.key, f.specId, f.numCols, r.copy())))
     // quantile cut points from a bounded sample (≤ 4096 z-values on
     // the driver — the quantizerSample pattern): even file sizes
     // without a full sort. The sampling pass reads ONLY the two
@@ -4835,7 +4835,8 @@ class GraftScan(tableName: String, tableSchema: StructType,
       val deleted = fv.deletedIds.toSet
       files.iterator.flatMap(GraftParquetStore.readFile(_, tableSchema,
         ords)).filter(r => deleted.isEmpty ||
-          !deleted.contains(r.get(fv.idOrd, fv.idType))).toArray ++ extras
+          !deleted.contains(r.get(fv.idOrd, fv.idType)))
+        .map(_.copy()).toArray ++ extras
     }
     val rows = plannedRows
     val exactNdv = cols.nonEmpty && graft.Gate.decide("scan column ndv",
@@ -5291,9 +5292,9 @@ object GraftFileReaderFactory extends PartitionReaderFactory {
             } ++ part.extras.iterator
           else {
             // METADATA PATH (_file/_pos requested): positions are
-            // PHYSICAL record indexes — the raw stream counts them and
-            // DV-deleted positions are skipped by bit test, so a live
-            // row keeps its address across DV deletes
+            // PHYSICAL record indexes — the file reader counts them as
+            // it skips DV-deleted positions, so a live row keeps its
+            // address across DV deletes
             import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, Literal, UnsafeProjection}
             val width = part.physSchema.length
             val metaProj = UnsafeProjection.create(
@@ -5317,16 +5318,13 @@ object GraftFileReaderFactory extends PartitionReaderFactory {
               val metaRow = new org.apache.spark.sql.catalyst
                 .expressions.GenericInternalRow(metaVals)
               val posSlot = part.metaCols.indexOf(GraftMetaCols.Pos)
-              GraftParquetStore
-                .readFileRaw(f, part.physSchema, part.readOrds)
-                .zipWithIndex
-                .collect { case (r, pos)
-                    if f.dv.forall(!_.deleted(pos)) &&
-                      (deleted.isEmpty ||
-                        !deleted.contains(
-                          r.get(part.idOrd, part.idType))) &&
-                      preds.forall(_(r)) =>
-                  if (posSlot >= 0) metaVals(posSlot) = pos.toLong
+              val rows = GraftParquetStore.readFileRaw(f, part.physSchema,
+                part.readOrds, f.dv.orNull)
+              rows.filter(r => (deleted.isEmpty ||
+                  !deleted.contains(r.get(part.idOrd, part.idType))) &&
+                  preds.forall(_(r)))
+                .map { r =>
+                  if (posSlot >= 0) metaVals(posSlot) = rows.position.toLong
                   metaProj(joined(r, metaRow)): InternalRow
                 }
             }
@@ -5605,7 +5603,7 @@ object GraftChangeFeed {
             GraftParquetStore.readFile(f,
               GraftParquetStore.meta(table).get.schema,
               Array.range(0, f.numCols))
-              .map(emitRow(_, "insert", v, vis, ords))
+              .map(emitRow(_, "insert", v, vis, ords).copy())
           }.toArray
           case None => snapshotDiff(table, schema, idOrd, v)
         }
@@ -5940,7 +5938,7 @@ object GraftChangeFeed {
     def keyedRows(files: Vector[GraftFileInfo]) =
       sc.parallelize(files, math.max(1, files.length)).flatMap { f =>
         GraftParquetStore.readFile(f, schema, Array.range(0, f.numCols))
-          .map { r =>
+          .map(_.copy()).map { r =>
             val vals = new Array[Any](visTypes.length)
             var i = 0
             while (i < visTypes.length) {
@@ -6128,10 +6126,11 @@ object GraftCdfReaderFactory extends PartitionReaderFactory {
           import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
           private def del(e: GraftFileInfo, pos: Int): Boolean =
             e.dv.exists(_.deleted(pos))
-          private val it = GraftParquetStore
-            .readFileRaw(dp.curEntry, dp.physSchema,
-              Array.range(0, dp.curEntry.numCols))
-            .zipWithIndex.flatMap { case (r, pos) =>
+          private val raw = GraftParquetStore.readFileRaw(dp.curEntry,
+            dp.physSchema, Array.range(0, dp.curEntry.numCols))
+          private val it = raw
+            .flatMap { r =>
+              val pos = raw.position
               val was = del(dp.prevEntry, pos)
               val is = del(dp.curEntry, pos)
               if (was == is) Iterator.empty

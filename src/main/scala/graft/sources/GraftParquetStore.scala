@@ -1,21 +1,24 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.{FileSplit, JobConf}
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.HadoopReadOptions
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile, LocalOutputFile}
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile, OutputFile}
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One data file of a parquet-backed governed table: the store's
@@ -149,19 +152,37 @@ object GraftBloom {
   *   - retention trim garbage-collects files no retained commit
   *     references (VACUUM), never a file still shared.
   *
-  * The row-assembling Group reader here is deliberately simple (a real
-  * deployment reads through Spark's vectorized parquet path); the
-  * architecture — manifest-pruned file-granular scan — is the part
-  * that carries to 1000 executors. */
+  * Files are decoded by Spark's own `VectorizedParquetRecordReader`
+  * (its updaters widen a slot written before an `ALTER COLUMN ...
+  * TYPE`) and encoded by Spark's `ParquetWriteSupport`, both over
+  * parquet's local files. Readers hand out rows over the decoded
+  * column batches; the architecture — manifest-pruned file-granular
+  * scan — is the part that carries to 1000 executors. */
 object GraftParquetStore {
 
-  /** the one Hadoop Configuration the store hands parquet (codec
-    * lookup, writer and read options); never mutated. It loads no
-    * default resources: a default `Configuration` parses Hadoop's XML
-    * defaults on first use, 8–20 ms per file when parquet builds one
-    * per open. Files are read and written through parquet's local
-    * `InputFile`/`OutputFile`, never through a Hadoop `FileSystem`. */
-  private[sources] val sharedConf = new Configuration(false)
+  /** the one Hadoop Configuration the store hands parquet and Spark's
+    * parquet reader and writer; never mutated after this (per-file keys
+    * go on a copy). It loads no default resources: a default one parses
+    * Hadoop's XML defaults, 8–20 ms per file when built per open. Its
+    * keys are what Spark's `ParquetFileFormat` sets per job: the read
+    * support, the schema converters' flags at their defaults,
+    * microsecond timestamps, and page CRC verification on every read. */
+  private[sources] val sharedConf: Configuration = {
+    val c = new JobConf(false)
+    c.set("parquet.read.support.class", classOf[ParquetReadSupport].getName)
+    c.setBoolean("parquet.page.verify-checksum.enabled", true)
+    Seq(SQLConf.CASE_SENSITIVE, SQLConf.PARQUET_BINARY_AS_STRING,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP,
+      SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG,
+      SQLConf.PARQUET_FIELD_ID_READ_ENABLED,
+      SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED,
+      SQLConf.PARQUET_WRITE_LEGACY_FORMAT,
+      SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE)
+      .foreach(e => c.set(e.key, e.defaultValueString))
+    c.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key, "TIMESTAMP_MICROS")
+    c
+  }
 
   /** registration of a parquet-backed table: its directory plus the
     * CURRENT physical schema / partition fields (updated on ALTER) —
@@ -317,41 +338,10 @@ object GraftParquetStore {
   //
   // Columns are named c<physical-ordinal>: the slot position IS the
   // field id (column mapping), so a RENAME or DROP never touches a
-  // file. `width` lets pre-evolution row groups declare only the slots
-  // they carry.
-  private[sources] def messageType(schema: StructType,
-      width: Int): MessageType = {
-    val b = Types.buildMessage()
-    schema.fields.take(width).zipWithIndex.foreach { case (f, i) =>
-      val n = s"c$i"
-      val t = f.dataType match {
-        case LongType => Types.optional(PrimitiveTypeName.INT64).named(n)
-        case IntegerType =>
-          Types.optional(PrimitiveTypeName.INT32).named(n)
-        case DoubleType =>
-          Types.optional(PrimitiveTypeName.DOUBLE).named(n)
-        case FloatType => Types.optional(PrimitiveTypeName.FLOAT).named(n)
-        case BooleanType =>
-          Types.optional(PrimitiveTypeName.BOOLEAN).named(n)
-        case StringType => Types.optional(PrimitiveTypeName.BINARY)
-          .as(LogicalTypeAnnotation.stringType()).named(n)
-        case BinaryType =>
-          Types.optional(PrimitiveTypeName.BINARY).named(n)
-        case DateType => Types.optional(PrimitiveTypeName.INT32)
-          .as(LogicalTypeAnnotation.dateType()).named(n)
-        case TimestampType => Types.optional(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.timestampType(true,
-            LogicalTypeAnnotation.TimeUnit.MICROS)).named(n)
-        case d: DecimalType => Types.optional(PrimitiveTypeName.INT64)
-          .as(LogicalTypeAnnotation.decimalType(d.scale, d.precision))
-          .named(n)
-        case other => throw new IllegalStateException(
-          s"unsupported parquet-store type: $other")
-      }
-      b.addField(t)
-    }
-    b.named("graft_row")
-  }
+  // file. A file declares only the slots it carries, all nullable;
+  // Spark's schema converter maps each type to its parquet type.
+  private def fileSchema(schema: StructType, ords: Array[Int]): StructType =
+    StructType(ords.map(o => StructField(s"c$o", schema(o).dataType)))
 
   // ---- write path (driver-side, at commit) ---------------------------
 
@@ -427,11 +417,12 @@ object GraftParquetStore {
 
   /** Incremental writer of ONE parquet file: rows stream in (the
     * task-side append writer feeds straight from the DataWriter, no
-    * buffering), zone-map statistics accumulate as they pass. */
+    * buffering) and are encoded by Spark's `ParquetWriteSupport`;
+    * zone-map statistics and bloom hashes accumulate as they pass.
+    * Every row added has exactly `width` fields. */
   private[sources] final class GraftFileHandle(schema: StructType,
       width: Int, path: String, key: InternalRow,
       bloomOrds: Array[Int] = Array.empty, specId: Int = 0) {
-    private val mt = messageType(schema, width)
     // shared conf + small initial buffers: a partitioned commit opens
     // one writer per partition key, and writer INIT cost (not data
     // volume) dominates a many-partition small-batch write — the same
@@ -441,14 +432,18 @@ object GraftParquetStore {
     // file and for its `.crc` sibling (about 20 ms per file). Page
     // CRCs replace the `.crc` file as corruption detection: every
     // read verifies them ([[GraftParquetStore.openChecked]]).
-    private val w = ExampleParquetWriter
-      .builder(new LocalOutputFile(java.nio.file.Paths.get(path)))
-      .withConf(GraftParquetStore.sharedConf).withType(mt)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withRowGroupSize(8L << 20).withPageSize(64 << 10)
-      .withPageWriteChecksumEnabled(true)
-      .build()
-    private val gf = new SimpleGroupFactory(mt)
+    private val w = {
+      val conf = new Configuration(sharedConf)
+      ParquetWriteSupport.setSchema(
+        fileSchema(schema, Array.range(0, width)), conf)
+      new RowWriterBuilder(
+        new LocalOutputFile(java.nio.file.Paths.get(path)))
+        .withConf(conf)
+        .withCompressionCodec(CompressionCodecName.SNAPPY)
+        .withRowGroupSize(8L << 20).withPageSize(64 << 10)
+        .withPageWriteChecksumEnabled(true)
+        .build()
+    }
     private var n = 0
     private val mins = new Array[Any](width)
     private val maxs = new Array[Any](width)
@@ -461,34 +456,20 @@ object GraftParquetStore {
       new scala.collection.mutable.HashSet[Long])
 
     def add(r: InternalRow): Unit = {
-      val g = gf.newGroup()
       var i = 0
       while (i < width) {
         if (r.isNullAt(i)) nulls(i) += 1
-        else {
-          val dt = schema(i).dataType
-          addValue(g, i, dt, r)
-          trackStats(i, dt, r)
-        }
+        else trackStats(i, schema(i).dataType, r)
         i += 1
       }
       var j = 0
       while (j < bOrds.length) {
         val o = bOrds(j)
-        if (!r.isNullAt(o)) {
-          val h = schema(o).dataType match {
-            case LongType => GraftBloom.hashOf(LongType, r.getLong(o))
-            case IntegerType =>
-              GraftBloom.hashOf(IntegerType, r.getInt(o))
-            case StringType =>
-              GraftBloom.hashOf(StringType, r.getUTF8String(o))
-            case _ => 0L // register() forbids other types
-          }
-          bSets(j).add(h)
-        }
+        val dt = schema(o).dataType
+        if (!r.isNullAt(o)) bSets(j).add(GraftBloom.hashOf(dt, r.get(o, dt)))
         j += 1
       }
-      w.write(g)
+      w.write(r)
       n += 1
     }
     private def trackStats(i: Int, dt: DataType, r: InternalRow): Unit = {
@@ -529,135 +510,188 @@ object GraftParquetStore {
     }
   }
 
-  private def addValue(g: Group, i: Int, dt: DataType,
-      r: InternalRow): Unit = dt match {
-    case LongType => g.add(i, r.getLong(i))
-    case IntegerType => g.add(i, r.getInt(i))
-    case DoubleType => g.add(i, r.getDouble(i))
-    case FloatType => g.add(i, r.getFloat(i))
-    case BooleanType => g.add(i, r.getBoolean(i))
-    case StringType => g.add(i,
-      Binary.fromConstantByteArray(r.getUTF8String(i).getBytes))
-    case BinaryType =>
-      g.add(i, Binary.fromConstantByteArray(r.getBinary(i)))
-    case DateType => g.add(i, r.getInt(i))
-    case TimestampType => g.add(i, r.getLong(i))
-    case d: DecimalType =>
-      g.add(i, r.getDecimal(i, d.precision, d.scale).toUnscaledLong)
-    case other =>
-      throw new IllegalStateException(s"unwritable type: $other")
+  /** parquet's writer builder over Spark's row encoder. The encoder
+    * takes its datetime rebase mode from the active SQLConf; it is
+    * pinned to CORRECTED, so days and microseconds are stored raw
+    * whatever the session sets (the reader never rebases). Spark's
+    * footer keys (its version, the row schema as JSON) serve Spark's
+    * own file source; the store's reader needs neither, and on the
+    * lake's many small files they add about a third to bytes written. */
+  private final class RowWriterBuilder(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowWriterBuilder](file) {
+    override def self(): RowWriterBuilder = this
+    override def getWriteSupport(conf: Configuration)
+        : WriteSupport[InternalRow] =
+      SQLConf.withExistingConf(rawDatetimes)(new ParquetWriteSupport {
+        override def init(conf: Configuration): WriteSupport.WriteContext =
+          new WriteSupport.WriteContext(super.init(conf).getSchema,
+            java.util.Collections.emptyMap[String, String]())
+      })
+  }
+  private lazy val rawDatetimes = {
+    val c = new SQLConf
+    c.setConfString(SQLConf.PARQUET_REBASE_MODE_IN_WRITE.key, "CORRECTED")
+    c
   }
 
   // ---- read path ------------------------------------------------------
 
-  /** Read one file into full-physical-width rows, decoding ONLY
-    * `readOrds` (column projection pushed to the parquet reader);
-    * slots outside the file's width or the projection read as NULL.
-    * Runs wherever the caller runs — executor-side under the file
-    * scan, driver-side only for the row-level-operation merge paths. */
-  /** read one file, applying its DELETION VECTOR: marked positions are
-    * dropped as the raw stream decodes, so a DV-free file pays exactly
-    * one branch and a DV'd file pays one bit test per record — no id
-    * lookups, no extra I/O. Position = physical record index, which is
-    * projection-independent (the raw reader emits every record). */
+  /** Read one file into rows of the table's full physical width,
+    * decoding ONLY `readOrds` (column projection pushed into the
+    * parquet reader) and applying the file's DELETION VECTOR: marked
+    * positions are skipped by the running record index as the batches
+    * decode, so a DV-free file pays one branch per row and a DV'd file
+    * one bit test — no id lookups, no extra I/O. A requested slot the
+    * file predates (written before its ADD COLUMN) reads its
+    * exists-default — NULL unless an `ADD COLUMN ... DEFAULT` declared
+    * one ([[GraftDefaults]]); a slot not requested reads NULL. Rows are
+    * views over the reader's reused column batches: a caller that
+    * keeps a row copies it. Runs wherever the caller runs —
+    * executor-side under the file scan and the maintenance jobs,
+    * driver-side for the small merge paths. */
   private[sources] def readFile(file: GraftFileInfo, schema: StructType,
-      readOrds: Array[Int]): Iterator[InternalRow] = file.dv match {
-    case None => readFileRaw(file, schema, readOrds)
-    case Some(d) => readFileRaw(file, schema, readOrds).zipWithIndex
-      .collect { case (r, i) if !d.deleted(i) => r }
+      readOrds: Array[Int]): Iterator[InternalRow] =
+    readFileRaw(file, schema, readOrds, file.dv.orNull)
+
+  /** read one file's PHYSICAL records — DV ignored unless `dv` is given
+    * (DV maintenance and position-addressed work; everything
+    * row-serving goes through [[readFile]]) — as [[FileRows]], which
+    * also tell each row's physical record index. The reader closes
+    * when the file is exhausted, when a decode fails and, inside a
+    * task, when the task completes — so a consumer that stops early (a
+    * pushed LIMIT) or fails leaves no file open. A driver-side consumer
+    * reads to the end. */
+  private[sources] def readFileRaw(file: GraftFileInfo, schema: StructType,
+      readOrds: Array[Int], dv: GraftDeleteVector = null): FileRows = {
+    val present = readOrds.filter(_ < file.numCols).distinct.sorted
+    val vecs = new Array[ColumnVector](schema.length)
+    val reader =
+      if (present.isEmpty) {
+        // no requested column exists in this file (COUNT over a
+        // pre-evolution projection): no page is decoded, so only the
+        // file length is checked; the manifest counts the rows
+        checkLength(file, new java.io.File(file.path).length())
+        null
+      } else {
+        val r = openChecked(file, fileSchema(schema, present))
+        val decoded = r.resultBatch()
+        present.indices.foreach(j => vecs(present(j)) = decoded.column(j))
+        r
+      }
+    lazy val defaults =
+      new GenericInternalRow(GraftDefaults.existsDefaults(schema))
+    vecs.indices.foreach { o =>
+      if (vecs(o) == null) {
+        val c = new ConstantColumnVector(1, schema(o).dataType)
+        if (o >= file.numCols && readOrds.contains(o))
+          ColumnVectorUtils.populate(c, defaults, o)
+        else c.setNull()
+        vecs(o) = c
+      }
+    }
+    val rows = new FileRows(reader, new ColumnarBatch(vecs), file.rows, dv)
+    val ctx = TaskContext.get()
+    if (ctx != null) ctx.addTaskCompletionListener[Unit](_ => rows.close())
+    rows
   }
 
-  /** read one file's PHYSICAL records — DV ignored (DV maintenance and
-    * position-addressed work only; everything row-serving goes through
-    * [[readFile]]). */
-  private[sources] def readFileRaw(file: GraftFileInfo,
-      schema: StructType, readOrds: Array[Int]): Iterator[InternalRow] = {
-    val present = readOrds.filter(_ < file.numCols).sorted
-    val width = schema.length
-    // slots REQUESTED but absent from this file (written before their
-    // ADD COLUMN) read the column's EXISTS_DEFAULT — null unless an
-    // `ADD COLUMN ... DEFAULT` declared one (GraftDefaults); genuine
-    // NULLs in present slots are untouched
-    val absent = readOrds.filter(_ >= file.numCols)
-    lazy val defaults = GraftDefaults.existsDefaults(schema)
-    def fillAbsent(vals: Array[Any]): Array[Any] = {
-      var i = 0
-      while (i < absent.length) {
-        vals(absent(i)) = defaults(absent(i)); i += 1
-      }
-      vals
+  /** The rows of one open data file, batch by batch: each row is a
+    * view of the current batch at the table's full physical width,
+    * reused from row to row. `reader` is null when no slot is decoded;
+    * the batch of constants then serves all `records` rows at once.
+    * `dv` (may be null) drops marked record positions. */
+  private[sources] final class FileRows(
+      reader: VectorizedParquetRecordReader, batch: ColumnarBatch,
+      records: Int, dv: GraftDeleteVector) extends Iterator[InternalRow] {
+    private var base = 0 // record index of the batch's first row
+    private var n = 0 // rows in the batch
+    private var i = 0 // next row of the batch
+    private var pos = -1
+    private var ready = false
+    private var closed = false
+
+    /** physical record index of the row `next()` returned last */
+    def position: Int = pos
+
+    // the next batch; false at the end of the file
+    private def load(): Boolean = {
+      base += n
+      n =
+        if (reader == null) records - base
+        else if (reader.nextBatch()) reader.resultBatch().numRows()
+        else 0
+      i = 0
+      batch.setNumRows(n)
+      n > 0
     }
-    if (present.isEmpty) {
-      // no requested column exists in this file (COUNT over a
-      // pre-evolution projection): emit default-filled rows, one per
-      // row, counted by the manifest; no page is decoded, so only the
-      // file length is checked. One shared row: scan consumers treat
-      // reader output as reusable buffers
-      checkLength(file, new java.io.File(file.path).length())
-      val row = new GenericInternalRow(fillAbsent(new Array[Any](width)))
-      return Iterator.fill(file.rows)(row: InternalRow)
+
+    def hasNext: Boolean = {
+      while (!ready && !closed) {
+        if (i < n) {
+          if (dv != null && dv.deleted(base + i)) i += 1 else ready = true
+        } else {
+          val more = try load() catch { case t: Throwable => close(); throw t }
+          if (!more) close()
+        }
+      }
+      ready
     }
-    // projection by ORDINAL against the FILE'S OWN footer schema: a
-    // file written before an `ALTER COLUMN ... TYPE` widening stores
-    // the NARROW physical type, so deriving the requested fields from
-    // the current table schema would make parquet-mr refuse the read
-    // (INT64 requested over an INT32 column); `getValue` upcasts.
-    // Columns are position-named (`c<i>`), so ordinals are the stable
-    // identity.
-    val reader = openChecked(file)
-    val fileSchema = reader.getFooter.getFileMetaData.getSchema
-    val requested = {
-      import scala.jdk.CollectionConverters._
-      new MessageType(fileSchema.getName,
-        present.map(fileSchema.getFields.get(_)).toList.asJava)
+
+    def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("data file exhausted")
+      ready = false
+      pos = base + i
+      i += 1
+      batch.getRow(pos - base)
     }
-    reader.setRequestedSchema(requested)
-    val columnIO = new ColumnIOFactory(
-      reader.getFooter.getFileMetaData.getCreatedBy)
-      .getColumnIO(requested, fileSchema, true)
-    val groups: Iterator[Group] = Iterator
-      .continually(reader.readNextRowGroup())
-      .takeWhile { pages =>
-        if (pages == null) reader.close()
-        pages != null
-      }
-      .flatMap { pages =>
-        val rr = columnIO.getRecordReader(pages,
-          new GroupRecordConverter(requested), FilterCompat.NOOP)
-        Iterator.fill(pages.getRowCount.toInt)(rr.read())
-      }
-    groups.map { g =>
-      val vals = new Array[Any](width)
-      var j = 0
-      while (j < present.length) {
-        val ord = present(j)
-        if (g.getFieldRepetitionCount(j) > 0)
-          vals(ord) = getValue(g, j, schema(ord).dataType)
-        j += 1
-      }
-      new GenericInternalRow(fillAbsent(vals)): InternalRow
+
+    def close(): Unit = if (!closed) {
+      closed = true
+      ready = false
+      if (reader != null) reader.close()
     }
   }
 
-  /** Open one data file for decoding, checked against its manifest
-    * entry: the file's length must equal `bytes` (a truncated or
-    * replaced file fails here, before any row is read), its footer's
-    * row count must equal `rows`, and every page read verifies the
-    * page CRC the writer stored (a flipped byte fails the read). A
-    * check that fails throws; no row of the file is returned. */
-  private def openChecked(file: GraftFileInfo)
-      : ParquetFileReader = {
+  /** Open one data file, once, for decoding `cols` (named `c<ordinal>`
+    * at the table's current types; the reader widens narrower stored
+    * slots), checked against its manifest entry: the file's length
+    * must equal `bytes` (a truncated or replaced file fails before any
+    * row is read), its footer's row count must equal `rows`, and every
+    * page read verifies the page CRC the writer stored (a flipped byte
+    * fails the read). A check that fails throws; no row is returned. */
+  private def openChecked(file: GraftFileInfo, cols: StructType)
+      : VectorizedParquetRecordReader = {
+    import scala.jdk.CollectionConverters._
     val in = new LocalInputFile(java.nio.file.Paths.get(file.path))
-    checkLength(file, in.getLength)
-    val reader = ParquetFileReader.open(in,
-      HadoopReadOptions.builder(sharedConf)
-        .usePageChecksumVerification(true).build())
-    if (reader.getRecordCount != file.rows) {
-      reader.close()
-      throw corrupt(file, s"footer holds ${reader.getRecordCount} " +
-        s"rows, the manifest records ${file.rows}")
+    val length = in.getLength
+    checkLength(file, length)
+    val conf = new JobConf(sharedConf)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, cols.json)
+    val stream = in.newStream()
+    var reader: VectorizedParquetRecordReader = null
+    try {
+      val footer = ParquetFileReader.readFooter(in,
+        HadoopReadOptions.builder(conf).build(), stream)
+      val rows = footer.getBlocks.asScala.map(_.getRowCount).sum
+      if (rows != file.rows) throw corrupt(file,
+        s"footer holds $rows rows, the manifest records ${file.rows}")
+      // raw days and microseconds; batches at most Spark's batch size
+      reader = new VectorizedParquetRecordReader(null, "CORRECTED", "UTC",
+        "CORRECTED", "UTC", false, math.max(1, math.min(file.rows,
+          SQLConf.get.parquetVectorizedReaderBatchSize)))
+      // the declared HadoopInputFile is only used as an InputFile
+      reader.initialize(
+        new FileSplit(new Path(file.path), 0, length, Array.empty[String]),
+        new TaskAttemptContextImpl(conf, new TaskAttemptID()),
+        Some(in).asInstanceOf[Option[HadoopInputFile]], Some(stream),
+        Some(footer))
+      reader
+    } catch {
+      case t: Throwable =>
+        if (reader != null) reader.close()
+        stream.close()
+        throw t
     }
-    reader
   }
 
   // a manifest entry replayed from a log that predates `bytes` carries
@@ -699,52 +733,16 @@ object GraftParquetStore {
       .sortBy(_._1).map(_._2.map(files).toVector)
   }
 
-  private def getValue(g: Group, j: Int, dt: DataType): Any = dt match {
-    // widened slots (ALTER COLUMN ... TYPE): files written before the
-    // widening store the narrow physical type — upcast at decode, the
-    // metadata-only widening contract (Iceberg v3 / Delta type
-    // widening). The group's own type says what the file stores.
-    case LongType =>
-      if (g.getType.getType(j).asPrimitiveType().getPrimitiveTypeName ==
-          PrimitiveTypeName.INT32) g.getInteger(j, 0).toLong
-      else g.getLong(j, 0)
-    case IntegerType => g.getInteger(j, 0)
-    case DoubleType =>
-      if (g.getType.getType(j).asPrimitiveType().getPrimitiveTypeName ==
-          PrimitiveTypeName.FLOAT) g.getFloat(j, 0).toDouble
-      else g.getDouble(j, 0)
-    case FloatType => g.getFloat(j, 0)
-    case BooleanType => g.getBoolean(j, 0)
-    case StringType => UTF8String.fromBytes(g.getBinary(j, 0).getBytes)
-    case BinaryType => g.getBinary(j, 0).getBytes
-    case DateType => g.getInteger(j, 0)
-    case TimestampType => g.getLong(j, 0)
-    case d: DecimalType =>
-      Decimal.createUnsafe(g.getLong(j, 0), d.precision, d.scale)
-    case other =>
-      throw new IllegalStateException(s"unreadable type: $other")
-  }
-
   /** materialize a whole commit's files (driver-side: a small
-    * version's change-feed pre-images, the row fallbacks). All slots
-    * of each file decode; rows keep their WRITE-TIME width, so
+    * version's change-feed pre-images, the row fallbacks). Each file
+    * is read at its WRITE-TIME width, all its slots decoded, so
     * evolution-on-read and the numFields invariants survive the
-    * file round-trip. */
+    * file round-trip; every row is a copy the caller keeps. */
   private[sources] def readAll(files: Vector[GraftFileInfo],
       schema: StructType): Array[InternalRow] =
     files.iterator.flatMap { f =>
-      readFile(f, schema, Array.range(0, f.numCols)).map { r =>
-        if (f.numCols == schema.length) r
-        else {
-          // re-narrow to the file's write-time width
-          val vals = new Array[Any](f.numCols)
-          var i = 0
-          while (i < f.numCols) {
-            vals(i) = r.get(i, schema(i).dataType); i += 1
-          }
-          new GenericInternalRow(vals): InternalRow
-        }
-      }
+      readFile(f, StructType(schema.fields.take(f.numCols)),
+        Array.range(0, f.numCols)).map(_.copy())
     }.toArray
 
   /** Compute per-file DELETION VECTORS for a pushed DELETE predicate,
@@ -891,7 +889,7 @@ object GraftParquetStore {
       .flatMap { f =>
         readFile(f, m.schema, Array.range(0, f.numCols)).filter(r =>
           idOrd < r.numFields && !r.isNullAt(idOrd) &&
-            ids.contains(r.get(idOrd, idType)))
+            ids.contains(r.get(idOrd, idType))).map(_.copy())
       }
       .collect()
   }
