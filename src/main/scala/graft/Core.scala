@@ -75,7 +75,8 @@ private[graft] object Snapshot {
   * driver-side solve and a distributed twin with identical results, and
   * picks one from a size it knows without a job: [[snapshot]] observes
   * the row count of a frame on the job that writes its checkpoint, and
-  * [[decide]] takes a count the caller already holds (a manifest's). At
+  * [[decide]] takes a count the caller already holds (a manifest's, or
+  * MMR's bounded fetch of its queries). At
   * `rows × weight ≤ budget` the local solve runs, above it the
   * distributed path — the one that scales to any input — runs
   * unchanged. Budgets are per-site constants sized to what one task or

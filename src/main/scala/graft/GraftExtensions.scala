@@ -34,6 +34,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // used above collapses to an IS NOT NULL filter on the FK
     ext.injectOptimizerRule(session =>
       graft.plans.EliminateRelyJoins(session))
+    // small global sorts in one partition, with no range-sampling job
+    // (the logical half joins at `TerminalSorts.install`)
+    ext.injectPlannerStrategy(session =>
+      graft.plans.TerminalSorts.Planning(session))
   }
 }
 
@@ -68,7 +72,10 @@ object GraftExtensions {
     * both sessions see the same catalog content; only temp views
     * stay session-local. Production sessions configured with
     * `spark.sql.extensions=graft.GraftExtensions` never need this. */
-  def sessionWithViews(spark: SparkSession): SparkSession =
-    org.apache.spark.sql.graftbridge.GraftViews
+  def sessionWithViews(spark: SparkSession): SparkSession = {
+    val views = org.apache.spark.sql.graftbridge.GraftViews
       .sessionWithExtensions(spark, new GraftExtensions()(_))
+    graft.plans.TerminalSorts.install(views)
+    views
+  }
 }

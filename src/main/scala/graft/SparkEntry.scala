@@ -42,9 +42,16 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("agg_hash")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Every id
+    * first installs [[plans.TerminalSorts]] into its session, so each
+    * terminal sort plans without a sampling job. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    merged(modules.map(_.queries), "query")
+    merged(modules.map(_.queries), "query").map { case (id, fn) =>
+      id -> { (s: SparkSession, d: String) =>
+        plans.TerminalSorts.install(s)
+        fn(s, d)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops. */

@@ -2,7 +2,9 @@ package graft.operators
 
 import graft.{Drops, Gate, Q, QueryModule, SessionMemo, Snapshot, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftbridge.GraftBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -98,25 +100,39 @@ object VectorOps extends QueryModule {
       // relational chain. The gate weighs the COLLECTED volume, pool
       // rows × poolSize (the pairwise similarities), not pool rows
       // alone: a wide poolSize must not pull hundreds of millions of
-      // pairs to the driver (r15 ADVICE).
-      val (pool, gate) = Gate.snapshot("mmrRerank",
-        e.where(col("embedding").isNotNull)
-          .crossJoin(broadcast(q.where(col("q_emb").isNotNull)))
-          .where(if (excludeSelf) col("vec_id") =!= col("q_id")
-            else lit(true))
-          .select(col("q_id"), col("vec_id"),
-            dot(col("q_emb"), col("embedding")).as("qs"))
-          .withColumn("rn", row_number().over(wq))
-          .where(col("rn") <= poolSize).drop("rn"),
-        MmrLocalSolveMaxVolume, poolSize)
-      val pe = pool.join(e, "vec_id")
+      // pairs to the driver (r15 ADVICE). A query holds at most
+      // poolSize pool rows, so the gate decides on queries × poolSize
+      // from one bounded fetch of the queries, and the pool is computed
+      // once on either side of the gate: collected, or checkpointed.
+      // Pool rows carry their embeddings, so no step joins `e` again.
+      val qs = q.where(col("q_emb").isNotNull).select("q_id", "q_emb")
+      val perQuery = math.max(poolSize, 1).toLong
+      val maxQueries = MmrLocalSolveMaxVolume / perQuery / perQuery
+      val fetched = qs.limit((maxQueries + 1).toInt).collect()
+      val gate = Gate.decide("mmrRerank", fetched.length * perQuery,
+        MmrLocalSolveMaxVolume, perQuery)
+      val cands = e.where(col("embedding").isNotNull)
+      val crossed =
+        if (fetched.length <= maxQueries)
+          // every query is on the driver: one literal array of them,
+          // exploded against each candidate, so no job broadcasts them
+          cands.select(col("vec_id"), col("embedding"),
+              explode(GraftBridge.column(Literal.create(fetched.toSeq,
+                ArrayType(qs.schema)))).as("__q"))
+            .select(col("vec_id"), col("embedding"),
+              col("__q.q_id").as("q_id"), col("__q.q_emb").as("q_emb"))
+        else cands.crossJoin(broadcast(qs))
+      val poolPlan = crossed
+        .where(if (excludeSelf) col("vec_id") =!= col("q_id") else lit(true))
+        .select(col("q_id"), col("vec_id"),
+          dot(col("q_emb"), col("embedding")).as("qs"), col("embedding"))
+        .withColumn("rn", row_number().over(wq))
+        .where(col("rn") <= poolSize).drop("rn")
       if (gate.local) {
         // one collect of the pool with its embeddings; qs comes from the
         // codegen dot, cs from the same arithmetic on the driver
-        val ps = pe.select(col("q_id"), col("vec_id"), col("qs"),
-            col("embedding"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-            r.getSeq[Float](3).toArray))
+        val ps = poolPlan.collect().map(r => (r.getLong(0), r.getLong(1),
+          r.getDouble(2), r.getSeq[Float](3).toArray))
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
         // Spark's window ordering treats NaN as GREATER than every other
         // double (and all NaNs equal, −0.0 equal to 0.0); every local
@@ -165,9 +181,10 @@ object VectorOps extends QueryModule {
         import e.sparkSession.implicits._
         return out.toSeq.toDF("q_id", "vec_id", "rank")
       }
-      val pairs = pe.select(col("q_id"), col("vec_id").as("c1"),
+      val pool = poolPlan.localCheckpoint()
+      val pairs = pool.select(col("q_id"), col("vec_id").as("c1"),
           col("embedding").as("e1"))
-        .join(pe.select(col("q_id"), col("vec_id").as("c2"),
+        .join(pool.select(col("q_id"), col("vec_id").as("c2"),
           col("embedding").as("e2")), Seq("q_id"))
         .where(col("c1") =!= col("c2"))
         .select(col("q_id"), col("c1"), col("c2"),
@@ -824,10 +841,12 @@ object VectorOps extends QueryModule {
     * produced them (REPOSE, ICDE 2021), not through a global join, so
     * no exchange carries a pair with its vectors. `members` has columns
     * (g, id, v, side): a group key of any orderable type, a vector id,
-    * an array<float> vector and a side mask. The members are
-    * hash-partitioned on g into `defaultParallelism` tasks — an explicit
-    * partition count, which AQE does not coalesce back to one task —
-    * and sorted on g, so a task holds one group at a time. Within a
+    * an array<float> vector and a side mask. The members go to
+    * `defaultParallelism` tasks through an explicit partition count,
+    * which AQE does not coalesce back to one task: an int key is a dense
+    * group index and group g goes to task g mod tasks, so the first
+    * groups fill every task; any other key is hash-partitioned. Each
+    * task sorts on g, so it holds one group at a time. Within a
     * group, two members are compared when their sides together cover
     * both halves (side1 | side2 == 3; a member with side 3 is on both)
     * and their ids differ: the dot product is a primitive loop with
@@ -843,8 +862,11 @@ object VectorOps extends QueryModule {
       floor: Double): DataFrame = {
     val spark = members.sparkSession
     import spark.implicits._
-    members.select("g", "id", "v", "side")
-      .repartition(spark.sparkContext.defaultParallelism, col("g"))
+    val tasks = spark.sparkContext.defaultParallelism
+    val m = members.select("g", "id", "v", "side")
+    (if (m.schema("g").dataType == IntegerType)
+        m.repartitionById(tasks, coalesce(col("g"), lit(0)))
+      else m.repartition(tasks, col("g")))
       .sortWithinPartitions("g")
       .mapPartitions { rows =>
         val in = rows.buffered
@@ -939,16 +961,20 @@ object VectorOps extends QueryModule {
     * the pair kernel with one group per pair of `blocks` hash blocks:
     * each vector joins the `blocks` block pairs its block is part of
     * (side 1 or 2 in a pair of two blocks, side 3 in its own block's
-    * pair), so the kernel compares every two vectors exactly once. */
+    * pair), so the kernel compares every two vectors exactly once. The
+    * group key is the pair's dense index, lo·blocks − lo(lo−1)/2 +
+    * (hi − lo) for blocks lo ≤ hi, so the pairs spread over every task. */
   private[graft] def cosineBlockPairs(e: DataFrame, blocks: Long)
       : DataFrame = {
     val b = col("b")
     val o = col("o")
+    val lo = least(b, o)
     keepSimilar(groupPairDots(
       e.select(col("vec_id"), col("embedding"),
           pmod(xxhash64(col("vec_id")), lit(blocks)).as("b"),
           explode(sequence(lit(0L), lit(blocks - 1))).as("o"))
-        .select((least(b, o) * blocks + greatest(b, o)).as("g"),
+        .select((lo * blocks - shiftright(lo * (lo - 1), 1) +
+            greatest(b, o) - lo).cast(IntegerType).as("g"),
           col("vec_id").as("id"), col("embedding").as("v"),
           when(b === o, 3).when(b < o, 1).otherwise(2).as("side")),
       PairFloor))

@@ -315,6 +315,45 @@ class ApiSpec extends AnyFunSuite {
     assert(!local.exists(_._3 == -1L), s"sentinel id leaked: $local")
   }
 
+  test("mmrRerank computes its candidate pool once in either regime") {
+    // the pool is the candidate × query window; the gate decides from a
+    // fetch of the queries, so neither regime runs that window twice
+    // (local: one collect; distributed: one checkpoint)
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    object Plans extends AdaptiveSparkPlanHelper
+    def poolWindow(p: SparkPlan): Boolean = Plans.find(p) {
+      case w: WindowExec => Plans.find(w.child) {
+        case _: GenerateExec | _: BroadcastNestedLoopJoinExec => true
+        case _ => false
+      }.isDefined
+      case _ => false
+    }.isDefined
+    def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
+    val corpus = Seq((10L, v(0.9, 0.1)), (11L, v(0.1, 0.9)),
+      (12L, v(0.6, 0.6)), (13L, v(0.8, 0.3))).toDF("vec_id", "embedding")
+    val queries = Seq((1L, v(1.0, 0.0)), (2L, v(0.0, 1.0)))
+      .toDF("q_id", "q_emb")
+    def pools(body: => Unit): Int =
+      commandPlans(body).count(qe => poolWindow(qe.executedPlan))
+    val local = pools(GraftApi.mmrRerank(corpus, queries).collect())
+    assert(local == 1, s"local: the pool window ran $local times")
+    val forced = pools(Gate.distributed(
+      GraftApi.mmrRerank(corpus, queries).collect()))
+    assert(forced == 1, s"distributed: the pool window ran $forced times")
+    // over budget (2 queries × 1000² > the budget) the queries are not
+    // all fetched: they broadcast into a cross join, and the 4-candidate
+    // pool is the one poolSize = 4 builds in the local regime
+    def ranks(poolSize: Int) = GraftApi.mmrRerank(corpus, queries,
+        poolSize = poolSize).collect().map(_.toString).sorted.toSeq
+    var over = Seq.empty[String]
+    val overPools = pools { over = ranks(1000) }
+    assert(overPools == 1, s"over budget: the pool window ran $overPools times")
+    assert(over == ranks(4), s"over budget: $over vs ${ranks(4)}")
+  }
+
   test("subwordTokens splits, marks continuations, and UNKs out-of-vocab") {
     val docs = Seq((1L, "customer window a"), (2L, "Zebra!"))
       .toDF("doc_id", "text")

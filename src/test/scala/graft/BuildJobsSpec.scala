@@ -15,9 +15,9 @@ class BuildJobsSpec extends AnyFunSuite {
       "components' edges are checkpointed (the drop counts and the gate " +
       "count are observed on those jobs; each checkpoint reads a shuffle, " +
       "so each runs a map-stage job and its writing job)"),
-    "vec_mmr_rerank" -> (5L, "the candidate pool is checkpointed (the " +
-      "gate count is observed on that job), and the local greedy " +
-      "collects the pool with its embeddings"))
+    "vec_mmr_rerank" -> (3L, "the gate fetches the queries, and the " +
+      "local greedy collects the pool with its embeddings (the pool " +
+      "window's map stage and the collect)"))
 
   for ((id, (bound, why)) <- allowed.toSeq.sortBy(_._1)) {
     test(s"a warm build of $id starts at most $bound jobs") {

@@ -18,6 +18,20 @@ class PlanSpec extends AnyFunSuite {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** `name`'s physical plan as it ran: AQE's final plan after a collect,
+    * chosen once the stages' sizes were known. A terminal sort adds a
+    * stage boundary under itself (`plans.TerminalSorts`), and its range
+    * exchange stays only when the output is large. */
+  private def finalPlan(name: String): String = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.collect()
+    df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan.toString
+      case p => p.toString
+    }
+  }
+
   test("scan_parquet pushes its predicate and prunes columns") {
     val p = plan("scan_parquet")
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), LessThan(l_quantity,"),
@@ -53,12 +67,35 @@ class PlanSpec extends AnyFunSuite {
 
   test("window queries shuffle exactly once") {
     for (name <- Seq("win_rank", "win_lag_lead", "win_running")) {
-      val p = plan(name)
+      val p = finalPlan(name)
       val exchanges = p.linesIterator.count(_.contains("Exchange"))
-      // one hash partitioning for the window; the final orderBy adds a
-      // range partitioning — anything beyond that is a regression
+      // one hash partitioning for the window; the final orderBy adds its
+      // stage boundary — anything beyond that is a regression
       assert(exchanges <= 2, s"$name shuffles $exchanges times:\n$p")
     }
+  }
+
+  test("a terminal sort keeps its range exchange only for a large input") {
+    // the sort's child ends at a stage boundary, so AQE plans the sort
+    // on the child's runtime size: one partition when it is small, the
+    // range exchange when it is not (2.4 MB of rows here, past the
+    // 1 MB minimum partition size)
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    plans.TerminalSorts.install(spark)
+    def rangeExchanges(n: Long): Int = {
+      val df = spark.range(0, n, 1, 4)
+        .select((col("id") * 7919 % n).as("k"), col("id")).orderBy("k")
+      assert(df.collect().map(_.getLong(0)).toSeq == (0L until n),
+        s"$n rows came back out of order")
+      Plans.collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec
+            if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+      }.size
+    }
+    assert(rangeExchanges(100000) == 1, "a large sort lost its range exchange")
+    assert(rangeExchanges(1000) == 0, "a small sort kept its range exchange")
   }
 
   test("AQE splits a skewed join partition at runtime") {
@@ -427,10 +464,10 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("win_running_distinct stacks both windows on one user_id exchange") {
-    val p = plan("win_running_distinct")
+    val p = finalPlan("win_running_distinct")
     // first-occurrence flag window partitions by (user_id, event_type),
     // the running sum by user_id — Spark may satisfy the second from the
-    // first only via re-sort, so allow the final orderBy range exchange
+    // first only via re-sort, so allow the final orderBy's stage boundary
     // plus at most two hash exchanges, never one per window per pass
     val exchanges = p.linesIterator.count(_.contains("Exchange"))
     assert(exchanges <= 3, s"window stack shuffles $exchanges times:\n$p")
